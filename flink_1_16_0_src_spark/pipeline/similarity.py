@@ -210,15 +210,20 @@ def _ivf_assign_blas(
                 continue
             V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf[vec_col]])
             n = len(pdf)
-            dists = np.empty((n, len(S)), dtype=np.float64)
+            # n x k doubles only when they are shipped: at 10k rows and
+            # k=1e5 the matrix alone is 8 GB per Arrow batch
+            dists = np.empty((n, len(S)), dtype=np.float64) if with_dists else None
+            cells = np.empty(n, dtype="int32")
             # bound the block x k x d intermediate (~8 MB at any k)
             block = max(1, 16384 // max(1, len(S)))
             for s in range(0, n, block):
                 e = min(s + block, n)
                 # direct (v - s)^2 form — the dedup._ivf_assign_blas numerics
-                dists[s:e] = ((V[s:e, None, :] - S[None, :, :]) ** 2).sum(axis=2)
-            R = np.floor(dists * 1e6 + 0.5) / 1e6  # HALF_UP like round(,6)
-            cells = np.argmin(R, axis=1).astype("int32")  # first minimum
+                D = ((V[s:e, None, :] - S[None, :, :]) ** 2).sum(axis=2)
+                R = np.floor(D * 1e6 + 0.5) / 1e6  # HALF_UP like round(,6)
+                cells[s:e] = np.argmin(R, axis=1)  # first minimum
+                if with_dists:
+                    dists[s:e] = D
             out = pdf[[id_col, vec_col]].copy()
             if with_dists:
                 out["__dists"] = list(dists)

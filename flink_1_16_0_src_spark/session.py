@@ -23,7 +23,10 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None) -> SparkSession:
     """Tuned local session. At cluster scale the same confs apply except
     master/driver-memory; shuffle partitions should be ~2-3x total cores
-    and AQE coalesces the excess at runtime."""
+    and AQE coalesces the excess at runtime. Python workers fork from
+    ``worker_daemon``, PySpark's daemon plus a stat guard, because without
+    it every task re-reads the directories of Spark's zip archives (about
+    0.3 CPU-s per task). An archive that does change is still re-read."""
     cpus = cpus or CPUS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -44,6 +47,7 @@ def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # fixture events.parquet stores TIMESTAMP(NANOS); read as long + convert (tables.load)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "flink_1_16_0_src_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

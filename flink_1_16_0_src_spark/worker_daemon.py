@@ -1,0 +1,66 @@
+"""Python worker daemon: PySpark's own ``pyspark.daemon`` with one fix.
+
+Every task starts with ``importlib.invalidate_caches()``
+(``pyspark.worker_util.setup_spark_files``). Before Python 3.13 that
+re-reads the central directory of every zip archive on the import path
+once per zipimporter: Spark's ``pyspark.zip``, the py4j zip and the
+``spark-core`` jar, about 0.3 CPU-s per task before user code runs. The
+guard below re-reads an archive only when its inode, size or mtime
+changed since its last read, so a rewritten or missing archive is still
+re-read exactly as before. ``session.get_spark`` names this module in
+``spark.python.daemon.module``; workers fork from the daemon and inherit
+the guard.
+"""
+
+from __future__ import annotations
+
+import importlib
+import os
+import warnings
+import zipimport
+
+_read_invalidate = zipimport.zipimporter.invalidate_caches
+_read_stat: dict[str, tuple[int, int, int] | None] = {}  # archive -> stat at its last read
+
+
+def _archive_stat(path: str) -> tuple[int, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def invalidate_caches(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that skips an unchanged archive."""
+    stat = _archive_stat(self.archive)
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if stat is not None and files is not None and _read_stat.get(self.archive) == stat:
+        self._files = files  # another importer of this archive may have re-read it
+        return
+    _read_invalidate(self)
+    _read_stat[self.archive] = stat
+
+
+def install() -> None:
+    """Put the guard and the warning filter in place in this process."""
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    # The Python-state serializer concatenates empty frames on every
+    # batch; pandas deprecates that with a FutureWarning per worker.
+    warnings.filterwarnings(
+        "ignore",
+        message="The behavior of DataFrame concatenation with empty or all-NA entries is deprecated",
+        category=FutureWarning,
+        module="pyspark.sql.pandas.serializers",
+    )
+
+
+if __name__ == "__main__":
+    from pyspark import daemon
+
+    # install from the imported module, not from this __main__ copy of it
+    from flink_1_16_0_src_spark import worker_daemon
+
+    worker_daemon.install()
+    importlib.invalidate_caches()  # one read per archive here; forked workers inherit it
+    daemon.manager()

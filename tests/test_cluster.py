@@ -162,3 +162,31 @@ def test_pq_refined_codebooks_lower_distortion(spark, sf_dir):
     d0 = distortion(pq_codebooks(emb, "embedding", "vec_id", m=8, ncent=4, refine=0))
     d1 = distortion(pq_codebooks(emb, "embedding", "vec_id", m=8, ncent=4, refine=1))
     assert d1 <= d0 * (1 + 1e-9), f"refinement raised distortion: {d1} > {d0}"
+
+
+def test_ivf_assign_blas_cells_same_without_dists(spark):
+    """``with_dists=False`` (Lloyd refinement's path) keeps only the
+    per-block argmin; its cells must equal the full-matrix mode's,
+    including vectors exactly equidistant from two seeds (lowest wins)."""
+    import numpy as np
+
+    from flink_1_16_0_src_spark.pipeline.similarity import _BLAS_CELLS_MIN, _ivf_assign_blas
+
+    k, dim = max(40, _BLAS_CELLS_MIN), 4
+    rng = np.random.RandomState(11)
+    seeds = [[float(c), 0.0, 0.0, 0.0] for c in range(k)]
+    vecs = [[c + 0.5, 0.0, 0.0, 0.0] for c in range(k - 1)]  # exact ties c / c+1
+    # > 16384 // k rows per partition, so each batch spans several blocks
+    vecs += rng.uniform(-1.0, k, size=(1200, dim)).round(3).tolist()
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)], "vec_id: bigint, embedding: array<double>"
+    ).repartition(2)
+
+    def cells(with_dists):
+        out = _ivf_assign_blas(df, "embedding", "vec_id", seeds, with_dists=with_dists)
+        assert ("__dists" in out.columns) == with_dists
+        return {r.vec_id: r.cell for r in out.select("vec_id", "cell").collect()}
+
+    full, lean = cells(True), cells(False)
+    assert len(full) == len(vecs) and full == lean
+    assert [full[c] for c in range(k - 1)] == list(range(k - 1))
