@@ -58,7 +58,7 @@ def refine_seeds(
         )
 
         assigned = (
-            _ivf_assign_blas(df, vec_col, id_col, cents, with_dists=False)
+            _ivf_assign_blas(df, vec_col, id_col, cents, emit="cell")
             if len(cents) >= _BLAS_CELLS_MIN
             else ivf_assign(df, vec_col, id_col, cents)
         )

@@ -154,10 +154,10 @@ def semantic_contamination(
     so n_hits is exact), norms hoist to one column per row. The bench
     side is small by construction (eval suites); a 100 TB corpus pays
     one assignment scan + the cell-blocked probe."""
-    from flink_1_16_0_src_spark.pipeline.dedup import _ivf_assign_blas
+    from flink_1_16_0_src_spark.pipeline.similarity import _ivf_assign_blas
 
-    a_b = _ivf_assign_blas(bench_df, vec_col, id_col, seeds)
-    a_c = _ivf_assign_blas(corpus_df, vec_col, id_col, seeds)
+    a_b = _ivf_assign_blas(bench_df, vec_col, id_col, seeds, emit="cell")
+    a_c = _ivf_assign_blas(corpus_df, vec_col, id_col, seeds, emit="cell")
     v = F.col(vec_col).cast("array<double>")
     norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
     b = a_b.select(

@@ -786,60 +786,6 @@ def remove_duplicate_spans(
     )
 
 
-def _ivf_assign_blas(
-    df: DataFrame, vec_col: str, id_col: str, seeds: list[list[float]]
-) -> DataFrame:
-    """Coarse-quantizer assignment as an Arrow-batched mapInPandas
-    (numpy distance matrix per batch). Same contract as
-    similarity.ivf_assign — nearest seed over 6-dp-rounded squared L2,
-    ties to the lowest cell — but N x k distances evaluate in BLAS
-    instead of k interpreted expressions per row: with SemDeDup's
-    k ~ N/250 rule the assignment is the N^2-shaped stage, and the
-    interpreted form dominated the r8 scale probe (23 s of 33 s at the
-    10x corpus). Emits the ROUNDED min distance as ``__d`` (the keep
-    rule compares it at 6 dp anyway). numpy's summation order differs
-    from the engines' sequential folds at the ~1e-15 level — the same
-    accepted class as DuckDB's list_* internals, both sides round to
-    6 dp before any comparison."""
-    import numpy as np
-
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-    S = np.asarray(seeds, dtype=np.float64)  # k x d
-    out_schema = StructType(
-        [
-            df.schema[id_col],
-            df.schema[vec_col],
-            StructField("cell", IntegerType(), False),
-            StructField("__d", DoubleType(), True),
-        ]
-    )
-
-    def _assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            cells = np.empty(len(pdf), dtype=np.int32)
-            dmins = np.empty(len(pdf), dtype=np.float64)
-            block = 2048
-            for s in range(0, len(pdf), block):
-                e = min(s + block, len(pdf))
-                # direct (v - s)^2 form, row-blocked: block x k x d
-                D = ((V[s:e, None, :] - S[None, :, :]) ** 2).sum(axis=2)
-                D = np.floor(D * 1e6 + 0.5) / 1e6  # HALF_UP like round(,6)
-                dmins[s:e] = D.min(axis=1)
-                cells[s:e] = np.argmin(D, axis=1)  # first (lowest) cell
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell"] = cells
-            out["__d"] = dmins
-            yield out
-
-    return df.select(id_col, vec_col).mapInPandas(_assign, out_schema)
-
-
 def _pair_block_groups(base: DataFrame, id_col: str, max_cell: int) -> DataFrame:
     """Replicate each row of an oversized cell into its pair-of-blocks
     groups: cell members hash into B = ceil(|cell| / max_cell)
@@ -912,7 +858,9 @@ def semantic_dedup(
     (pinned by tests/test_dedup_property.py::test_semantic_dedup_mega
     _cluster_blocked_matches_unblocked).
     """
-    assigned = _ivf_assign_blas(df, vec_col, id_col, seeds)
+    from flink_1_16_0_src_spark.pipeline.similarity import _ivf_assign_blas
+
+    assigned = _ivf_assign_blas(df, vec_col, id_col, seeds, emit="min")
     v = F.col(vec_col).cast("array<double>")
     # the vector is materialized ONCE as array<double> (__vd): a cast
     # EXPRESSION would re-cast the whole array per element access (no
@@ -1200,8 +1148,10 @@ def semantic_dedup_against(
     Norms hoist to one per-row column (the embedding_near_dup_pairs
     precedent); cosines round at 4 dp before the threshold compare
     (the repo float rule)."""
-    a_base = _ivf_assign_blas(base_df, vec_col, id_col, seeds)
-    a_new = _ivf_assign_blas(new_df, vec_col, id_col, seeds)
+    from flink_1_16_0_src_spark.pipeline.similarity import _ivf_assign_blas
+
+    a_base = _ivf_assign_blas(base_df, vec_col, id_col, seeds, emit="cell")
+    a_new = _ivf_assign_blas(new_df, vec_col, id_col, seeds, emit="cell")
     v = F.col(vec_col).cast("array<double>")
     norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
     b = a_base.select(

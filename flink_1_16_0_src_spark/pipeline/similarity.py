@@ -168,9 +168,8 @@ def _argmin_sql(dists_sql: str) -> str:
 # sqrt(N)-cells variant measured 67 s at the sf1 probe on it, r13). At
 # and above this cell count the BLAS mapInPandas form takes over — same
 # contract (6-dp HALF_UP rounded squared L2, first-minimum tie to the
-# lowest cell; numpy's fold order differs at the ~1e-15 level, the same
-# accepted class as dedup._ivf_assign_blas, absorbed by the 6-dp round
-# both engines apply before any comparison).
+# lowest cell; numpy's fold order differs at the ~1e-15 level, absorbed
+# by the 6-dp round both engines apply before any comparison).
 _BLAS_CELLS_MIN = 32
 
 
@@ -179,14 +178,25 @@ def _ivf_assign_blas(
     vec_col: str,
     id_col: str,
     seeds: list[list[float]],
-    with_dists: bool = True,
+    emit: str = "dists",
 ) -> DataFrame:
-    """BLAS form of ``ivf_assign`` — same output contract
-    (id, vec, __dists RAW, cell). ``with_dists=False`` omits the
-    __dists column AND its Arrow transfer: shipping k doubles per row
-    out of the Python worker is the dominant cost of the kernel once k
-    is large, and only nprobe selection (the query side) ever reads
-    them — corpus assignment and Lloyd refinement need the cell only."""
+    """BLAS form of ``ivf_assign`` — the one coarse-quantizer kernel:
+    ``cell`` is the nearest seed over 6-dp HALF_UP rounded squared L2,
+    ties to the lowest cell, with the N x k distances evaluated in numpy
+    instead of k interpreted expressions per row. ``emit`` picks what
+    rides along with (id, vec, cell):
+
+    - ``"dists"``: ``__dists``, the RAW distances (``ivf_assign``'s
+      contract; only nprobe selection reads them);
+    - ``"min"``: ``__d``, the ROUNDED min distance (SemDeDup's keep rule
+      compares it at 6 dp anyway);
+    - ``"cell"``: nothing — shipping k doubles per row out of the
+      Python worker is the dominant cost of the kernel once k is large,
+      and corpus assignment and Lloyd refinement need the cell only.
+
+    numpy's summation order differs from the engines' sequential folds
+    at the ~1e-15 level — the same accepted class as DuckDB's list_*
+    internals; both sides round to 6 dp before any comparison."""
     import numpy as np
 
     from pyspark.sql.types import (
@@ -197,11 +207,14 @@ def _ivf_assign_blas(
         StructType,
     )
 
+    assert emit in ("dists", "min", "cell"), f"unknown emit={emit!r}"
     S = np.asarray(seeds, dtype=np.float64)  # k x d
     fields = [df.schema[id_col], df.schema[vec_col]]
-    if with_dists:
+    if emit == "dists":
         fields.append(StructField("__dists", ArrayType(DoubleType()), True))
     fields.append(StructField("cell", IntegerType(), False))
+    if emit == "min":
+        fields.append(StructField("__d", DoubleType(), True))
     out_schema = StructType(fields)
 
     def _fn(batches):
@@ -212,22 +225,27 @@ def _ivf_assign_blas(
             n = len(pdf)
             # n x k doubles only when they are shipped: at 10k rows and
             # k=1e5 the matrix alone is 8 GB per Arrow batch
-            dists = np.empty((n, len(S)), dtype=np.float64) if with_dists else None
+            dists = np.empty((n, len(S)), dtype=np.float64) if emit == "dists" else None
+            dmins = np.empty(n, dtype=np.float64) if emit == "min" else None
             cells = np.empty(n, dtype="int32")
             # bound the block x k x d intermediate (~8 MB at any k)
             block = max(1, 16384 // max(1, len(S)))
             for s in range(0, n, block):
                 e = min(s + block, n)
-                # direct (v - s)^2 form — the dedup._ivf_assign_blas numerics
+                # direct (v - s)^2 form, row-blocked
                 D = ((V[s:e, None, :] - S[None, :, :]) ** 2).sum(axis=2)
                 R = np.floor(D * 1e6 + 0.5) / 1e6  # HALF_UP like round(,6)
                 cells[s:e] = np.argmin(R, axis=1)  # first minimum
-                if with_dists:
+                if dists is not None:
                     dists[s:e] = D
+                if dmins is not None:
+                    dmins[s:e] = R.min(axis=1)
             out = pdf[[id_col, vec_col]].copy()
-            if with_dists:
+            if dists is not None:
                 out["__dists"] = list(dists)
             out["cell"] = cells
+            if dmins is not None:
+                out["__d"] = dmins
             yield out
 
     return df.select(id_col, vec_col).mapInPandas(_fn, out_schema)
@@ -289,12 +307,8 @@ def ivf_topk(
         # (and `assigned` has two consumers, so it shipped TWICE);
         # probe selection reruns the kernel with dists on the FILTERED
         # query side only. Same 6-dp HALF_UP argmin both ways.
-        corpus_assigned = _ivf_assign_blas(
-            df, vec_col, id_col, seeds, with_dists=False
-        )
-        q_assigned = _ivf_assign_blas(
-            df.where(query_pred), vec_col, id_col, seeds, with_dists=True
-        )
+        corpus_assigned = _ivf_assign_blas(df, vec_col, id_col, seeds, emit="cell")
+        q_assigned = _ivf_assign_blas(df.where(query_pred), vec_col, id_col, seeds)
     else:
         assigned = ivf_assign(df, vec_col, id_col, seeds)
         corpus_assigned = assigned

@@ -320,7 +320,7 @@ def sim_ivf_topk_autocells(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosines. The oracle derives the identical n_cells from its own
     count(*) and replays seeds/Lloyd/probes bit-for-bit. At true 100 TB
     n_cells the expression-built assignment would swap to the BLAS
-    mapInPandas pass (dedup._ivf_assign_blas — same contract); at probe
+    mapInPandas pass (similarity._ivf_assign_blas — same contract); at probe
     scales the expression form measures the honest decade. The pinned
     sim_ivf_topk stays registered unchanged (its oracle pins 8 cells)."""
     import math

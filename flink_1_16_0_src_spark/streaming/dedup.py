@@ -57,49 +57,39 @@ def temporal_sort(
     gives no cross-partition ordering downstream — same restriction the
     reference has across parallel subtasks). State = the not-yet-final
     tail per key, bounded by ``delay``."""
-    import json
-
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+    from pyspark.sql.types import StructField
 
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(StringType())),
-            StructField("clock", StringType()),
-        ]
+    from flink_1_16_0_src_spark.streaming.stateful import RowState, _py
+
+    # the buffered rows plus the per-key event clock (max ts seen)
+    buf = RowState(
+        sdf.schema.fields, extra=[StructField("__clock", sdf.schema[ts].dataType)]
     )
-    output_schema = sdf.schema
+    names = buf.names
     delay_td = pd.Timedelta(delay)
 
     def fn(key, pdfs, state):
-        if state.exists:
-            buf = [json.loads(s) for s in state.get[0]]
-            clock = pd.Timestamp(state.get[1]) if state.get[1] else None
-        else:
-            buf, clock = [], None
-        for pdf in pdfs:
-            for d in pdf.to_dict("records"):
-                d = json.loads(json.dumps(d, default=str))
-                buf.append(d)
-                t = pd.Timestamp(d[ts])
-                clock = t if clock is None else max(clock, t)
-        out, keep = [], []
-        wm = clock - delay_td if clock is not None else None
-        for d in buf:
-            (out if wm is not None and pd.Timestamp(d[ts]) <= wm else keep).append(d)
-        out.sort(key=lambda d: pd.Timestamp(d[ts]))
-        state.update(
-            ([json.dumps(d) for d in keep], clock.isoformat() if clock else None)
-        )
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        st = buf.read(state)
+        parts = [pdf for pdf in pdfs if len(pdf)]
+        clock = None
+        if st:
+            clock = st[-1]
+            if st[0]:
+                parts.insert(0, buf.frame(st[:-1]))
+        if not parts:
+            return
+        rows = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
+        mx = rows[ts].max()
+        clock = mx if clock is None else max(pd.Timestamp(clock), mx)
+        due = rows[ts] <= clock - delay_td
+        rest = rows[~due]
+        buf.write(state, [rest[c].tolist() for c in names], _py(clock))
+        if due.any():
+            yield rows[due].sort_values(ts, kind="stable")[names]
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, sdf.schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )

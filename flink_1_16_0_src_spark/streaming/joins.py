@@ -104,18 +104,12 @@ def unbounded_join(
     Column names of the two sides must be disjoint (rename before
     joining; Flink SQL forces the same via aliases).
     """
-    import json
-
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from flink_1_16_0_src_spark.streaming.stateful import RowState, _frame
 
     assert how in ("inner", "left_outer", "full_outer", "left_semi", "left_anti"), (
         f"unsupported how={how!r}"
@@ -124,7 +118,7 @@ def unbounded_join(
     lk, rk = key
     lcols = left.columns
     rcols = right.columns
-    clash = (set(lcols) & set(rcols)) - set()
+    clash = set(lcols) & set(rcols)
     assert not clash, f"column names must be disjoint, clash: {sorted(clash)}"
 
     out_fields = list(left.schema.fields) + (
@@ -133,50 +127,47 @@ def unbounded_join(
         else []
     )
     output_schema = StructType(out_fields + [StructField("__rowkind", StringType())])
-    # state: JSON rows per side + per-left-row match counters
-    state_schema = StructType(
-        [
-            StructField("lbuf", ArrayType(StringType())),
-            StructField("rbuf", ArrayType(StringType())),
-            StructField("lmatches", ArrayType(LongType())),
-            StructField("rmatches", ArrayType(LongType())),
-        ]
+    names = output_schema.fieldNames()
+    # state: both sides' row buffers, each with its per-row match counter
+    buf = RowState(
+        list(left.schema.fields)
+        + [StructField("__lmatches", LongType())]
+        + list(right.schema.fields)
+        + [StructField("__rmatches", LongType())]
     )
+    nl = len(lcols) + 1
 
+    # each side keeps its own typed columns; the other side's are NULL
     tagged = left.select(
-        F.col(lk).cast("string").alias("__key"),
-        F.lit(1).alias("__side"),
-        F.to_json(F.struct(*lcols)).alias("__payload"),
+        F.col(lk).cast("string").alias("__key"), F.lit(1).alias("__side"), *lcols
     ).unionByName(
         right.select(
-            F.col(rk).cast("string").alias("__key"),
-            F.lit(2).alias("__side"),
-            F.to_json(F.struct(*rcols)).alias("__payload"),
-        )
+            F.col(rk).cast("string").alias("__key"), F.lit(2).alias("__side"), *rcols
+        ),
+        allowMissingColumns=True,
     )
 
     ttl_expr = ttl
     lts, rts, interval = ttl if ttl else (None, None, None)
     delta = pd.Timedelta(interval) if interval else None
 
+    def rows(cols, names):
+        return [dict(zip(names, r)) for r in zip(*cols)]
+
     def fn(pkey, pdfs, state):
-        if state.exists:
-            lbuf = [json.loads(s) for s in state.get[0]]
-            rbuf = [json.loads(s) for s in state.get[1]]
-            lmatches = list(state.get[2])
-            rmatches = list(state.get[3])
+        st = buf.read(state)
+        if st:
+            lbuf, lmatches = rows(st[: nl - 1], lcols), st[nl - 1]
+            rbuf, rmatches = rows(st[nl:-1], rcols), st[-1]
         else:
             lbuf, rbuf, lmatches, rmatches = [], [], [], []
-        out = []
+        out = {c: [] for c in names}
 
         def emit(lrow, rrow, kind):
-            rec = {c: None for c in (lcols + rcols if pairs else lcols)}
-            if lrow is not None:
-                rec.update(lrow)
-            if rrow is not None:
-                rec.update(rrow)
-            rec["__rowkind"] = kind
-            out.append(rec)
+            for side, row in ((lcols, lrow), (rcols if pairs else (), rrow)):
+                for c in side:
+                    out[c].append(None if row is None else row[c])
+            out["__rowkind"].append(kind)
 
         max_ts = None
 
@@ -197,8 +188,8 @@ def unbounded_join(
 
         for pdf in pdfs:
             for t in pdf.to_dict("records"):
-                row = json.loads(t["__payload"])
                 if t["__side"] == 1:
+                    row = {c: t[c] for c in lcols}
                     tick(row, lts)
                     n = 0
                     for j, rrow in enumerate(rbuf):
@@ -218,6 +209,7 @@ def unbounded_join(
                     lbuf.append(row)
                     lmatches.append(n)
                 else:
+                    row = {c: t[c] for c in rcols}
                     tick(row, rts)
                     n = 0
                     for i, lrow in enumerate(lbuf):
@@ -252,21 +244,16 @@ def unbounded_join(
             ]
             rbuf = [rbuf[j] for j in rkeep]
             rmatches = [rmatches[j] for j in rkeep]
-        state.update(
-            (
-                [json.dumps(r, default=str) for r in lbuf],
-                [json.dumps(r, default=str) for r in rbuf],
-                lmatches,
-                rmatches,
-            )
+        buf.write(
+            state,
+            [[r[c] for r in lbuf] for c in lcols]
+            + [lmatches]
+            + [[r[c] for r in rbuf] for c in rcols]
+            + [rmatches],
         )
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        if out["__rowkind"]:
+            yield _frame(names, out)
 
     return tagged.groupBy("__key").applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, output_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )

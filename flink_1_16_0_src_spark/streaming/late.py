@@ -32,7 +32,10 @@ from typing import Callable, Iterable
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import LongType, StructField, StructType
+
+from flink_1_16_0_src_spark.streaming.stateful import RowState, _frame
 
 
 class LateRowRouter:
@@ -107,47 +110,41 @@ def streaming_count_window(
     ``size`` rows form a window; ``agg_fn(window_pdf) -> dict`` emits
     one output row per fired window (the window function). The
     under-full tail is carried in state — bounded by ``size`` rows per
-    key. Row order inside a key follows arrival order (same caveat as
-    Flink's count windows, which are arrival-ordered too); Spark gives
-    no per-key FIFO inside a micro-batch, so pass ``order_col`` to sort
-    each batch's rows before buffering when window membership must be
-    deterministic."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
-
+    key. ``window_pdf`` has the input's types in every batch, rows
+    restored from state included (``pd.Timestamp``, ``datetime.date``,
+    ``Decimal``). Row order inside a key follows arrival order (same
+    caveat as Flink's count windows, which are arrival-ordered too);
+    Spark gives no per-key FIFO inside a micro-batch, so pass
+    ``order_col`` to sort each batch's rows before buffering when
+    window membership must be deterministic."""
     if isinstance(output_schema, str):
         output_schema = StructType.fromDDL(output_schema)
-    state_schema = StructType([StructField("buf", ArrayType(StringType()))])
+    buf = RowState(sdf.schema.fields)
+    names = output_schema.fieldNames()
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        buf = [json.loads(s) for s in state.get[0]] if state.exists else []
+        st = buf.read(state)
+        parts = [buf.frame(st)] if st and st[0] else []
         for pdf in pdfs:
-            if order_col is not None:
-                pdf = pdf.sort_values(order_col, kind="stable")
-            for d in pdf.to_dict("records"):
-                buf.append(json.loads(json.dumps(d, default=str)))
+            if len(pdf):
+                parts.append(pdf if order_col is None else pdf.sort_values(order_col, kind="stable"))
+        if not parts:
+            return
+        rows = pd.concat(parts, ignore_index=True)
+        fired = len(rows) // size
         out = []
-        while len(buf) >= size:
-            window, buf = buf[:size], buf[size:]
-            wpdf = pd.DataFrame(window)
-            if ts_col is not None:
-                wpdf[ts_col] = pd.to_datetime(wpdf[ts_col])
-            wpdf = _evict(wpdf, evictor, ts_col)
+        for i in range(fired):
+            window = rows.iloc[i * size : (i + 1) * size].reset_index(drop=True)
             rec = dict(zip(keys, key))
-            rec.update(agg_fn(wpdf))
+            rec.update(agg_fn(_evict(window, evictor, ts_col)))
             out.append(rec)
-        state.update(([json.dumps(r, default=str) for r in buf],))
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        rest = rows.iloc[fired * size :]
+        buf.write(state, [rest[c].tolist() for c in buf.names])
+        if out:
+            yield _frame(names, {c: [r.get(c) for r in out] for c in names})
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, output_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -169,6 +166,9 @@ def streaming_delta_trigger_window(
     ValueState the same way). The anchor + open buffer are carried
     across micro-batches; state is bounded by the rows accumulated
     between fires — the same bound as the reference's window contents.
+    ``delta_fn`` receives row dicts and ``agg_fn`` a frame, both with
+    the input's types in every batch, rows restored from state
+    included (``pd.Timestamp``, ``datetime.date``, ``Decimal``).
 
     Row order inside a key follows arrival order (count/delta windows
     are arrival-ordered in Flink too), but Spark gives no per-key FIFO
@@ -176,60 +176,44 @@ def streaming_delta_trigger_window(
     operator instances) — pass ``order_col`` to sort each micro-batch's
     rows before the trigger loop when delta semantics depend on
     sequence."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
-
     if isinstance(output_schema, str):
         output_schema = StructType.fromDDL(output_schema)
-    # state: [0] = open-buffer rows (json), [1] = anchor row (json or None)
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(StringType())),
-            StructField("anchor", StringType()),
-        ]
-    )
+    # state: the anchor row, unless it is the open buffer's first row,
+    # then the open buffer; ``__open`` counts the open rows
+    buf = RowState(sdf.schema.fields, extra=[StructField("__open", LongType())])
+    cols, names = buf.names, output_schema.fieldNames()
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        if state.exists:
-            buf = [json.loads(s) for s in state.get[0]]
-            anchor = json.loads(state.get[1]) if state.get[1] else None
-        else:
-            buf, anchor = [], None
-        out = []
-        batch_rows = []
-        for pdf in pdfs:
-            if order_col is not None:
-                pdf = pdf.sort_values(order_col, kind="stable")
-            batch_rows.extend(pdf.to_dict("records"))
+        st = buf.read(state)
+        stored = buf.frame(st[:-1]).to_dict("records") if st else []
+        anchor = stored[0] if stored else None
+        window = stored[len(stored) - st[-1] :] if st else []
+        parts = [pdf for pdf in pdfs if len(pdf)]
+        if anchor is None and not parts:
+            return
+        batch = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=cols)
         if order_col is not None:
-            batch_rows.sort(key=lambda r: r[order_col])
-        for d in batch_rows:
-            d = json.loads(json.dumps(d, default=str))
-            buf.append(d)
+            batch = batch.sort_values(order_col, kind="stable")
+        out = []
+        for d in batch.to_dict("records"):
+            window.append(d)
             if anchor is None:
                 # first element seeds the delta anchor (DeltaTrigger
                 # fires nothing until a delta can be computed)
                 anchor = d
             elif delta_fn(anchor, d) > threshold:
                 rec = dict(zip(keys, key))
-                rec.update(agg_fn(pd.DataFrame(buf)))
+                rec.update(agg_fn(pd.DataFrame(window, columns=cols)))
                 out.append(rec)
-                buf = []
+                window = []
                 anchor = d
-        state.update(
-            ([json.dumps(r) for r in buf], json.dumps(anchor) if anchor else None)
-        )
-        cols = [f.name for f in output_schema.fields]
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        keep = window if window and window[0] is anchor else [anchor] + window
+        buf.write(state, [[r[c] for r in keep] for c in cols], len(window))
+        if out:
+            yield _frame(names, {c: [r.get(c) for r in out] for c in names})
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, output_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )
 
 

@@ -20,6 +20,16 @@ Reference parity:
   TemporalRowTimeJoinOperator.java → :func:`streaming_asof_join`
   (union-tag both sides, per-key sorted version store).
 
+State layout: every Python-state operator of this package (here and in
+``dedup``, ``joins``, ``late`` and ``windows``) stores its per-key state
+through one codec, :class:`RowState`. A buffer of rows is one
+``ArrayType(field.dataType)`` field per buffered column, for any Spark
+type, so a row reads back from state with the types it was stored with
+(Flink's one typed serializer per state descriptor). An operator's own
+scalar or array fields follow, and an optional trailing ``__updated``
+wall-clock second carries the lazy TTL. :func:`_frame` builds every
+output frame from columns in one constructor call.
+
 Scale: every op keys its state (state size = O(k) / O(1) / O(versions)
 per key, never O(stream)); Arrow moves batches, no per-row Python; the
 shuffle is the single groupBy on the key — the same asymptotics as the
@@ -28,8 +38,9 @@ reference's keyed-state operators.
 
 from __future__ import annotations
 
-import json
+import bisect
 import os
+import time
 from typing import Iterable
 
 import numpy as np
@@ -42,39 +53,93 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     IntegerType,
+    IntegralType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-_SCALARS = ("bigint", "int", "smallint", "tinyint", "double", "float", "string", "boolean")
 
-
-def _py(v):
-    """Normalize numpy/pandas scalars to Python natives — the JVM-side
-    state pickler rejects numpy dtypes."""
+def _py(v, integral: bool = False):
+    """Normalize one value for the JVM-side state pickler, which rejects
+    numpy/pandas scalars: Python natives, NaN/NaT → None, and floats
+    back to ints for an integral field (a nullable integer column
+    arrives in pandas as float64)."""
+    if isinstance(v, (float, np.floating)):
+        if v != v:
+            return None
+        return int(v) if integral else float(v)
+    if v is pd.NaT:
+        return None
     if hasattr(v, "to_pydatetime"):
         return v.to_pydatetime()
-    if hasattr(v, "item"):
-        return v.item()
+    if hasattr(v, "tolist"):  # numpy scalars and arrays
+        return v.tolist()
     return v
 
 
-def _carry_cols(sdf: DataFrame, keys: list[str]) -> list[str]:
-    cols = []
-    for name, dtype in sdf.dtypes:
-        if name in keys:
-            continue
-        base = dtype.split("(")[0]
-        if base in _SCALARS or base.startswith("timestamp") or base.startswith("decimal"):
-            cols.append(name)
-    return cols
+class RowState:
+    """The state codec of a per-key row buffer: one
+    ``ArrayType(field.dataType)`` per buffered column, then ``extra``
+    fields (an operator's own accumulators), then — with ``ttl`` — the
+    wall-clock second of the last write. The arrays of one buffer need
+    not share a length, so two buffers (the sides of a join) can share
+    one state."""
+
+    def __init__(self, fields, extra=(), ttl: bool = False):
+        self.names = [f.name for f in fields]
+        self._integral = [isinstance(f.dataType, IntegralType) for f in fields]
+        self._ttl = ttl
+        self.schema = StructType(
+            [StructField(f.name, ArrayType(f.dataType)) for f in fields]
+            + list(extra)
+            + ([StructField("__updated", DoubleType())] if ttl else [])
+        )
+
+    def read(self, state, ttl_ms: int | None = None) -> list | None:
+        """Per-column value lists followed by the extra fields; None when
+        the key has no state or more than ``ttl_ms`` passed since the
+        last write (expiry on access — Flink's StateTtlConfig
+        OnReadAndWrite visibility)."""
+        if not state.exists:
+            return None
+        v = state.get
+        if self._ttl:
+            if ttl_ms is not None and (time.time() - v[-1]) * 1000.0 > ttl_ms:
+                return None
+            v = v[:-1]
+        n = len(self.names)
+        return [list(a) for a in v[:n]] + list(v[n:])
+
+    def write(self, state, cols, *extra) -> None:
+        state.update(
+            tuple([_py(v, i) for v in c] for c, i in zip(cols, self._integral))
+            + extra
+            + ((time.time(),) if self._ttl else ())
+        )
+
+    def frame(self, cols) -> pd.DataFrame:
+        """The buffered rows as a pandas frame."""
+        return pd.DataFrame(dict(zip(self.names, cols)))
 
 
-def _array_state_schema(sdf: DataFrame, cols: list[str]) -> StructType:
-    by_name = {f.name: f for f in sdf.schema.fields}
-    return StructType([StructField(c, ArrayType(by_name[c].dataType)) for c in cols])
+def _frame(names, cols: dict, keys=(), key=()) -> pd.DataFrame:
+    """One group's output: a single dict-of-arrays constructor call with
+    the group key broadcast into ``keys``. Inserting columns one by one
+    pays several pandas block-manager operations per group, and with
+    thousands of groups per batch that per-group constant is the cost
+    of an operator."""
+    n = len(next(iter(cols.values())))
+    for kc, kv in zip(keys, key):
+        cols[kc] = [kv] * n
+    return pd.DataFrame({c: cols[c] for c in names})
+
+
+def _split(sdf: DataFrame, keys: list[str]):
+    """(key fields, value fields) of ``sdf`` in schema order."""
+    fields = sdf.schema.fields
+    return [f for f in fields if f.name in keys], [f for f in fields if f.name not in keys]
 
 
 def streaming_topn(
@@ -95,41 +160,69 @@ def streaming_topn(
     crashes Python workers in this build, so expiry is lazy-on-access;
     at 100 TB cap total state via watermark-scoped operators where
     possible."""
-    carry = _carry_cols(sdf, partition_keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in partition_keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [StructField("rank_num", IntegerType())]
-    )
-    base_schema = _array_state_schema(sdf, carry)
-    state_schema = StructType(list(base_schema.fields) + [StructField("__updated", DoubleType())])
+    key_fields, vals = _split(sdf, partition_keys)
+    out_schema = StructType(key_fields + vals + [StructField("rank_num", IntegerType())])
+    buf = RowState(vals, ttl=True)
+    carry, names = buf.names, out_schema.fieldNames()
     oi = carry.index(order_col)
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        import time as _time
-
-        now = _time.time()
-        fresh = state.exists and (
-            ttl_ms is None or (now - state.get[-1]) * 1000.0 <= ttl_ms
-        )
-        cols = [list(x) for x in state.get[:-1]] if fresh else [[] for _ in carry]
-        rows = list(zip(*cols)) if cols and cols[0] else []
+        cols = buf.read(state, ttl_ms)
+        rows = list(zip(*cols)) if cols else []
         for pdf in pdfs:
-            rows.extend(tuple(t) for t in pdf[carry].itertuples(index=False))
+            rows.extend(pdf[carry].itertuples(index=False, name=None))
+        if not rows:
+            return
         rows.sort(key=lambda r: r[oi], reverse=descending)
-        rows = rows[:k]
-        state.update(
-            tuple([_py(r[i]) for r in rows] for i in range(len(carry))) + (now,)
-        )
-        out = pd.DataFrame(rows, columns=carry)
-        for kc, kv in zip(partition_keys, key):
-            out[kc] = kv
-        out["rank_num"] = range(1, len(rows) + 1)
-        yield out[[f.name for f in out_schema.fields]]
+        cols = [list(c) for c in zip(*rows[:k])]
+        buf.write(state, cols)
+        out = dict(zip(carry, cols))
+        out["rank_num"] = range(1, len(cols[0]) + 1)
+        yield _frame(names, out, partition_keys, key)
 
     return sdf.groupBy(*partition_keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        fn, out_schema, buf.schema, "update", GroupStateTimeout.NoTimeout
+    )
+
+
+def _dedup(sdf: DataFrame, keys: list[str], order_col: str | None, ttl_ms, last: bool):
+    """keep_last_dedup / keep_first_dedup: the state is the kept row."""
+    key_fields, vals = _split(sdf, keys)
+    out_schema = StructType(key_fields + vals)
+    buf = RowState(vals, ttl=True)
+    carry, names = buf.names, out_schema.fieldNames()
+    oi = carry.index(order_col) if order_col else None
+
+    def replaces(cand, kept) -> bool:
+        if kept is None:
+            return True
+        if oi is None:  # proctime: arrival order decides
+            return last
+        a, b = cand[oi], kept[oi]
+        # a NULL order value never supersedes, nor is superseded
+        return a is not None and b is not None and (a >= b if last else a < b)
+
+    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
+        cols = buf.read(state, ttl_ms)
+        kept = [c[0] for c in cols] if cols else None
+        changed = False
+        for pdf in pdfs:
+            if len(pdf):
+                p = pdf.sort_values(order_col, kind="stable") if order_col else pdf
+                # per-column extraction: row-wise p[carry].iloc[i] upcasts
+                # mixed numeric dtypes to float64
+                i = -1 if last else 0
+                cand = [_py(p[c].iloc[i]) for c in carry]
+                if replaces(cand, kept):
+                    kept, changed = cand, True
+        if kept is None:
+            return
+        buf.write(state, [[v] for v in kept])
+        if changed or last:
+            yield _frame(names, {c: [v] for c, v in zip(carry, kept)}, keys, key)
+
+    return sdf.groupBy(*keys).applyInPandasWithState(
+        fn, out_schema, buf.schema, "update", GroupStateTimeout.NoTimeout
     )
 
 
@@ -141,41 +234,7 @@ def keep_last_dedup(
     column (rowtime dedup); None keeps arrival order (proctime).
     ``ttl_ms`` expires state lazily on next access (StateTtlConfig
     OnReadAndWrite semantics — see streaming_topn note)."""
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(key_fields + [f for f in sdf.schema.fields if f.name in carry])
-    base_schema = _array_state_schema(sdf, carry)
-    state_schema = StructType(list(base_schema.fields) + [StructField("__updated", DoubleType())])
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        import time as _time
-
-        now = _time.time()
-        fresh = state.exists and (
-            ttl_ms is None or (now - state.get[-1]) * 1000.0 <= ttl_ms
-        )
-        last = tuple(v[0] for v in state.get[:-1]) if fresh else None
-        for pdf in pdfs:
-            if len(pdf):
-                p = pdf.sort_values(order_col, kind="stable") if order_col else pdf
-                # per-column extraction: row-wise p[carry].iloc[-1] upcasts
-                # mixed numeric dtypes to float64, and a float written into
-                # an ArrayType(LongType) state column silently becomes NULL
-                cand = tuple(_py(p[c].iloc[-1]) for c in carry)
-                if last is None or order_col is None or cand[carry.index(order_col)] >= last[
-                    carry.index(order_col)
-                ]:
-                    last = cand
-        if last is not None:
-            state.update(tuple([_py(v)] for v in last) + (now,))
-            out = pd.DataFrame([last], columns=carry)
-            for kc, kv in zip(keys, key):
-                out[kc] = kv
-            yield out[[f.name for f in out_schema.fields]]
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+    return _dedup(sdf, keys, order_col, ttl_ms, last=True)
 
 
 def keep_first_dedup(
@@ -188,44 +247,10 @@ def keep_first_dedup(
     supersede with a smaller order value (rowtime semantics, update
     emission); ``order_col=None`` is proctime arrival order — once a
     key has state, later rows emit nothing. ``ttl_ms`` as keep_last."""
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(key_fields + [f for f in sdf.schema.fields if f.name in carry])
-    base_schema = _array_state_schema(sdf, carry)
-    state_schema = StructType(list(base_schema.fields) + [StructField("__updated", DoubleType())])
+    return _dedup(sdf, keys, order_col, ttl_ms, last=False)
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        import time as _time
 
-        now = _time.time()
-        fresh = state.exists and (
-            ttl_ms is None or (now - state.get[-1]) * 1000.0 <= ttl_ms
-        )
-        first = tuple(v[0] for v in state.get[:-1]) if fresh else None
-        changed = False
-        for pdf in pdfs:
-            if len(pdf):
-                p = pdf.sort_values(order_col, kind="stable") if order_col else pdf
-                # per-column extraction — see keep_last_dedup dtype note
-                cand = tuple(_py(p[c].iloc[0]) for c in carry)
-                if first is None or (
-                    order_col is not None
-                    and cand[carry.index(order_col)] < first[carry.index(order_col)]
-                ):
-                    first = cand
-                    changed = True
-        if changed:
-            state.update(tuple([_py(v)] for v in first) + (now,))
-            out = pd.DataFrame([first], columns=carry)
-            for kc, kv in zip(keys, key):
-                out[kc] = kv
-            yield out[[f.name for f in out_schema.fields]]
-        elif first is not None:
-            state.update(tuple([_py(v)] for v in first) + (now,))
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
+_OVER_STATS = (("COUNT", "cnt"), ("SUM", "sum"), ("AVG", "avg"), ("MIN", "min"), ("MAX", "max"))
 
 
 def streaming_over_unbounded(
@@ -236,50 +261,9 @@ def streaming_over_unbounded(
     Rows are processed in ``order_col`` order within a batch and in
     arrival order across batches (same visible semantics as Flink's
     proctime OVER; rowtime OVER exactness requires ordered input)."""
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [
-            StructField("running_cnt", LongType()),
-            StructField("running_sum", DoubleType()),
-            StructField("running_avg", DoubleType()),
-            StructField("running_min", DoubleType()),
-            StructField("running_max", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("cnt", LongType()),
-            StructField("sum", DoubleType()),
-            StructField("min", DoubleType()),
-            StructField("max", DoubleType()),
-        ]
-    )
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        cnt, s, mn, mx = state.get if state.exists else (0, 0.0, None, None)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            p = pdf.sort_values(order_col, kind="stable").reset_index(drop=True)
-            v = p[value_col].astype(float)
-            p["running_cnt"] = v.notna().cumsum() + cnt
-            p["running_sum"] = v.fillna(0).cumsum() + s
-            p["running_avg"] = p["running_sum"] / p["running_cnt"]
-            run_min = v.cummin() if mn is None else v.cummin().combine(mn, min)
-            run_max = v.cummax() if mx is None else v.cummax().combine(mx, max)
-            p["running_min"], p["running_max"] = run_min, run_max
-            cnt, s = int(p["running_cnt"].iloc[-1]), float(p["running_sum"].iloc[-1])
-            mn, mx = float(run_min.iloc[-1]), float(run_max.iloc[-1])
-            for kc, kv in zip(keys, key):
-                p[kc] = kv
-            yield p[[f.name for f in out_schema.fields]]
-        state.update((cnt, s, mn, mx))
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return streaming_over_multi(
+        sdf, keys, order_col,
+        [(fn, value_col, f"running_{al}") for fn, al in _OVER_STATS],
     )
 
 
@@ -295,101 +279,14 @@ def streaming_over_bounded(
     RowTimeRowsBoundedPrecedingFunction (``rows=n`` → ROWS BETWEEN n-1
     PRECEDING AND CURRENT ROW) and RowTimeRangeBoundedPrecedingFunction
     (``range_interval='10 minutes'`` → RANGE BETWEEN interval PRECEDING
-    AND CURRENT ROW). State carries only the tail that can still enter
-    a future row's frame (last n rows / rows within the interval of the
-    newest timestamp) — bounded, exactly like the reference's cleanup
-    timers. Aggregation itself is pandas rolling (vectorized)."""
+    AND CURRENT ROW), emitting bounded cnt/sum/avg/min/max. State
+    carries only the tail that can still enter a future row's frame
+    (see :func:`streaming_over_multi`)."""
     assert (rows is None) != (range_interval is None), "pass exactly one frame bound"
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [
-            StructField("bounded_cnt", LongType()),
-            StructField("bounded_sum", DoubleType()),
-            StructField("bounded_avg", DoubleType()),
-            StructField("bounded_min", DoubleType()),
-            StructField("bounded_max", DoubleType()),
-        ]
-    )
-    from pyspark.sql.types import ArrayType, StringType
-
-    state_schema = StructType(
-        [
-            StructField("tail_v", ArrayType(DoubleType())),
-            StructField("tail_t", ArrayType(StringType())),
-        ]
-    )
-    delta = pd.Timedelta(range_interval) if range_interval else None
-
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        tail_v, tail_t = (list(state.get[0]), list(state.get[1])) if state.exists else ([], [])
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            p = pdf.sort_values(order_col, kind="stable").reset_index(drop=True)
-            ncarry = len(tail_v)
-            v = pd.concat(
-                [pd.Series(tail_v, dtype=float), p[value_col].astype(float)],
-                ignore_index=True,
-            )
-            t = pd.concat(
-                [pd.Series(pd.to_datetime(tail_t)), pd.to_datetime(p[order_col])],
-                ignore_index=True,
-            )
-            # a late row (batch time < tail max) makes the concat
-            # non-monotonic — time-based rolling would raise and ROWS
-            # frames would mis-order; sort tail+batch JOINTLY (stable:
-            # earlier-arrived rows precede on ties) and map results
-            # back to batch positions. The reference reorders the same
-            # way via MapState + event-time timers; rows older than
-            # the retained tail horizon see a truncated frame (state
-            # already cleaned, matching its watermark cleanup).
-            order = np.argsort(t.to_numpy(), kind="stable")
-            batch_pos = np.arange(ncarry, len(order))
-            if not np.array_equal(order, np.arange(len(order))):
-                inv = np.empty(len(order), dtype=np.int64)
-                inv[order] = np.arange(len(order))
-                batch_pos = inv[ncarry:]
-                v = v.iloc[order].reset_index(drop=True)
-                t = t.iloc[order].reset_index(drop=True)
-            if rows is not None:
-                r = v.rolling(rows, min_periods=1)
-            else:
-                # closed="both": Flink's RANGE x PRECEDING frame is
-                # [cur - x, cur] INCLUSIVE on both ends
-                # (RowTimeRangeBoundedPrecedingFunction retracts rows
-                # strictly older than cur - x; SQL RANGE is inclusive)
-                # — pandas' default right-closed window would drop the
-                # row sitting exactly x before the current one
-                r = pd.DataFrame({"v": v.values}, index=pd.DatetimeIndex(t))["v"].rolling(
-                    delta, min_periods=1, closed="both"
-                )
-            agg = {
-                "bounded_cnt": r.count().astype("int64"),
-                "bounded_sum": r.sum(),
-                "bounded_avg": r.mean(),
-                "bounded_min": r.min(),
-                "bounded_max": r.max(),
-            }
-            for name, series in agg.items():
-                p[name] = series.to_numpy()[batch_pos]
-            for kc, kv in zip(keys, key):
-                p[kc] = kv
-            yield p[[f.name for f in out_schema.fields]]
-            # retain only the tail a future frame can reference
-            if rows is not None:
-                keep = min(len(v), rows - 1)
-            else:
-                cutoff = t.iloc[-1] - delta
-                keep = int((t >= cutoff).sum())
-            tail_v = [float(x) for x in v.iloc[len(v) - keep :]] if keep else []
-            tail_t = [str(x) for x in t.iloc[len(t) - keep :]] if keep else []
-        state.update((tail_v, tail_t))
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return streaming_over_multi(
+        sdf, keys, order_col,
+        [(fn, value_col, f"bounded_{al}") for fn, al in _OVER_STATS],
+        rows=rows, range_interval=range_interval,
     )
 
 
@@ -401,26 +298,24 @@ def changelog_normalize(
     with ``delete_col`` true → ``-D``. The ``__rowkind`` column is the
     Spark-visible stand-in for Flink's RowKind byte
     (flink-core/.../types/RowKind.java:31-52)."""
-    carry = [c for c in _carry_cols(sdf, keys) if c != delete_col]
+    key_fields, vals = _split(sdf, keys)
+    vals = [f for f in vals if f.name != delete_col]
+    out_schema = StructType(key_fields + vals + [StructField("__rowkind", StringType())])
+    buf = RowState(vals)
+    carry, names = buf.names, out_schema.fieldNames()
     # the order column sequences updates but is NOT part of the value —
     # two versions differing only in order_col are the same row
     cmp_idx = [i for i, c in enumerate(carry) if c != order_col]
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
-    out_schema = StructType(
-        key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
-        + [StructField("__rowkind", StringType())]
-    )
-    state_schema = _array_state_schema(sdf, carry)
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        last = tuple(v[0] for v in state.get) if state.exists else None
+        cols = buf.read(state)
+        last = tuple(c[0] for c in cols) if cols else None
         cmp = lambda t: tuple(t[i] for i in cmp_idx)  # noqa: E731
         out_rows = []
         for pdf in pdfs:
             p = pdf.sort_values(order_col, kind="stable") if order_col else pdf
             for d in p.to_dict("records"):
-                vals = tuple(d[c] for c in carry)
+                vals = tuple(_py(d[c]) for c in carry)
                 if delete_col and d.get(delete_col):
                     if last is not None:
                         out_rows.append(last + ("-D",))
@@ -433,16 +328,15 @@ def changelog_normalize(
                     out_rows.append(vals + ("+U",))
                 last = vals
         if last is not None:
-            state.update(tuple([_py(v)] for v in last))
-        out = pd.DataFrame(out_rows, columns=carry + ["__rowkind"])
-        for kc, kv in zip(keys, key):
-            out[kc] = kv
-        yield out[[f.name for f in out_schema.fields]] if len(out) else pd.DataFrame(
-            columns=[f.name for f in out_schema.fields]
-        )
+            buf.write(state, [[v] for v in last])
+        elif state.exists:
+            state.remove()
+        if out_rows:
+            out = dict(zip(carry + ["__rowkind"], map(list, zip(*out_rows))))
+            yield _frame(names, out, keys, key)
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, out_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -455,102 +349,59 @@ def streaming_asof_join(
     right_vals: list[str],
 ) -> DataFrame:
     """FOR SYSTEM_TIME AS OF: each left row joins the latest right
-    version with ``right_ts <= left_ts``. Both streams are tagged,
-    unioned, and keyed; state keeps the right side's (ts, payload)
-    versions sorted (payload JSON-encoded — versions are few per key).
-    Left rows that precede every version emit null payload columns.
+    version with ``right_ts <= left_ts``. Both streams are tagged with
+    ``__side`` and unioned by name (each side keeps its own typed
+    columns), then keyed; state keeps the right side's versions sorted
+    by time. Left rows that precede every version emit null right
+    columns. Timestamps order as unix micros on both sides
+    (TemporalRowTimeJoinOperator.java orders raw epoch longs)."""
+    from pyspark.sql.types import TimestampType
 
-    Timestamp payload columns are carried as unix MICROS through the
-    JSON state (to_json's ISO text keeps only milliseconds) and
-    restored on the way out, so event-time values round-trip exactly;
-    the ``__ts`` ordering column likewise compares in micros on both
-    sides (TemporalRowTimeJoinOperator.java orders raw epoch longs)."""
-    from pyspark.sql.types import LongType, TimestampType
+    def _ts(df: DataFrame, col: str):
+        if isinstance(df.schema[col].dataType, TimestampType):
+            return F.unix_micros(F.col(col)).alias("__ts")
+        return F.col(col).alias("__ts")
 
     lcols = [c for c in left.columns if c != key]
-    l_conv = [c for c in lcols if isinstance(left.schema[c].dataType, TimestampType)]
-    r_conv = [
-        c for c in right_vals if isinstance(right.schema[c].dataType, TimestampType)
-    ]
-
-    def _ts_expr(df: DataFrame, col: str):
-        if isinstance(df.schema[col].dataType, TimestampType):
-            return F.unix_micros(F.col(col))
-        return F.col(col)
-
-    def _payload_cols(cols, conv):
-        return [
-            (F.unix_micros(F.col(c)).alias(c) if c in conv else F.col(c))
-            for c in cols
-        ]
-
-    tagged_l = left.select(
-        F.col(key).alias("__k"),
-        F.lit(0).alias("__side"),
-        _ts_expr(left, left_ts).alias("__ts"),
-        F.to_json(F.struct(*_payload_cols(lcols, l_conv))).alias("__payload"),
+    both = left.select(
+        F.col(key).alias("__k"), F.lit(0).alias("__side"), _ts(left, left_ts), *lcols
+    ).unionByName(
+        right.select(
+            F.col(key).alias("__k"), F.lit(1).alias("__side"), _ts(right, right_ts), *right_vals
+        ),
+        allowMissingColumns=True,
     )
-    tagged_r = right.select(
-        F.col(key).alias("__k"),
-        F.lit(1).alias("__side"),
-        _ts_expr(right, right_ts).alias("__ts"),
-        F.to_json(F.struct(*_payload_cols(right_vals, r_conv))).alias("__payload"),
-    )
-    both = tagged_l.unionByName(tagged_r)
-
-    def _long_if_conv(f):
-        if f.name in l_conv or f.name in r_conv:
-            return StructField(f.name, LongType())
-        return f
-
-    left_fields = [_long_if_conv(f) for f in left.schema.fields if f.name != key]
-    right_fields = [
-        _long_if_conv(f) for f in right.schema.fields if f.name in right_vals
-    ]
     key_field = [f for f in left.schema.fields if f.name == key]
+    left_fields = [f for f in left.schema.fields if f.name != key]
+    right_fields = [f for f in right.schema.fields if f.name in right_vals]
     out_schema = StructType(key_field + left_fields + right_fields)
-    state_schema = StructType(
-        [StructField("ts", ArrayType(DoubleType())), StructField("payload", ArrayType(StringType()))]
-    )
+    buf = RowState([both.schema["__ts"]] + right_fields)
+    names = out_schema.fieldNames()
+    vnames = buf.names
 
     def fn(k, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        ts, payloads = ([list(x) for x in state.get] if state.exists else ([], []))
-        lrows = []
+        versions = buf.read(state) or [[] for _ in vnames]
+        lparts = []
         for pdf in pdfs:
-            # NOT itertuples: it mangles the __-prefixed column names
-            for d in pdf.to_dict("records"):
-                epoch = d["__ts"].timestamp() if hasattr(d["__ts"], "timestamp") else float(d["__ts"])
-                if d["__side"] == 1:
-                    ts.append(epoch)
-                    payloads.append(d["__payload"])
-                else:
-                    lrows.append((epoch, d["__payload"]))
-        order = sorted(range(len(ts)), key=lambda i: ts[i])
-        ts = [ts[i] for i in order]
-        payloads = [payloads[i] for i in order]
-        state.update((ts, payloads))
+            side = pdf["__side"].to_numpy()
+            for col, c in zip(versions, vnames):
+                col.extend(pdf[c][side == 1].tolist())
+            lparts.append(pdf[side == 0])
+        order = sorted(range(len(versions[0])), key=versions[0].__getitem__)
+        versions = [[col[i] for i in order] for col in versions]
+        buf.write(state, versions)
+        lrows = pd.concat(lparts, ignore_index=True).sort_values("__ts", kind="stable")
+        if not len(lrows):
+            return
+        at = [bisect.bisect_right(versions[0], t) - 1 for t in lrows["__ts"].tolist()]
+        out = {c: lrows[c].to_numpy() for c in lcols}
+        for col, c in zip(versions[1:], vnames[1:]):
+            out[c] = [col[i] if i >= 0 else None for i in at]
+        yield _frame(names, out, [key], k)
 
-        import bisect
-
-        out = []
-        for epoch, lp in sorted(lrows):
-            i = bisect.bisect_right(ts, epoch) - 1
-            lrec = json.loads(lp)
-            rrec = json.loads(payloads[i]) if i >= 0 else {c: None for c in right_vals}
-            out.append({key: k[0], **lrec, **rrec})
-        cols = [f.name for f in out_schema.fields]
-        df = pd.DataFrame(out, columns=cols)
-        for f in left_fields:
-            if "timestamp" in f.dataType.simpleString():
-                df[f.name] = pd.to_datetime(df[f.name])
-        yield df
-
-    res = both.groupBy("__k").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return both.groupBy("__k").applyInPandasWithState(
+        fn, out_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )
-    for c in l_conv + r_conv:
-        res = res.withColumn(c, F.timestamp_micros(F.col(c)))
-    return res
 
 
 def foreach_batch_upsert(
@@ -632,13 +483,11 @@ def keyed_inactivity_timer(
             StructField("n_events", LongType()),
         ]
     )
-    state_schema = StructType(
-        [StructField("last_ms", LongType()), StructField("n", LongType())]
-    )
+    buf = RowState((), extra=[StructField("last_ms", LongType()), StructField("n", LongType())])
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         if state.hasTimedOut:
-            last_ms, n = state.get
+            last_ms, n = buf.read(state)
             state.remove()
             out = pd.DataFrame(
                 [tuple(key) + (pd.Timestamp(last_ms, unit="ms"), n)],
@@ -646,7 +495,7 @@ def keyed_inactivity_timer(
             )
             yield out
             return
-        last_ms, n = state.get if state.exists else (None, 0)
+        last_ms, n = buf.read(state) or (None, 0)
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
@@ -657,7 +506,7 @@ def keyed_inactivity_timer(
             last_ms = mx if last_ms is None else max(last_ms, mx)
             n += len(pdf)
         if last_ms is not None:
-            state.update((int(last_ms), int(n)))
+            buf.write(state, (), int(last_ms), int(n))
             # a timer armed at-or-before the watermark would be rejected;
             # clamp to wm+1 so it fires on the next batch (same behavior
             # as Flink registering an already-elapsed event-time timer)
@@ -668,7 +517,7 @@ def keyed_inactivity_timer(
         # r13 lesson), and append mode emits the same either way
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+        fn, out_schema, buf.schema, "append", GroupStateTimeout.EventTimeTimeout
     )
 
 
@@ -700,12 +549,10 @@ def changelog_group_aggregate(
             StructField("sum_cents", LongType()),
         ]
     )
-    state_schema = StructType(
-        [StructField("cnt", LongType()), StructField("s", LongType())]
-    )
+    buf = RowState((), extra=[StructField("cnt", LongType()), StructField("s", LongType())])
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        cnt, s = state.get if state.exists else (0, 0)
+        cnt, s = buf.read(state) or (0, 0)
         for pdf in pdfs:
             for d in pdf.to_dict("records"):
                 sign = -1 if d[rowkind_col] in ("-U", "-D") else 1
@@ -716,13 +563,16 @@ def changelog_group_aggregate(
                 # symmetrically contributes 0
                 if v is not None and not (isinstance(v, float) and v != v):
                     s += sign * int(v)
-        state.update((int(cnt), int(s)))
+        buf.write(state, (), int(cnt), int(s))
         out = pd.DataFrame([tuple(key) + (cnt, s)], columns=[f.name for f in out_schema.fields])
         yield out
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        fn, out_schema, buf.schema, "update", GroupStateTimeout.NoTimeout
     )
+
+
+_ROLLING = {"COUNT": "count", "SUM": "sum", "AVG": "mean", "MIN": "min", "MAX": "max"}
 
 
 def streaming_over_multi(
@@ -752,10 +602,13 @@ def streaming_over_multi(
 
     State: UNBOUNDED keeps per-column running accumulators
     (cnt/sum/min/max/first/last arrays indexed by referenced column)
-    plus the last max-LAG-offset values per column; bounded frames
-    keep the tail rows that can still enter a future frame,
-    JSON-encoded as [ts, v1..vk]. Aggregation itself is vectorized
-    pandas (cum*/rolling/shift) — per-batch, not per-row Python."""
+    plus a row buffer of the last max-LAG-offset values per column;
+    bounded frames keep a row buffer of the tail (order column and
+    referenced columns, in their own types) that can still enter a
+    future frame — the last n-1 rows / the rows within the interval of
+    the newest timestamp, exactly like the reference's cleanup timers.
+    Aggregation itself is vectorized pandas (cum*/rolling/shift) —
+    per-batch, not per-row Python."""
     assert rows is None or range_interval is None, "pass at most one frame"
     aggs = [tuple(a) + (None,) * (4 - len(a)) for a in aggs]
     offset_fns = {"LAG", "LEAD", "FIRST_VALUE", "LAST_VALUE"}
@@ -782,131 +635,110 @@ def streaming_over_multi(
         [off or 1 for fn, _c, _al, off in aggs if fn == "LAG"], default=0
     )
     val_cols = sorted({c for _fn, c, _al, _off in aggs if c is not None})
-    carry = _carry_cols(sdf, keys)
-    key_fields = [f for f in sdf.schema.fields if f.name in keys]
+    key_fields, vals = _split(sdf, keys)
     out_type = {"COUNT": LongType()}
     out_schema = StructType(
         key_fields
-        + [f for f in sdf.schema.fields if f.name in carry]
+        + vals
         + [
             StructField(al, out_type.get(fn, DoubleType()))
             for fn, _c, al, _off in aggs
         ]
     )
-    from pyspark.sql.types import ArrayType, StringType
-
-    bounded = rows is not None or range_interval is not None
-    if bounded:
-        state_schema = StructType([StructField("tail", ArrayType(StringType()))])
-    else:
-        state_schema = StructType(
-            [
-                StructField("rows_seen", LongType()),
-                StructField("cnt", ArrayType(LongType())),
-                StructField("sum", ArrayType(DoubleType())),
-                StructField("min", ArrayType(DoubleType())),
-                StructField("max", ArrayType(DoubleType())),
-                # offset/value aggregate state: first/last non-null per
-                # column, plus the last lag_depth values per column
-                # (JSON rows [v1..vk]) for LAG
-                StructField("first", ArrayType(DoubleType())),
-                StructField("last", ArrayType(DoubleType())),
-                StructField("lag_tail", ArrayType(StringType())),
-            ]
-        )
+    names = out_schema.fieldNames()
+    by_name = {f.name: f for f in sdf.schema.fields}
     delta = pd.Timedelta(range_interval) if range_interval else None
 
-    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        if bounded:
-            tail = [json.loads(s) for s in state.get[0]] if state.exists else []
+    if rows is not None or range_interval is not None:
+        buf = RowState(
+            [by_name[order_col]] + [by_name[c] for c in val_cols if c != order_col]
+        )
+        tail_names = buf.names
+
+        def fn_bounded(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
+            tail = buf.read(state)
+            hist = buf.frame(tail) if tail and tail[0] else None
             for pdf in pdfs:
                 if not len(pdf):
                     continue
                 p = pdf.sort_values(order_col, kind="stable").reset_index(drop=True)
-                ncarry = len(tail)
-                t = pd.concat(
-                    [
-                        pd.Series(pd.to_datetime([r[0] for r in tail])),
-                        pd.to_datetime(p[order_col]),
-                    ],
-                    ignore_index=True,
-                )
-                vals = {
-                    c: pd.concat(
-                        [
-                            pd.Series([r[1 + i] for r in tail], dtype=float),
-                            p[c].astype(float),
-                        ],
-                        ignore_index=True,
-                    )
-                    for i, c in enumerate(val_cols)
-                }
-                # joint tail+batch sort for late rows — see
-                # streaming_over_bounded (same MapState-reorder parity)
+                nhist = 0 if hist is None else len(hist)
+                frame = p[tail_names]
+                if hist is not None:
+                    frame = pd.concat([hist, frame], ignore_index=True)
+                # a late row (batch time < tail max) makes tail+batch
+                # non-monotonic — time-based rolling would raise and ROWS
+                # frames would mis-order; sort tail+batch JOINTLY (stable:
+                # earlier-arrived rows precede on ties) and map results
+                # back to batch positions. The reference reorders the same
+                # way via MapState + event-time timers; rows older than
+                # the retained tail horizon see a truncated frame (state
+                # already cleaned, matching its watermark cleanup).
+                t = pd.to_datetime(frame[order_col])
                 order = np.argsort(t.to_numpy(), kind="stable")
-                batch_pos = np.arange(ncarry, len(order))
-                if not np.array_equal(order, np.arange(len(order))):
-                    inv = np.empty(len(order), dtype=np.int64)
-                    inv[order] = np.arange(len(order))
-                    batch_pos = inv[ncarry:]
-                    t = t.iloc[order].reset_index(drop=True)
-                    vals = {
-                        c: v.iloc[order].reset_index(drop=True)
-                        for c, v in vals.items()
-                    }
-                ones = pd.Series(1.0, index=range(len(t)))
-
-                def roll(series):
-                    if rows is not None:
-                        return series.rolling(rows, min_periods=1)
-                    # inclusive preceding edge — see streaming_over_bounded
-                    return pd.DataFrame(
-                        {"v": series.values}, index=pd.DatetimeIndex(t)
-                    )["v"].rolling(delta, min_periods=1, closed="both")
-
+                batch_pos = np.argsort(order, kind="stable")[nhist:]
+                frame = frame.iloc[order].reset_index(drop=True)
+                t = t.iloc[order].reset_index(drop=True)
+                ones = pd.Series(1.0, index=frame.index)
                 for fn_name, c, al, _off in aggs:
-                    s = ones if c is None else vals[c]
-                    r = roll(s)
-                    if fn_name == "COUNT":
-                        out = r.count().astype("int64")
-                    elif fn_name == "SUM":
-                        out = r.sum()
-                    elif fn_name == "AVG":
-                        out = r.mean()
-                    elif fn_name == "MIN":
-                        out = r.min()
+                    s = ones if c is None else frame[c].astype(float)
+                    if rows is not None:
+                        r = s.rolling(rows, min_periods=1)
                     else:
-                        out = r.max()
-                    p[al] = out.to_numpy()[batch_pos]
-                for kc, kv in zip(keys, key):
-                    p[kc] = kv
-                yield p[[f.name for f in out_schema.fields]]
+                        # closed="both": Flink's RANGE x PRECEDING frame is
+                        # [cur - x, cur] INCLUSIVE on both ends
+                        # (RowTimeRangeBoundedPrecedingFunction retracts
+                        # rows strictly older than cur - x) — pandas'
+                        # default right-closed window would drop the row
+                        # sitting exactly x before the current one
+                        r = pd.Series(s.to_numpy(), index=pd.DatetimeIndex(t)).rolling(
+                            delta, min_periods=1, closed="both"
+                        )
+                    res = getattr(r, _ROLLING[fn_name])()
+                    if fn_name == "COUNT":
+                        res = res.astype("int64")
+                    p[al] = res.to_numpy()[batch_pos]
+                yield p[names]
+                # retain only the tail a future frame can reference
                 if rows is not None:
                     keep = min(len(t), rows - 1)
                 else:
-                    cutoff = t.iloc[-1] - delta
-                    keep = int((t >= cutoff).sum())
-                tail = [
-                    [str(t.iloc[i])] + [float(vals[c].iloc[i]) for c in val_cols]
-                    for i in range(len(t) - keep, len(t))
-                ]
-            state.update(([json.dumps(r) for r in tail],))
-            return
-        # UNBOUNDED PRECEDING: running accumulators per referenced col
+                    keep = int((t >= t.iloc[-1] - delta).sum())
+                hist = frame.iloc[len(frame) - keep:] if keep else None
+            cols = [[] for _ in tail_names] if hist is None else [hist[c].tolist() for c in tail_names]
+            buf.write(state, cols)
+
+        return sdf.groupBy(*keys).applyInPandasWithState(
+            fn_bounded, out_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
+        )
+
+    # UNBOUNDED PRECEDING: running accumulators per referenced column,
+    # and the last lag_depth values of each for LAG
+    buf = RowState(
+        [StructField(c, DoubleType()) for c in val_cols],
+        extra=[
+            StructField("__rows_seen", LongType()),
+            StructField("__cnt", ArrayType(LongType())),
+            *(
+                StructField(f"__{a}", ArrayType(DoubleType()))
+                for a in ("sum", "min", "max", "first", "last")
+            ),
+        ],
+    )
+
+    def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         k = len(val_cols)
-        if state.exists:
-            rows_seen, cnt, s_, mn, mx, first, last, lag_json = state.get
-            cnt, s_, mn, mx = list(cnt), list(s_), list(mn), list(mx)
-            first, last = list(first), list(last)
-            lag_tails = {
-                c: json.loads(lag_json[i]) for i, c in enumerate(val_cols)
-            } if lag_json else {c: [] for c in val_cols}
+        st = buf.read(state)
+        if st:
+            lag_tails = dict(zip(val_cols, st[:k]))
+            rows_seen = st[k]
+            cnt, s_, mn, mx, first, last = (list(a) for a in st[k + 1:])
         else:
+            lag_tails = {c: [] for c in val_cols}
             rows_seen = 0
             cnt, s_ = [0] * k, [0.0] * k
             mn, mx = [None] * k, [None] * k
             first, last = [None] * k, [None] * k
-            lag_tails = {c: [] for c in val_cols}
         for pdf in pdfs:
             if not len(pdf):
                 continue
@@ -935,7 +767,7 @@ def streaming_over_multi(
                 if len(lv) and not pd.isna(lv.iloc[-1]):
                     last[i] = float(lv.iloc[-1])
                 if lag_depth:
-                    prev = lag_tails.get(c, [])
+                    prev = lag_tails[c]
                     s2 = pd.concat(
                         [pd.Series(prev, dtype=float), v], ignore_index=True
                     )
@@ -973,14 +805,9 @@ def streaming_over_multi(
                     p[al] = fv.to_numpy()
                 else:  # LAST_VALUE
                     p[al] = lv.to_numpy()
-            for kc, kv in zip(keys, key):
-                p[kc] = kv
-            yield p[[f.name for f in out_schema.fields]]
-        state.update((
-            rows_seen, cnt, s_, mn, mx, first, last,
-            [json.dumps(lag_tails.get(c, [])) for c in val_cols],
-        ))
+            yield p[names]
+        buf.write(state, [lag_tails[c] for c in val_cols], rows_seen, cnt, s_, mn, mx, first, last)
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, out_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )

@@ -118,14 +118,9 @@ def window_topn(
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-    from flink_1_16_0_src_spark.streaming.stateful import _py
+    from flink_1_16_0_src_spark.streaming.stateful import RowState, _frame
 
     size_us = int(pd.Timedelta(size).total_seconds() * 1_000_000)
     slide_us = (
@@ -165,24 +160,13 @@ def window_topn(
         + [by_name[order_col]]
         + [by_name[c] for c in payload if c != order_col]
     )
-    state_schema = StructType(
-        [StructField(c, ArrayType(by_name[c].dataType)) for c in buf_cols]
-    )
-    out_names = [f.name for f in out_schema.fields]
+    buf = RowState([by_name[c] for c in buf_cols])
+    out_names = out_schema.fieldNames()
 
-    def _emit(key, arrs) -> pd.DataFrame:
-        # one dict-of-arrays constructor call per emission — building an
-        # empty frame and inserting columns one by one paid several
-        # pandas block-manager ops per GROUP, and with thousands of
-        # (window, key) groups per batch the per-group constant is the
-        # whole cost of this operator (r13; the fn body itself is
-        # microseconds)
-        d = {c: list(a) for c, a in zip(buf_cols, arrs)}
-        n = len(d[buf_cols[0]])
-        d["rank_num"] = range(1, n + 1)
-        for kc, kv in zip(key_cols, key):
-            d[kc] = [kv] * n
-        return pd.DataFrame({c: d[c] for c in out_names})
+    def _emit(key, cols) -> pd.DataFrame:
+        d = dict(zip(buf_cols, cols))
+        d["rank_num"] = range(1, len(cols[0]) + 1)
+        return _frame(out_names, d, key_cols, key)
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         # NB: non-emitting paths yield NOTHING. The previous
@@ -190,25 +174,22 @@ def window_topn(
         # pandas frame through Arrow for every open group every batch
         # (~3600/batch at sf0.1) — measured ~10% of the drain (r13 A/B
         # 4.46 -> 3.99 s); zero frames is the same appended output.
+        cols = buf.read(state)
         if state.hasTimedOut:
-            arrs = state.get
             state.remove()
-            yield _emit(key, arrs)
+            yield _emit(key, cols)
             return
         wm = state.getCurrentWatermarkMs()
         we_ms = int(pd.Timestamp(key[1]).value // 1_000_000)
-        cur = (
-            pd.DataFrame({c: list(a) for c, a in zip(buf_cols, state.get)})
-            if state.exists else None
-        )
         if we_ms <= wm:
             # window closed by the pre-batch watermark: this batch's
             # rows are late and drop; a pending buffer would have had
             # its timer fire this batch absent data — emit it now
-            if cur is not None:
+            if cols is not None:
                 state.remove()
-                yield _emit(key, tuple(cur[c].tolist() for c in buf_cols))
+                yield _emit(key, cols)
             return
+        cur = buf.frame(cols) if cols is not None else None
         batches = [pdf[buf_cols] for pdf in pdfs if len(pdf)]
         if cur is not None and len(cur):
             batches.insert(0, cur)
@@ -219,15 +200,13 @@ def window_topn(
         else:
             merged = pd.concat(batches, ignore_index=True)
         top = _topk_merge(merged, buf_cols, k, descending)
-        state.update(
-            tuple([_py(v) for v in top[c]] for c in buf_cols)
-        )
+        buf.write(state, [top[c].tolist() for c in buf_cols])
         # fire when the watermark reaches window_end (timeout fires
         # strictly after the set timestamp); never arm in the past
         state.setTimeoutTimestamp(max(we_ms - 1, wm + 1))
 
     return assigned.groupBy(*key_cols).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+        fn, out_schema, buf.schema, "append", GroupStateTimeout.EventTimeTimeout
     )
 
 

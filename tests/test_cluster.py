@@ -165,7 +165,7 @@ def test_pq_refined_codebooks_lower_distortion(spark, sf_dir):
 
 
 def test_ivf_assign_blas_cells_same_without_dists(spark):
-    """``with_dists=False`` (Lloyd refinement's path) keeps only the
+    """``emit="cell"`` (Lloyd refinement's path) keeps only the
     per-block argmin; its cells must equal the full-matrix mode's,
     including vectors exactly equidistant from two seeds (lowest wins)."""
     import numpy as np
@@ -183,7 +183,8 @@ def test_ivf_assign_blas_cells_same_without_dists(spark):
     ).repartition(2)
 
     def cells(with_dists):
-        out = _ivf_assign_blas(df, "embedding", "vec_id", seeds, with_dists=with_dists)
+        emit = "dists" if with_dists else "cell"
+        out = _ivf_assign_blas(df, "embedding", "vec_id", seeds, emit=emit)
         assert ("__dists" in out.columns) == with_dists
         return {r.vec_id: r.cell for r in out.select("vec_id", "cell").collect()}
 

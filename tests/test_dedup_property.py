@@ -291,8 +291,7 @@ def test_ivf_assign_blas_matches_jvm(spark):
     wins ties) and the same rounded min distance."""
     from pyspark.sql import functions as F
 
-    from flink_1_16_0_src_spark.pipeline.dedup import _ivf_assign_blas
-    from flink_1_16_0_src_spark.pipeline.similarity import ivf_assign
+    from flink_1_16_0_src_spark.pipeline.similarity import _ivf_assign_blas, ivf_assign
     from flink_1_16_0_src_spark.tables import load
 
     emb = load(spark, "/root/testdata/sf0.001", "embeddings")
@@ -309,7 +308,7 @@ def test_ivf_assign_blas_matches_jvm(spark):
     }
     blas = {
         r["vec_id"]: (r["cell"], r["__d"])
-        for r in _ivf_assign_blas(emb, "embedding", "vec_id", seeds).collect()
+        for r in _ivf_assign_blas(emb, "embedding", "vec_id", seeds, emit="min").collect()
     }
     assert set(jvm) == set(blas)
     mism = {k: (jvm[k], blas[k]) for k in jvm if jvm[k] != blas[k]}
@@ -361,14 +360,12 @@ def test_semantic_dedup_block_groups_are_bounded(spark):
     in exactly one group (pair-complete, never double-compared)."""
     from pyspark.sql import functions as F
 
-    from flink_1_16_0_src_spark.pipeline.dedup import (
-        _ivf_assign_blas,
-        _pair_block_groups,
-    )
+    from flink_1_16_0_src_spark.pipeline.dedup import _pair_block_groups
+    from flink_1_16_0_src_spark.pipeline.similarity import _ivf_assign_blas
 
     df, seeds = _skewed_embeddings(spark)
     max_cell = 32
-    base = _ivf_assign_blas(df, "embedding", "vec_id", seeds)
+    base = _ivf_assign_blas(df, "embedding", "vec_id", seeds, emit="min")
     grouped = _pair_block_groups(base, "vec_id", max_cell)
     sizes = (
         grouped.groupBy("cell", "__gi", "__gj")
