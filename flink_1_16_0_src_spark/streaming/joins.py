@@ -107,9 +107,9 @@ def unbounded_join(
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
+    from pyspark.sql.types import IntegralType, LongType, StringType, StructField, StructType
 
-    from flink_1_16_0_src_spark.streaming.stateful import RowState, _frame
+    from flink_1_16_0_src_spark.streaming.stateful import RowState, _frame, _ints, _py, _side_cols
 
     assert how in ("inner", "left_outer", "full_outer", "left_semi", "left_anti"), (
         f"unsupported how={how!r}"
@@ -136,13 +136,19 @@ def unbounded_join(
         + [StructField("__rmatches", LongType())]
     )
     nl = len(lcols) + 1
+    integral = {
+        f.name for f in left.schema.fields + right.schema.fields
+        if isinstance(f.dataType, IntegralType)
+    }
 
     # each side keeps its own typed columns; the other side's are NULL
     tagged = left.select(
-        F.col(lk).cast("string").alias("__key"), F.lit(1).alias("__side"), *lcols
+        F.col(lk).cast("string").alias("__key"), F.lit(1).alias("__side"),
+        *_side_cols(left, lcols),
     ).unionByName(
         right.select(
-            F.col(rk).cast("string").alias("__key"), F.lit(2).alias("__side"), *rcols
+            F.col(rk).cast("string").alias("__key"), F.lit(2).alias("__side"),
+            *_side_cols(right, rcols),
         ),
         allowMissingColumns=True,
     )
@@ -153,6 +159,10 @@ def unbounded_join(
 
     def rows(cols, names):
         return [dict(zip(names, r)) for r in zip(*cols)]
+
+    def batch_row(t: dict, names) -> dict:
+        # NULL as None and exact ints, like a row restored from state
+        return {c: _py(t[c], c in integral) for c in names}
 
     def fn(pkey, pdfs, state):
         st = buf.read(state)
@@ -189,7 +199,7 @@ def unbounded_join(
         for pdf in pdfs:
             for t in pdf.to_dict("records"):
                 if t["__side"] == 1:
-                    row = {c: t[c] for c in lcols}
+                    row = batch_row(t, lcols)
                     tick(row, lts)
                     n = 0
                     for j, rrow in enumerate(rbuf):
@@ -209,7 +219,7 @@ def unbounded_join(
                     lbuf.append(row)
                     lmatches.append(n)
                 else:
-                    row = {c: t[c] for c in rcols}
+                    row = batch_row(t, rcols)
                     tick(row, rts)
                     n = 0
                     for i, lrow in enumerate(lbuf):
@@ -252,6 +262,8 @@ def unbounded_join(
             + [rmatches],
         )
         if out["__rowkind"]:
+            for c in integral.intersection(out):
+                out[c] = _ints(out[c])
             yield _frame(names, out)
 
     return tagged.groupBy("__key").applyInPandasWithState(

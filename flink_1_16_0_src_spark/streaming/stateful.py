@@ -21,14 +21,17 @@ Reference parity:
   (union-tag both sides, per-key sorted version store).
 
 State layout: every Python-state operator of this package (here and in
-``dedup``, ``joins``, ``late`` and ``windows``) stores its per-key state
-through one codec, :class:`RowState`. A buffer of rows is one
-``ArrayType(field.dataType)`` field per buffered column, for any Spark
-type, so a row reads back from state with the types it was stored with
-(Flink's one typed serializer per state descriptor). An operator's own
-scalar or array fields follow, and an optional trailing ``__updated``
-wall-clock second carries the lazy TTL. :func:`_frame` builds every
-output frame from columns in one constructor call.
+``dedup``, ``joins``, ``late`` and ``windows``) that buffers rows stores
+its per-key state through one codec, :class:`RowState`; the two that
+keep only scalars (:func:`keyed_inactivity_timer`,
+:func:`changelog_group_aggregate`) use a plain ``StructType``. A buffer
+of rows is one ``ArrayType(field.dataType)`` field per buffered column,
+for any Spark type, so a row reads back from state with the types it
+was stored with (Flink's one typed serializer per state descriptor).
+An operator's own scalar or array fields follow, and an optional
+trailing ``__updated`` wall-clock second carries the lazy TTL.
+:func:`_frame` builds every output frame from columns in one
+constructor call.
 
 Scale: every op keys its state (state size = O(k) / O(1) / O(versions)
 per key, never O(stream)); Arrow moves batches, no per-row Python; the
@@ -41,6 +44,7 @@ from __future__ import annotations
 import bisect
 import os
 import time
+from decimal import Decimal
 from typing import Iterable
 
 import numpy as np
@@ -63,9 +67,12 @@ from pyspark.sql.types import (
 
 def _py(v, integral: bool = False):
     """Normalize one value for the JVM-side state pickler, which rejects
-    numpy/pandas scalars: Python natives, NaN/NaT → None, and floats
-    back to ints for an integral field (a nullable integer column
-    arrives in pandas as float64)."""
+    numpy/pandas scalars: Python natives, NaN/NaT → None, and floats or
+    Decimals back to ints for an integral field (a nullable integer
+    column arrives in pandas as float64; :func:`_side_cols` sends one as
+    DECIMAL(20,0))."""
+    if integral and isinstance(v, Decimal):
+        return int(v)
     if isinstance(v, (float, np.floating)):
         if v != v:
             return None
@@ -79,6 +86,33 @@ def _py(v, integral: bool = False):
     return v
 
 
+def _side_cols(df: DataFrame, cols: list[str]) -> list:
+    """One side's columns for a two-input operator's
+    ``unionByName(..., allowMissingColumns=True)``. The other side's
+    rows are NULL in them, so pandas would read an integral column as
+    float64, exact only up to 2^53; it travels as DECIMAL(20,0) instead
+    and ``_py(v, integral=True)`` turns it back into an int."""
+    return [
+        F.col(c).cast("decimal(20,0)").alias(c)
+        if isinstance(df.schema[c].dataType, IntegralType)
+        else F.col(c)
+        for c in cols
+    ]
+
+
+def _ints(values) -> np.ndarray:
+    """Integral output values as an object array: a list of ints with a
+    None in it would become float64 in a pandas frame."""
+    return np.array([_py(v, True) for v in values], dtype=object)
+
+
+def _null_low(v):
+    """Sort key that orders NULL (None/NaN/NaT) below every value, the
+    reference's default null collation (ASC NULLS FIRST, DESC NULLS
+    LAST)."""
+    return (False, 0) if v is None or v != v else (True, v)
+
+
 class RowState:
     """The state codec of a per-key row buffer: one
     ``ArrayType(field.dataType)`` per buffered column, then ``extra``
@@ -89,7 +123,7 @@ class RowState:
 
     def __init__(self, fields, extra=(), ttl: bool = False):
         self.names = [f.name for f in fields]
-        self._integral = [isinstance(f.dataType, IntegralType) for f in fields]
+        self.integral = [isinstance(f.dataType, IntegralType) for f in fields]
         self._ttl = ttl
         self.schema = StructType(
             [StructField(f.name, ArrayType(f.dataType)) for f in fields]
@@ -114,7 +148,7 @@ class RowState:
 
     def write(self, state, cols, *extra) -> None:
         state.update(
-            tuple([_py(v, i) for v in c] for c, i in zip(cols, self._integral))
+            tuple([_py(v, i) for v in c] for c, i in zip(cols, self.integral))
             + extra
             + ((time.time(),) if self._ttl else ())
         )
@@ -173,7 +207,7 @@ def streaming_topn(
             rows.extend(pdf[carry].itertuples(index=False, name=None))
         if not rows:
             return
-        rows.sort(key=lambda r: r[oi], reverse=descending)
+        rows.sort(key=lambda r: _null_low(r[oi]), reverse=descending)
         cols = [list(c) for c in zip(*rows[:k])]
         buf.write(state, cols)
         out = dict(zip(carry, cols))
@@ -351,10 +385,12 @@ def streaming_asof_join(
     """FOR SYSTEM_TIME AS OF: each left row joins the latest right
     version with ``right_ts <= left_ts``. Both streams are tagged with
     ``__side`` and unioned by name (each side keeps its own typed
-    columns), then keyed; state keeps the right side's versions sorted
-    by time. Left rows that precede every version emit null right
-    columns. Timestamps order as unix micros on both sides
-    (TemporalRowTimeJoinOperator.java orders raw epoch longs)."""
+    columns, see :func:`_side_cols`), then keyed; state keeps the right
+    side's versions sorted by time. Left rows that precede every
+    version, or have a NULL time, emit null right columns; a version
+    with a NULL time never matches. Timestamps order as unix micros on
+    both sides (TemporalRowTimeJoinOperator.java orders raw epoch
+    longs)."""
     from pyspark.sql.types import TimestampType
 
     def _ts(df: DataFrame, col: str):
@@ -364,10 +400,12 @@ def streaming_asof_join(
 
     lcols = [c for c in left.columns if c != key]
     both = left.select(
-        F.col(key).alias("__k"), F.lit(0).alias("__side"), _ts(left, left_ts), *lcols
+        F.col(key).alias("__k"), F.lit(0).alias("__side"), _ts(left, left_ts),
+        *_side_cols(left, lcols),
     ).unionByName(
         right.select(
-            F.col(key).alias("__k"), F.lit(1).alias("__side"), _ts(right, right_ts), *right_vals
+            F.col(key).alias("__k"), F.lit(1).alias("__side"), _ts(right, right_ts),
+            *_side_cols(right, right_vals),
         ),
         allowMissingColumns=True,
     )
@@ -378,14 +416,16 @@ def streaming_asof_join(
     buf = RowState([both.schema["__ts"]] + right_fields)
     names = out_schema.fieldNames()
     vnames = buf.names
+    lints = {f.name for f in left_fields if isinstance(f.dataType, IntegralType)}
 
     def fn(k, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         versions = buf.read(state) or [[] for _ in vnames]
         lparts = []
         for pdf in pdfs:
             side = pdf["__side"].to_numpy()
-            for col, c in zip(versions, vnames):
-                col.extend(pdf[c][side == 1].tolist())
+            new = (side == 1) & pdf["__ts"].notna().to_numpy()
+            for col, c, i in zip(versions, vnames, buf.integral):
+                col.extend(_py(v, i) for v in pdf[c][new].tolist())
             lparts.append(pdf[side == 0])
         order = sorted(range(len(versions[0])), key=versions[0].__getitem__)
         versions = [[col[i] for i in order] for col in versions]
@@ -393,10 +433,14 @@ def streaming_asof_join(
         lrows = pd.concat(lparts, ignore_index=True).sort_values("__ts", kind="stable")
         if not len(lrows):
             return
-        at = [bisect.bisect_right(versions[0], t) - 1 for t in lrows["__ts"].tolist()]
-        out = {c: lrows[c].to_numpy() for c in lcols}
-        for col, c in zip(versions[1:], vnames[1:]):
-            out[c] = [col[i] if i >= 0 else None for i in at]
+        at = [
+            bisect.bisect_right(versions[0], t) - 1 if t == t else -1
+            for t in lrows["__ts"].tolist()
+        ]
+        out = {c: _ints(lrows[c]) if c in lints else lrows[c].to_numpy() for c in lcols}
+        for col, c, i in zip(versions[1:], vnames[1:], buf.integral[1:]):
+            v = [col[j] if j >= 0 else None for j in at]
+            out[c] = _ints(v) if i else v
         yield _frame(names, out, [key], k)
 
     return both.groupBy("__k").applyInPandasWithState(
@@ -483,11 +527,11 @@ def keyed_inactivity_timer(
             StructField("n_events", LongType()),
         ]
     )
-    buf = RowState((), extra=[StructField("last_ms", LongType()), StructField("n", LongType())])
+    state_schema = StructType([StructField("last_ms", LongType()), StructField("n", LongType())])
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         if state.hasTimedOut:
-            last_ms, n = buf.read(state)
+            last_ms, n = state.get
             state.remove()
             out = pd.DataFrame(
                 [tuple(key) + (pd.Timestamp(last_ms, unit="ms"), n)],
@@ -495,7 +539,7 @@ def keyed_inactivity_timer(
             )
             yield out
             return
-        last_ms, n = buf.read(state) or (None, 0)
+        last_ms, n = state.get if state.exists else (None, 0)
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
@@ -506,7 +550,7 @@ def keyed_inactivity_timer(
             last_ms = mx if last_ms is None else max(last_ms, mx)
             n += len(pdf)
         if last_ms is not None:
-            buf.write(state, (), int(last_ms), int(n))
+            state.update((int(last_ms), int(n)))
             # a timer armed at-or-before the watermark would be rejected;
             # clamp to wm+1 so it fires on the next batch (same behavior
             # as Flink registering an already-elapsed event-time timer)
@@ -517,7 +561,7 @@ def keyed_inactivity_timer(
         # r13 lesson), and append mode emits the same either way
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, buf.schema, "append", GroupStateTimeout.EventTimeTimeout
+        fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
 
 
@@ -549,10 +593,10 @@ def changelog_group_aggregate(
             StructField("sum_cents", LongType()),
         ]
     )
-    buf = RowState((), extra=[StructField("cnt", LongType()), StructField("s", LongType())])
+    state_schema = StructType([StructField("cnt", LongType()), StructField("s", LongType())])
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        cnt, s = buf.read(state) or (0, 0)
+        cnt, s = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             for d in pdf.to_dict("records"):
                 sign = -1 if d[rowkind_col] in ("-U", "-D") else 1
@@ -563,12 +607,12 @@ def changelog_group_aggregate(
                 # symmetrically contributes 0
                 if v is not None and not (isinstance(v, float) and v != v):
                     s += sign * int(v)
-        buf.write(state, (), int(cnt), int(s))
+        state.update((int(cnt), int(s)))
         out = pd.DataFrame([tuple(key) + (cnt, s)], columns=[f.name for f in out_schema.fields])
         yield out
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, buf.schema, "update", GroupStateTimeout.NoTimeout
+        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
 
 

@@ -1,6 +1,6 @@
 """Source-scan pin: the Python-state streaming operators store per-key
-state through exactly one layout, ``stateful.RowState`` — one typed
-array per buffered column. A second encoding (JSON strings per row,
+row buffers through exactly one layout, ``stateful.RowState`` — one
+typed array per buffered column. A second encoding (JSON strings per row,
 timestamps as text, a whitelist of carried columns) reads rows back
 with other types than they were stored with, so a new operator must
 not bring one back."""
@@ -56,34 +56,48 @@ def test_no_string_array_state_field():
     assert not offenders, f"ArrayType(StringType()) row buffer: {offenders}"
 
 
+def _scalar_struct(node) -> bool:
+    """A literal ``StructType([...])`` with no ``ArrayType`` in it: state
+    of scalar fields only, which holds no row buffer."""
+    return (
+        isinstance(node, ast.Call)
+        and _callee(node) == "StructType"
+        and not any(
+            isinstance(n, ast.Call) and _callee(n) == "ArrayType" for n in ast.walk(node)
+        )
+    )
+
+
 def test_every_state_schema_comes_from_the_codec():
     """The state-schema argument of every ``applyInPandasWithState`` is
     ``<x>.schema`` where ``x`` is a ``RowState(...)`` of the same
-    operator."""
+    operator, or a name bound to a literal ``StructType`` of scalar
+    fields (an operator that buffers no rows)."""
     calls, offenders = 0, []
     for name, tree in _trees():
         for fn in tree.body:
             if not isinstance(fn, ast.FunctionDef):
                 continue
-            codecs = {
-                t.id
+            assigns = [
+                (t.id, node.value)
                 for node in ast.walk(fn)
                 if isinstance(node, ast.Assign)
-                and isinstance(node.value, ast.Call)
-                and _callee(node.value) == "RowState"
                 for t in node.targets
                 if isinstance(t, ast.Name)
-            }
+            ]
+            codecs = {n for n, v in assigns if isinstance(v, ast.Call) and _callee(v) == "RowState"}
+            scalar = {n for n, v in assigns if _scalar_struct(v)}
             for node in ast.walk(fn):
                 if isinstance(node, ast.Call) and _callee(node) == "applyInPandasWithState":
                     calls += 1
                     arg = node.args[2] if len(node.args) > 2 else None
-                    if not (
+                    from_codec = (
                         isinstance(arg, ast.Attribute)
                         and arg.attr == "schema"
                         and isinstance(arg.value, ast.Name)
                         and arg.value.id in codecs
-                    ):
+                    )
+                    if not (from_codec or (isinstance(arg, ast.Name) and arg.id in scalar)):
                         offenders.append((name, fn.name, node.lineno))
     assert calls >= 13, f"found only {calls} applyInPandasWithState calls"
     assert not offenders, f"state schema not from RowState: {offenders}"

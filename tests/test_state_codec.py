@@ -3,9 +3,10 @@
 Each operator drains a three-file stream (``maxFilesPerTrigger=1``, one
 micro-batch per file), so some output rows are read back from state.
 The input mixes whole-second and sub-second timestamps, a DATE, a
-DECIMAL(10,2), a STRING and a DOUBLE with NULLs. Every operator must
-keep each input column with its type, and its drained output must equal
-a pandas reference of the operator's semantics.
+DECIMAL(10,2), a STRING, a DOUBLE with NULLs and BIGINT values above
+2^53 that a float64 cannot hold. Every operator must keep each input
+column with its type, and its drained output must equal a pandas
+reference of the operator's semantics.
 """
 
 from __future__ import annotations
@@ -22,14 +23,20 @@ import pytest
 from flink_1_16_0_src_spark.streaming import dedup, joins, late, sources, stateful, windows
 
 T0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-COLS = ["k", "ts", "d", "dec", "s", "x"]
-DDL = "k int, ts timestamp, d date, dec decimal(10,2), s string, x double"
-RCOLS = ["rk", "rts", "rd", "rdec", "rs"]
-RDDL = "rk int, rts timestamp, rd date, rdec decimal(10,2), rs string"
+COLS = ["k", "ts", "d", "dec", "s", "x", "big"]
+DDL = "k int, ts timestamp, d date, dec decimal(10,2), s string, x double, big bigint"
+RCOLS = ["rk", "rts", "rd", "rdec", "rs", "rbig"]
+RDDL = "rk int, rts timestamp, rd date, rdec decimal(10,2), rs string, rbig bigint"
+RVALS = ["rd", "rdec", "rs", "rbig"]  # the as-of join's right-side value columns
 
 
-def _t(sec: float) -> dt.datetime:
-    return T0 + dt.timedelta(seconds=sec)
+def _t(sec: float | None):
+    return pd.NaT if sec is None else pd.Timestamp(T0 + dt.timedelta(seconds=sec))
+
+
+def _big(base: int, n: int) -> list[int]:
+    """Odd values above 2^53: each one rounds when it passes through float64."""
+    return [base + 2 * i + 1 for i in range(n)]
 
 
 # (batch, k, seconds after T0, d, dec, s, x); per key, ts grows with the batch
@@ -47,20 +54,23 @@ LEFT = [
 RIGHT = [
     (0, 1, -1, dt.date(2023, 12, 31), "7.10", "r1"),
     (1, 2, 3, dt.date(2024, 3, 1), "8.20", "r2"),
+    (1, 1, None, dt.date(2024, 3, 2), "6.60", "r4"),  # NULL time: never an as-of version
     (2, 1, 20.5, dt.date(2024, 4, 1), "9.30", "r3"),
 ]
 
 
 def _left_pdf() -> pd.DataFrame:
     return pd.DataFrame(
-        [(b, k, pd.Timestamp(_t(sec)), d, Decimal(dec), s, x) for b, k, sec, d, dec, s, x in LEFT],
+        [(b, k, _t(sec), d, Decimal(dec), s, x, big)
+         for (b, k, sec, d, dec, s, x), big in zip(LEFT, _big(2**60, len(LEFT)))],
         columns=["b"] + COLS,
     )
 
 
 def _right_pdf() -> pd.DataFrame:
     return pd.DataFrame(
-        [(b, k, pd.Timestamp(_t(sec)), d, Decimal(dec), s) for b, k, sec, d, dec, s in RIGHT],
+        [(b, k, _t(sec), d, Decimal(dec), s, big)
+         for (b, k, sec, d, dec, s), big in zip(RIGHT, _big(2**61, len(RIGHT)))],
         columns=["b"] + RCOLS,
     )
 
@@ -73,6 +83,7 @@ def _arrow_type(ddl_type: str):
         "decimal(10,2)": pa.decimal128(10, 2),
         "string": pa.string(),
         "double": pa.float64(),
+        "bigint": pa.int64(),
     }[ddl_type]
 
 
@@ -82,7 +93,10 @@ def _write_batches(pdf: pd.DataFrame, ddl: str, d: str) -> None:
     schema = pa.schema([(n, _arrow_type(t)) for n, t in fields])
     for b in range(3):
         part = pdf[pdf["b"] == b].drop(columns="b")
-        arrays = [pa.array(part[n].tolist(), type=schema.field(n).type) for n, _ in fields]
+        arrays = [
+            pa.array(part[n].tolist(), type=schema.field(n).type, from_pandas=True)
+            for n, _ in fields
+        ]
         path = os.path.join(d, f"{b:02d}.parquet")
         pq.write_table(pa.Table.from_arrays(arrays, schema=schema), path)
         os.utime(path, (1_700_000_000 + 10 * b,) * 2)  # file order = batch order
@@ -119,9 +133,11 @@ def _prefix_emissions(each):
     return pd.concat(out, ignore_index=True)
 
 
-def _ref_topn():
+def _ref_topn(order_col: str = "ts"):
+    # NULL orders lowest: last in a descending Top-N
     return _prefix_emissions(
-        lambda g: g.sort_values("ts", ascending=False).head(2).assign(rank_num=[1, 2][: min(2, len(g))])
+        lambda g: g.sort_values(order_col, ascending=False, na_position="last", kind="stable")
+        .head(2).assign(rank_num=[1, 2][: min(2, len(g))])
     )
 
 
@@ -170,7 +186,7 @@ def _ref_asof():
         # versions visible to a left row: right rows of its batch or earlier
         v = r[(r["rk"] == row["k"]) & (r["b"] <= row["b"]) & (r["rts"] <= row["ts"])]
         last = v.sort_values("rts").iloc[-1] if len(v) else None
-        out.append({**row[COLS], **{c: (None if last is None else last[c]) for c in ("rd", "rdec", "rs")}})
+        out.append({**row[COLS], **{c: (None if last is None else last[c]) for c in RVALS}})
     return pd.DataFrame(out)
 
 
@@ -197,7 +213,7 @@ def _udfs():
     def window_fn(w: pd.DataFrame) -> dict:
         # typed arithmetic on every column: Decimal sum, date and Timestamp max
         return {"n": len(w), "ts": w["ts"].max(), "d": max(w["d"]), "dec": sum(w["dec"]),
-                "s": "".join(w["s"]), "x": w["x"].iloc[-1]}
+                "s": "".join(w["s"]), "x": w["x"].iloc[-1], "big": max(w["big"])}
 
     def delta(a: dict, c: dict) -> float:
         return (c["ts"] - a["ts"]).total_seconds()
@@ -230,12 +246,15 @@ def _ref_delta_window():
     return pd.DataFrame(out)
 
 
-WINDOW_DDL = "k int, n long, ts timestamp, d date, dec decimal(10,2), s string, x double"
+WINDOW_DDL = "k int, n long, ts timestamp, d date, dec decimal(10,2), s string, x double, big long"
 
 # id -> (build(left, right) -> (DataFrame, output mode), reference())
 CASES = {
     "streaming_topn": (
         lambda l, r: (stateful.streaming_topn(l, ["k"], "ts", 2), "update"), _ref_topn),
+    "streaming_topn_nullable_order": (
+        lambda l, r: (stateful.streaming_topn(l, ["k"], "x", 2), "update"),
+        lambda: _ref_topn("x")),
     "keep_last_dedup": (
         lambda l, r: (stateful.keep_last_dedup(l, ["k"], order_col="ts"), "update"),
         lambda: _prefix_emissions(lambda g: g.tail(1))),
@@ -262,12 +281,12 @@ CASES = {
         _ref_over_unbounded),
     "streaming_asof_join": (
         lambda l, r: (stateful.streaming_asof_join(
-            l, r.withColumnRenamed("rk", "k"), "k", "ts", "rts", ["rd", "rdec", "rs"]), "append"),
+            l, r.withColumnRenamed("rk", "k"), "k", "ts", "rts", RVALS), "append"),
         _ref_asof),
     "window_topn": (
         lambda l, r: (windows.window_topn(
             l.withWatermark("ts", "0 seconds"), "ts", "10 seconds", ["k"], "dec", 1,
-            ["ts", "d", "s", "x"]), "append"),
+            ["ts", "d", "s", "x", "big"]), "append"),
         _ref_window_topn),
     "temporal_sort": (
         lambda l, r: (dedup.temporal_sort(l, "ts", "5 seconds", ["k"]), "append"),

@@ -159,6 +159,27 @@ def test_changelog_normalize(spark, tmp_path):
     assert len(rows) == 7
 
 
+def test_changelog_normalize_reinsert_after_delete(spark, tmp_path):
+    """A ``-D`` clears the key's state (ChangelogNormalize clears it on
+    DELETE), so a re-insert in a later micro-batch is ``+I``, not a
+    ``-U``/``+U`` update of the deleted row."""
+    import pandas as pd
+
+    def batch(seq, v, deleted):
+        return spark.createDataFrame(pd.DataFrame({"k": [1] * len(seq), "seq": seq, "v": v, "deleted": deleted}))
+
+    # insert, delete and re-insert arrive in three micro-batches
+    sdf = scripted_stream(
+        spark,
+        [batch([1], [10.0], [False]), batch([2], [10.0], [True]), batch([3], [30.0], [False])],
+        tmp_path,
+    )
+    out = stateful.changelog_normalize(sdf, ["k"], order_col="seq", delete_col="deleted")
+    got = sources.run_to_memory(out, "s_changelog_reinsert", "append")
+    rows = [(r["seq"], r["v"], r["__rowkind"]) for r in got.orderBy("seq", "__rowkind").collect()]
+    assert rows == [(1, 10.0, "+I"), (1, 10.0, "-D"), (3, 30.0, "+I")]
+
+
 def test_streaming_asof_join(spark, tmp_path):
     import pandas as pd
 

@@ -120,6 +120,35 @@ def test_unbounded_join_ttl_bounds_state(spark, tmp_path):
     assert vals == [1.0]
 
 
+def test_unbounded_join_ttl_null_time_does_not_evict(spark, tmp_path):
+    # a probe row with a NULL event time must not move the ttl clock: the
+    # 10:00 build row stays fresh for the 10:40 probe of the same batch
+    ldir, rdir = str(tmp_path / "l"), str(tmp_path / "r")
+    os.makedirs(ldir), os.makedirs(rdir)
+    pd.DataFrame(
+        {"uid": [1], "lts": pd.to_datetime(["2024-01-01 10:00"]), "uname": ["a"]}
+    ).to_parquet(os.path.join(ldir, "left.parquet"))
+    pd.DataFrame(
+        {"ruid": [1], "rts": pd.to_datetime(["2024-01-01 10:30"]), "rval": [1.0]}
+    ).to_parquet(os.path.join(rdir, "a.parquet"))
+    time.sleep(1.1)
+    pd.DataFrame(
+        {"ruid": [1, 1], "rts": pd.to_datetime([None, "2024-01-01 10:40"]), "rval": [2.0, 3.0]}
+    ).to_parquet(os.path.join(rdir, "b.parquet"))
+
+    lsdf = spark.readStream.schema(spark.read.parquet(ldir).schema).parquet(ldir)
+    rsdf = (
+        spark.readStream.schema(spark.read.parquet(rdir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(rdir)
+    )
+    out = unbounded_join(
+        lsdf, rsdf, ("uid", "ruid"), how="inner", ttl=("lts", "rts", "1 hour")
+    )
+    got = sources.run_to_memory(out, "t_unb_ttl_null", "append")
+    assert sorted(r.rval for r in got.collect()) == [1.0, 2.0, 3.0]
+
+
 def test_unbounded_semi_anti(spark, tmp_path):
     import os
 
