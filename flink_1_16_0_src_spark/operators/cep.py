@@ -38,7 +38,6 @@ parallelism, not intra-key parallelism.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from typing import Callable, Iterable
 
@@ -1360,14 +1359,43 @@ def match_recognize_with_timeouts(
     return main, touts
 
 
-def _canon_row(d: dict) -> dict:
-    """Canonicalize a buffered row through the SAME json.dumps/loads
-    round-trip the state restore applies, so a row's column types never
-    depend on which micro-batch it arrived in (a fresh-batch row kept
-    pd.Timestamp/bytes where a state-restored one carried their str()
-    forms — a user predicate or measure reading such a column saw
-    different types for the same logical row; ADVICE r3)."""
-    return json.loads(json.dumps(d, default=str))
+def _buffered_rows(codec, state, pdfs, order_by: str, secondary_order: str | None, within: str | None):
+    """The key's rows restored from state followed by this batch's, all
+    in the codec's typed form, sorted by the order column(s) with NULLs
+    last (the batch path's ``sort_values`` order), and the state's extra
+    fields (None for a new key). With ``within`` a row without an order
+    value is dropped on arrival: it has no place in a time-bounded
+    span."""
+    st = codec.read(state)
+    n = len(codec.names)
+    rows = codec.rows(st[:n]) if st else []
+    for pdf in pdfs:
+        rows.extend(
+            r for r in codec.rows(codec.batch(pdf))
+            if within is None or r[order_by] is not None
+        )
+    cols = (order_by,) if secondary_order is None else (order_by, secondary_order)
+    rows.sort(key=lambda r: tuple((r[c] is None, r[c]) for c in cols))
+    return rows, (st[n:] if st else None)
+
+
+def _stream_record(cols, partition_by, key, fns, args, side: str | None) -> dict:
+    """One output row of a streaming matcher: the partition key, each of
+    ``fns`` applied to ``args``, and — when matches and timed-out
+    partials share the output — the ``__side`` tag."""
+    rec = dict.fromkeys(cols)
+    rec.update(zip(partition_by, key))
+    for name, f in fns.items():
+        rec[name] = f(*args)
+    if side is not None:
+        rec["__side"] = side
+    return rec
+
+
+def _stream_frame(out: list, cols, tagged: bool) -> pd.DataFrame:
+    res = pd.DataFrame(out, columns=cols)
+    # union frame: keep None (not NaN) in the other side's columns
+    return res.astype(object).where(res.notna(), None) if tagged else res
 
 
 def match_recognize_stream(
@@ -1385,9 +1413,14 @@ def match_recognize_stream(
     prev_next: list[tuple[str, str, str, int]] | None = None,
 ) -> DataFrame:
     """Streaming MATCH_RECOGNIZE: per-key row buffer carried in state
-    (JSON rows), matched greedily each batch; matched prefixes are
-    discarded, the unmatched tail is retained (bounded by the longest
-    open partial match).
+    (``stateful.RowState``, one typed array per column), matched
+    greedily each batch; matched prefixes are discarded, the unmatched
+    tail is retained (bounded by the longest open partial match).
+    Predicates and measures see each row with Python values of the
+    input's types (``datetime``, ``date``, ``Decimal``, exact ints, NULL
+    as None) whether it arrived in this batch or came back from state.
+    Rows sort by ``order_by`` (then ``secondary_order``) with NULLs
+    last, as in the batch path.
 
     ``prev_next``: ``[(field, 'PREV'|'NEXT', col, offset), ...]`` —
     PREV/NEXT helper fields for SQL-text DEFINEs, materialized on each
@@ -1408,7 +1441,8 @@ def match_recognize_stream(
     would pin the buffer AND block the scan from ever reaching later
     matches — the same unbounded-state failure Flink documents for
     patterns without windowTime; production relaxed patterns should
-    always pass it.
+    always pass it. With ``within``, a row whose ``order_by`` is NULL
+    is dropped on arrival.
 
     ``timeout_measures``/``timeout_schema`` (requires ``within``):
     Flink's timed-out-partial side output
@@ -1419,9 +1453,11 @@ def match_recognize_stream(
     Spark analog of an OutputTag side output; split with a filter).
     Open partials at drain end stay in state, NOT timed out — the
     stream has not ended, standard watermark semantics."""
-    if timeout_measures is not None:
+    tagged = timeout_measures is not None
+    if tagged:
         if within is None or timeout_schema is None:
             raise ValueError("timeout_measures requires within= and timeout_schema=")
+    emit_schema = _combined_schema(output_schema, timeout_schema) if tagged else output_schema
     if prev_next and _needs_any_path(steps):
         raise NotImplementedError(
             "streaming PREV/NEXT with followedByAny: the all-anchors "
@@ -1441,44 +1477,21 @@ def match_recognize_stream(
                 "Flink couples SKIP_TILL_ANY with NO_SKIP the same way)"
             )
         return _match_recognize_stream_any(
-            sdf, partition_by, order_by, steps, measures, output_schema, within,
-            secondary_order=secondary_order,
-            timeout_measures=timeout_measures, timeout_schema=timeout_schema,
+            sdf, partition_by, order_by, steps, measures, emit_schema, within,
+            secondary_order, timeout_measures,
         )
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
 
-    state_schema = StructType([StructField("buf", ArrayType(StringType()))])
+    from flink_1_16_0_src_spark.streaming.stateful import RowState
+
+    codec = RowState(sdf.schema.fields)
     vectorized = steps_vectorizable(steps)
     delta = pd.Timedelta(within) if within is not None else None
-    emit_schema = (
-        _combined_schema(output_schema, timeout_schema)
-        if timeout_measures is not None
-        else output_schema
-    )
-
-    emit_cols = [f.name for f in emit_schema.fields]
+    emit_cols = emit_schema.fieldNames()
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         use_ts = delta is not None
-        buf = []
-        if state.exists:
-            for s in state.get[0]:
-                d = json.loads(s)
-                if use_ts:
-                    d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
-        for pdf in pdfs:
-            for d in pdf.sort_values(order_by, kind="stable").to_dict("records"):
-                d = _canon_row(d)
-                if use_ts:
-                    d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
-        buf.sort(
-            key=(lambda r: (r[order_by], r[secondary_order]))
-            if secondary_order
-            else (lambda r: r[order_by])
-        )
+        buf, _ = _buffered_rows(codec, state, pdfs, order_by, secondary_order, within)
         if prev_next:
             # PREV/NEXT = index offsets into the sorted per-key buffer,
             # refreshed each batch; out-of-buffer neighbors are NULL
@@ -1549,13 +1562,9 @@ def match_recognize_stream(
             m = try_match(i)
             if m is not None:
                 matched, idx = m
-                rec = dict.fromkeys(emit_cols)
-                rec.update(zip(partition_by, key))
-                for name, fmeas in measures.items():
-                    rec[name] = fmeas(matched)
-                if timeout_measures is not None:
-                    rec["__side"] = "match"
-                out.append(rec)
+                out.append(_stream_record(
+                    emit_cols, partition_by, key, measures, (matched,), "match" if tagged else None
+                ))
                 nxt = _resume_index(i, idx, steps, after_match)
                 consumed, i = nxt, nxt
             elif has_partial(i):
@@ -1566,16 +1575,12 @@ def match_recognize_stream(
                     # With a timeout handler installed this prune IS the
                     # processTimedOutMatch call site (CepOperator
                     # advanceTime): surface the partial before dropping it
-                    if timeout_measures is not None:
-                        partial = longest_partial(i)
-                        if partial is not None:
-                            rec = dict.fromkeys(emit_cols)
-                            rec.update(zip(partition_by, key))
-                            tts = buf[i][order_by] + delta
-                            for name, fmeas in timeout_measures.items():
-                                rec[name] = fmeas(partial, tts)
-                            rec["__side"] = "timeout"
-                            out.append(rec)
+                    partial = longest_partial(i) if tagged else None
+                    if partial is not None:
+                        out.append(_stream_record(
+                            emit_cols, partition_by, key, timeout_measures,
+                            (partial, buf[i][order_by] + delta), "timeout",
+                        ))
                     i += 1
                     consumed = i
                 else:
@@ -1584,19 +1589,11 @@ def match_recognize_stream(
                 i += 1
                 consumed = i  # row i can never start a match; drop it
         buf = buf[consumed:]
-        state.update(([json.dumps(r, default=str) for r in buf],))
-        res = pd.DataFrame(out, columns=emit_cols)
-        if timeout_measures is not None:
-            # union frame: keep None (not NaN) in the other side's columns
-            res = res.astype(object).where(res.notna(), None)
-        # JSON round-trip stringifies timestamps — restore declared dtypes
-        for f in emit_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        codec.write(state, [[r[c] for r in buf] for c in codec.names])
+        yield _stream_frame(out, emit_cols, tagged)
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, emit_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, emit_schema, codec.schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -1606,16 +1603,15 @@ def _match_recognize_stream_any(
     order_by: str,
     steps: list[Step],
     measures: dict[str, Callable[[Matched], object]],
-    output_schema: StructType,
+    emit_schema: StructType,
     within: str,
-    secondary_order: str | None = None,
-    timeout_measures: dict[str, Callable[[Matched, object], object]] | None = None,
-    timeout_schema: StructType | None = None,
+    secondary_order: str | None,
+    timeout_measures: dict[str, Callable[[Matched, object], object]] | None,
 ) -> DataFrame:
     """Streaming followedByAny (SKIP_TILL_ANY — NFA.java:86's
     skip-till-any transition): every batch re-enumerates ALL anchors in
     the retained window with the batch all-anchors matcher and emits
-    only matches not already emitted (md5 fingerprint set in state).
+    only matches not already emitted (a fingerprint set in state).
     Anchors stay live after a match — an A already paired with B1 still
     pairs with a later-arriving B2 — which is exactly why the
     deterministic path's consume-prefix buffer can't express it.
@@ -1635,51 +1631,40 @@ def _match_recognize_stream_any(
     import hashlib
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import ArrayType, StringType, StructField
+    from pyspark.sql.types import ArrayType, LongType, StructField
 
-    state_schema = StructType(
-        [
-            StructField("buf", ArrayType(StringType())),
-            StructField("emitted", ArrayType(StringType())),
-        ]
+    from flink_1_16_0_src_spark.streaming.stateful import RowState
+
+    # state: the retained rows, then the emitted-match fingerprints as
+    # three parallel arrays (anchor time, anchor-row hash, match hash)
+    codec = RowState(
+        sdf.schema.fields,
+        extra=[
+            StructField("__fp_time", ArrayType(sdf.schema[order_by].dataType)),
+            StructField("__fp_anchor", ArrayType(LongType())),
+            StructField("__fp_match", ArrayType(LongType())),
+        ],
     )
     delta = pd.Timedelta(within)
     vec_ready = steps_all_vec(steps)
-    emit_schema = (
-        _combined_schema(output_schema, timeout_schema)
-        if timeout_measures is not None
-        else output_schema
-    )
-    emit_cols = [f.name for f in emit_schema.fields]
+    tagged = timeout_measures is not None
+    emit_cols = emit_schema.fieldNames()
 
-    def _row_md5(r) -> str:
-        return hashlib.md5(
-            json.dumps(r, default=str, sort_keys=True).encode()
-        ).hexdigest()
+    def _hash(obj) -> int:
+        # rows hold typed Python values whether fresh or restored, so
+        # their repr — and this 64-bit digest — is stable across batches
+        return int.from_bytes(hashlib.md5(repr(obj).encode()).digest()[:8], "big", signed=True)
+
+    def _row_hash(r: dict) -> int:
+        return _hash([r[c] for c in codec.names])
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        buf: list = []
-        emitted: set = set()
-        if state.exists:
-            for s in state.get[0]:
-                d = json.loads(s)
-                d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
-            emitted = set(state.get[1])
-        for pdf in pdfs:
-            for d in pdf.sort_values(order_by, kind="stable").to_dict("records"):
-                d = _canon_row(d)
-                d[order_by] = pd.Timestamp(d[order_by])
-                buf.append(d)
         # secondary_order makes same-timestamp ordering (and therefore
         # which rows count as "later" for relaxed_any matching)
         # arrival-independent — pass a unique column (e.g. event id) so
         # a regenerated fixture with ts ties cannot flake (ADVICE r3)
-        buf.sort(
-            key=(lambda r: (r[order_by], r[secondary_order]))
-            if secondary_order
-            else (lambda r: r[order_by])
-        )
+        buf, fps = _buffered_rows(codec, state, pdfs, order_by, secondary_order, within)
+        emitted: set = set(zip(*fps)) if fps else set()
         wt = (order_by, delta)
         if vec_ready and buf:
             # hoisted-mask any-path: DEFINE masks + jump tables computed
@@ -1706,76 +1691,55 @@ def _match_recognize_stream_any(
         out = []
         for i in range(len(buf)):
             for matched in matches_at(i):
-                body = hashlib.md5(
-                    json.dumps(
-                        {
-                            v: [json.dumps(r, default=str, sort_keys=True) for r in rs]
-                            for v, rs in matched.items()
-                        },
-                        sort_keys=True,
-                    ).encode()
-                ).hexdigest()
                 anchor_ts = min(r[order_by] for rs in matched.values() for r in rs)
-                # fingerprint = anchor ts | anchor-row hash | match body:
-                # the ts prefix drives pruning, the anchor hash lets the
-                # timeout scan know this anchor DID complete something
+                # fingerprint = anchor time | anchor-row hash | match
+                # hash: the time drives pruning, the anchor hash lets
+                # the timeout scan know this anchor DID complete something
                 anchor_row = next(
                     r for rs in matched.values() for r in rs
                     if r[order_by] == anchor_ts
                 )
-                fp = (f"{pd.Timestamp(anchor_ts).isoformat()}"
-                      f"|{_row_md5(anchor_row)}|{body}")
+                fp = (
+                    anchor_ts,
+                    _row_hash(anchor_row),
+                    _hash(sorted((v, [_row_hash(r) for r in rs]) for v, rs in matched.items())),
+                )
                 if fp in emitted:
                     continue
                 emitted.add(fp)
-                rec = (dict.fromkeys(emit_cols)
-                       if timeout_measures is not None else {})
-                rec.update(zip(partition_by, key))
-                for name, fmeas in measures.items():
-                    rec[name] = fmeas(matched)
-                if timeout_measures is not None:
-                    rec["__side"] = "match"
-                out.append(rec)
+                out.append(_stream_record(
+                    emit_cols, partition_by, key, measures, (matched,), "match" if tagged else None
+                ))
         if buf:
             cutoff = max(r[order_by] for r in buf) - delta
-            if timeout_measures is not None:
+            if tagged:
                 # anchors pruning NOW (below the cutoff) that never
                 # completed a match but had a viable prefix → timeout
                 # row (processTimedOutMatch at the advanceTime prune)
-                done_anchors = {p.split("|")[1] for p in emitted}
+                done_anchors = {a for _t, a, _m in emitted}
                 for i, r in enumerate(buf):
                     if r[order_by] >= cutoff:
                         break  # buf is ts-sorted
-                    if _row_md5(r) in done_anchors:
+                    if _row_hash(r) in done_anchors:
                         continue
                     partial = _longest_partial_at_any(buf, i, steps, wt)
                     if partial is None:
                         continue
-                    rec = dict.fromkeys(emit_cols)
-                    rec.update(zip(partition_by, key))
-                    tts = r[order_by] + delta
-                    for name, fmeas in timeout_measures.items():
-                        rec[name] = fmeas(partial, tts)
-                    rec["__side"] = "timeout"
-                    out.append(rec)
+                    out.append(_stream_record(
+                        emit_cols, partition_by, key, timeout_measures,
+                        (partial, r[order_by] + delta), "timeout",
+                    ))
             buf = [r for r in buf if r[order_by] >= cutoff]
-            emitted = {
-                fp for fp in emitted if pd.Timestamp(fp.split("|", 1)[0]) >= cutoff
-            }
-        state.update(
-            ([json.dumps(r, default=str) for r in buf], sorted(emitted))
+            emitted = {fp for fp in emitted if fp[0] >= cutoff}
+        codec.write(
+            state,
+            [[r[c] for r in buf] for c in codec.names],
+            *([list(f) for f in zip(*sorted(emitted))] or [[], [], []]),
         )
-        res = pd.DataFrame(out, columns=emit_cols)
-        if timeout_measures is not None:
-            # union frame: keep None (not NaN) in the other side's columns
-            res = res.astype(object).where(res.notna(), None)
-        for f in emit_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+        yield _stream_frame(out, emit_cols, tagged)
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
-        fn, emit_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, emit_schema, codec.schema, "append", GroupStateTimeout.NoTimeout
     )
 
 

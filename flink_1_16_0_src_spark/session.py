@@ -677,11 +677,10 @@ class TableEnvironment:
             # view is a STREAMING view (create_streaming_view — later
             # stream_query statements compose over it); anything else
             # keeps the plain batch temp-view registration.
+            from flink_1_16_0_src_spark.sql_clauses import _unquoted_text
+
             body = mcview.group("q")
-            unq = "".join(
-                p for i, p in enumerate(re.split(r"('(?:[^']|'')*')", body))
-                if i % 2 == 0
-            )
+            unq = _unquoted_text(body)
             streaming_rels = {
                 s.lower()
                 for s in set(self._watermarks) | set(self._stream_views)
@@ -2159,7 +2158,10 @@ class TableEnvironment:
 
         from flink_1_16_0_src_spark.sql_clauses import (
             _GW_CALL,
+            _balanced,
+            _depth_at,
             _statement_from_kw as _statement_from_kw_early,
+            _unquoted_text,
             rewrite_group_windows,
             rewrite_window_tvfs,
         )
@@ -2193,8 +2195,6 @@ class TableEnvironment:
             )
             if mtvf is None:
                 break
-            from flink_1_16_0_src_spark.sql_clauses import _balanced
-
             open_idx = mtvf.end() - 1
             close = _balanced(out, open_idx)
             inner = out[open_idx + 1 : close - 1].strip()
@@ -2210,11 +2210,6 @@ class TableEnvironment:
         if fk0 is not None:
             msub = _re.match(r"FROM\s*\(", out[fk0:], _re.IGNORECASE)
             if msub:
-                from flink_1_16_0_src_spark.sql_clauses import (
-                    _balanced,
-                    _unquoted_text,
-                )
-
                 open_idx = fk0 + msub.end() - 1
                 close = _balanced(out, open_idx)
                 inner = out[open_idx + 1 : close - 1].strip()
@@ -2315,10 +2310,7 @@ class TableEnvironment:
         # above; statements mixing window TVFs with OVER are out of
         # scope (the reference plans them as separate exec nodes —
         # compose via two statements).
-        unquoted = "".join(
-            p for i, p in enumerate(_re.split(r"('(?:[^']|'')*')", out))
-            if i % 2 == 0
-        )
+        unquoted = _unquoted_text(out)
         if _re.search(r"\bROW_NUMBER\s*\(", unquoted, _re.IGNORECASE):
             if specs:
                 # window Top-N: ROW_NUMBER partitioned by window_start,
@@ -2414,21 +2406,6 @@ class TableEnvironment:
                         "BY or drop them from GROUP BY"
                     )
             return "GROUP BY " + ", ".join([struct_tok] + keep)
-
-        def _depth_at(s: str, idx: int) -> int:
-            depth, i = 0, 0
-            while i < idx:
-                c = s[i]
-                if c == "'":
-                    i += 1
-                    while i < len(s) and s[i] != "'":
-                        i += 1
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                i += 1
-            return depth
 
         # the struct regroup (and the SELECT-list extract rewrite after
         # it) contract the OUTERMOST query block only — a subquery's own
@@ -2629,27 +2606,17 @@ _SSET_AGG_HEAD = re.compile(
 )
 
 
-def _balanced_span(txt: str, start: int) -> int:
-    """End index (exclusive) of the paren group opening at
-    ``txt[start] == '('``."""
-    d = 0
-    for i in range(start, len(txt)):
-        d += txt[i] == "("
-        d -= txt[i] == ")"
-        if d == 0:
-            return i + 1
-    return len(txt)
-
-
 def _over_clauses(txt: str) -> list[tuple[int, int, str]]:
     """Each window-function expression ``fn(args) OVER (spec)`` in
     ``txt`` as (expr start, expr end, spec text) — the statement-set
     admission gate uses the spec to decide whether every OVER is
     window-scoped and the span to excise window functions before the
     bare-aggregate scan."""
+    from flink_1_16_0_src_spark.sql_clauses import _balanced
+
     out: list[tuple[int, int, str]] = []
     for m in re.finditer(r"\bOVER\s*\(", txt, re.IGNORECASE):
-        end = _balanced_span(txt, m.end() - 1)
+        end = _balanced(txt, m.end() - 1)
         spec = txt[m.end():end - 1]
         j = m.start()
         while j > 0 and txt[j - 1].isspace():
@@ -3166,10 +3133,9 @@ class StreamStatementSet:
         sink_name, body = mi.group(2), mi.group("body")
         if sink_name not in self._tenv._sinks:
             raise KeyError(f"unknown sink table {sink_name!r}")
-        unquoted = "".join(
-            p for i, p in enumerate(re.split(r"('(?:[^']|'')*')", body))
-            if i % 2 == 0
-        )
+        from flink_1_16_0_src_spark.sql_clauses import _unquoted_text
+
+        unquoted = _unquoted_text(body)
         refs = [
             s for s in self._tenv._sources
             if re.search(rf"(?<![\w.]){re.escape(s)}(?![\w.])", unquoted,

@@ -70,24 +70,32 @@ _TVF_HEAD = re.compile(
 _MR_HEAD = re.compile(r"(\w+)\s+MATCH_RECOGNIZE\s*\(", re.IGNORECASE)
 
 
+_PAREN_OR_LITERAL = re.compile(r"[()]|'[^']*(?:'|$)")
+
+
+def _parens(sql: str, start: int = 0, end: int | None = None):
+    """(index, char) of each parenthesis in ``sql[start:end]`` outside a
+    string literal — the one quote-aware scan under the paren helpers."""
+    for m in _PAREN_OR_LITERAL.finditer(sql, start, len(sql) if end is None else end):
+        if m.group() in ("(", ")"):
+            yield m.start(), m.group()
+
+
 def _balanced(sql: str, open_idx: int) -> int:
     """Index just past the ')' matching the '(' at ``open_idx``
     (quote-aware)."""
-    depth, i, n = 0, open_idx, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
+    depth = 0
+    for i, c in _parens(sql, open_idx):
+        depth += 1 if c == "(" else -1
+        if depth == 0:
+            return i + 1
     raise ValueError("unbalanced parentheses in SQL")
+
+
+def _depth_at(sql: str, idx: int) -> int:
+    """Parenthesis depth at ``idx`` (quote-aware): > 0 inside a
+    subquery or call."""
+    return sum(1 if c == "(" else -1 for _i, c in _parens(sql, 0, idx))
 
 
 def _split_top_commas(s: str) -> list[str]:
@@ -344,19 +352,7 @@ def rewrite_group_windows(
         ]
         if not w:
             continue
-        depth, j = 0, 0
-        while j < cand.start():
-            c = sql[j]
-            if c == "'":
-                j += 1
-                while j < cand.start() and sql[j] != "'":
-                    j += 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
-        if depth > 0:
+        if _depth_at(sql, cand.start()) > 0:
             raise ValueError(
                 "legacy group window inside a subquery: the rewrite "
                 "supports the single-block shape — restructure or "
@@ -1660,8 +1656,7 @@ def lower_streaming_temporal_join(
         # TemporalJoin): strip probe qualifiers quote-aware, reject
         # version references
         parts = re.split(r"('(?:[^']|'')*')", where)
-        unq = "".join(p for i, p in enumerate(parts) if i % 2 == 0)
-        if re.search(rf"\b(?:{re.escape(val)}|{re.escape(vtbl)})\s*\.", unq,
+        if re.search(rf"\b(?:{re.escape(val)}|{re.escape(vtbl)})\s*\.", _unquoted_text(where),
                      re.IGNORECASE):
             raise ValueError(
                 "streaming temporal join: WHERE may reference probe "

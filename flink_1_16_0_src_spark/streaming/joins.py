@@ -157,9 +157,6 @@ def unbounded_join(
     lts, rts, interval = ttl if ttl else (None, None, None)
     delta = pd.Timedelta(interval) if interval else None
 
-    def rows(cols, names):
-        return [dict(zip(names, r)) for r in zip(*cols)]
-
     def batch_row(t: dict, names) -> dict:
         # NULL as None and exact ints, like a row restored from state
         return {c: _py(t[c], c in integral) for c in names}
@@ -167,8 +164,8 @@ def unbounded_join(
     def fn(pkey, pdfs, state):
         st = buf.read(state)
         if st:
-            lbuf, lmatches = rows(st[: nl - 1], lcols), st[nl - 1]
-            rbuf, rmatches = rows(st[nl:-1], rcols), st[-1]
+            lbuf, lmatches = buf.rows(st[: nl - 1], lcols), st[nl - 1]
+            rbuf, rmatches = buf.rows(st[nl:-1], rcols), st[-1]
         else:
             lbuf, rbuf, lmatches, rmatches = [], [], [], []
         out = {c: [] for c in names}

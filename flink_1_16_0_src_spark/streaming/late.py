@@ -166,9 +166,10 @@ def streaming_delta_trigger_window(
     ValueState the same way). The anchor + open buffer are carried
     across micro-batches; state is bounded by the rows accumulated
     between fires — the same bound as the reference's window contents.
-    ``delta_fn`` receives row dicts and ``agg_fn`` a frame, both with
-    the input's types in every batch, rows restored from state
-    included (``pd.Timestamp``, ``datetime.date``, ``Decimal``).
+    ``delta_fn`` receives row dicts of Python values (``datetime``,
+    ``date``, ``Decimal``, exact ints, NULL as None) and ``agg_fn`` a
+    frame of those rows, both the same in every batch, rows restored
+    from state included.
 
     Row order inside a key follows arrival order (count/delta windows
     are arrival-ordered in Flink too), but Spark gives no per-key FIFO
@@ -185,7 +186,7 @@ def streaming_delta_trigger_window(
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         st = buf.read(state)
-        stored = buf.frame(st[:-1]).to_dict("records") if st else []
+        stored = buf.rows(st[:-1]) if st else []
         anchor = stored[0] if stored else None
         window = stored[len(stored) - st[-1] :] if st else []
         parts = [pdf for pdf in pdfs if len(pdf)]
@@ -195,7 +196,7 @@ def streaming_delta_trigger_window(
         if order_col is not None:
             batch = batch.sort_values(order_col, kind="stable")
         out = []
-        for d in batch.to_dict("records"):
+        for d in buf.rows(buf.batch(batch)):
             window.append(d)
             if anchor is None:
                 # first element seeds the delta anchor (DeltaTrigger

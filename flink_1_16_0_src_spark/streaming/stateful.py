@@ -20,9 +20,10 @@ Reference parity:
   TemporalRowTimeJoinOperator.java → :func:`streaming_asof_join`
   (union-tag both sides, per-key sorted version store).
 
-State layout: every Python-state operator of this package (here and in
-``dedup``, ``joins``, ``late`` and ``windows``) that buffers rows stores
-its per-key state through one codec, :class:`RowState`; the two that
+State layout: every Python-state operator of the library (here, in
+``dedup``, ``joins``, ``late``, ``triggers`` and ``windows``, and the
+streaming CEP matchers) that buffers rows stores its per-key state
+through one codec, :class:`RowState`; the two that
 keep only scalars (:func:`keyed_inactivity_timer`,
 :func:`changelog_group_aggregate`) use a plain ``StructType``. A buffer
 of rows is one ``ArrayType(field.dataType)`` field per buffered column,
@@ -156,6 +157,19 @@ class RowState:
     def frame(self, cols) -> pd.DataFrame:
         """The buffered rows as a pandas frame."""
         return pd.DataFrame(dict(zip(self.names, cols)))
+
+    def rows(self, cols, names=None) -> list[dict]:
+        """The buffered rows as dicts keyed by ``names`` (default: the
+        buffered columns) — the row view of every row-oriented
+        operator."""
+        return [dict(zip(names or self.names, r)) for r in zip(*cols)]
+
+    def batch(self, pdf: pd.DataFrame) -> list[list]:
+        """A batch frame's buffered columns as :meth:`read` returns them:
+        Python values, NULL as None, exact ints. A batch row and a row
+        restored from state then compare, sort, hash and reach user
+        callbacks alike."""
+        return [[_py(v, i) for v in pdf[c].tolist()] for c, i in zip(self.names, self.integral)]
 
 
 def _frame(names, cols: dict, keys=(), key=()) -> pd.DataFrame:

@@ -18,9 +18,10 @@ ReducingState-backed ones.
 Spark mapping: Structured Streaming's built-in windowed aggregation
 exposes no trigger hook, so the runner is an ``applyInPandasWithState``
 operator (the same execution strategy as the repo's CEP / Top-N /
-count-window operators): state = open windows' buffered rows + each
-window's trigger-state dict + the carried per-key watermark
-(bounded-out-of-orderness, max ts − delay — Flink's
+count-window operators): state = open windows' buffered rows (through
+``stateful.RowState``, one typed array per column) + each window's
+trigger-state dict keyed by the window start + the carried per-key
+watermark (bounded-out-of-orderness, max ts − delay — Flink's
 BoundedOutOfOrdernessWatermarks, evaluated at micro-batch granularity;
 the documented timer skew of SURVEY §7.3 risk 3). Early FIREs emit
 speculative per-window rows exactly like Flink's early-firing windows —
@@ -39,7 +40,10 @@ from typing import Callable, Iterable
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
+from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import MapType, StringType, StructField, StructType, TimestampType
+
+from flink_1_16_0_src_spark.streaming.stateful import RowState
 
 
 class TriggerResult(Enum):
@@ -81,7 +85,11 @@ class Trigger:
     ``onEventTime(time, ...)`` — as the watermark passes it, in
     timestamp order, before the final window-close call (which passes
     the watermark itself). ContinuousEventTimeTrigger below is the
-    built-in exercising this path."""
+    built-in exercising this path.
+
+    ``on_element``'s ``row`` holds Python values of the input's types
+    in every micro-batch: ``datetime``, ``date``, ``Decimal``, exact
+    ints, NULL as None."""
 
     @staticmethod
     def register_event_time_timer(state: dict, ts: pd.Timestamp) -> None:
@@ -225,33 +233,45 @@ def triggered_tumble_window(
     updated pane per late element, WindowOperator's late-firing path.
     ``order_col`` sorts each
     batch before processing so on_element order (and therefore count /
-    delta trigger firings) is arrival-independent within a batch."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import StringType, StructField
+    delta trigger firings) is arrival-independent within a batch.
 
+    ``agg_fn``'s frame holds the pane's rows with the input's types in
+    every micro-batch (TIMESTAMP as ``datetime64``, ``date`` and
+    ``Decimal`` objects). A row with a NULL ``ts_col`` is skipped."""
     if isinstance(output_schema, str):
         output_schema = StructType.fromDDL(output_schema)
-    state_schema = StructType([StructField("st", StringType())])
+    # state: the open windows' rows, the carried watermark, and each
+    # open window's trigger-state dict keyed by the window's start
+    buf = RowState(sdf.schema.fields, extra=[
+        StructField("__watermark", TimestampType()),
+        StructField("__trigger_state", MapType(TimestampType(), StringType())),
+    ])
     size_td = pd.Timedelta(size)
     delay_td = pd.Timedelta(delay)
     late_td = pd.Timedelta(allowed_lateness)
-    cols = [f.name for f in output_schema.fields]
+    cols = output_schema.fieldNames()
+    sort_by = order_col if order_col is not None else ts_col
+
+    def window_of(ts: pd.Timestamp) -> Window:
+        start = pd.Timestamp((ts.value // size_td.value) * size_td.value)
+        return Window(start, start + size_td)
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        st = json.loads(state.get[0]) if state.exists else {"wm": None, "w": {}}
-        wm = pd.Timestamp(st["wm"]) if st["wm"] is not None else None
-        windows: dict = st["w"]  # start_iso -> {"rows": [...], "ts": {...}}
+        st = buf.read(state) or [[]] * len(buf.names) + [None, {}]
+        wm = None if st[-2] is None else pd.Timestamp(st[-2])
+        # window start -> {"rows": [...], "ts": trigger state}
+        windows = {pd.Timestamp(s): {"rows": [], "ts": json.loads(t)} for s, t in st[-1].items()}
+        for r in buf.rows(st[:-2]):
+            windows[window_of(pd.Timestamp(r[ts_col])).start]["rows"].append(r)
         out: list[dict] = []
 
         def emit(wslot: dict, window: Window) -> None:
-            wpdf = pd.DataFrame(wslot["rows"])
-            if not len(wpdf):
+            if not wslot["rows"]:
                 return
-            wpdf[ts_col] = pd.to_datetime(wpdf[ts_col])
             rec = dict(zip(keys, key))
             rec["window_start"] = window.start
             rec["window_end"] = window.end
-            rec.update(agg_fn(wpdf))
+            rec.update(agg_fn(pd.DataFrame(wslot["rows"], columns=buf.names)))
             out.append(rec)
 
         def apply(res: TriggerResult, wslot: dict, window: Window) -> None:
@@ -262,13 +282,11 @@ def triggered_tumble_window(
 
         max_ts = wm
         for pdf in pdfs:
-            sort_by = order_col if order_col is not None else ts_col
-            pdf = pdf.sort_values(sort_by, kind="stable")
-            for d in pdf.to_dict("records"):
-                d = json.loads(json.dumps(d, default=str))
+            for d in buf.rows(buf.batch(pdf.sort_values(sort_by, kind="stable"))):
+                if d[ts_col] is None:
+                    continue  # no event time, no window to assign
                 ts = pd.Timestamp(d[ts_col])
-                start = pd.Timestamp((ts.value // size_td.value) * size_td.value)
-                window = Window(start, start + size_td)
+                window = window_of(ts)
                 # WindowOperator.java:590 isWindowLate — drop only when
                 # the element's WINDOW is expired (end + allowedLateness
                 # ≤ watermark), not whenever the element itself is
@@ -277,9 +295,7 @@ def triggered_tumble_window(
                 # pane, as in Flink.
                 if wm is not None and window.end + late_td <= wm:
                     continue  # late: window already expired
-                slot = windows.setdefault(
-                    start.isoformat(), {"rows": [], "ts": {}}
-                )
+                slot = windows.setdefault(window.start, {"rows": [], "ts": {}})
                 slot["rows"].append(d)
                 # expose the current watermark to on_element (the
                 # TriggerContext.getCurrentWatermark analog) so
@@ -291,10 +307,9 @@ def triggered_tumble_window(
             new_wm = max_ts - delay_td
             wm = new_wm if wm is None or new_wm > wm else wm
         if wm is not None:
-            for siso in sorted(windows):
-                start = pd.Timestamp(siso)
+            for start in sorted(windows):
                 window = Window(start, start + size_td)
-                slot = windows[siso]
+                slot = windows[start]
                 # user-registered event-time timers due at/before the
                 # watermark fire first, in timestamp order, each passing
                 # the TIMER's time (Flink onEventTime(time, ...)); a
@@ -327,15 +342,13 @@ def triggered_tumble_window(
                     # cleanup timer (end + allowedLateness): drop state;
                     # the trigger already fired at close, Flink's
                     # clearAllState fires nothing further here
-                    windows.pop(siso)
-        state.update((json.dumps({"wm": wm.isoformat() if wm is not None else None,
-                                  "w": windows}),))
-        res = pd.DataFrame(out, columns=cols)
-        for f in output_schema.fields:
-            if "timestamp" in f.dataType.simpleString():
-                res[f.name] = pd.to_datetime(res[f.name])
-        yield res
+                    windows.pop(start)
+        rows = [r for start in sorted(windows) for r in windows[start]["rows"]]
+        tstate = {start: json.dumps(w["ts"]) for start, w in windows.items()}
+        buf.write(state, [[r[c] for r in rows] for c in buf.names], wm, tstate)
+        if out:
+            yield pd.DataFrame(out, columns=cols)
 
     return sdf.groupBy(*keys).applyInPandasWithState(
-        fn, output_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, output_schema, buf.schema, "append", GroupStateTimeout.NoTimeout
     )

@@ -345,6 +345,29 @@ def test_match_recognize_stream_relaxed_crosses_batches(spark, tmp_path):
     assert rows == {("k1", 1, 3), ("k2", 1, 4)}
 
 
+def test_match_recognize_stream_null_order_sorts_last(spark, tmp_path):
+    """A NULL order value sorts last in the streaming buffer, as
+    ``sort_values`` puts it in the batch path: both return the same
+    matches."""
+    from flink_1_16_0_src_spark.streaming import sources
+
+    rows = [("k", None, "b"), ("k", 3, "a"), ("k", 1, "a"), ("k", 2, "b")]
+    ddl = "k string, seq long, c string"
+    d = str(tmp_path / "null_order_src")
+    spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(d)
+    steps = [cep.Step("A", lambda r, m: r["c"] == "a"), cep.Step("B", lambda r, m: r["c"] == "b")]
+    measures = {"a_seq": lambda m: cep.first(m, "A", "seq"), "b_seq": lambda m: cep.first(m, "B", "seq")}
+    schema = StructType.fromDDL("k string, a_seq long, b_seq long")
+    batch = cep.match_recognize(spark.read.parquet(d), ["k"], "seq", steps, measures, schema)
+    stream = cep.match_recognize_stream(
+        spark.readStream.schema(ddl).parquet(d), ["k"], "seq", steps, measures, schema
+    )
+    got = sources.run_to_memory(stream, "cep_null_order", "append").collect()
+    exp = {(1, 2), (3, None)}
+    assert {(r.a_seq, r.b_seq) for r in batch.collect()} == exp
+    assert {(r.a_seq, r.b_seq) for r in got} == exp
+
+
 def test_match_recognize_stream_within_prunes_stale_partials(spark, tmp_path):
     """WITHIN in streaming CEP: an expired open partial (relaxed B
     never arrives inside the span) is pruned instead of retained, so

@@ -1,22 +1,34 @@
-"""Source-scan pin: the Python-state streaming operators store per-key
-row buffers through exactly one layout, ``stateful.RowState`` — one
-typed array per buffered column. A second encoding (JSON strings per row,
-timestamps as text, a whitelist of carried columns) reads rows back
+"""Source-scan pin: every Python-state operator of the library stores
+per-key row buffers through exactly one layout, ``stateful.RowState`` —
+one typed array per buffered column. A second encoding (JSON strings per
+row, timestamps as text, a whitelist of carried columns) reads rows back
 with other types than they were stored with, so a new operator must
 not bring one back."""
 
 from __future__ import annotations
 
 import ast
+import collections
 import pathlib
 
-STREAMING = pathlib.Path(__file__).resolve().parents[1] / "flink_1_16_0_src_spark" / "streaming"
-MODULES = ["stateful.py", "dedup.py", "joins.py", "late.py", "windows.py"]
+PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "flink_1_16_0_src_spark"
+MODULES = [
+    "streaming/stateful.py", "streaming/dedup.py", "streaming/joins.py", "streaming/late.py",
+    "streaming/windows.py", "streaming/triggers.py", "operators/cep.py",
+]
+
+# The one exemption: the per-window ``Trigger`` state dict of
+# triggered_tumble_window. Its documented contract is "a JSON-serializable
+# dict" whose format the user's trigger owns, so the library stores it as
+# one JSON string per open window (the map value of ``__trigger_state``,
+# keyed by the typed window start): one json.loads when the state is
+# read, one json.dumps when it is written. It holds no row.
+JSON_EXEMPTION = ("streaming/triggers.py", {"loads": 1, "dumps": 1})
 
 
 def _trees():
     for name in MODULES:
-        yield name, ast.parse((STREAMING / name).read_text())
+        yield name, ast.parse((PACKAGE / name).read_text())
 
 
 def _callee(node: ast.Call) -> str | None:
@@ -25,20 +37,24 @@ def _callee(node: ast.Call) -> str | None:
 
 
 def test_no_json_state():
-    offenders = []
+    offenders, exempt = [], collections.Counter()
     for name, tree in _trees():
         for node in ast.walk(tree):
             if isinstance(node, (ast.Import, ast.ImportFrom)):
                 mods = [a.name for a in node.names] + [getattr(node, "module", None)]
-                if "json" in mods:
+                if "json" in mods and name != JSON_EXEMPTION[0]:
                     offenders.append((name, node.lineno, "import json"))
             elif (
                 isinstance(node, ast.Attribute)
                 and isinstance(node.value, ast.Name)
                 and node.value.id == "json"
             ):
-                offenders.append((name, node.lineno, f"json.{node.attr}"))
+                if name == JSON_EXEMPTION[0]:
+                    exempt[node.attr] += 1
+                else:
+                    offenders.append((name, node.lineno, f"json.{node.attr}"))
     assert not offenders, f"JSON state encoding: {offenders}"
+    assert exempt == JSON_EXEMPTION[1], f"JSON beyond the Trigger state dict: {dict(exempt)}"
 
 
 def test_no_string_array_state_field():
@@ -99,5 +115,5 @@ def test_every_state_schema_comes_from_the_codec():
                     )
                     if not (from_codec or (isinstance(arg, ast.Name) and arg.id in scalar)):
                         offenders.append((name, fn.name, node.lineno))
-    assert calls >= 13, f"found only {calls} applyInPandasWithState calls"
+    assert calls >= 16, f"found only {calls} applyInPandasWithState calls"
     assert not offenders, f"state schema not from RowState: {offenders}"

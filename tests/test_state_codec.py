@@ -1,4 +1,6 @@
-"""Typed state round-trip for every Python-state streaming operator.
+"""Typed state round-trip for every Python-state operator: the
+``streaming`` operators, the trigger window and the streaming CEP
+matchers (Python API and SQL ``stream_query``).
 
 Each operator drains a three-file stream (``maxFilesPerTrigger=1``, one
 micro-batch per file), so some output rows are read back from state.
@@ -6,7 +8,8 @@ The input mixes whole-second and sub-second timestamps, a DATE, a
 DECIMAL(10,2), a STRING, a DOUBLE with NULLs and BIGINT values above
 2^53 that a float64 cannot hold. Every operator must keep each input
 column with its type, and its drained output must equal a pandas
-reference of the operator's semantics.
+reference of the operator's semantics (for the SQL cases, batch
+``sql_query`` of the same statement).
 """
 
 from __future__ import annotations
@@ -19,8 +22,12 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
-from flink_1_16_0_src_spark.streaming import dedup, joins, late, sources, stateful, windows
+from flink_1_16_0_src_spark.operators import cep
+from flink_1_16_0_src_spark.session import TableEnvironment
+from flink_1_16_0_src_spark.streaming import dedup, joins, late, sources, stateful, triggers, windows
 
 T0 = dt.datetime(2024, 1, 1, 10, 0, 0)
 COLS = ["k", "ts", "d", "dec", "s", "x", "big"]
@@ -110,6 +117,9 @@ def streams(spark, tmp_path_factory):
 
     def read(name, ddl):
         return spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(str(root / name))
+
+    # the same rows as a batch view: the reference of the SQL cases
+    spark.read.schema(DDL).parquet(str(root / "left")).createOrReplaceTempView("codec_left")
 
     # two state partitions: a few rows per batch need no more Python tasks
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -248,6 +258,108 @@ def _ref_delta_window():
 
 WINDOW_DDL = "k int, n long, ts timestamp, d date, dec decimal(10,2), s string, x double, big long"
 
+
+TRIGGER_DDL = "k int, window_start timestamp, window_end timestamp, " + WINDOW_DDL.split(", ", 1)[1]
+
+
+def _triggered(trigger):
+    return lambda l, r: (triggers.triggered_tumble_window(
+        l, ["k"], "ts", "10 seconds", "0 seconds", trigger, _window_fn, TRIGGER_DDL,
+        order_col="ts"), "append")
+
+
+def _ref_trigger_window(count: int, purge: bool):
+    """CountTrigger(count) over 10-second tumbling windows: every
+    ``count``-th row of a window fires a pane over the window's rows
+    since the last purge. Per key, ts grows with the batch, so no row is
+    late."""
+    out = []
+    for g in _per_key(_left_pdf()):
+        for start, w in g.groupby(g["ts"].dt.floor("10s"), sort=True):
+            for n in range(count, len(w) + 1, count):
+                pane = w.iloc[n - count if purge else 0 : n].reset_index(drop=True)
+                out.append({"k": w["k"].iloc[0], "window_start": start,
+                            "window_end": start + pd.Timedelta("10s"), **_window_fn(pane)})
+    return pd.DataFrame(out)
+
+
+# MATCH_RECOGNIZE over the typed input: the measures carry every input
+# column, so each one crosses the CEP state with its type. In each
+# pattern an A row from one micro-batch pairs with a B row of the next.
+MATCH_SQL = """
+    SELECT * FROM {t} MATCH_RECOGNIZE (
+      PARTITION BY k ORDER BY ts
+      MEASURES FIRST(A.dec) AS a_dec, LAST(B.ts) AS ts, LAST(B.d) AS d,
+               LAST(B.dec) AS dec, LAST(B.s) AS s, LAST(B.x) AS x, LAST(B.big) AS big
+      ONE ROW PER MATCH
+      AFTER MATCH SKIP PAST LAST ROW
+      PATTERN (A B)
+      DEFINE B AS {define}
+    )
+"""
+
+
+def _sql_match(define: str):
+    """(stream build, batch reference) of :data:`MATCH_SQL`."""
+
+    def build(left, right):
+        left.createOrReplaceTempView("codec_left_stream")
+        sql = MATCH_SQL.format(t="codec_left_stream", define=define)
+        return TableEnvironment(left.sparkSession).stream_query(sql), "append"
+
+    def reference():
+        spark = SparkSession.getActiveSession()
+        sql = MATCH_SQL.format(t="codec_left", define=define)
+        return TableEnvironment(spark).sql_query(sql).toPandas()
+
+    return build, reference
+
+
+ANY_DDL = "k int, a_ts timestamp, ts timestamp, d date, dec decimal(10,2), s string, x double, big bigint"
+
+
+def _any_pattern():
+    """followedByAny A -> B within 20 seconds: typed Decimal and date
+    arithmetic in the predicates, every input column in the measures."""
+
+    def a(r, m) -> bool:
+        return r["dec"] * 2 < Decimal("50")
+
+    def b(r, m) -> bool:
+        return r["dec"] > m["A"][0]["dec"] and r["d"] > m["A"][0]["d"]
+
+    def measures(m) -> dict:
+        ra, rb = m["A"][0], m["B"][-1]
+        return {"a_ts": ra["ts"], "ts": rb["ts"], "d": rb["d"], "dec": rb["dec"],
+                "s": ra["s"] + rb["s"], "x": rb["x"], "big": rb["big"]}
+
+    steps = [cep.Step("A", a), cep.Step("B", b, contiguity="relaxed_any")]
+    return steps, a, b, measures
+
+
+def _followed_by_any(left, right):
+    steps, _a, _b, measures = _any_pattern()
+    fields = [f for f in StructType.fromDDL(ANY_DDL).fields if f.name != "k"]
+    return cep.match_recognize_stream(
+        left, ["k"], "ts", steps,
+        {f.name: (lambda c: lambda m: measures(m)[c])(f.name) for f in fields},
+        StructType.fromDDL(ANY_DDL), after_match="to_next_row", within="20 seconds",
+    ), "append"
+
+
+def _ref_followed_by_any():
+    _steps, a, b, measures = _any_pattern()
+    out = []
+    for g in _per_key(_left_pdf()):
+        rows = [{c: stateful._py(v) for c, v in r.items()} for r in g[COLS].to_dict("records")]
+        for i, ra in enumerate(rows):
+            for rb in rows[i + 1:]:
+                m = {"A": [ra], "B": [rb]}
+                if a(ra, {}) and b(rb, m) and rb["ts"] - ra["ts"] <= dt.timedelta(seconds=20):
+                    out.append({"k": ra["k"], **measures(m)})
+    return pd.DataFrame(out)
+
+
 # id -> (build(left, right) -> (DataFrame, output mode), reference())
 CASES = {
     "streaming_topn": (
@@ -303,6 +415,15 @@ CASES = {
         lambda l, r: (late.streaming_delta_trigger_window(
             l, ["k"], _delta, 6.0, _window_fn, WINDOW_DDL, order_col="ts"), "append"),
         _ref_delta_window),
+    "triggered_tumble_window": (
+        _triggered(triggers.CountTrigger(2)), lambda: _ref_trigger_window(2, purge=False)),
+    # one-row panes: a whole-second pane stays whole-second
+    "triggered_tumble_window_purging": (
+        _triggered(triggers.PurgingTrigger(triggers.CountTrigger(1))),
+        lambda: _ref_trigger_window(1, purge=True)),
+    "sql_match_recognize_prev": _sql_match("dec > PREV(B.dec)"),
+    "sql_match_recognize_cross_variable": _sql_match("B.dec > LAST(A.dec)"),
+    "match_recognize_stream_followed_by_any": (_followed_by_any, _ref_followed_by_any),
 }
 
 

@@ -149,6 +149,16 @@ def test_closed_window_row_still_drops(spark):
     assert panes == {(0, 1, 1.0)}
 
 
+def test_null_event_time_row_is_skipped(spark):
+    # a row with a NULL ts belongs to no window; the others still fire
+    rows = _rows_one_key([(0, 1), (10, 2)]) + [("a", None, 50.0)] + _rows_one_key([(200, 4)])
+    got = _run(
+        spark, _write_stream(spark, rows, [2, 2]), EventTimeTrigger(), "trig_null_ts"
+    )
+    panes = {(r.window_start.minute + 60 * r.window_start.hour, r.n, r.sum_v) for r in got}
+    assert panes == {(0, 2, 3.0)}
+
+
 def test_continuous_event_time_trigger_interval_panes(spark):
     """Timer-registration path (TriggerContext.registerEventTimeTimer):
     ContinuousEventTimeTrigger('20 minutes') fires speculative panes at
