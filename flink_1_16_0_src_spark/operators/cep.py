@@ -14,8 +14,8 @@ Reference parity (SURVEY.md §2.8):
   SKIP_TILL_NEXT — Pattern.java next()/followedBy()), and NEGATIVE
   patterns (notNext / notFollowedBy — NFACompiler stop states).
   followedByAny (SKIP_TILL_ANY) is supported via the all-anchors
-  enumeration path (requires to_next_row, dict path) in batch AND
-  streaming (windowed re-enumeration + emitted-fingerprint dedup).
+  enumeration (requires to_next_row) in batch AND streaming (windowed
+  re-enumeration + emitted-fingerprint dedup).
   Quantifier-INTERNAL contiguity supports consecutive (default —
   matching SQL MATCH_RECOGNIZE; Flink's oneOrMore defaults relaxed),
   relaxed (Pattern.allow_gaps: gap rows between takes skipped,
@@ -28,8 +28,15 @@ Reference parity (SURVEY.md §2.8):
   PatternStream.select (flink-cep Pattern.java / CEP.java /
   PatternStream.java).
 
-Execution model: the NFA core is pure Python over one key's ordered
-rows; Spark distributes it per key via ``applyInPandas`` (batch) /
+Execution model: one NFA kernel (``_NFA``) runs every pattern over
+one key's ordered rows, as flink-cep runs SimpleCondition and
+IterativeCondition through one NFA.java and one SharedBuffer. Each
+"does row j satisfy this step" test is answered per step: a step with
+a vectorized DEFINE (``Step.vec``) and no ``until`` reads a numpy mask
+evaluated once over the key's rows and jumps over rows the mask
+rejects; every other step calls its predicate with the row and the
+rows matched so far. One pattern may mix both kinds. Spark distributes
+the kernel per key via ``applyInPandas`` (batch) /
 ``applyInPandasWithState`` (streaming, buffer carried across batches).
 Per-key sequential scan is inherent to CEP — the reference runs the
 same way inside its keyed operator; the 100 TB story is key
@@ -38,9 +45,11 @@ parallelism, not intra-key parallelism.
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from dataclasses import dataclass
 from typing import Callable, Iterable
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -58,12 +67,13 @@ class Step:
 
     ``vec`` is an optional VECTORIZED form of the same predicate
     (``pdf -> bool array``), valid only when the predicate ignores
-    previously-matched rows. When every step supplies one,
-    ``match_recognize`` evaluates each DEFINE once per partition as a
-    numpy mask and the NFA scan tests O(1) array entries instead of
-    calling a Python predicate per (row, step) — the same
-    condition-hoisting MatchCodeGenerator.scala performs when it
-    compiles DEFINE clauses.
+    previously-matched rows. The NFA kernel evaluates it once per
+    partition (or stream buffer) as a numpy mask and answers this
+    step's row tests from the mask — O(1) array entries and next-true
+    jumps over rejected rows instead of a Python predicate call per
+    (row, step), the same condition-hoisting MatchCodeGenerator.scala
+    performs when it compiles DEFINE clauses. Steps without it call
+    ``predicate``; a pattern may mix both kinds.
 
     ``expr`` is an optional SQL form of the same predicate (a boolean
     expression over the row's columns). When every step of a
@@ -122,8 +132,9 @@ class Step:
     # is NOT consumed into the match (NFACompiler ANDs NOT(until) into
     # the looping state's take AND ignore edges, so a gap row
     # satisfying it also terminates the loop). Python-predicate only:
-    # a step with ``until`` routes to the row-based NFA paths (the
-    # vectorized mask paths' O(1) gap jumps would skip the stop row).
+    # the kernel answers a step with ``until`` through ``predicate`` and
+    # ``until`` calls even when it carries ``vec`` (a mask's O(1) gap
+    # jump would hop over the stop row).
     until: Predicate | None = None
 
     @staticmethod
@@ -157,170 +168,13 @@ def _needs_any_path(steps: list["Step"]) -> bool:
     """True when the pattern needs the all-anchors/all-subsets
     enumeration (followedByAny SKIP_TILL_ANY contiguity, or
     allowCombinations SKIP_TILL_ANY quantifier internals) — one start
-    can yield several matches, so the deterministic single-match scan
-    and the vectorized mask path cannot run it."""
+    can yield several matches, so the scan must resume at the next row
+    (after_match='to_next_row')."""
     return any(
         b.contiguity == "relaxed_any" or b.internal == "combinations"
         for s in steps
-        for b in (s.alts or (s,))
+        for b in (s, *s.alts)  # an alternation's contiguity sits on the group
     )
-
-
-def _match_at(
-    rows: list[Row], start: int, steps: list[Step], within: tuple[str, object] | None = None
-) -> tuple[Matched, dict[str, list[int]]] | None:
-    """Greedy backtracking match anchored at ``start``; returns
-    (matched-rows-per-var, matched-INDICES-per-var) for the longest
-    match, else None. Step-to-step contiguity per ``Step.contiguity``
-    (strict = next, relaxed = followedBy — skipped rows are simply not
-    consumed); quantifier-internal contiguity is strict. Negative steps
-    (notNext/notFollowedBy) consume nothing and fail the match when
-    their predicate holds in the guarded gap. ``within=(ts_col,
-    max_delta)`` prunes matches spanning more than max_delta from the
-    first matched row (Pattern.within / flink-cep Pattern.java
-    windowTime)."""
-
-    def in_window(j: int) -> bool:
-        if within is None:
-            return True
-        ts_col, max_delta = within
-        return rows[j][ts_col] - rows[start][ts_col] <= max_delta
-
-    def quant(i: int, step: Step, matched: Matched, idx: dict, cont):
-        """Greedy consume of one quantified variable then continue after
-        the LAST take; backtracks from longest to ``step.min``. With
-        ``internal='relaxed'`` non-matching rows BETWEEN takes are
-        skipped (each take lands on the earliest matching row)."""
-        matched.setdefault(step.var, [])
-        idx.setdefault(step.var, [])
-        base_len = len(matched[step.var])
-        takes: list[int] = []
-        j = i
-        while (step.max is None or len(takes) < step.max) and j < len(rows):
-            if not in_window(j):
-                break
-            if step.until is not None and step.until(rows[j], matched):
-                break  # stop row is NOT consumed (Pattern.until)
-            if step.predicate(rows[j], matched):
-                matched[step.var].append(rows[j])
-                idx[step.var].append(j)
-                takes.append(j)
-                j += 1
-            elif step.internal == "relaxed" and takes:
-                j += 1  # gap row between iterations
-            else:
-                break
-        full_rows = list(matched[step.var][base_len:])
-        full_idx = list(idx[step.var][base_len:])
-        lengths = (
-            range(step.min, len(takes) + 1)
-            if step.reluctant
-            else range(len(takes), step.min - 1, -1)
-        )
-        for L in lengths:
-            del matched[step.var][base_len:]
-            del idx[step.var][base_len:]
-            matched[step.var].extend(full_rows[:L])
-            idx[step.var].extend(full_idx[:L])
-            res = cont(takes[L - 1] + 1 if L else i)
-            if res is not None:
-                return res
-        del matched[step.var][base_len:]
-        del idx[step.var][base_len:]
-        if not matched[step.var]:
-            del matched[step.var]
-            del idx[step.var]
-        return None
-
-    def rec(i: int, si: int, matched: Matched, idx: dict, neg: Step | None):
-        if si == len(steps):
-            return (
-                {k: list(v) for k, v in matched.items()},
-                {k: list(v) for k, v in idx.items()},
-            )
-        step = steps[si]
-        if step.negated:
-            if step.contiguity == "strict":
-                # notNext: the immediately-following row must not match
-                if i < len(rows) and step.predicate(rows[i], matched):
-                    return None
-                return rec(i, si + 1, matched, idx, neg)
-            # notFollowedBy: guards the gap before the NEXT element's anchor
-            return rec(i, si + 1, matched, idx, step)
-        branches = step.alts or (step,)
-        j = i
-        while True:
-            for branch in branches:
-                res = quant(
-                    j, branch, matched, idx,
-                    lambda jj: rec(jj, si + 1, matched, idx, None),
-                )
-                if res is not None:
-                    return res
-            # anchor j failed; the first element anchors exactly at start
-            if si == 0 or step.contiguity != "relaxed":
-                return None
-            if j >= len(rows) or not in_window(j):
-                return None
-            if neg is not None and neg.predicate(rows[j], matched):
-                return None  # a notFollowedBy event occurred in the gap
-            j += 1
-
-    return rec(start, 0, {}, {}, None)
-
-
-def _partial_at(rows: list[Row], start: int, steps: list[Step]) -> bool:
-    """True if rows[start:] can ALL be consumed by a proper prefix of
-    the pattern — i.e. a match could still complete with future rows.
-    Drives streaming buffer retention."""
-
-    def one(i: int, si: int, step: Step, matched: Matched) -> bool:
-        matched.setdefault(step.var, [])
-        base_len = len(matched[step.var])
-        takes: list[int] = []
-        j = i
-        while (step.max is None or len(takes) < step.max) and j < len(rows):
-            if step.predicate(rows[j], matched):
-                matched[step.var].append(rows[j])
-                takes.append(j)
-                j += 1
-            elif step.internal == "relaxed" and takes:
-                j += 1
-            else:
-                break
-        open_at_end = j == len(rows) and takes
-        while True:
-            if len(takes) >= step.min and rec(takes[-1] + 1 if takes else i, si + 1, matched):
-                return True
-            if open_at_end:
-                return True  # quantifier still open at buffer end
-            if not takes:
-                break
-            takes.pop()
-            matched[step.var].pop()
-        del matched[step.var][base_len:]
-        return False
-
-    def rec(i: int, si: int, matched: Matched) -> bool:
-        if i == len(rows):
-            return True  # everything consumed; pattern still open (full matches are caught by _match_at first)
-        if si == len(steps):
-            return False  # pattern exhausted but rows remain
-        step = steps[si]
-        if step.negated:
-            # negative steps consume nothing; over-retaining is safe
-            return rec(i, si + 1, matched)
-        if si > 0 and step.contiguity in ("relaxed", "relaxed_any"):
-            # followedBy: every remaining row is skippable while waiting
-            # for a future anchor — the prefix up to here matched, so
-            # the buffer must be retained (bound it with WITHIN / a
-            # time condition, as Flink does for SKIP_TILL_NEXT state)
-            return True
-        if step.alts:
-            return any(one(i, si, b, matched) for b in step.alts)
-        return one(i, si, step, matched)
-
-    return rec(start, 0, {})
 
 
 def _resume_index(start: int, idx: dict[str, list[int]], steps: list[Step], after_match: str) -> int:
@@ -353,232 +207,376 @@ def _resume_index(start: int, idx: dict[str, list[int]], steps: list[Step], afte
     raise ValueError(f"unknown after_match {after_match!r}")
 
 
-def _match_at_any(
-    rows: list[Row], start: int, steps: list[Step], within: tuple[str, object] | None = None
-) -> list[Matched]:
-    """All-matches twin of ``_match_at`` for patterns containing
-    ``relaxed_any`` (followedByAny / SKIP_TILL_ANY) steps: a
-    relaxed_any step yields ONE match per viable anchor (every later
-    anchor too, not just the earliest), while strict/relaxed steps keep
-    their deterministic single-anchor semantics and quantifiers stay
-    greedy-first (longest completing take per anchor). Alternation
-    branches keep ordered priority. Matches emit in ascending anchor
-    order."""
-    out: list[Matched] = []
+class _MatchedRows(Mapping):
+    """A predicate's second argument: var -> the rows matched so far,
+    read through the kernel's live var -> row-index map."""
 
-    def in_window(j: int) -> bool:
-        if within is None:
-            return True
-        ts_col, max_delta = within
-        return rows[j][ts_col] - rows[start][ts_col] <= max_delta
+    __slots__ = ("rows", "idx")
 
-    def quant(i: int, step: Step, matched: Matched, cont) -> bool:
-        if step.internal == "combinations":
-            return quant_combinations(i, step, matched, cont)
-        matched.setdefault(step.var, [])
-        base_len = len(matched[step.var])
-        takes: list[int] = []
-        j = i
-        while (step.max is None or len(takes) < step.max) and j < len(rows):
-            if not in_window(j):
+    def __init__(self, rows):
+        self.rows, self.idx = rows, {}
+
+    def __getitem__(self, var):
+        return [self.rows[j] for j in self.idx[var]]
+
+    def __iter__(self):
+        return iter(self.idx)
+
+    def __len__(self):
+        return len(self.idx)
+
+
+class _Cond:
+    """A row predicate read like a mask: ``cond[j]`` asks it about row
+    ``j`` given the rows matched so far."""
+
+    __slots__ = ("predicate", "rows", "matched")
+
+    def __init__(self, predicate, rows, matched):
+        self.predicate, self.rows, self.matched = predicate, rows, matched
+
+    def __getitem__(self, j):
+        return self.predicate(self.rows[j], self.matched)
+
+
+def _next_true(mask) -> list[int]:
+    """``table[j]`` = the smallest ``k >= j`` with ``mask[k]``, else
+    ``n``; ``n+1`` entries so ``table[n]`` is a valid read. A list: the
+    walk's scalar reads index lists ~3× faster than numpy arrays."""
+    n = len(mask)
+    arr = np.where(mask, np.arange(n), n)
+    return np.append(np.minimum.accumulate(arr[::-1])[::-1], n).tolist()
+
+
+def _rows_of(rows, idx: dict[str, list[int]]) -> Matched:
+    return {v: [rows[j] for j in js] for v, js in idx.items()}
+
+
+class _NFA:
+    """The CEP NFA over one key's ordered rows (flink-cep NFA.java:86;
+    row indices play the SharedBuffer's part).
+
+    Each step, and each alternation branch, is an element ``(step, test,
+    table, until)``; the walk asks ``test[j]`` whether row j satisfies
+    it. A step with ``vec`` and no ``until`` answers from its mask,
+    evaluated once over all rows, and its next-true ``table`` lets the
+    walk jump in O(1) over gaps inside a relaxed quantifier, over
+    non-viable anchors of a relaxed step whose branches all consume,
+    and over start rows the first element cannot take. Any other
+    element calls its predicate with ``(row, matched-so-far rows)`` and
+    its table is the identity.
+
+    ``data`` is a list of row dicts or a pandas frame; a frame becomes
+    row dicts only when some element calls a predicate."""
+
+    def __init__(self, data, steps: list[Step], within: tuple[str, object] | None = None):
+        self.steps = steps
+        n = self.n = len(data)
+        frame = data if isinstance(data, pd.DataFrame) else None
+        groups = [s.alts or (s,) for s in steps]
+
+        def masked(b: Step) -> bool:
+            return n > 0 and b.vec is not None and b.until is None
+
+        flat = [b for g in groups for b in g]
+        rows = data if frame is None else None
+        if rows is None and not all(map(masked, flat)):
+            rows = frame.to_dict("records")
+        if frame is None and any(map(masked, flat)):
+            frame = pd.DataFrame(rows)
+        self.rows, self.frame = rows, frame
+        self.matched = _MatchedRows(rows)
+        ident = range(n + 1)
+        self.elems, self.unions = [], []
+        for g in groups:
+            elems, masks = [], []
+            for b in g:
+                until = None if b.until is None else _Cond(b.until, rows, self.matched)
+                if masked(b):
+                    masks.append(np.asarray(b.vec(frame), dtype=bool))
+                    elems.append((b, masks[-1].tolist(), _next_true(masks[-1]), until))
+                else:
+                    elems.append((b, _Cond(b.predicate, rows, self.matched), ident, until))
+            self.elems.append(elems)
+            if len(masks) < len(g):
+                self.unions.append(ident)
+            else:  # the next row ANY branch can take
+                self.unions.append(
+                    elems[0][2] if len(g) == 1 else _next_true(np.logical_or.reduce(masks))
+                )
+        # skipping anchors no branch can take is sound only when every
+        # branch must consume a row there: a min-0 branch's continuation
+        # runs at each scanned position
+        self.can_jump = [all(b.min >= 1 for b in g) for g in groups]
+        # a match, and equally a proper-prefix partial, anchors only
+        # where the first element can take
+        self.anchor = (
+            self.unions[0] if self.can_jump[0] and not steps[0].negated else ident
+        )
+        self.ts = self.max_delta = self.delta = None
+        if within is not None and n:
+            col, md = within
+            self.delta = pd.Timedelta(md) if isinstance(md, str) else md
+            if isinstance(data, pd.DataFrame):
+                # numpy 2 rejects timedelta64 <= datetime.timedelta
+                self.ts = data[col].to_numpy()
+                self.max_delta = (
+                    md if isinstance(md, (int, float)) else pd.Timedelta(md).to_timedelta64()
+                )
+            else:
+                self.ts, self.max_delta = [r[col] for r in rows], self.delta
+        self.matches_at = self._matcher()
+
+    def _take(self, i: int, elem, got: list[int], in_window=None) -> int:
+        """Appends to ``got`` the rows the element takes greedily from
+        row ``i`` — gap rows skipped under relaxed internal contiguity,
+        an until row ending the loop unconsumed — and returns the row
+        the loop stopped at."""
+        step, test, table, until = elem
+        base, j = len(got), i
+        while (step.max is None or len(got) - base < step.max) and j < self.n:
+            if (in_window is not None and not in_window(j)) or (until is not None and until[j]):
                 break
-            if step.until is not None and step.until(rows[j], matched):
-                break  # stop row is NOT consumed (Pattern.until)
-            if step.predicate(rows[j], matched):
-                matched[step.var].append(rows[j])
-                takes.append(j)
+            if test[j]:
+                got.append(j)
                 j += 1
-            elif step.internal == "relaxed" and takes:
-                j += 1
+            elif step.internal == "relaxed" and len(got) > base:
+                j = table[j + 1]  # gap rows between iterations
             else:
                 break
-        emitted = False
-        full_rows = list(matched[step.var][base_len:])
-        lengths = (
-            range(step.min, len(takes) + 1)
-            if step.reluctant
-            else range(len(takes), step.min - 1, -1)
-        )
-        for L in lengths:
-            del matched[step.var][base_len:]
-            matched[step.var].extend(full_rows[:L])
-            if cont(takes[L - 1] + 1 if L else i):
-                emitted = True
-                break  # first completing take-count in preference order
-        del matched[step.var][base_len:]
-        if not matched[step.var]:
-            del matched[step.var]
-        return emitted
+        return j
 
-    def quant_combinations(i: int, step: Step, matched: Matched, cont) -> bool:
-        """allowCombinations (SKIP_TILL_ANY between iterations): the
-        first take anchors at ``i`` (the step's own contiguity decided
-        the anchor), every later take may land on ANY later matching
-        row — each increasing subset of size ≥ min (≤ max) emits its
-        own continuation. Exponential by design (NFA.java warns the
-        same); the within-window bound caps the candidate span."""
-        matched.setdefault(step.var, [])
-        base_len = len(matched[step.var])
-        emitted = False
+    def _matcher(self):
+        """Builds ``matches_at`` once per kernel: its closures cost more
+        to create than most anchors cost to walk."""
+        n, steps, all_elems, unions = self.n, self.steps, self.elems, self.unions
+        can_jump, ts, md = self.can_jump, self.ts, self.max_delta
+        start = k = 0
+        matched: dict[str, list[int]] = {}
+        out: list[dict[str, list[int]]] = []
 
-        def dfs(last: int, count: int) -> None:
-            nonlocal emitted
-            if count >= step.min and cont(last + 1):
-                emitted = True
-            if step.max is not None and count >= step.max:
-                return
-            k = last + 1
-            while k < len(rows) and in_window(k):
-                if step.until is not None and step.until(rows[k], matched):
-                    break  # stop row is NOT consumed (Pattern.until)
-                if step.predicate(rows[k], matched):
-                    matched[step.var].append(rows[k])
-                    dfs(k, count + 1)
-                    matched[step.var].pop()
-                k += 1
+        def in_window(j: int) -> bool:
+            return md is None or ts[j] - ts[start] <= md
 
-        if step.min == 0 and cont(i):
-            emitted = True
-        if (
-            i < len(rows)
-            and in_window(i)
-            and not (step.until is not None and step.until(rows[i], matched))
-            and step.predicate(rows[i], matched)
-        ):
-            matched[step.var].append(rows[i])
-            dfs(i, 1)
-            matched[step.var].pop()
-        del matched[step.var][base_len:]
-        if not matched[step.var]:
-            del matched[step.var]
-        return emitted
-
-    def rec(i: int, si: int, matched: Matched, neg: Step | None) -> bool:
-        if si == len(steps):
-            out.append({k: list(v) for k, v in matched.items()})
-            return True
-        step = steps[si]
-        if step.negated:
-            if step.contiguity == "strict":
-                if i < len(rows) and step.predicate(rows[i], matched):
-                    return False
-                return rec(i, si + 1, matched, neg)
-            return rec(i, si + 1, matched, step)
-        branches = step.alts or (step,)
-        any_mode = step.contiguity == "relaxed_any" and si > 0
-        emitted = False
-        j = i
-        while True:
-            for branch in branches:
-                ok = quant(j, branch, matched, lambda jj: rec(jj, si + 1, matched, None))
-                if ok:
+        def quant(i: int, elem, cont) -> bool:
+            step = elem[0]
+            if step.internal == "combinations":
+                return combinations(i, elem, cont)
+            got = matched.setdefault(step.var, [])
+            base = len(got)
+            self._take(i, elem, got, in_window)
+            takes = got[base:]
+            lengths = (
+                range(step.min, len(takes) + 1)
+                if step.reluctant
+                else range(len(takes), step.min - 1, -1)
+            )
+            emitted = False
+            for L in lengths:
+                del got[base:]
+                got.extend(takes[:L])
+                if cont(takes[L - 1] + 1 if L else i):
                     emitted = True
-                    break  # ordered branch priority: first matching branch per anchor
-            if emitted and not any_mode:
-                return True  # deterministic step: earliest completing anchor wins
-            if si == 0 or step.contiguity == "strict":
-                return emitted
-            if j >= len(rows) or not in_window(j):
-                return emitted
-            if neg is not None and neg.predicate(rows[j], matched):
-                return emitted  # notFollowedBy event poisons later anchors
-            j += 1
+                    break
+            del got[base:]
+            if not got:
+                del matched[step.var]
+            return emitted
 
-    rec(start, 0, {}, None)
-    return out
+        def combinations(i: int, elem, cont) -> bool:
+            # the first take anchors at i, every later one may land on
+            # ANY later matching row: each increasing subset of size
+            # >= min (<= max) continues on its own — exponential, as
+            # NFA.java warns; within caps the span
+            step, test, table, until = elem
+            got = matched.setdefault(step.var, [])
+            base = len(got)
+            emitted = False
+
+            def dfs(last: int) -> None:
+                nonlocal emitted
+                if len(got) - base >= step.min and cont(last + 1):
+                    emitted = True
+                if step.max is not None and len(got) - base >= step.max:
+                    return
+                j = table[last + 1]
+                while j < n and in_window(j) and not (until is not None and until[j]):
+                    if test[j]:
+                        got.append(j)
+                        dfs(j)
+                        got.pop()
+                    j = table[j + 1]
+
+            if step.min == 0 and cont(i):
+                emitted = True
+            if i < n and in_window(i) and not (until is not None and until[i]) and test[i]:
+                got.append(i)
+                dfs(i)
+                got.pop()
+            if not got:
+                del matched[step.var]
+            return emitted
+
+        def rec(i: int, si: int, neg) -> bool:
+            if si == k:
+                out.append({v: list(js) for v, js in matched.items()})
+                return True
+            step, elems = steps[si], all_elems[si]
+            if step.negated:
+                test = elems[0][1]
+                if step.contiguity == "strict":  # notNext
+                    return not (i < n and test[i]) and rec(i, si + 1, neg)
+                return rec(i, si + 1, test)  # notFollowedBy guards the next gap
+            any_mode = si > 0 and step.contiguity == "relaxed_any"
+            jump = unions[si] if neg is None and can_jump[si] else None
+            cont = lambda jj: rec(jj, si + 1, None)  # noqa: E731
+            emitted = False
+            j = i
+            while True:
+                for elem in elems:
+                    if quant(j, elem, cont):
+                        emitted = True
+                        break  # ordered branch priority per anchor
+                if emitted and not any_mode:
+                    return True  # deterministic step: earliest anchor wins
+                if si == 0 or step.contiguity == "strict" or j >= n or not in_window(j):
+                    return emitted  # the first element anchors exactly at start
+                if neg is not None and neg[j]:
+                    return emitted  # a notFollowedBy event poisons later anchors
+                j = jump[j + 1] if jump is not None else j + 1
+
+        def matches_at(at: int, prefix: int | None = None) -> list[dict[str, list[int]]]:
+            """Every match of ``steps[:prefix]`` (default: all) anchored
+            at ``at``, in preference order, as var -> row indices.
+
+            Take-counts are tried longest-first (shortest-first when
+            reluctant), alternation branches in order, relaxed anchors
+            earliest-first, and each level stops at its first completing
+            choice — so a deterministic pattern yields at most one
+            match. A followedByAny step goes on to every later viable
+            anchor, an allowCombinations quantifier to every increasing
+            take subset (SKIP_TILL_ANY). Negative steps consume nothing:
+            notNext fails on the next row, notFollowedBy on any row of
+            the gap before the next element's anchor."""
+            nonlocal start, k, matched, out
+            start, k = at, len(steps) if prefix is None else prefix
+            matched = self.matched.idx = {}
+            out = []
+            rec(at, 0, None)
+            return out
+
+        return matches_at
+
+    def partial_at(self, start: int) -> bool:
+        """True if rows[start:] can ALL be consumed by a proper prefix of
+        the pattern — a match could still complete with future rows.
+        Drives streaming buffer retention."""
+        n, steps, all_elems = self.n, self.steps, self.elems
+        matched = self.matched.idx = {}
+
+        def one(i: int, si: int, elem) -> bool:
+            got = matched.setdefault(elem[0].var, [])
+            base = len(got)
+            open_at_end = self._take(i, elem, got) == n and len(got) > base
+            while True:
+                nxt = got[-1] + 1 if len(got) > base else i
+                if len(got) - base >= elem[0].min and rec(nxt, si + 1):
+                    return True
+                if open_at_end:
+                    return True  # quantifier still open at buffer end
+                if len(got) == base:
+                    return False
+                got.pop()
+
+        def rec(i: int, si: int) -> bool:
+            if i == n:
+                return True  # everything consumed; pattern still open
+            if si == len(steps):
+                return False  # pattern exhausted but rows remain
+            step = steps[si]
+            if step.negated:
+                return rec(i, si + 1)  # consumes nothing; over-retaining is safe
+            if si > 0 and step.contiguity in ("relaxed", "relaxed_any"):
+                # followedBy: every remaining row is skippable while
+                # waiting for a future anchor, so the buffer must be
+                # retained (bound it with WITHIN, as Flink does for
+                # SKIP_TILL_NEXT state)
+                return True
+            return any(one(i, si, elem) for elem in all_elems[si])
+
+        return rec(start, 0)
+
+    def longest_partial_at(self, start: int) -> dict[str, list[int]] | None:
+        """The matched-so-far map a timed-out partial anchored at
+        ``start`` carries (what Flink hands to
+        TimedOutPartialMatchHandler.processTimedOutMatch,
+        TimedOutPartialMatchHandler.java:75): the first non-empty match
+        of the longest proper step prefix that completes; None when no
+        partial existed."""
+        for k in range(len(self.steps) - 1, 0, -1):
+            if not all(s.negated for s in self.steps[:k]):
+                for m in self.matches_at(start, k):
+                    if m:
+                        return m
+        return None
+
+
+def _scan(data, steps: list[Step], after_match: str, within, timeouts: bool):
+    """One pass of the kernel over one key's rows: each match resumes
+    the scan per ``after_match``; with ``timeouts``, an anchor that
+    completes nothing but starts a partial yields ``(longest partial,
+    anchor_ts + within)``."""
+    if _needs_any_path(steps) and after_match != "to_next_row":
+        raise ValueError(
+            "followedByAny/allowCombinations patterns require "
+            "after_match='to_next_row'"
+        )
+    nfa = _NFA(data, steps, within)
+    hits, partials = [], []
+    i = 0
+    while (i := nfa.anchor[i]) < nfa.n:
+        ms = nfa.matches_at(i)
+        if ms:
+            hits.extend(ms)
+            i = _resume_index(i, ms[0], steps, after_match)
+            continue
+        partial = nfa.longest_partial_at(i) if timeouts else None
+        if partial is not None:
+            partials.append((partial, i))
+        i += 1
+    rows = nfa.rows
+    if rows is None:  # every element answered from masks: build matched rows only
+        maps = hits + [p for p, _a in partials]
+        need = sorted({j for m in maps for js in m.values() for j in js}
+                      | {a for _p, a in partials})
+        rows = dict(zip(need, nfa.frame.iloc[need].to_dict("records"))) if need else {}
+    return (
+        [_rows_of(rows, m) for m in hits],
+        [(_rows_of(rows, p), rows[a][within[0]] + nfa.delta) for p, a in partials],
+    )
 
 
 def match_sequence(
-    rows: list[Row],
+    rows: list[Row] | pd.DataFrame,
     steps: list[Step],
     after_match: str = "past_last_row",
     within: tuple[str, object] | None = None,
 ) -> list[Matched]:
-    """Run the pattern over one key's ordered rows. ``after_match``:
-    'past_last_row' (non-overlapping, Flink's default), 'to_next_row'
-    (resume at start+1), 'skip_to_first_<var>' / 'skip_to_last_<var>'
-    (resume at that var's first/last matched row).
-    ``within=(ts_col, max_delta)`` bounds a match's time span.
+    """Run the pattern over one key's ordered rows (row dicts or a
+    pandas frame). ``after_match``: 'past_last_row' (non-overlapping,
+    Flink's default), 'to_next_row' (resume at start+1),
+    'skip_to_first_<var>' / 'skip_to_last_<var>' (resume at that var's
+    first/last matched row). ``within=(ts_col, max_delta)`` bounds a
+    match's time span (Pattern.within).
 
-    Patterns containing a ``relaxed_any`` (followedByAny) step emit ALL
-    viable-anchor matches per start and therefore require
-    ``after_match='to_next_row'`` (NO_SKIP-style enumeration — the only
-    coherent skip mode when one start yields several matches; Flink
-    couples SKIP_TILL_ANY with NO_SKIP the same way)."""
-    has_any = _needs_any_path(steps)
-    out: list[Matched] = []
-    i = 0
-    if has_any:
-        if after_match != "to_next_row":
-            raise ValueError(
-                "followedByAny/allowCombinations patterns require "
-                "after_match='to_next_row'"
-            )
-        while i < len(rows):
-            out.extend(_match_at_any(rows, i, steps, within))
-            i += 1
-        return out
-    while i < len(rows):
-        m = _match_at(rows, i, steps, within)
-        if m is not None:
-            matched, idx = m
-            out.append(matched)
-            i = _resume_index(i, idx, steps, after_match)
-        else:
-            i += 1
-    return out
-
-
-def _longest_partial_at(
-    rows: list[Row], start: int, steps: list[Step],
-    within: tuple[str, object] | None = None,
-) -> Matched | None:
-    """Longest proper-prefix match anchored at ``start`` — the
-    matched-so-far map a timed-out partial carries (what Flink hands to
-    ``TimedOutPartialMatchHandler.processTimedOutMatch``,
-    flink-libraries/flink-cep/src/main/java/org/apache/flink/cep/
-    functions/TimedOutPartialMatchHandler.java:75). Tries the longest
-    step prefix first; returns None when not even the first element
-    matches at ``start`` (no partial existed, nothing to time out)."""
-    for k in range(len(steps) - 1, 0, -1):
-        prefix = steps[:k]
-        if all(s.negated for s in prefix):
-            continue
-        m = _match_at(rows, start, prefix, within)
-        if m is not None and m[0]:
-            return m[0]
-    return None
-
-
-def _longest_partial_at_any(
-    rows: list[Row], start: int, steps: list[Step],
-    within: tuple[str, object] | None = None,
-) -> Matched | None:
-    """Any-path twin of ``_longest_partial_at``: the longest
-    proper-prefix match anchored at ``start`` for a pattern containing
-    followedByAny/allowCombinations steps. A prefix may itself be
-    deterministic (the any step can sit later in the pattern) — route
-    each prefix to the matching evaluator. Returns the first match of
-    the longest completable prefix (the buffered rows a pruned NFA
-    computation state carries)."""
-    for k in range(len(steps) - 1, 0, -1):
-        prefix = steps[:k]
-        if all(s.negated for s in prefix):
-            continue
-        if _needs_any_path(prefix):
-            ms = _match_at_any(rows, start, prefix, within)
-            for m0 in ms:
-                if m0:
-                    return m0
-        else:
-            m = _match_at(rows, start, prefix, within)
-            if m is not None and m[0]:
-                return m[0]
-    return None
+    A followedByAny step or allowCombinations quantifier emits ALL
+    viable matches per start and requires ``after_match='to_next_row'``
+    (Flink couples SKIP_TILL_ANY with NO_SKIP the same way)."""
+    return _scan(rows, steps, after_match, within, timeouts=False)[0]
 
 
 def match_sequence_with_timeouts(
-    rows: list[Row],
+    rows: list[Row] | pd.DataFrame,
     steps: list[Step],
     after_match: str = "past_last_row",
     within: tuple[str, object] | None = None,
@@ -586,540 +584,15 @@ def match_sequence_with_timeouts(
     """``match_sequence`` plus Flink's timed-out-partial second output
     (TimedOutPartialMatchHandler.java:75, fired from CepOperator's
     advanceTime when the NFA prunes a computation state on within()
-    expiry): partials that start but cannot complete inside the window
-    surface as ``(partial_matched, timeout_ts)`` pairs instead of being
-    silently dropped — payment-timeout / abandoned-cart patterns read
-    this stream as their primary output.
+    expiry) as ``(partial_matched, timeout_ts)`` pairs.
 
     Bounded input behaves like Flink's end-of-job +inf watermark: every
-    anchor that begins a partial and never completes times out, with
-    ``timeout_ts = anchor_ts + within`` (when the match would stop
-    being completable). Complete matches consume rows per
-    ``after_match`` exactly as in ``match_sequence``; timed-out anchors
-    consume nothing (the NFA just drops the computation state)."""
+    anchor that begins a partial and completes no match times out at
+    ``anchor_ts + within``, consuming nothing; complete matches consume
+    rows per ``after_match`` exactly as in ``match_sequence``."""
     if within is None:
         raise ValueError("timeout enumeration requires within= (Pattern.within)")
-    ts_col, delta = within
-    matches: list[Matched] = []
-    timeouts: list[tuple[Matched, object]] = []
-    if _needs_any_path(steps):
-        # followedByAny / allowCombinations (r12, VERDICT r11 #5):
-        # anchors stay live until window expiry (NFA.java:86 timeout
-        # branch prunes them at advanceTime) — an anchor with NO
-        # completing enumeration but a viable prefix times out with its
-        # buffered longest-prefix partial at anchor_ts + within. The
-        # any-path couples with to_next_row (same rule as
-        # match_sequence), so anchors partition into the two outputs
-        # exactly as on the deterministic path.
-        if after_match != "to_next_row":
-            raise ValueError(
-                "followedByAny/allowCombinations patterns require "
-                "after_match='to_next_row'"
-            )
-        for i in range(len(rows)):
-            ms = _match_at_any(rows, i, steps, within)
-            if ms:
-                matches.extend(ms)
-                continue
-            partial = _longest_partial_at_any(rows, i, steps, within)
-            if partial is not None:
-                timeouts.append((partial, rows[i][ts_col] + delta))
-        return matches, timeouts
-    i = 0
-    while i < len(rows):
-        m = _match_at(rows, i, steps, within)
-        if m is not None:
-            matched, idx = m
-            matches.append(matched)
-            i = _resume_index(i, idx, steps, after_match)
-            continue
-        partial = _longest_partial_at(rows, i, steps, within)
-        if partial is not None:
-            timeouts.append((partial, rows[i][ts_col] + delta))
-        i += 1
-    return matches, timeouts
-
-
-def _next_true_tables(masks: list, n: int) -> list:
-    """Per-step next-true jump tables: for step ``si``,
-    ``nt[si] = (branch_tables, union_table)`` where ``table[j]`` is the
-    smallest ``k ≥ j`` with the mask true (``n`` = none; tables have
-    ``n+1`` entries so ``table[n]`` is a valid sentinel read). Built in
-    O(n) numpy (reverse cumulative min) and converted to plain lists —
-    the NFA's relaxed-contiguity scans then JUMP over non-matching gaps
-    in O(1) instead of stepping row by row, which is the hot loop when
-    matches are sparse (most events sit between pattern elements)."""
-    import numpy as np
-
-    def table(m) -> list[int]:
-        arr = np.where(np.asarray(m, dtype=bool), np.arange(n), n)
-        nt = np.minimum.accumulate(arr[::-1])[::-1] if n else arr
-        return np.append(nt, n).tolist()
-
-    out = []
-    for m in masks:
-        if isinstance(m, tuple):
-            bts = tuple(table(b) for b in m)
-            union = [min(v) for v in zip(*bts)]
-            out.append((bts, union))
-        else:
-            t = table(m)
-            out.append(((t,), t))
-    return out
-
-
-def _match_at_masks(
-    masks: list, n: int, start: int, steps: list[Step], ts=None, max_delta=None,
-    nt: list | None = None,
-) -> dict[str, list[int]] | None:
-    """Mask-based twin of ``_match_at``: identical greedy backtracking
-    (contiguity modes and negative steps included), but each predicate
-    test is an O(1) array index and — given ``nt`` jump tables from
-    ``_next_true_tables`` — relaxed-contiguity gaps are skipped in O(1)
-    instead of scanned. ``matched`` holds row INDICES; callers
-    materialize rows for actual matches only."""
-    if nt is None:
-        nt = _next_true_tables(masks, n)
-
-    def in_window(j: int) -> bool:
-        return max_delta is None or ts[j] - ts[start] <= max_delta
-
-    def quant(i: int, step: Step, mask, table, matched: dict, cont):
-        matched.setdefault(step.var, [])
-        base_len = len(matched[step.var])
-        takes: list[int] = []
-        j = i
-        while (step.max is None or len(takes) < step.max) and j < n:
-            if not in_window(j):
-                break
-            if mask[j]:
-                matched[step.var].append(j)
-                takes.append(j)
-                j += 1
-            elif step.internal == "relaxed" and takes:
-                # jump to the next take candidate (window re-checked at
-                # the loop head; skipped rows are non-matching, so the
-                # relaxed semantics are identical)
-                j = table[j]
-            else:
-                break
-        lengths = (
-            range(step.min, len(takes) + 1)
-            if step.reluctant
-            else range(len(takes), step.min - 1, -1)
-        )
-        for L in lengths:
-            del matched[step.var][base_len:]
-            matched[step.var].extend(takes[:L])
-            res = cont(takes[L - 1] + 1 if L else i)
-            if res is not None:
-                return res
-        del matched[step.var][base_len:]
-        if not matched[step.var]:
-            del matched[step.var]
-        return None
-
-    def rec(i: int, si: int, matched: dict, neg_mask) -> dict | None:
-        if si == len(steps):
-            return {k: list(v) for k, v in matched.items()}
-        step = steps[si]
-        if step.negated:
-            if step.contiguity == "strict":  # notNext
-                if i < n and masks[si][i]:
-                    return None
-                return rec(i, si + 1, matched, neg_mask)
-            return rec(i, si + 1, matched, masks[si])  # notFollowedBy
-        branches = step.alts or (step,)
-        bmasks = masks[si] if step.alts else (masks[si],)
-        btables, union = nt[si]
-        # gap-jumping is sound only when every branch must CONSUME a row
-        # at the anchor (min ≥ 1): a min-0 branch's continuation runs at
-        # each scanned position, and a strict successor is
-        # position-sensitive — those anchors cannot be skipped
-        can_jump = all(b.min >= 1 for b in branches)
-        j = i
-        while True:
-            for branch, bmask, btable in zip(branches, bmasks, btables):
-                res = quant(
-                    j, branch, bmask, btable, matched,
-                    lambda jj: rec(jj, si + 1, matched, None),
-                )
-                if res is not None:
-                    return res
-            if si == 0 or step.contiguity != "relaxed":
-                return None
-            if j >= n or not in_window(j):
-                return None
-            if neg_mask is None and can_jump:
-                # no notFollowedBy guard in flight: only positions where
-                # some branch can take are viable anchors — jump there
-                # (the loop head's failure checks re-validate bounds and
-                # window at the new position)
-                j = union[j + 1]
-                continue
-            if neg_mask is not None and neg_mask[j]:
-                return None
-            j += 1
-
-    return rec(start, 0, {}, None)
-
-
-def match_sequence_masks(
-    masks: list, n: int, steps: list[Step], after_match: str = "past_last_row",
-    ts=None, max_delta=None,
-) -> list[dict[str, list[int]]]:
-    """Mask-based twin of ``match_sequence`` (index output).
-
-    Quantifier-free patterns (every step exactly {1,1}) short-circuit
-    to pure numpy: anchors = AND of the steps' masks shifted into
-    alignment — the Python scan then visits only anchor positions
-    (actual matches), not every row."""
-    if _needs_any_path(steps):
-        raise NotImplementedError(
-            "followedByAny/allowCombinations run on the dict-row path (match_sequence)"
-        )
-    if after_match in ("past_last_row", "to_next_row") and all(
-        s.min == 1 and s.max == 1 and not s.alts
-        and s.contiguity == "strict" and not s.negated
-        for s in steps
-    ):
-        import numpy as np
-
-        L = len(steps)
-        if n < L:
-            return []
-        anchors = masks[0][: n - L + 1].copy()
-        for si in range(1, L):
-            anchors &= masks[si][si : n - L + 1 + si]
-        if max_delta is not None:
-            anchors &= (ts[L - 1 : n] - ts[: n - L + 1]) <= max_delta
-        out = []
-        prev_end = 0
-        for i in np.nonzero(anchors)[0]:
-            if after_match == "past_last_row" and i < prev_end:
-                continue  # overlaps the previous match
-            out.append({s.var: [i + si] for si, s in enumerate(steps)})
-            prev_end = i + L
-        return out
-    lmasks, nt, anchor = _prepare_masks(masks, n, steps)
-    out = []
-    i = 0
-    while i < n:
-        if anchor is not None:
-            i = anchor[i]
-            if i >= n:
-                break
-        m = _match_at_masks(lmasks, n, i, steps, ts, max_delta, nt)
-        if m is not None:
-            out.append(m)
-            i = _resume_index(i, m, steps, after_match)
-        else:
-            i += 1
-    return out
-
-
-def _prepare_masks(masks: list, n: int, steps: list[Step]):
-    """(list-form masks, jump tables, anchor table) for the generic
-    mask scans.
-
-    Masks convert numpy→list (the NFA walk does per-element scalar
-    reads, where Python list indexing beats numpy scalar indexing ~3×);
-    jump tables come from ``_next_true_tables``. When the pattern's
-    FIRST element must consume a row (min ≥ 1, not negated), a match —
-    and equally a proper-prefix partial — can only anchor where that
-    element's mask is true, so the top-level scan jumps straight
-    between anchor candidates via ``anchor[i]`` (None = no skipping:
-    a later step could consume row 0)."""
-    import numpy as np
-
-    lmasks = [
-        tuple(np.asarray(b).tolist() for b in m) if isinstance(m, tuple)
-        else np.asarray(m).tolist()
-        for m in masks
-    ]
-    nt = _next_true_tables(lmasks, n)
-    s0 = steps[0]
-    skip_ok = not s0.negated and (
-        all(b.min >= 1 for b in s0.alts) if s0.alts else s0.min >= 1
-    )
-    return lmasks, nt, (nt[0][1] if skip_ok else None)
-
-
-def _partial_at_masks(masks: list, n: int, start: int, steps: list[Step]) -> bool:
-    """Mask-based twin of ``_partial_at`` (streaming buffer retention):
-    True if rows[start:] can all be consumed by a proper prefix of the
-    pattern. Valid under the ``vec`` contract (predicates ignore match
-    state), which is exactly when masks exist."""
-
-    def one(i: int, si: int, step: Step, mask) -> bool:
-        takes: list[int] = []
-        j = i
-        while (step.max is None or len(takes) < step.max) and j < n:
-            if mask[j]:
-                takes.append(j)
-                j += 1
-            elif step.internal == "relaxed" and takes:
-                j += 1
-            else:
-                break
-        open_at_end = j == n and bool(takes)
-        while True:
-            if len(takes) >= step.min and rec(takes[-1] + 1 if takes else i, si + 1):
-                return True
-            if open_at_end:
-                return True  # quantifier still open at buffer end
-            if not takes:
-                return False
-            takes.pop()
-
-    def rec(i: int, si: int) -> bool:
-        if i == n:
-            return True  # everything consumed; pattern still open
-        if si == len(steps):
-            return False  # pattern exhausted but rows remain
-        step = steps[si]
-        if step.negated:
-            return rec(i, si + 1)
-        if si > 0 and step.contiguity in ("relaxed", "relaxed_any"):
-            return True  # followedBy: remaining rows are skippable
-        if step.alts:
-            return any(
-                one(i, si, b, bm) for b, bm in zip(step.alts, masks[si])
-            )
-        return one(i, si, step, masks[si])
-
-    return rec(start, 0)
-
-
-def _longest_partial_at_masks(
-    masks: list, n: int, start: int, steps: list[Step], ts=None, max_delta=None,
-    nt: list | None = None,
-) -> dict[str, list[int]] | None:
-    """Mask twin of ``_longest_partial_at`` — longest proper-prefix
-    match (as row indices) anchored at ``start`` for the timed-out
-    side output."""
-    for k in range(len(steps) - 1, 0, -1):
-        prefix = steps[:k]
-        if all(s.negated for s in prefix):
-            continue
-        m = _match_at_masks(
-            masks[:k], n, start, prefix, ts, max_delta,
-            nt[:k] if nt is not None else None,
-        )
-        if m:
-            return m
-    return None
-
-
-def match_sequence_masks_with_timeouts(
-    masks: list, n: int, steps: list[Step], after_match: str = "past_last_row",
-    ts=None, max_delta=None,
-) -> tuple[list[dict[str, list[int]]], list[tuple[dict[str, list[int]], int]]]:
-    """Mask twin of ``match_sequence_with_timeouts``: returns
-    (match index-dicts, [(partial index-dict, anchor row index)]) —
-    the caller derives ``timeout_ts`` from the anchor row."""
-    if max_delta is None:
-        raise ValueError("timeout enumeration requires the within bound")
-    # a partial anchors under the same first-element condition as a
-    # match (prefixes share steps[0]), so anchor skipping is valid for
-    # the timeout enumeration too
-    lmasks, nt, anchor = _prepare_masks(masks, n, steps)
-    matches: list[dict[str, list[int]]] = []
-    timeouts: list[tuple[dict[str, list[int]], int]] = []
-    i = 0
-    while i < n:
-        if anchor is not None:
-            i = anchor[i]
-            if i >= n:
-                break
-        m = _match_at_masks(lmasks, n, i, steps, ts, max_delta, nt)
-        if m is not None:
-            matches.append(m)
-            i = _resume_index(i, m, steps, after_match)
-            continue
-        partial = _longest_partial_at_masks(lmasks, n, i, steps, ts, max_delta, nt)
-        if partial is not None:
-            timeouts.append((partial, i))
-        i += 1
-    return matches, timeouts
-
-
-def _match_at_any_masks(
-    masks: list, n: int, start: int, steps: list[Step], ts=None, max_delta=None,
-    nt: list | None = None,
-) -> list[dict[str, list[int]]]:
-    """Mask twin of ``_match_at_any`` (followedByAny / SKIP_TILL_ANY /
-    allowCombinations all-matches enumeration): identical anchor and
-    emission semantics, index output, hoisted masks + jump tables.
-    Valid under the ``vec`` contract (predicates ignore match state)."""
-    if nt is None:
-        nt = _next_true_tables(masks, n)
-    out: list[dict[str, list[int]]] = []
-
-    def in_window(j: int) -> bool:
-        return max_delta is None or ts[j] - ts[start] <= max_delta
-
-    def quant(i: int, step: Step, mask, table, matched: dict, cont) -> bool:
-        if step.internal == "combinations":
-            return quant_combinations(i, step, mask, table, matched, cont)
-        matched.setdefault(step.var, [])
-        base_len = len(matched[step.var])
-        takes: list[int] = []
-        j = i
-        while (step.max is None or len(takes) < step.max) and j < n:
-            if not in_window(j):
-                break
-            if mask[j]:
-                matched[step.var].append(j)
-                takes.append(j)
-                j += 1
-            elif step.internal == "relaxed" and takes:
-                j = table[j]  # jump to the next take candidate
-            else:
-                break
-        emitted = False
-        lengths = (
-            range(step.min, len(takes) + 1)
-            if step.reluctant
-            else range(len(takes), step.min - 1, -1)
-        )
-        for L in lengths:
-            del matched[step.var][base_len:]
-            matched[step.var].extend(takes[:L])
-            if cont(takes[L - 1] + 1 if L else i):
-                emitted = True
-                break  # first completing take-count in preference order
-        del matched[step.var][base_len:]
-        if not matched[step.var]:
-            del matched[step.var]
-        return emitted
-
-    def quant_combinations(i: int, step: Step, mask, table, matched: dict, cont) -> bool:
-        matched.setdefault(step.var, [])
-        base_len = len(matched[step.var])
-        emitted = False
-
-        def dfs(last: int, count: int) -> None:
-            nonlocal emitted
-            if count >= step.min and cont(last + 1):
-                emitted = True
-            if step.max is not None and count >= step.max:
-                return
-            k = table[last + 1]  # next matching row — non-matching rows
-            while k < n and in_window(k):  # can't be takes, jump them
-                matched[step.var].append(k)
-                dfs(k, count + 1)
-                matched[step.var].pop()
-                k = table[k + 1]
-
-        if step.min == 0 and cont(i):
-            emitted = True
-        if i < n and in_window(i) and mask[i]:
-            matched[step.var].append(i)
-            dfs(i, 1)
-            matched[step.var].pop()
-        del matched[step.var][base_len:]
-        if not matched[step.var]:
-            del matched[step.var]
-        return emitted
-
-    def rec(i: int, si: int, matched: dict, neg_mask) -> bool:
-        if si == len(steps):
-            out.append({k: list(v) for k, v in matched.items()})
-            return True
-        step = steps[si]
-        if step.negated:
-            if step.contiguity == "strict":
-                if i < n and masks[si][i]:
-                    return False
-                return rec(i, si + 1, matched, neg_mask)
-            return rec(i, si + 1, matched, masks[si])
-        branches = step.alts or (step,)
-        bmasks = masks[si] if step.alts else (masks[si],)
-        btables, union = nt[si]
-        any_mode = step.contiguity == "relaxed_any" and si > 0
-        can_jump = all(b.min >= 1 for b in branches)  # see _match_at_masks
-        emitted = False
-        j = i
-        while True:
-            for branch, bmask, btable in zip(branches, bmasks, btables):
-                ok = quant(
-                    j, branch, bmask, btable, matched,
-                    lambda jj: rec(jj, si + 1, matched, None),
-                )
-                if ok:
-                    emitted = True
-                    break  # ordered branch priority
-            if emitted and not any_mode:
-                return True  # deterministic step: earliest anchor wins
-            if si == 0 or step.contiguity == "strict":
-                return emitted
-            if j >= n or not in_window(j):
-                return emitted
-            if neg_mask is None and can_jump:
-                j = union[j + 1]
-                continue
-            if neg_mask is not None and neg_mask[j]:
-                return emitted  # notFollowedBy poisons later anchors
-            j += 1
-
-    rec(start, 0, {}, None)
-    return out
-
-
-def match_sequence_any_masks(
-    masks: list, n: int, steps: list[Step], after_match: str = "to_next_row",
-    ts=None, max_delta=None,
-) -> list[dict[str, list[int]]]:
-    """Mask twin of the ``match_sequence`` any-path: one
-    ``_match_at_any_masks`` enumeration per start position (the
-    to_next_row semantics SKIP_TILL_ANY couples with)."""
-    if after_match != "to_next_row":
-        raise ValueError(
-            "followedByAny/allowCombinations patterns require "
-            "after_match='to_next_row'"
-        )
-    lmasks, nt, anchor = _prepare_masks(masks, n, steps)
-    out: list[dict[str, list[int]]] = []
-    i = 0
-    while i < n:
-        if anchor is not None:
-            i = anchor[i]
-            if i >= n:
-                break
-        out.extend(_match_at_any_masks(lmasks, n, i, steps, ts, max_delta, nt))
-        i += 1
-    return out
-
-
-def compute_step_masks(pdf: pd.DataFrame, steps: list[Step]) -> list:
-    """Evaluate every step's vectorized predicate ONCE over the batch
-    (alternation branches each get their own mask) — the
-    condition-hoisting MatchCodeGenerator.scala performs when compiling
-    DEFINE clauses; the NFA walk then tests O(1) array entries."""
-    return [
-        tuple(b.vec(pdf) for b in s.alts) if s.alts else s.vec(pdf)
-        for s in steps
-    ]
-
-
-def steps_all_vec(steps: list[Step]) -> bool:
-    """True when every step (or all its alternation branches) carries a
-    vectorized predicate form. A step with an ``until`` stop condition
-    opts out: the mask paths' O(1) relaxed-gap jumps would hop over the
-    stop row without evaluating it (see Step.until)."""
-    return all(
-        (s.vec is not None or (s.alts and all(b.vec is not None for b in s.alts)))
-        and s.until is None
-        for s in steps
-    )
-
-
-def steps_vectorizable(steps: list[Step]) -> bool:
-    """True when every step carries a ``vec`` and the pattern runs on
-    the deterministic NFA path (the any-path has its own mask twin,
-    ``_match_at_any_masks``)."""
-    return steps_all_vec(steps) and not _needs_any_path(steps)
+    return _scan(rows, steps, after_match, within, timeouts=True)
 
 
 # ---- MEASURES helpers (reference: MatchCodeGenerator.scala measures) ----
@@ -1209,45 +682,15 @@ def match_recognize(
             .drop("__cep_ok")
         )
 
-    vectorized = steps_all_vec(steps)
-    any_path = _needs_any_path(steps)
+    cols = output_schema.fieldNames()
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_by, kind="stable")  # str or list both fine
-        keys = {k: pdf.iloc[0][k] for k in partition_by}
-        cols = [f.name for f in output_schema.fields]
-        out = []
-        if vectorized:
-            n = len(pdf)
-            masks = compute_step_masks(pdf, steps)
-            ts = pdf[within[0]].to_numpy() if within else None
-            md = within[1] if within else None
-            if md is not None and not isinstance(md, (int, float)):
-                # numpy 2 rejects timedelta64 <= datetime.timedelta —
-                # normalize any str/timedelta bound to timedelta64
-                md = pd.Timedelta(md).to_timedelta64()
-            idx_matches = (
-                match_sequence_any_masks(masks, n, steps, after_match, ts, md)
-                if any_path
-                else match_sequence_masks(masks, n, steps, after_match, ts, md)
-            )
-            # materialize dict rows only for rows inside some match
-            hit = sorted({j for m in idx_matches for v in m.values() for j in v})
-            recs = dict(zip(hit, pdf.iloc[hit].to_dict("records"))) if hit else {}
-            for im in idx_matches:
-                matched = {var: [recs[j] for j in js] for var, js in im.items()}
-                rec = dict(keys)
-                for name, fmeas in measures.items():
-                    rec[name] = fmeas(matched)
-                out.append(rec)
-        else:
-            rows = pdf.to_dict("records")
-            for matched in match_sequence(rows, steps, after_match, within):
-                rec = dict(keys)
-                for name, fmeas in measures.items():
-                    rec[name] = fmeas(matched)
-                out.append(rec)
-        return pd.DataFrame(out, columns=cols)
+        key = tuple(pdf.iloc[0][partition_by])
+        return _frame([
+            _record(cols, partition_by, key, measures, (m,), None)
+            for m in match_sequence(pdf, steps, after_match, within)
+        ], cols, False)
 
     return df.groupBy(*partition_by).applyInPandas(fn, output_schema)
 
@@ -1288,65 +731,21 @@ def match_recognize_with_timeouts(
     shuffle/NFA scan is not duplicated; the returned frames are filters
     of it. ``timeout_measures`` callables receive
     ``(partial_matched, timeout_ts)`` — Flink's PatternTimeoutFunction
-    signature."""
+    signature. Raises ``ValueError`` without ``within``: timed-out
+    partials exist only under Pattern.within."""
+    if within is None:
+        raise ValueError("timeout enumeration requires within= (Pattern.within)")
     combined = _combined_schema(output_schema, timeout_schema)
-    cols = [f.name for f in combined.fields]
-    vectorized = steps_vectorizable(steps)
+    cols = combined.fieldNames()
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_by, kind="stable")
-        keys = {k: pdf.iloc[0][k] for k in partition_by}
-        if vectorized:
-            # hoisted-mask NFA: each DEFINE evaluates once per batch,
-            # match/partial scans test numpy entries; rows materialize
-            # for matched indices only
-            n = len(pdf)
-            masks = compute_step_masks(pdf, steps)
-            ts_col, delta = within
-            md = delta
-            if md is not None and not isinstance(md, (int, float)):
-                md = pd.Timedelta(md).to_timedelta64()
-            ts_arr = pdf[ts_col].to_numpy()
-            hit_idx, tout_idx = match_sequence_masks_with_timeouts(
-                masks, n, steps, after_match, ts_arr, md
-            )
-            need = sorted(
-                {j for m in hit_idx for v in m.values() for j in v}
-                | {j for m, _a in tout_idx for v in m.values() for j in v}
-                | {a for _m, a in tout_idx}
-            )
-            recs = dict(zip(need, pdf.iloc[need].to_dict("records"))) if need else {}
-            hits = [
-                {v: [recs[j] for j in js] for v, js in m.items()} for m in hit_idx
-            ]
-            touts = [
-                (
-                    {v: [recs[j] for j in js] for v, js in m.items()},
-                    recs[a][ts_col] + (delta if not isinstance(delta, str)
-                                       else pd.Timedelta(delta)),
-                )
-                for m, a in tout_idx
-            ]
-        else:
-            rows = pdf.to_dict("records")
-            hits, touts = match_sequence_with_timeouts(rows, steps, after_match, within)
-        out = []
-        for matched in hits:
-            rec = dict.fromkeys(cols)  # None-fill the other side's columns
-            rec.update(keys)
-            for name, fmeas in measures.items():
-                rec[name] = fmeas(matched)
-            rec["__side"] = "match"
-            out.append(rec)
-        for partial, tts in touts:
-            rec = dict.fromkeys(cols)
-            rec.update(keys)
-            for name, fmeas in timeout_measures.items():
-                rec[name] = fmeas(partial, tts)
-            rec["__side"] = "timeout"
-            out.append(rec)
-        return pd.DataFrame(out, columns=cols).astype(object).where(
-            lambda x: x.notna(), None
+        key = tuple(pdf.iloc[0][partition_by])
+        hits, touts = match_sequence_with_timeouts(pdf, steps, after_match, within)
+        return _frame(
+            [_record(cols, partition_by, key, measures, (m,), "match") for m in hits]
+            + [_record(cols, partition_by, key, timeout_measures, t, "timeout") for t in touts],
+            cols, True,
         )
 
     tagged = df.groupBy(*partition_by).applyInPandas(fn, combined)
@@ -1379,8 +778,8 @@ def _buffered_rows(codec, state, pdfs, order_by: str, secondary_order: str | Non
     return rows, (st[n:] if st else None)
 
 
-def _stream_record(cols, partition_by, key, fns, args, side: str | None) -> dict:
-    """One output row of a streaming matcher: the partition key, each of
+def _record(cols, partition_by, key, fns, args, side: str | None) -> dict:
+    """One output row of a matcher: the partition key, each of
     ``fns`` applied to ``args``, and — when matches and timed-out
     partials share the output — the ``__side`` tag."""
     rec = dict.fromkeys(cols)
@@ -1392,7 +791,7 @@ def _stream_record(cols, partition_by, key, fns, args, side: str | None) -> dict
     return rec
 
 
-def _stream_frame(out: list, cols, tagged: bool) -> pd.DataFrame:
+def _frame(out: list, cols, tagged: bool) -> pd.DataFrame:
     res = pd.DataFrame(out, columns=cols)
     # union frame: keep None (not NaN) in the other side's columns
     return res.astype(object).where(res.notna(), None) if tagged else res
@@ -1461,8 +860,8 @@ def match_recognize_stream(
     if prev_next and _needs_any_path(steps):
         raise NotImplementedError(
             "streaming PREV/NEXT with followedByAny: the all-anchors "
-            "path re-enumerates through the vectorized batch matcher, "
-            "which has no in-buffer helper fields"
+            "path re-enumerates a time window and does not materialize "
+            "in-buffer helper fields"
         )
     if _needs_any_path(steps):
         # followedByAny/allowCombinations (SKIP_TILL_ANY) stream through a different
@@ -1485,7 +884,6 @@ def match_recognize_stream(
     from flink_1_16_0_src_spark.streaming.stateful import RowState
 
     codec = RowState(sdf.schema.fields)
-    vectorized = steps_vectorizable(steps)
     delta = pd.Timedelta(within) if within is not None else None
     emit_cols = emit_schema.fieldNames()
 
@@ -1500,74 +898,28 @@ def match_recognize_stream(
                 for name, fn_kind, col, off in prev_next:
                     j = i - off if fn_kind == "PREV" else i + off
                     r[name] = buf[j][col] if 0 <= j < n else None
-        wt = (order_by, delta) if use_ts else None
-        if vectorized and buf:
-            # hoisted-mask NFA over the buffered rows: every DEFINE
-            # evaluates once per micro-batch as a numpy mask (the
-            # MatchCodeGenerator.scala hoisting, applied to the stream
-            # buffer); the scan below then tests O(1) array entries and
-            # materializes rows only for emitted matches
-            bdf = pd.DataFrame(buf)
-            nbuf = len(buf)
-            bmasks, bnt, anchor = _prepare_masks(
-                compute_step_masks(bdf, steps), nbuf, steps
-            )
-            ts_arr = bdf[order_by].to_numpy() if use_ts else None
-            md = delta.to_timedelta64() if use_ts else None
-
-            def skip_to_anchor(i):
-                # rows that cannot satisfy the pattern's first element
-                # can neither start a match nor a partial — jump over
-                # them (and let the caller drop them from the buffer)
-                return anchor[i] if anchor is not None and i < nbuf else i
-
-            def try_match(i):
-                m = _match_at_masks(bmasks, nbuf, i, steps, ts_arr, md, bnt)
-                if m is None:
-                    return None
-                return {v: [buf[j] for j in js] for v, js in m.items()}, m
-
-            def has_partial(i):
-                return _partial_at_masks(bmasks, nbuf, i, steps)
-
-            def longest_partial(i):
-                m = _longest_partial_at_masks(
-                    bmasks, nbuf, i, steps, ts_arr, md, bnt
-                )
-                if not m:
-                    return None
-                return {v: [buf[j] for j in js] for v, js in m.items()}
-        else:
-
-            def skip_to_anchor(i):
-                return i
-
-            def try_match(i):
-                return _match_at(buf, i, steps, wt)
-
-            def has_partial(i):
-                return _partial_at(buf, i, steps)
-
-            def longest_partial(i):
-                return _longest_partial_at(buf, i, steps, wt)
-
+        # one kernel over the buffered rows: DEFINEs with a vectorized
+        # form evaluate once per micro-batch as masks, rows for emitted
+        # matches come straight from the buffer
+        nfa = _NFA(buf, steps, (order_by, delta) if use_ts else None)
         out, consumed = [], 0
         i = 0
         while i < len(buf):
-            j = skip_to_anchor(i)
+            j = nfa.anchor[i]
             if j > i:
+                # rows that cannot satisfy the pattern's first element
+                # can start neither a match nor a partial: drop them
                 consumed = i = j
                 if i >= len(buf):
                     break
-            m = try_match(i)
-            if m is not None:
-                matched, idx = m
-                out.append(_stream_record(
-                    emit_cols, partition_by, key, measures, (matched,), "match" if tagged else None
+            ms = nfa.matches_at(i)
+            if ms:
+                out.append(_record(
+                    emit_cols, partition_by, key, measures, (_rows_of(buf, ms[0]),),
+                    "match" if tagged else None,
                 ))
-                nxt = _resume_index(i, idx, steps, after_match)
-                consumed, i = nxt, nxt
-            elif has_partial(i):
+                consumed = i = _resume_index(i, ms[0], steps, after_match)
+            elif nfa.partial_at(i):
                 if use_ts and buf[-1][order_by] - buf[i][order_by] > delta:
                     # WITHIN expired: this partial can only complete via
                     # rows later than everything seen, which would bust
@@ -1575,11 +927,11 @@ def match_recognize_stream(
                     # With a timeout handler installed this prune IS the
                     # processTimedOutMatch call site (CepOperator
                     # advanceTime): surface the partial before dropping it
-                    partial = longest_partial(i) if tagged else None
+                    partial = nfa.longest_partial_at(i) if tagged else None
                     if partial is not None:
-                        out.append(_stream_record(
+                        out.append(_record(
                             emit_cols, partition_by, key, timeout_measures,
-                            (partial, buf[i][order_by] + delta), "timeout",
+                            (_rows_of(buf, partial), buf[i][order_by] + delta), "timeout",
                         ))
                     i += 1
                     consumed = i
@@ -1590,7 +942,7 @@ def match_recognize_stream(
                 consumed = i  # row i can never start a match; drop it
         buf = buf[consumed:]
         codec.write(state, [[r[c] for r in buf] for c in codec.names])
-        yield _stream_frame(out, emit_cols, tagged)
+        yield _frame(out, emit_cols, tagged)
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
         fn, emit_schema, codec.schema, "append", GroupStateTimeout.NoTimeout
@@ -1646,7 +998,6 @@ def _match_recognize_stream_any(
         ],
     )
     delta = pd.Timedelta(within)
-    vec_ready = steps_all_vec(steps)
     tagged = timeout_measures is not None
     emit_cols = emit_schema.fieldNames()
 
@@ -1665,32 +1016,11 @@ def _match_recognize_stream_any(
         # a regenerated fixture with ts ties cannot flake (ADVICE r3)
         buf, fps = _buffered_rows(codec, state, pdfs, order_by, secondary_order, within)
         emitted: set = set(zip(*fps)) if fps else set()
-        wt = (order_by, delta)
-        if vec_ready and buf:
-            # hoisted-mask any-path: DEFINE masks + jump tables computed
-            # once per batch over the retained window, then the
-            # all-anchors enumeration walks indices
-            bdf = pd.DataFrame(buf)
-            nbuf = len(buf)
-            lmasks, bnt, _anchor = _prepare_masks(
-                compute_step_masks(bdf, steps), nbuf, steps
-            )
-            ts_arr = bdf[order_by].to_numpy()
-            md = delta.to_timedelta64()
-
-            def matches_at(i):
-                for im in _match_at_any_masks(
-                    lmasks, nbuf, i, steps, ts_arr, md, bnt
-                ):
-                    yield {v: [buf[j] for j in js] for v, js in im.items()}
-        else:
-
-            def matches_at(i):
-                yield from _match_at_any(buf, i, steps, wt)
-
+        nfa = _NFA(buf, steps, (order_by, delta))
         out = []
         for i in range(len(buf)):
-            for matched in matches_at(i):
+            for im in nfa.matches_at(i):
+                matched = _rows_of(buf, im)
                 anchor_ts = min(r[order_by] for rs in matched.values() for r in rs)
                 # fingerprint = anchor time | anchor-row hash | match
                 # hash: the time drives pruning, the anchor hash lets
@@ -1707,7 +1037,7 @@ def _match_recognize_stream_any(
                 if fp in emitted:
                     continue
                 emitted.add(fp)
-                out.append(_stream_record(
+                out.append(_record(
                     emit_cols, partition_by, key, measures, (matched,), "match" if tagged else None
                 ))
         if buf:
@@ -1722,12 +1052,12 @@ def _match_recognize_stream_any(
                         break  # buf is ts-sorted
                     if _row_hash(r) in done_anchors:
                         continue
-                    partial = _longest_partial_at_any(buf, i, steps, wt)
+                    partial = nfa.longest_partial_at(i)
                     if partial is None:
                         continue
-                    out.append(_stream_record(
+                    out.append(_record(
                         emit_cols, partition_by, key, timeout_measures,
-                        (partial, r[order_by] + delta), "timeout",
+                        (_rows_of(buf, partial), r[order_by] + delta), "timeout",
                     ))
             buf = [r for r in buf if r[order_by] >= cutoff]
             emitted = {fp for fp in emitted if fp[0] >= cutoff}
@@ -1736,7 +1066,7 @@ def _match_recognize_stream_any(
             [[r[c] for r in buf] for c in codec.names],
             *([list(f) for f in zip(*sorted(emitted))] or [[], [], []]),
         )
-        yield _stream_frame(out, emit_cols, tagged)
+        yield _frame(out, emit_cols, tagged)
 
     return sdf.groupBy(*partition_by).applyInPandasWithState(
         fn, emit_schema, codec.schema, "append", GroupStateTimeout.NoTimeout

@@ -145,7 +145,7 @@ def cep_sql_match_crossvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-variable DEFINE in SQL MATCH_RECOGNIZE
     (MatchCodeGenerator.scala running-aggregate surface): B's DEFINE
     references LAST(A.value) — the NFA evaluates it from match state
-    per row (the dict path; mask hoisting can't express it). Pattern:
+    per row (mask hoisting can't express it; A keeps its mask). Pattern:
     a purchase immediately after a click whose value beats the click's
     by >10%; oracle = the adjacent-pair lead() rewrite with the same
     cross-row comparison."""

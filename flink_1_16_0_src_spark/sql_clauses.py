@@ -34,8 +34,8 @@ groups):
   ``FIRST/LAST/SUM/AVG(A.col)`` and ``COUNT(A.*)`` inside DEFINE B,
   the MatchCodeGenerator.scala running-aggregate surface — are
   supported: they compile to a per-row NFA predicate fed from the
-  match state (the whole pattern then runs the dict path instead of
-  the vectorized masks; restricted expression grammar — comparisons,
+  match state (that step calls it per row while the pattern's other
+  steps keep their masks; restricted expression grammar — comparisons,
   arithmetic, AND/OR/NOT, literals, column refs). Aggregates over the
   variable BEING defined (``DEFINE A AS SUM(A.price) < 6``) run with
   RUNNING semantics — the candidate row joins the aggregate as if
@@ -850,8 +850,8 @@ def lower_match_recognize(
         cond, _h, cv = mask_cols[vu]
         if cv or (streaming and _h):
             # match-state-dependent (or in-buffer PREV/NEXT) predicate:
-            # per-row Python in the NFA (no vec — the whole pattern
-            # falls back to the dict path)
+            # no vec, so the NFA kernel calls it per row; the pattern's
+            # other steps still answer from their __def_ masks
             return cep.Step(
                 vu, _crossvar_predicate(cond, cv), mn, mx, reluctant=reluctant
             )

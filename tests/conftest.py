@@ -143,6 +143,24 @@ def pytest_collection_modifyitems(config, items):
                 item.add_marker(slow)
 
 
+_deselected_slow: list[str] = []
+
+
+def pytest_deselected(items):
+    _deselected_slow.extend(i.nodeid for i in items if i.get_closest_marker("slow"))
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    # the default tier silently leaves the slow tier out: say how much
+    # was left out and how to run it
+    if "not slow" in (config.option.markexpr or "") and _deselected_slow:
+        terminalreporter.write_line(
+            f"{len(_deselected_slow)} slow-tier tests deselected by "
+            f"-m {config.option.markexpr!r}; run them with: "
+            "python -m pytest tests/ -m slow"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from flink_1_16_0_src_spark.session import get_spark

@@ -20,6 +20,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+import cep_reference as ref
 from flink_1_16_0_src_spark import tables
 from flink_1_16_0_src_spark.operators import cep
 
@@ -106,9 +107,9 @@ class TestNFACore:
             cep.Step("A", lambda r, m: r["v"] == 1),
             cep.Step("B", lambda r, m: r["v"] == 2),
         ]
-        assert cep._partial_at(_rows([3, 1]), 1, steps)  # A matched, B pending
-        assert not cep._partial_at(_rows([3, 3]), 0, steps)
-        assert not cep._partial_at(_rows([1, 3]), 0, steps)  # B failed on a real row
+        assert cep._NFA(_rows([3, 1]), steps).partial_at(1)  # A matched, B pending
+        assert not cep._NFA(_rows([3, 3]), steps).partial_at(0)
+        assert not cep._NFA(_rows([1, 3]), steps).partial_at(0)  # B failed on a real row
 
 
 OUT_SCHEMA = StructType(
@@ -263,7 +264,7 @@ def test_after_match_skip_to_var():
     assert len(first) == 1
     last = cep.match_sequence(rows, steps, "skip_to_last_B")
     assert len(last) == 1
-    # mask twin agrees
+    # the kernel answering from masks agrees with the row-dict reference
     import numpy as np
 
     masks = [
@@ -272,9 +273,9 @@ def test_after_match_skip_to_var():
         np.array([c == "c" for c in "abbcbc"]),
     ]
     for mode in ("past_last_row", "skip_to_first_B", "skip_to_last_B"):
-        d = cep.match_sequence(rows, steps, mode)
-        m = cep.match_sequence_masks(masks, 6, steps, mode)
-        assert [{v: [r["i"] for r in rs] for v, rs in x.items()} for x in d] == m
+        d = ref.match_sequence(rows, steps, mode)
+        m = cep.match_sequence(pd.DataFrame(rows), ref.with_masks(steps, masks), mode)
+        assert d == m
 
 
 def test_after_match_skip_overlapping_matches():
@@ -366,6 +367,59 @@ def test_match_recognize_stream_null_order_sorts_last(spark, tmp_path):
     exp = {(1, 2), (3, None)}
     assert {(r.a_seq, r.b_seq) for r in batch.collect()} == exp
     assert {(r.a_seq, r.b_seq) for r in got} == exp
+
+
+def test_match_recognize_stream_emits_after_until_stop_row(spark, tmp_path):
+    """A looping step's until() row also ends the open partial in the
+    stream buffer's retention check, so the stream drains the match
+    batch finds instead of holding the buffer as a live partial."""
+    from flink_1_16_0_src_spark.streaming import sources
+
+    ddl = "k string, i long, v long"
+    d = str(tmp_path / "until_src")
+    rows = [("k", i, v) for i, v in enumerate([1, 9, 5, 2])]
+    spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(d)
+    steps = (
+        cep.Pattern.begin("A").where(lambda r, m: r["v"] > 0).one_or_more()
+        .until(lambda r, m: r["v"] == 9)
+        .next("B").where(lambda r, m: r["v"] == 2)
+        .build()
+    )
+    measures = {"a_i": lambda m: cep.first(m, "A", "i"), "b_i": lambda m: cep.first(m, "B", "i")}
+    schema = StructType.fromDDL("k string, a_i long, b_i long")
+    batch = cep.match_recognize(spark.read.parquet(d), ["k"], "i", steps, measures, schema)
+    stream = cep.match_recognize_stream(
+        spark.readStream.schema(ddl).parquet(d), ["k"], "i", steps, measures, schema
+    )
+    got = sources.run_to_memory(stream, "cep_until_stop", "append").collect()
+    assert {(r.a_i, r.b_i) for r in batch.collect()} == {(2, 3)}
+    assert {(r.a_i, r.b_i) for r in got} == {(2, 3)}
+
+
+def test_match_recognize_until_on_alternation_branch(spark):
+    """until() on an alternation BRANCH stops that branch's loop in batch
+    match_recognize although every step carries ``vec``: the stop row is
+    neither taken nor skipped as a gap of the relaxed quantifier."""
+    df = spark.createDataFrame(
+        [("k", i, v) for i, v in enumerate([1, 9, 1, 2])], "k string, i long, v long"
+    )
+    eq = lambda x: lambda r, m: r["v"] == x  # noqa: E731
+    veq = lambda x: lambda p: (p["v"] == x).to_numpy()  # noqa: E731
+    steps = [
+        cep.Step.alternation(
+            cep.Step("A", eq(1), 1, None, vec=veq(1), internal="relaxed", until=eq(9)),
+            cep.Step("Z", eq(7), vec=veq(7)),
+        ),
+        cep.Step("B", eq(2), vec=veq(2), contiguity="relaxed"),
+    ]
+    measures = {
+        "a_i": lambda m: cep.first(m, "A", "i"),
+        "n_a": lambda m: cep.count_of(m, "A"),
+        "b_i": lambda m: cep.first(m, "B", "i"),
+    }
+    schema = StructType.fromDDL("k string, a_i long, n_a long, b_i long")
+    out = cep.match_recognize(df, ["k"], "i", steps, measures, schema)
+    assert [(r.a_i, r.n_a, r.b_i) for r in out.collect()] == [(0, 1, 3)]
 
 
 def test_match_recognize_stream_within_prunes_stale_partials(spark, tmp_path):
@@ -662,6 +716,22 @@ class TestTimedOutPartials:
         with pytest.raises(ValueError):
             cep.match_sequence_with_timeouts([], self.STEPS)
 
+    def test_select_with_timeouts_requires_within_at_call_time(self, spark):
+        # with or without vectorized DEFINEs, a timeout select on a
+        # pattern with no .within() fails when called, not in the worker
+        import pytest
+
+        df = spark.createDataFrame([("k", 0, "order")], "k string, ts long, c string")
+        schema = StructType.fromDDL("k string, n long")
+        for vec in (None, lambda p: (p["c"] == "order").to_numpy()):
+            pat = cep.Pattern.begin("A").where(lambda r, m: r["c"] == "order", vec=vec)
+            with pytest.raises(ValueError, match="within"):
+                cep.CEP.pattern(df, pat, ["k"], "ts").select(
+                    {"n": lambda m: cep.count_of(m, "A")}, schema,
+                    timeout_measures={"n": lambda m, t: cep.count_of(m, "A")},
+                    timeout_schema=schema,
+                )
+
     def test_longest_prefix_in_timeout(self):
         # partial carries the matched-so-far rows of the LONGEST prefix
         steps = [
@@ -905,9 +975,9 @@ class TestTimedOutPartials:
 
 
 def test_nfa_mask_path_equals_dict_path_with_timeouts():
-    """The mask-based timeout scan (match_sequence_masks_with_timeouts)
-    must reproduce the dict-row scan's matches AND timeouts exactly on
-    a mixed stream (quantified middle step, relaxed contiguity)."""
+    """The kernel's timeout scan, answering from masks over a frame,
+    must reproduce the row-dict reference's matches AND timeouts exactly
+    on a mixed stream (quantified middle step, relaxed contiguity)."""
     import numpy as np
 
     base = pd.Timestamp("2024-01-01")
@@ -926,31 +996,21 @@ def test_nfa_mask_path_equals_dict_path_with_timeouts():
                  contiguity="relaxed"),
     ]
     within = ("ts", pd.Timedelta("15 minutes"))
-    hits, touts = cep.match_sequence_with_timeouts(rows, steps, "past_last_row", within)
-    pdf = pd.DataFrame(rows)
-    masks = cep.compute_step_masks(pdf, steps)
-    ts = pdf["ts"].to_numpy()
-    md = pd.Timedelta("15 minutes").to_timedelta64()
-    mhits, mtouts = cep.match_sequence_masks_with_timeouts(
-        masks, len(rows), steps, "past_last_row", ts, md
+    hits, touts = ref.match_sequence_with_timeouts(rows, steps, "past_last_row", within)
+    mhits, mtouts = cep.match_sequence_with_timeouts(
+        pd.DataFrame(rows), steps, "past_last_row", within
     )
     as_idx = lambda m: {v: [r["seq"] for r in rs] for v, rs in m.items()}
-    assert [as_idx(m) for m in hits] == [
-        {v: [rows[j]["seq"] for j in js] for v, js in m.items()} for m in mhits
-    ]
-    assert [(as_idx(p), t) for p, t in touts] == [
-        ({v: [rows[j]["seq"] for j in js] for v, js in p.items()},
-         rows[a]["ts"] + pd.Timedelta("15 minutes"))
-        for p, a in mtouts
-    ]
+    assert [as_idx(m) for m in hits] == [as_idx(m) for m in mhits]
+    assert [(as_idx(p), t) for p, t in touts] == [(as_idx(p), t) for p, t in mtouts]
     assert len(hits) > 0 and len(touts) > 0  # the fixture exercises both
 
 
 def test_nfa_mask_speedup_over_dict_path():
-    """VERDICT r4 #7 'done' criterion: the hoisted-mask NFA walk
-    (vectorized DEFINE masks + next-true jump tables + anchor skipping)
-    is >=3x the per-row-Python-predicate walk on a 60k-row stream,
-    including the masks' own evaluation cost. Event mix: 5% anchors /
+    """The kernel answering from vectorized DEFINE masks (next-true
+    jump tables + anchor skipping) is >=3x the row-dict reference's
+    per-row-Python-predicate walk on a 60k-row stream, including the
+    masks' own evaluation cost. Event mix: 5% anchors /
     2% terminals — the sparse-match regime real clickstream patterns
     live in, where gap skipping pays (at a dense 30% anchor mix the
     measured gain is ~1.6x, still never slower). min-of-3 per kernel —
@@ -977,11 +1037,10 @@ def test_nfa_mask_speedup_over_dict_path():
     ]
 
     def dict_path():
-        return cep.match_sequence(rows, steps)
+        return ref.match_sequence(rows, steps)
 
     def mask_path():
-        masks = cep.compute_step_masks(pdf, steps)  # include hoisting cost
-        return cep.match_sequence_masks(masks, n, steps)
+        return cep.match_sequence(pdf, steps)  # includes the masks' cost
 
     def best_of(fn, k=3):
         b = None
@@ -995,7 +1054,7 @@ def test_nfa_mask_speedup_over_dict_path():
     # same match count first (correctness before speed)
     got = mask_path()
     want = dict_path()
-    assert len(got) == len(want) > 0
+    assert got == want and len(want) > 0
     t_dict = best_of(dict_path)
     t_mask = best_of(mask_path)
     assert t_dict / t_mask >= 3.0, (t_dict, t_mask)
@@ -1003,9 +1062,9 @@ def test_nfa_mask_speedup_over_dict_path():
 
 def test_any_path_mask_equals_dict_path():
     """followedByAny / allowCombinations all-anchors enumeration: the
-    mask twin must reproduce the dict path's matches exactly (same
-    order, same take-sets) on a mixed stream, including within-window
-    pruning."""
+    kernel answering from masks must reproduce the row-dict reference's
+    matches exactly (same order, same take-sets) on a mixed stream,
+    including within-window pruning."""
     import numpy as np
 
     base = pd.Timestamp("2024-01-01")
@@ -1034,20 +1093,12 @@ def test_any_path_mask_equals_dict_path():
         ],
     ):
         within = ("ts", pd.Timedelta("25 minutes"))
-        want = cep.match_sequence(rows, steps, "to_next_row", within)
-        pdf = pd.DataFrame(rows)
-        masks = cep.compute_step_masks(pdf, steps)
-        got = cep.match_sequence_any_masks(
-            masks, len(rows), steps, "to_next_row",
-            pdf["ts"].to_numpy(), pd.Timedelta("25 minutes").to_timedelta64(),
-        )
-        want_idx = [
-            {v: [r["seq"] for r in rs] for v, rs in m.items()} for m in want
+        want = ref.match_sequence(rows, steps, "to_next_row", within)
+        got = cep.match_sequence(pd.DataFrame(rows), steps, "to_next_row", within)
+        as_idx = lambda ms: [
+            {v: [r["seq"] for r in rs] for v, rs in m.items()} for m in ms
         ]
-        got_idx = [
-            {v: [rows[j]["seq"] for j in js] for v, js in m.items()} for m in got
-        ]
-        assert want_idx == got_idx and len(want_idx) > 0
+        assert as_idx(want) == as_idx(got) and len(want) > 0
 
 
 class TestReluctantQuantifiers:
@@ -1088,8 +1139,9 @@ class TestReluctantQuantifiers:
         assert cep.first(r[0], "C", "i") == 1 and r[0].get("B") in (None, [])
 
     def test_reluctant_mask_path_matches_dict_path(self):
-        """Hoisted-mask scan and dict-predicate scan agree on reluctant
-        semantics (two anchors, each with multiple viable closes)."""
+        """The kernel answering from masks and the row-dict reference
+        agree on reluctant semantics (two anchors, each with multiple
+        viable closes)."""
         import numpy as np
 
         rows = _rows([0, 5, 7, 10, 8, 20, 0, 3, 10])
@@ -1103,11 +1155,11 @@ class TestReluctantQuantifiers:
 
         for rel in (False, True):
             steps = mk(rel)
-            d = cep.match_sequence(rows, steps)
+            d = ref.match_sequence(rows, steps)
             vals = np.array([r["v"] for r in rows])
             masks = [vals == 0, vals > 0, vals >= 10]
-            m = cep.match_sequence_masks(masks, len(rows), steps)
-            assert [x["C"][0] for x in m] == [cep.first(x, "C", "i") for x in d]
+            m = cep.match_sequence(pd.DataFrame(rows), ref.with_masks(steps, masks))
+            assert [cep.first(x, "C", "i") for x in m] == [cep.first(x, "C", "i") for x in d]
         # and the two semantics genuinely differ on this fixture
         assert [cep.first(x, "C", "i") for x in cep.match_sequence(rows, mk(False))] != [
             cep.first(x, "C", "i") for x in cep.match_sequence(rows, mk(True))
@@ -1227,12 +1279,20 @@ class TestPatternUntil:
         assert [cep.count_of(m, "A") for m in ms] == [3]
 
     def test_until_forces_row_path(self):
+        # a step carrying ``vec`` AND ``until`` tests rows through its
+        # predicates: a mask jump over the gap would hop the stop row
         steps = (
             cep.Pattern.begin("A")
             .where(lambda r, m: r["v"] == 1,
                    vec=lambda pdf: (pdf["v"] == 1).to_numpy())
-            .one_or_more()
+            .one_or_more().allow_gaps()
             .until(lambda r, m: r["v"] == 9)
+            .followed_by("B")
+            .where(lambda r, m: r["v"] == 2,
+                   vec=lambda pdf: (pdf["v"] == 2).to_numpy())
             .build()
         )
-        assert not cep.steps_all_vec(steps)
+        rows = _rows([1, 9, 1, 2])
+        for data in (rows, pd.DataFrame(rows)):
+            ms = cep.match_sequence(data, steps)
+            assert [(m["A"], m["B"]) for m in ms] == [([rows[0]], [rows[3]])]

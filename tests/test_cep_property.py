@@ -17,6 +17,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import pandas as pd
+
+import cep_reference as ref
 from flink_1_16_0_src_spark.operators import cep
 
 # rows are drawn from a 3-letter alphabet; predicates select one letter
@@ -97,8 +100,9 @@ def test_to_next_row_finds_all_overlapping(s):
     assert len(got) == exp
 
 
-# ---- mask fast path ≡ dict path (the vectorized DEFINE hoisting must
-# never change semantics, quantified or not) ----
+# ---- kernel answering from masks ≡ row-dict reference (the vectorized
+# DEFINE hoisting must never change semantics, quantified or not) ----
+
 
 @given(
     st.lists(st.sampled_from("abc"), min_size=0, max_size=40),
@@ -114,13 +118,14 @@ def test_mask_path_equivalent_quantified(seq, after_match):
         cep.Step("C", lambda r, m: r["c"] == "c", vec=None),
     ]
     rows = [{"i": i, "c": c} for i, c in enumerate(seq)]
-    expected = cep.match_sequence(rows, steps, after_match)
+    expected = ref.match_sequence(rows, steps, after_match)
     masks = [
         np.array([c == "a" for c in seq], dtype=bool),
         np.array([c == "b" for c in seq], dtype=bool),
         np.array([c == "c" for c in seq], dtype=bool),
     ]
-    got = cep.match_sequence_masks(masks, len(seq), steps, after_match)
+    got = _idx(cep.match_sequence(
+        pd.DataFrame(rows), ref.with_masks(steps, masks), after_match))
     as_idx = [{v: [r["i"] for r in rs] for v, rs in m.items()} for m in expected]
     assert got == as_idx
 
@@ -138,12 +143,13 @@ def test_mask_path_equivalent_quantifier_free(seq, after_match):
         cep.Step("B", lambda r, m: r["c"] == "b"),
     ]
     rows = [{"i": i, "c": c} for i, c in enumerate(seq)]
-    expected = cep.match_sequence(rows, steps, after_match)
+    expected = ref.match_sequence(rows, steps, after_match)
     masks = [
         np.array([c == "a" for c in seq], dtype=bool),
         np.array([c == "b" for c in seq], dtype=bool),
     ]
-    got = cep.match_sequence_masks(masks, len(seq), steps, after_match)
+    got = _idx(cep.match_sequence(
+        pd.DataFrame(rows), ref.with_masks(steps, masks), after_match))
     as_idx = [{v: [r["i"] for r in rs] for v, rs in m.items()} for m in expected]
     assert got == as_idx
 
@@ -282,7 +288,7 @@ def test_mask_path_equivalent_alternation(seq, after_match):
         cep.Step("C", lambda r, m: r["c"] == "c"),
     ]
     rows = [{"i": i, "c": c} for i, c in enumerate(seq)]
-    expected = cep.match_sequence(rows, steps, after_match)
+    expected = ref.match_sequence(rows, steps, after_match)
     masks = [
         (
             np.array([c == "a" for c in seq], dtype=bool),
@@ -290,7 +296,8 @@ def test_mask_path_equivalent_alternation(seq, after_match):
         ),
         np.array([c == "c" for c in seq], dtype=bool),
     ]
-    got = cep.match_sequence_masks(masks, len(seq), steps, after_match)
+    got = _idx(cep.match_sequence(
+        pd.DataFrame(rows), ref.with_masks(steps, masks), after_match))
     as_idx = [{v: [r["i"] for r in rs] for v, rs in m.items()} for m in expected]
     assert got == as_idx
 
@@ -399,8 +406,9 @@ def test_not_next_blocks_immediate_follower():
 )
 @settings(max_examples=300, deadline=None)
 def test_mask_path_equivalent_relaxed_negated(seq, after_match):
-    """The numpy-mask NFA and the dict-row NFA must agree on patterns
-    mixing contiguity modes, quantifiers, and a notFollowedBy."""
+    """The kernel answering from masks and the row-dict reference must
+    agree on patterns mixing contiguity modes, quantifiers, and a
+    notFollowedBy."""
     import numpy as np
 
     steps = [
@@ -411,9 +419,10 @@ def test_mask_path_equivalent_relaxed_negated(seq, after_match):
     ]
     steps[2].contiguity = "relaxed"
     rows = _mk(seq)
-    expected = cep.match_sequence(rows, steps, after_match)
+    expected = ref.match_sequence(rows, steps, after_match)
     masks = [np.array([c == t for c in seq], dtype=bool) for t in "axbc"]
-    got = cep.match_sequence_masks(masks, len(seq), steps, after_match)
+    got = _idx(cep.match_sequence(
+        pd.DataFrame(rows), ref.with_masks(steps, masks), after_match))
     assert got == _idx(expected)
 
 
@@ -505,6 +514,23 @@ def test_followed_by_any_vs_followed_by():
         cep.match_sequence(rows, any_, "past_last_row")
 
 
+def test_followed_by_any_on_alternation_group():
+    """followedByAny set on an alternation group (the group Step carries
+    the contiguity) enumerates every later anchor, as on a plain step."""
+    steps = [
+        cep.Step("A", lambda r, m: r["c"] == "a"),
+        cep.Step.alternation(
+            cep.Step("B", lambda r, m: r["c"] == "b"),
+            cep.Step("C", lambda r, m: r["c"] == "c"),
+        ),
+    ]
+    steps[1].contiguity = "relaxed_any"
+    assert _idx(cep.match_sequence(_mk("axbc"), steps, "to_next_row")) == [
+        {"A": [0], "B": [2]},
+        {"A": [0], "C": [3]},
+    ]
+
+
 def test_pattern_api_followed_by_any(spark):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -561,9 +587,10 @@ def test_relaxed_internal_mask_path_agrees():
     ]
     for seq in ("axabxb", "aaxb", "xaxaxbb", "ab", "ba", ""):
         rows = _mk(seq)
-        expected = _idx(cep.match_sequence(rows, steps, "past_last_row"))
+        expected = _idx(ref.match_sequence(rows, steps, "past_last_row"))
         masks = [np.array([c == t for c in seq], dtype=bool) for t in "ab"]
-        got = cep.match_sequence_masks(masks, len(seq), steps, "past_last_row")
+        got = _idx(cep.match_sequence(
+            pd.DataFrame(rows), ref.with_masks(steps, masks), "past_last_row"))
         assert got == expected, seq
 
 
@@ -585,3 +612,97 @@ def test_pattern_allow_gaps_facade(spark):
                     StructField("b_seq", LongType())]),
     )
     assert [(r.n_a, r.b_seq) for r in out.collect()] == [(2, 4)]
+
+
+# ---- the kernel ≡ the row-dict reference over every Step feature:
+# contiguity (strict / relaxed / relaxed_any), notNext / notFollowedBy,
+# quantifier internals (consecutive / relaxed / combinations),
+# reluctant, {min,max}, alternation, within, until, and steps that
+# answer from masks mixed with steps that call predicates (some reading
+# the rows matched so far) ----
+
+
+def _is(c):
+    return lambda r, m: r["c"] == c
+
+
+def _vec_is(c):
+    return lambda p: (p["c"] == c).to_numpy()
+
+
+@st.composite
+def _feature_element(draw, var: str) -> cep.Step:
+    ch = draw(st.sampled_from(ALPHABET))
+    mn, mx = draw(st.sampled_from([(1, 1), (0, 1), (1, None), (0, None), (2, 3), (1, 2)]))
+    internal = "consecutive" if mx == 1 else draw(
+        st.sampled_from(["consecutive", "relaxed", "combinations"]))
+    how = draw(st.sampled_from(["vec", "row", "matched"]))
+    pred = _is(ch) if how != "matched" else (  # v never drops below the match so far
+        lambda r, m: r["c"] == ch and r["v"] >= max(
+            (x["v"] for rs in m.values() for x in rs), default=0))
+    return cep.Step(
+        var, pred, mn, mx,
+        vec=_vec_is(ch) if how == "vec" else None,
+        internal=internal,
+        reluctant=internal != "combinations" and draw(st.booleans()),
+        until=_is(draw(st.sampled_from(ALPHABET)))
+        if mx is None and draw(st.booleans()) else None,
+    )
+
+
+@st.composite
+def _feature_pattern(draw) -> list[cep.Step]:
+    n = draw(st.integers(min_value=1, max_value=4))
+    steps = []
+    for si in range(n):
+        if 0 < si < n - 1 and draw(st.integers(0, 3)) == 0:
+            ch = draw(st.sampled_from(ALPHABET))
+            steps.append(cep.Step(
+                f"V{si}", _is(ch), negated=True,
+                vec=_vec_is(ch) if draw(st.booleans()) else None,
+                contiguity=draw(st.sampled_from(["strict", "relaxed"])),
+            ))
+            continue
+        if draw(st.integers(0, 3)) == 0:
+            branches = draw(st.integers(2, 3))
+            step = cep.Step.alternation(
+                *(draw(_feature_element(f"V{si}b{bi}")) for bi in range(branches)))
+        else:
+            step = draw(_feature_element(f"V{si}"))
+        if si > 0:
+            step.contiguity = draw(st.sampled_from(["strict", "relaxed", "relaxed_any"]))
+        steps.append(step)
+    return steps
+
+
+@settings(max_examples=400, deadline=None)
+@given(steps=_feature_pattern(), cs=st.text(alphabet=ALPHABET, max_size=10), data=st.data())
+def test_kernel_equals_reference_over_every_step_feature(steps, cs, data):
+    ints = lambda lo, hi: data.draw(  # noqa: E731
+        st.lists(st.integers(lo, hi), min_size=len(cs), max_size=len(cs)))
+    gaps, vs = ints(0, 2), ints(0, 3)
+    rows = [
+        {"i": i, "c": c, "v": vs[i], "t": sum(gaps[: i + 1])} for i, c in enumerate(cs)
+    ]
+    within = data.draw(st.one_of(st.none(), st.integers(1, 6).map(lambda w: ("t", w))))
+    vars_ = [b.var for s in steps if not s.negated for b in (s.alts or (s,))]
+    after_match = "to_next_row" if cep._needs_any_path(steps) else data.draw(
+        st.sampled_from(["past_last_row", "to_next_row"] + [
+            f"skip_to_{w}_{v}" for w in ("first", "last") for v in vars_]))
+    # the kernel takes the batch form (a frame) or the stream form (rows)
+    kernel_data = pd.DataFrame(rows) if data.draw(st.booleans()) else rows
+    timed = lambda ts: [(_idx([p]), t) for p, t in ts]  # noqa: E731
+
+    got = cep.match_sequence(kernel_data, steps, after_match, within)
+    assert _idx(got) == _idx(ref.match_sequence(rows, steps, after_match, within))
+    if within is not None:
+        got_h, got_t = cep.match_sequence_with_timeouts(kernel_data, steps, after_match, within)
+        want_h, want_t = ref.match_sequence_with_timeouts(rows, steps, after_match, within)
+        assert _idx(got_h) == _idx(want_h) and timed(got_t) == timed(want_t)
+    # retention: the reference's _partial_at predates until (the kernel
+    # honours it), so only until-free patterns compare
+    if not any(b.until for s in steps for b in (s.alts or (s,))):
+        nfa = cep._NFA(rows, steps)
+        assert [nfa.partial_at(i) for i in range(len(rows))] == [
+            ref._partial_at(rows, i, steps) for i in range(len(rows))
+        ]
