@@ -432,7 +432,7 @@ def tvf_sql_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_sql_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal join written as Flink SQL text — ``JOIN v FOR
     SYSTEM_TIME AS OF l.ts`` (SqlSnapshot / StreamExecTemporalJoin.java:77)
-    lowered by sql_clauses.rewrite_temporal_join onto the as-of
+    lowered by sql_clauses.plan_batch_temporal_join onto the as-of
     operator. The versioned side is deduplicated to one version per
     (key, date) like the Python-API query, and the DuckDB oracle is
     DuckDB's native ASOF JOIN."""

@@ -52,8 +52,12 @@ groups):
 
 from __future__ import annotations
 
+import itertools
+import os
 import re
-from typing import Callable
+import tempfile
+from collections.abc import Callable, Mapping, Sequence
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,6 +75,7 @@ _MR_HEAD = re.compile(r"(\w+)\s+MATCH_RECOGNIZE\s*\(", re.IGNORECASE)
 
 
 _PAREN_OR_LITERAL = re.compile(r"[()]|'[^']*(?:'|$)")
+_LITERAL_SPLIT = re.compile(r"('(?:[^']|'')*')")
 
 
 def _parens(sql: str, start: int = 0, end: int | None = None):
@@ -98,34 +103,58 @@ def _depth_at(sql: str, idx: int) -> int:
     return sum(1 if c == "(" else -1 for _i, c in _parens(sql, 0, idx))
 
 
-def _split_top_commas(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            cur.append(c)
-            i += 1
-            while i < n and s[i] != "'":
-                cur.append(s[i])
-                i += 1
-            if i < n:
-                cur.append("'")
-        elif c == "(":
-            depth += 1
-            cur.append(c)
-        elif c == ")":
-            depth -= 1
-            cur.append(c)
-        elif c == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
+def _top_level(sql: str) -> str:
+    """``sql`` with string literals and parenthesized text blanked to
+    spaces (same length): a keyword search on it finds only depth-0,
+    unquoted occurrences, at their offsets in ``sql``."""
+    out, depth, last = [], 0, 0
+    for m in _PAREN_OR_LITERAL.finditer(sql):
+        out.append(sql[last : m.start()] if depth == 0 else " " * (m.start() - last))
+        depth += {"(": 1, ")": -1}.get(m.group(), 0)
+        out.append(" " * len(m.group()))
+        last = m.end()
+    out.append(sql[last:] if depth == 0 else " " * (len(sql) - last))
+    return "".join(out)
+
+
+def _split_unquoted_and(cond: str) -> list[str]:
+    """Top-level conjuncts of a predicate: split on AND outside string
+    literals and parentheses, keeping ``BETWEEN a AND b`` whole. A
+    predicate with a top-level OR is one conjunct."""
+    top = _top_level(cond)
+    if re.search(r"\bOR\b", top, re.IGNORECASE):
+        return [cond.strip()] if cond.strip() else []
+    parts, start, between = [], 0, False
+    for m in re.finditer(r"\b(?:BETWEEN|AND)\b", top, re.IGNORECASE):
+        if m.group().upper() == "BETWEEN":
+            between = True
+        elif between:
+            between = False
         else:
-            cur.append(c)
-        i += 1
-    if cur:
-        out.append("".join(cur).strip())
-    return out
+            parts.append(cond[start : m.start()])
+            start = m.end()
+    parts.append(cond[start:])
+    return [p.strip() for p in parts if p.strip()]
+
+
+def _split_top_commas(s: str) -> list[str]:
+    """Split on commas outside parentheses and string literals."""
+    cuts = [i for i, c in enumerate(_top_level(s)) if c == ","]
+    parts = [s[i + 1 : j] for i, j in zip([-1, *cuts], [*cuts, len(s)])]
+    return [p.strip() for p in parts[:-1]] + ([parts[-1].strip()] if parts[-1] else [])
+
+
+_PLAIN_ITEM = re.compile(r"([\w.]+)(?:\s+AS\s+(\w+))?", re.IGNORECASE)
+
+
+def _plain_item(item: str) -> tuple[str, str, str] | None:
+    """(reference, bare column, output name) of a plain ``[q.]col [AS
+    alias]`` SELECT item, or None for any other item."""
+    m = _PLAIN_ITEM.fullmatch(item.strip())
+    if m is None:
+        return None
+    col = m.group(1).split(".")[-1]
+    return m.group(1), col, m.group(2) or col
 
 
 def _interval_str(arg: str) -> str:
@@ -251,27 +280,10 @@ def _statement_from_kw(sql: str) -> int | None:
     ``TRIM(x FROM y)`` first (those are always parenthesized, so the
     depth-0 scan skips them); ``a IS DISTINCT FROM b`` sits at depth 0
     in a SELECT list, so the preceding-word check is still needed."""
-    i, depth, n = 0, 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            i += 1
-            while i < n and sql[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and c in "Ff"
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            and re.match(r"FROM\b", sql[i:], re.IGNORECASE)
-        ):
-            prev = re.search(r"(\w+)\s*$", sql[:i])
-            if prev is None or prev.group(1).upper() != "DISTINCT":
-                return i
-        i += 1
+    for m in re.finditer(r"(?<!\w)FROM\b", _top_level(sql), re.IGNORECASE):
+        prev = re.search(r"(\w+)\s*$", sql[: m.start()])
+        if prev is None or prev.group(1).upper() != "DISTINCT":
+            return m.start()
     return None
 
 
@@ -1063,7 +1075,14 @@ def rewrite_match_recognize(
         sql = sql[: m.start()] + view + tail
 
 
-def rewrite_lookup_join(sql: str, proctime_attrs: set[str]) -> str:
+_LOOKUP_MARK = re.compile(
+    r"(?P<join>(?:\bJOIN\s+|,\s*)(?P<dim>\w+)(?:\s+(?:AS\s+)?(?!FOR\b)\w+)?)"
+    r"\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+(?P<asof>[\w.]+)",
+    re.IGNORECASE,
+)
+
+
+def rewrite_lookup_join(sql: str, proctime_attrs: set[str]) -> tuple[str, set[str]]:
     """Processing-time temporal join = LOOKUP join (joins.md "Lookup
     Join"; LookupJoinUtil.java, StreamExecLookupJoin.java): ``JOIN d
     FOR SYSTEM_TIME AS OF probe.<proctime attr>`` joins each probe row
@@ -1071,17 +1090,17 @@ def rewrite_lookup_join(sql: str, proctime_attrs: set[str]) -> str:
     lowering the current version is the dim snapshot the batch reads,
     so the clause reduces to a plain equi-join — the AS OF marker is
     dropped and Catalyst plans the join (broadcast for dim-sized
-    tables, the same shape operators/lookup.py produces)."""
+    tables, the same shape operators/lookup.py produces). Returns the
+    rewritten text and the dim tables whose marker was dropped."""
+    dims: set[str] = set()
 
     def _one(m: re.Match) -> str:
-        if m.group("asof").split(".")[-1] in proctime_attrs:
-            return " "
-        return m.group(0)
+        if m.group("asof").split(".")[-1] not in proctime_attrs:
+            return m.group(0)
+        dims.add(m.group("dim"))
+        return m.group("join") + " "
 
-    return re.sub(
-        r"\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+(?P<asof>[\w.]+)",
-        _one, sql, flags=re.IGNORECASE,
-    )
+    return _LOOKUP_MARK.sub(_one, sql), dims
 
 
 def rewrite_flink_clauses(
@@ -1094,162 +1113,373 @@ def rewrite_flink_clauses(
         sql = rewrite_window_tvfs(spark, sql)
     if _GW_CALL.search(sql):
         sql = rewrite_group_windows(spark, sql)
-    if proctime_attrs and re.search(r"FOR\s+SYSTEM_TIME\s+AS\s+OF", sql, re.IGNORECASE):
-        sql = rewrite_lookup_join(sql, proctime_attrs)
-    if re.search(r"FOR\s+SYSTEM_TIME\s+AS\s+OF", sql, re.IGNORECASE):
-        sql = rewrite_temporal_join(spark, sql, time_attrs or {})
-    if temporal_fns and re.search(r"LATERAL\s+TABLE", sql, re.IGNORECASE):
-        sql = rewrite_temporal_table_fn(spark, sql, temporal_fns)
+    sql, _dims = rewrite_lookup_join(sql, proctime_attrs or set())
+    spec = parse_temporal_join(
+        sql, lambda name: spark.table(name).columns, temporal_fns or {}
+    )
+    if spec is not None:
+        sql = plan_batch_temporal_join(spark, spec, time_attrs or {}, temporal_fns or {})
     if re.search(r"LATERAL\s+TABLE", sql, re.IGNORECASE):
         sql = rewrite_lateral_table(sql)
     return sql
 
 
-# ---- FOR SYSTEM_TIME AS OF (temporal join) --------------------------------
+# ---- temporal joins: FOR SYSTEM_TIME AS OF and LATERAL TABLE(fn(ts)) ------
 
-_TEMPORAL_JOIN = re.compile(
-    r"SELECT\s+(?P<select>.*?)\s+FROM\s+(?P<lt>\w+)(?:\s+AS\s+(?P<la>\w+))?\s+"
-    r"(?P<how>LEFT\s+)?JOIN\s+(?P<rt>\w+)\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+"
-    r"(?P<asof>[\w.]+)(?:\s+AS\s+(?P<ra>\w+))?\s+ON\s+(?P<cond>.+?)"
-    r"(?P<tail>\s+(?:WHERE|GROUP|ORDER|LIMIT)\s+.*)?$",
+_TEMPORAL_MARK = re.compile(
+    r"\bFOR\s+SYSTEM_TIME\s+AS\s+OF\b|\bLATERAL\s+TABLE\s*\(\s*(?P<fn>\w+)\s*\(",
+    re.IGNORECASE,
+)
+_FOR_SYSTEM_TIME_FROM = re.compile(
+    r"FROM\s+(?P<probe>\w+)(?:\s+(?:AS\s+)?(?!(?:LEFT|INNER|JOIN)\b)(?P<pa>\w+))?"
+    r"\s+(?:(?P<how>LEFT|INNER)\s+)?JOIN\s+(?P<version>\w+)"
+    r"\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+(?P<asof>\w+(?:\.\w+)?)"
+    r"(?:\s+(?:AS\s+)?(?!ON\b)(?P<va>\w+))?\s+ON\s+(?P<rest>.*)$",
     re.IGNORECASE | re.DOTALL,
 )
-
-
-def rewrite_temporal_join(
-    spark: SparkSession, sql: str, time_attrs: dict[str, str]
-) -> str:
-    """Lower ``SELECT ... FROM L [AS l] [LEFT] JOIN R FOR SYSTEM_TIME
-    AS OF l.ts [AS r] ON <equi-cond> [WHERE ...]`` onto the as-of join
-    operator (reference SqlSnapshot / StreamExecTemporalJoin.java:77 —
-    the versioned-table temporal join). ``time_attrs[R]`` is R's time
-    attribute (its DDL WATERMARK column — the version timestamp).
-    Supported scope: one temporal join per statement, AND-ed equi
-    conditions; alias-qualified column refs in SELECT/WHERE are
-    rewritten to bare names of the joined relation (left wins key
-    names). Plain JOIN = inner (row must have a version), LEFT JOIN
-    keeps unmatched left rows."""
-    m = _TEMPORAL_JOIN.match(sql.strip())
-    if m is None:
-        return sql
-    from flink_1_16_0_src_spark.operators.joins import asof_join
-
-    lt, rt = m.group("lt"), m.group("rt")
-    la = m.group("la") or lt
-    ra = m.group("ra") or rt
-    if rt not in time_attrs:
-        raise ValueError(
-            f"temporal join target {rt!r} has no declared time attribute "
-            "(WATERMARK column) — pass time_attrs"
-        )
-    right_time = time_attrs[rt]
-    left_time = m.group("asof").split(".")[-1]
-
-    left_df, right_df = spark.table(lt), spark.table(rt)
-    on_keys: list[str] = []
-    for part in re.split(r"\bAND\b", m.group("cond"), flags=re.IGNORECASE):
-        em = re.match(r"\s*([\w.]+)\s*=\s*([\w.]+)\s*$", part)
-        if em is None:
-            raise ValueError(f"unsupported temporal-join condition {part!r}")
-        a, b = em.group(1), em.group(2)
-        # normalize to (left key, right key) by alias prefix
-        def side(x: str) -> tuple[str, str]:
-            if "." in x:
-                pre, col = x.split(".", 1)
-                return ("l" if pre in (la, lt) else "r"), col
-            return "?", x
-        (sa, ca), (sb, cb) = side(a), side(b)
-        lk, rk = (ca, cb) if sa == "l" or sb == "r" else (cb, ca)
-        if rk != lk:
-            right_df = right_df.withColumnRenamed(rk, lk)
-        on_keys.append(lk)
-
-    how = "left" if m.group("how") else "inner"
-    joined = asof_join(left_df, right_df, on_keys, left_time, right_time, how=how)
-    view = f"__tj_{lt}_{rt}"
-    joined.createOrReplaceTempView(view)
-
-    def strip_alias(text: str) -> str:
-        return re.sub(rf"\b({la}|{ra}|{lt}|{rt})\.", "", text)
-
-    tail = strip_alias(m.group("tail") or "")
-    return f"SELECT {strip_alias(m.group('select'))} FROM {view}{tail}"
-
-
-# ---- LATERAL TABLE(temporal_fn(ts)) — TemporalTableFunction ---------------
-
-_TEMPORAL_FN_JOIN = re.compile(
-    r"SELECT\s+(?P<select>.*?)\s+FROM\s+(?P<lt>\w+)(?:\s+AS\s+(?P<la>\w+))?\s*,\s*"
-    r"LATERAL\s+TABLE\s*\(\s*(?P<fn>\w+)\s*\(\s*(?P<arg>[\w.]+)\s*\)\s*\)"
-    r"(?:\s+AS\s+(?P<ra>\w+))?"
-    r"(?:\s+WHERE\s+(?P<cond>.+?))?"
-    r"(?P<tail>\s+(?:GROUP|ORDER|LIMIT)\s+.*)?$",
+_LATERAL_FN_FROM = re.compile(
+    r"FROM\s+(?P<probe>\w+)(?:\s+(?:AS\s+)?(?P<pa>\w+))?\s*,\s*"
+    r"LATERAL\s+TABLE\s*\(\s*(?P<version>\w+)\s*\(\s*(?P<asof>\w+(?:\.\w+)?)\s*\)\s*\)"
+    r"(?:\s+(?:AS\s+)?(?!(?:WHERE|GROUP|HAVING|ORDER|LIMIT)\b)(?P<va>\w+))?"
+    r"(?P<rest>.*)$",
     re.IGNORECASE | re.DOTALL,
 )
+_CLAUSE_KW = re.compile(r"\b(?:WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT)\b", re.IGNORECASE)
+_COLUMN_REF = re.compile(r"(?<![\w.])[A-Za-z_]\w*(?:\.\w+)?\b(?!\s*\()")
+_KEY_EQ = re.compile(r"([\w.]+)\s*=\s*([\w.]+)")
 
 
-def rewrite_temporal_table_fn(spark: SparkSession, sql: str, temporal_fns: dict) -> str:
-    """The LEGACY temporal table function join (TableImpl.
-    createTemporalTableFunction → TemporalTableFunctionImpl.java;
-    planner rule LogicalCorrelateToJoinFromTemporalTableFunctionRule):
-    ``FROM probe, LATERAL TABLE (rates(probe.ts)) AS r WHERE r.key =
-    probe.key`` joins each probe row to the version of the registered
-    history table valid AS OF the argument timestamp — lowered onto the
-    same as-of operator the `FOR SYSTEM_TIME AS OF` form uses.
-    ``temporal_fns[name] = (history_df, time_attr, primary_key)``.
-    Key predicates = WHERE equality conjuncts touching the function
-    alias; other conjuncts stay as WHERE. Inner semantics (a probe row
-    with no valid version drops), as in the reference."""
-    m = _TEMPORAL_FN_JOIN.match(sql.strip())
-    if m is None or m.group("fn") not in temporal_fns:
-        return sql
-    from flink_1_16_0_src_spark.operators.joins import asof_join
+@dataclass
+class TemporalJoin:
+    """One temporal-join statement as :func:`parse_temporal_join` reads
+    it. ``asof``, ``keys`` and the WHERE lists are qualifier-free;
+    ``select`` and ``tail`` are the statement's own text."""
 
-    right_df, right_time, _pk = temporal_fns[m.group("fn")][:3]
-    lt = m.group("lt")
-    la = m.group("la") or lt
-    ra = m.group("ra") or m.group("fn")
-    left_df = spark.table(lt)
-    left_time = m.group("arg").split(".")[-1]
-    on_keys: list[str] = []
-    residual: list[str] = []
-    for part in re.split(r"\bAND\b", m.group("cond") or "", flags=re.IGNORECASE):
-        if not part.strip():
-            continue
-        em = re.match(r"\s*([\w.]+)\s*=\s*([\w.]+)\s*$", part)
-        took = False
-        if em:
-            a, b = em.group(1), em.group(2)
+    probe: str
+    probe_alias: str
+    version: str  # version table, or the temporal table function
+    version_alias: str
+    lateral: bool  # written as LATERAL TABLE (fn(ts))
+    asof: str
+    how: str  # "inner" | "left"
+    select: str
+    tail: str  # "" or the GROUP BY / HAVING / ORDER BY / LIMIT text
+    probe_cols: frozenset[str]
+    version_cols: frozenset[str]
+    keys: list[tuple[str, str]] = field(default_factory=list)  # (probe, version)
+    probe_where: list[str] = field(default_factory=list)
+    version_where: list[str] = field(default_factory=list)
+    mixed_where: list[str] = field(default_factory=list)
 
-            def pref(x: str) -> tuple[str | None, str]:
-                return tuple(x.split(".", 1)) if "." in x else (None, x)  # type: ignore[return-value]
+    def side(self, ref: str) -> str | None:
+        """``"probe"`` or ``"version"`` for a column reference — by its
+        qualifier, else by which side has the column; None if neither."""
+        head, dot, _rest = ref.partition(".")
+        h = head.lower()
+        if dot and h in (self.probe.lower(), self.probe_alias.lower()):
+            return "probe"
+        if dot and h in (self.version.lower(), self.version_alias.lower()):
+            return "version"
+        in_p, in_v = h in self.probe_cols, h in self.version_cols
+        if in_p and in_v:
+            raise ValueError(
+                f"temporal join: column {ref!r} is ambiguous (in both "
+                f"{self.probe!r} and {self.version!r}) — qualify it"
+            )
+        return "probe" if in_p else "version" if in_v else None
 
-            (pa, ca), (pb, cb) = pref(a), pref(b)
-            if pa == ra or pb == ra:
-                rk, lk = (ca, cb) if pa == ra else (cb, ca)
-                if rk != lk:
-                    right_df = right_df.withColumnRenamed(rk, lk)
-                on_keys.append(lk)
-                took = True
-        if not took:
-            residual.append(part.strip())
-    if not on_keys:
-        raise ValueError(
-            "temporal table function join needs an equality predicate on "
-            "the function's key in WHERE (e.g. WHERE r.currency = o.currency)"
+    def bare(self, text: str) -> str:
+        """``text`` with both sides' qualifiers stripped outside string
+        literals."""
+        names = {self.probe, self.probe_alias, self.version, self.version_alias}
+        qual = re.compile(
+            rf"(?<![\w.])(?:{'|'.join(map(re.escape, names))})\.(?=\w)", re.IGNORECASE
         )
-    joined = asof_join(left_df, right_df, on_keys, left_time, right_time, how="inner")
-    view = f"__ttf_{lt}_{m.group('fn')}"
-    joined.createOrReplaceTempView(view)
+        parts = _LITERAL_SPLIT.split(text)
+        return "".join(p if i % 2 else qual.sub("", p) for i, p in enumerate(parts))
 
-    def strip_alias(text: str) -> str:
-        return re.sub(rf"\b({la}|{ra}|{lt})\.", "", text)
+    def _key(self, part: str) -> tuple[str, str] | None:
+        m = _KEY_EQ.fullmatch(part)
+        if m is None:
+            return None
+        a, b = m.groups()
+        sides = (self.side(a), self.side(b))
+        if sides == ("version", "probe"):
+            a, b = b, a
+        elif sides != ("probe", "version"):
+            return None
+        return a.split(".")[-1], b.split(".")[-1]
 
-    where = (
-        f" WHERE {' AND '.join(strip_alias(r) for r in residual)}" if residual else ""
+
+def parse_temporal_join(
+    sql: str,
+    columns: Callable[[str], Sequence[str]],
+    temporal_fns: Mapping[str, tuple],
+) -> TemporalJoin | None:
+    """Parse an event-time temporal join — the one reader of both Flink
+    spellings (LogicalCorrelateToJoinFromTemporalTableFunctionRule turns
+    the second into the first):
+
+        SELECT <items> FROM <probe> [[AS] p]
+          [LEFT | INNER] JOIN <version> FOR SYSTEM_TIME AS OF p.<time> [[AS] v]
+          ON p.<k> = v.<k> [AND ...] [WHERE ...] [<tail>] [;]
+
+        SELECT <items> FROM <probe> [[AS] p],
+          LATERAL TABLE (<fn>(p.<time>)) [[AS] v]
+          WHERE v.<k> = p.<k> [AND ...] [<tail>] [;]
+
+    ``<tail>`` is GROUP BY / HAVING / ORDER BY / LIMIT text. ``<fn>`` is
+    a registered temporal table function (``temporal_fns[fn] =
+    (history_df, time_attr, primary_key[, token])``); its WHERE
+    conjuncts equating a probe column with a version column are the
+    keys. ON conjuncts must all be such equalities, in either order.
+    Other WHERE conjuncts are sorted into probe / version / mixed by the
+    columns they name. A column belongs to the side its qualifier
+    (alias or table name) names, else to the side that has it
+    (``columns(table)``); a bare name both sides have raises. Conjuncts
+    split on AND outside literals and parentheses; qualifiers are
+    stripped outside string literals only. Returns None when the
+    statement holds neither form (LATERAL TABLE over any other function
+    is a UDTF lateral); raises ValueError for any other shape.
+
+    Supported per mode:
+
+    - batch (:func:`plan_batch_temporal_join`) runs
+      ``operators.joins.asof_join`` — INNER or LEFT (LATERAL: INNER),
+      any number of keys, the version table's DDL WATERMARK column as
+      its time attribute — and keeps the rest as SQL text over the
+      joined view: SELECT expressions, every WHERE conjunct, the tail.
+    - streaming (:func:`plan_streaming_temporal_join`) runs
+      ``streaming.stateful.streaming_asof_join``: the AS OF column (the
+      function argument) must be the probe's WATERMARK attribute, the
+      version table must declare a WATERMARK, one key equality, plain
+      ``[q.]col [AS alias]`` SELECT items whose version names do not
+      collide with probe columns, WHERE over probe columns only (pushed
+      below the join), no tail."""
+    s = re.sub(r"[\s;]+$", "", sql.strip())
+    mark = _TEMPORAL_MARK.search(_unquoted_text(s))
+    if mark is None or (mark["fn"] and mark["fn"] not in temporal_fns):
+        return None
+    lateral = mark["fn"] is not None
+    msel = re.match(r"SELECT\s+", s, re.IGNORECASE)
+    fk = _statement_from_kw(s)
+    pattern = _LATERAL_FN_FROM if lateral else _FOR_SYSTEM_TIME_FROM
+    fm = pattern.match(s, fk) if msel and fk is not None else None
+    rest = fm["rest"] if fm else ""
+    top = _top_level(rest)
+    kw = _CLAUSE_KW.search(top)
+    head = rest[: kw.start()] if kw else rest
+    if (
+        fm is None
+        or (lateral and head.strip())
+        or re.search(r"\b(?:JOIN|UNION|INTERSECT|EXCEPT)\b", top, re.IGNORECASE)
+    ):
+        raise ValueError(
+            "temporal join: supported shapes are SELECT ... FROM <probe> "
+            "[AS p] [LEFT|INNER] JOIN <version> FOR SYSTEM_TIME AS OF "
+            "p.<time> [AS v] ON p.<k> = v.<k> [WHERE ...] and SELECT ... "
+            "FROM <probe> [AS p], LATERAL TABLE (<fn>(p.<time>)) [AS v] "
+            "WHERE v.<k> = p.<k> [AND ...] — one temporal join per statement"
+        )
+    where = tail = ""
+    if kw and kw.group().upper() == "WHERE":
+        nxt = _CLAUSE_KW.search(top, kw.end())
+        where = rest[kw.end() : nxt.start() if nxt else len(rest)]
+        tail = rest[nxt.start() :] if nxt else ""
+    elif kw:
+        tail = rest[kw.start() :]
+    version = fm["version"]
+    version_cols = temporal_fns[version][0].columns if lateral else columns(version)
+    spec = TemporalJoin(
+        probe=fm["probe"],
+        probe_alias=fm["pa"] or fm["probe"],
+        version=version,
+        version_alias=fm["va"] or version,
+        lateral=lateral,
+        asof=fm["asof"],
+        how="left" if (fm.groupdict().get("how") or "").upper() == "LEFT" else "inner",
+        select=s[msel.end() : fk].strip(),
+        tail=tail.strip(),
+        probe_cols=frozenset(c.lower() for c in columns(fm["probe"])),
+        version_cols=frozenset(c.lower() for c in version_cols),
     )
-    tail = strip_alias(m.group("tail") or "")
-    return f"SELECT {strip_alias(m.group('select'))} FROM {view}{where}{tail}"
+    if spec.side(spec.asof) != "probe":
+        raise ValueError(
+            "temporal join: AS OF must name the probe table's event-time "
+            f"attribute (got {spec.asof!r})"
+        )
+    spec.asof = spec.asof.split(".")[-1]
+    for part in [] if lateral else _split_unquoted_and(head):
+        key = spec._key(part)
+        if key is None:
+            raise ValueError(
+                f"unsupported temporal-join condition {part!r} — ON takes "
+                "AND-ed equalities of a probe column and a version column"
+            )
+        spec.keys.append(key)
+    for part in _split_unquoted_and(where):
+        key = spec._key(part) if lateral else None
+        if key is not None:
+            spec.keys.append(key)
+            continue
+        sides = {
+            sd
+            for p in _LITERAL_SPLIT.split(part)[::2]
+            for m in _COLUMN_REF.finditer(p)
+            if (sd := spec.side(m.group())) is not None
+        }
+        bucket = (
+            spec.mixed_where if len(sides) > 1
+            else spec.version_where if sides == {"version"}
+            else spec.probe_where
+        )
+        bucket.append(spec.bare(part))
+    if not spec.keys:
+        raise ValueError(
+            "temporal join: needs a key equality of a probe column and a "
+            "version column (ON p.k = v.k; LATERAL TABLE: WHERE v.k = p.k)"
+        )
+    return spec
+
+
+def plan_batch_temporal_join(
+    spark: SparkSession,
+    spec: TemporalJoin,
+    time_attrs: Mapping[str, str],
+    temporal_fns: Mapping[str, tuple],
+) -> str:
+    """Batch plan of a parsed temporal join: ``asof_join`` the two sides
+    into a temp view and return the statement's SELECT, WHERE and tail
+    as SQL text over it, qualifiers stripped (keys keep the probe's
+    names). ``time_attrs[version]`` is the version table's time
+    attribute."""
+    from flink_1_16_0_src_spark.operators.joins import asof_join
+
+    if spec.lateral:
+        right_df, right_time = temporal_fns[spec.version][:2]
+    elif spec.version in time_attrs:
+        right_df, right_time = spark.table(spec.version), time_attrs[spec.version]
+    else:
+        raise ValueError(
+            f"temporal join target {spec.version!r} has no declared time "
+            "attribute (WATERMARK column) — pass time_attrs"
+        )
+    on: list[str] = []
+    for pkey, vkey in spec.keys:
+        if vkey != pkey:
+            right_df = right_df.withColumnRenamed(vkey, pkey)
+        on.append(pkey)
+    joined = asof_join(
+        spark.table(spec.probe), right_df, on, spec.asof, right_time, how=spec.how
+    )
+    view = f"__tj_{spec.probe}_{spec.version}"
+    joined.createOrReplaceTempView(view)
+    where = spec.probe_where + spec.version_where + spec.mixed_where
+    return (
+        f"SELECT {spec.bare(spec.select)} FROM {view}"
+        + (f" WHERE {' AND '.join(where)}" if where else "")
+        + (f" {spec.bare(spec.tail)}" if spec.tail else "")
+    )
+
+
+# materialized temporal-function histories, one parquet dir per (fn
+# name, registration token). The token is stamped by
+# create_temporal_table_function; id(history_df) is not safe — a
+# re-registration can free the old frame and a new one reuse its id(),
+# resurrecting a stale history (wrong as-of results).
+_TTF_REGISTRATION_COUNTER = itertools.count()
+_TTF_HISTORY_CACHE: dict[tuple, str] = {}
+
+
+def plan_streaming_temporal_join(
+    spec: TemporalJoin,
+    resolve: Callable[[str], tuple[DataFrame, tuple[str, str] | None]],
+    temporal_fns: Mapping[str, tuple],
+    spark: SparkSession,
+) -> DataFrame:
+    """Streaming plan of a parsed temporal join onto the as-of state
+    machine (StreamExecTemporalJoin.java:77; TemporalRowTimeJoinOperator
+    keeps each key's versions in state and binds a probe row to the
+    latest one at or before its rowtime), with the reference planner's
+    restrictions (TemporalJoinRewriteWithUniqueKeyRule.scala).
+    ``resolve(name)`` gives a DDL table's (streaming frame, declared
+    watermark). A temporal function's history streams as a one-shot
+    parquet file stream, written once per registration."""
+    from flink_1_16_0_src_spark.streaming.stateful import streaming_asof_join
+
+    what = "streaming LATERAL TABLE" if spec.lateral else "streaming temporal join"
+    probe_sdf, probe_wm = resolve(spec.probe)
+    if probe_wm is None:
+        raise ValueError(
+            f"{what}: probe table {spec.probe!r} declares no WATERMARK — the "
+            "AS OF column must be its event-time attribute"
+        )
+    if spec.asof != probe_wm[0]:
+        raise ValueError(
+            f"{what}: AS OF must reference the probe table's event-time "
+            f"attribute {probe_wm[0]!r} (got {spec.asof!r})"
+        )
+    if len(spec.keys) != 1:
+        raise ValueError(f"{what}: exactly one key equality is supported")
+    if spec.version_where or spec.mixed_where:
+        raise ValueError(
+            f"{what}: WHERE may reference probe columns only (version-side "
+            "filters change which rows are VERSIONS — filter the version "
+            "table's source instead)"
+        )
+    if spec.tail:
+        raise ValueError(f"{what}: only an optional WHERE may follow the join")
+    if spec.lateral:
+        entry = temporal_fns[spec.version]
+        history, ver_ts = entry[:2]
+        ckey = (spec.version, entry[3] if len(entry) > 3 else id(history))
+        vdir = _TTF_HISTORY_CACHE.get(ckey)
+        if vdir is None or not os.path.isdir(vdir):
+            vdir = os.path.join(tempfile.mkdtemp(prefix="ttf_stream_"), "versions")
+            history.write.mode("overwrite").parquet(vdir)
+            _TTF_HISTORY_CACHE[ckey] = vdir
+        ver_sdf = spark.readStream.schema(history.schema).parquet(vdir)
+    else:
+        ver_sdf, ver_wm = resolve(spec.version)
+        if ver_wm is None:
+            raise ValueError(
+                f"{what}: version table {spec.version!r} declares no "
+                "WATERMARK — versions are ordered by its event-time attribute"
+            )
+        ver_ts = ver_wm[0]
+    items: list[tuple[str, str, str]] = []  # (side, source col, output name)
+    for item in _split_top_commas(spec.select):
+        plain = _plain_item(item)
+        if plain is None:
+            raise ValueError(
+                f"{what}: unsupported SELECT item {item!r} — items must be "
+                "plain columns (optionally AS-aliased)"
+            )
+        ref, col, alias = plain
+        items.append((spec.side(ref) or "probe", col, alias))
+    if spec.probe_where:  # Calc under the join
+        probe_sdf = probe_sdf.where(F.expr(" AND ".join(spec.probe_where)))
+    ver_items = [(c, a) for sd, c, a in items if sd == "version"]
+    collide = [a for _c, a in ver_items if a in probe_sdf.columns]
+    if collide:
+        raise ValueError(
+            f"{what}: version column(s) {collide} collide with probe column "
+            "names — alias them (AS ...)"
+        )
+    # the version key rides under the probe key's name, the version
+    # timestamp as the __vts marker (null = no version: INNER drops)
+    pkey, vkey = spec.keys[0]
+    ver_sel = [F.col(vkey).alias(pkey), F.col(ver_ts).alias("__vts")]
+    ver_sel += [F.col(c).alias(a) for c, a in ver_items]
+    out = streaming_asof_join(
+        probe_sdf, ver_sdf.select(*ver_sel), pkey, spec.asof, "__vts",
+        [a for _c, a in ver_items] + ["__vts"],
+    )
+    if spec.how == "inner":
+        out = out.where(F.col("__vts").isNotNull())
+    return out.select(
+        *[(F.col(a) if sd == "version" else F.col(c).alias(a)) for sd, c, a in items]
+    )
 
 
 # ---- LATERAL TABLE(udtf(...)) ---------------------------------------------
@@ -1271,26 +1501,11 @@ def rewrite_lateral_table(sql: str) -> str:
     return _LATERAL_TABLE.sub(r"LATERAL \1", sql)
 
 
-def _split_unquoted_and(cond: str) -> list[str]:
-    """Split a predicate on AND keywords OUTSIDE string literals (an
-    AND inside a literal must not break the conjunct)."""
-    parts = re.split(r"('(?:[^']|'')*')", cond)
-    marked = "".join(
-        p if i % 2 else re.sub(r"\bAND\b", "\x00", p, flags=re.IGNORECASE)
-        for i, p in enumerate(parts)
-    )
-    return marked.split("\x00")
-
-
-
 def _unquoted_text(sql: str) -> str:
     """The statement with string-literal contents blanked — keyword
     guards must never match inside a literal (repo invariant: every
     regex guard over SQL text is quote-aware)."""
-    return "".join(
-        p if i % 2 == 0 else "''"
-        for i, p in enumerate(re.split(r"('(?:[^']|'')*')", sql))
-    )
+    return "".join(p if i % 2 == 0 else "''" for i, p in enumerate(_LITERAL_SPLIT.split(sql)))
 
 
 _OVER_AGG_HEAD = re.compile(
@@ -1405,15 +1620,14 @@ def lower_streaming_over(
     for item in _split_top_commas(select_list):
         ma = _OVER_AGG_HEAD.match(item)
         if ma is None:
-            mp = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", item, re.IGNORECASE)
-            if mp is None:
+            plain = _plain_item(item)
+            if plain is None:
                 raise ValueError(
                     f"streaming OVER: unsupported SELECT item {item!r} — "
                     "items must be plain columns or "
                     "COUNT/SUM/AVG/MIN/MAX(col) OVER (...) AS alias"
                 )
-            col = mp.group(1).split(".")[-1]
-            passthrough.append((col, mp.group(2) or col))
+            passthrough.append(plain[1:])
             continue
         open_idx = item.index("(", ma.end() - 1)
         close_idx = _balanced(item, open_idx)  # just past the ')'
@@ -1501,378 +1715,6 @@ def lower_streaming_over(
     sel = [F.col(c).alias(a) for c, a in passthrough]
     sel += [F.col(al) for _fn, _c, al, _off in over_items]
     return out.select(*sel)
-
-
-_TEMPORAL_FROM = re.compile(
-    r"^FROM\s+(?P<ptbl>\w+)(?:\s+AS)?(?:\s+(?!LEFT\b|INNER\b|JOIN\b)(?P<pal>\w+))?"
-    r"\s+(?P<jt>LEFT\s+|INNER\s+)?JOIN\s+(?P<vtbl>\w+)"
-    r"\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+(?P<asof>[\w.]+)"
-    r"(?:\s+AS)?(?:\s+(?!ON\b)(?P<val>\w+))?"
-    r"\s+ON\s+(?P<onl>[\w.]+)\s*=\s*(?P<onr>[\w.]+)\s*(?P<tail>.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def lower_streaming_temporal_join(
-    sql: str,
-    resolve: Callable[[str], tuple[DataFrame, tuple[str, str] | None]],
-) -> DataFrame:
-    """Lower an EVENT-TIME temporal join written as streaming SQL text —
-    ``SELECT ... FROM probe [AS] p JOIN version FOR SYSTEM_TIME AS OF
-    p.rowtime [AS] v ON p.k = v.k [WHERE ...]`` — onto the as-of state
-    machine (streaming.stateful.streaming_asof_join). This is the
-    StreamExecTemporalJoin path (EXEC-S/StreamExecTemporalJoin.java:77;
-    T-RUNTIME/operators/join/temporal/TemporalRowTimeJoinOperator.java
-    keeps the version side's per-key (ts, row) list in state and binds
-    each probe row to the latest version at or before its rowtime);
-    proctime AS OF statements never reach here (they lower to
-    stream-static lookup joins upstream).
-
-    Scope, mirroring the reference planner's own restrictions
-    (TemporalJoinRewriteWithUniqueKeyRule.scala): the AS OF column must
-    be the probe table's declared event-time (WATERMARK) attribute; the
-    version table must declare a WATERMARK (its version timestamp); ON
-    is one equality on the version table's key; INNER and LEFT join
-    types; SELECT items are plain (optionally aliased) columns; an
-    optional WHERE over probe columns runs below the join (Calc
-    pushdown, same plan shape as the reference). Version columns that
-    collide with probe column names must be aliased."""
-
-    s = sql.strip().rstrip(";").strip()
-    msel = re.match(r"^SELECT\s+", s, re.IGNORECASE)
-    fk = _statement_from_kw(s)
-    if not msel or fk is None:
-        raise ValueError(
-            "streaming temporal join: supported shape is SELECT ... "
-            "FROM <probe> JOIN <version> FOR SYSTEM_TIME AS OF "
-            "<probe rowtime> ON <probe key> = <version key> [WHERE ...]"
-            " — compose streaming.stateful.streaming_asof_join directly "
-            "for other shapes"
-        )
-    select_list = s[msel.end() : fk]
-    fm = _TEMPORAL_FROM.match(s[fk:])
-    if fm is None:
-        raise ValueError(
-            "streaming temporal join: could not parse the FROM clause — "
-            "expected FROM <probe> [AS p] [LEFT] JOIN <version> FOR "
-            "SYSTEM_TIME AS OF p.<rowtime> [AS v] ON p.<k> = v.<k>"
-        )
-    ptbl, pal = fm.group("ptbl"), (fm.group("pal") or fm.group("ptbl"))
-    vtbl, val = fm.group("vtbl"), (fm.group("val") or fm.group("vtbl"))
-    left_join = bool(fm.group("jt") and fm.group("jt").strip().upper() == "LEFT")
-    tail = fm.group("tail").strip()
-    where = None
-    if tail:
-        wm = re.match(r"^WHERE\s+(.*)$", tail, re.IGNORECASE | re.DOTALL)
-        if wm is None or re.search(
-            r"\b(JOIN|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|UNION)\b",
-            _unquoted_text(tail), re.IGNORECASE,
-        ):
-            raise ValueError(
-                "streaming temporal join: only an optional WHERE may "
-                "follow the ON clause — aggregate or re-join in a "
-                "separate statement"
-            )
-        where = wm.group(1).strip()
-
-    probe_sdf, probe_wm = resolve(ptbl)
-    ver_sdf, ver_wm = resolve(vtbl)
-    if probe_wm is None:
-        raise ValueError(
-            f"streaming temporal join: probe table {ptbl!r} declares no "
-            "WATERMARK — the AS OF column must be its event-time "
-            "attribute (the reference rejects non-rowtime AS OF too)"
-        )
-    if ver_wm is None:
-        raise ValueError(
-            f"streaming temporal join: version table {vtbl!r} declares "
-            "no WATERMARK — the version timestamp is its event-time "
-            "attribute (TemporalRowTimeJoinOperator orders versions by "
-            "the right side's rowtime)"
-        )
-
-    def _unq(ref: str, what: str) -> str:
-        parts = ref.split(".")
-        if len(parts) == 1:
-            return parts[0]
-        if len(parts) == 2 and parts[0].lower() in (pal.lower(), val.lower(),
-                                                    ptbl.lower(), vtbl.lower()):
-            return parts[1]
-        raise ValueError(
-            f"streaming temporal join: {what} {ref!r} must be qualified "
-            f"by {pal!r} or {val!r}"
-        )
-
-    def _side(ref: str) -> str:
-        q = ref.split(".")[0].lower() if "." in ref else None
-        if q in (pal.lower(), ptbl.lower()):
-            return "probe"
-        if q in (val.lower(), vtbl.lower()):
-            return "version"
-        col = ref.split(".")[-1]
-        in_p, in_v = col in probe_sdf.columns, col in ver_sdf.columns
-        if in_p and in_v:
-            raise ValueError(
-                f"streaming temporal join: column {ref!r} is ambiguous "
-                f"(in both {ptbl!r} and {vtbl!r}) — qualify it"
-            )
-        if in_v:
-            return "version"
-        return "probe"
-
-    asof_col = _unq(fm.group("asof"), "AS OF column")
-    if _side(fm.group("asof")) != "probe" or asof_col != probe_wm[0]:
-        raise ValueError(
-            f"streaming temporal join: AS OF must reference the probe "
-            f"table's event-time attribute {probe_wm[0]!r} "
-            f"(got {fm.group('asof')!r})"
-        )
-    onl, onr = fm.group("onl"), fm.group("onr")
-    if _side(onl) == "version":
-        onl, onr = onr, onl
-    if _side(onl) != "probe" or _side(onr) != "version":
-        raise ValueError(
-            "streaming temporal join: ON must equate one probe column "
-            "with one version column"
-        )
-    pkey, vkey = _unq(onl, "ON column"), _unq(onr, "ON column")
-
-    # SELECT items: (side, source col, output alias) in statement order
-    items: list[tuple[str, str, str]] = []
-    for item in _split_top_commas(select_list):
-        mi = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", item.strip(), re.IGNORECASE)
-        if mi is None:
-            raise ValueError(
-                f"streaming temporal join: unsupported SELECT item "
-                f"{item!r} — items must be plain columns (optionally "
-                "AS-aliased); compute expressions in a follow-up "
-                "statement"
-            )
-        ref = mi.group(1)
-        items.append((_side(ref), ref.split(".")[-1], mi.group(2) or ref.split(".")[-1]))
-
-    if where is not None:
-        # probe-only predicate, pushed below the join (Calc-under-
-        # TemporalJoin): strip probe qualifiers quote-aware, reject
-        # version references
-        parts = re.split(r"('(?:[^']|'')*')", where)
-        if re.search(rf"\b(?:{re.escape(val)}|{re.escape(vtbl)})\s*\.", _unquoted_text(where),
-                     re.IGNORECASE):
-            raise ValueError(
-                "streaming temporal join: WHERE may reference probe "
-                "columns only (version-side filters change which rows "
-                "are VERSIONS — filter the version table in its DDL "
-                "view instead)"
-            )
-        where = "".join(
-            p if i % 2 else re.sub(
-                rf"\b(?:{re.escape(pal)}|{re.escape(ptbl)})\s*\.", "", p,
-                flags=re.IGNORECASE,
-            )
-            for i, p in enumerate(parts)
-        )
-        probe_sdf = probe_sdf.where(F.expr(where))
-
-    return _plan_streaming_asof(
-        probe_sdf, ver_sdf, ver_wm[0], pkey, vkey, asof_col, items, left_join,
-        what="streaming temporal join",
-    )
-
-
-def _plan_streaming_asof(
-    probe_sdf: DataFrame,
-    ver_sdf: DataFrame,
-    ver_ts_col: str,
-    pkey: str,
-    vkey: str,
-    asof_col: str,
-    items: list[tuple[str, str, str]],
-    left_join: bool,
-    what: str,
-) -> DataFrame:
-    """Shared tail of the two event-time temporal SQL forms (JOIN ...
-    FOR SYSTEM_TIME AS OF and the legacy LATERAL TABLE(fn(ts))): rename
-    the version key onto the probe key, ride the version timestamp as
-    the ``__vts`` marker, run the as-of state machine, and project the
-    SELECT items (INNER drops marker-null rows)."""
-    from flink_1_16_0_src_spark.streaming.stateful import streaming_asof_join
-
-    ver_items = [(c, a) for sd, c, a in items if sd == "version"]
-    collide = [a for _c, a in ver_items if a in probe_sdf.columns]
-    if collide:
-        raise ValueError(
-            f"{what}: version column(s) {collide} "
-            "collide with probe column names — alias them (AS ...)"
-        )
-    ver_sel = [F.col(vkey).alias(pkey), F.col(ver_ts_col).alias("__vts")]
-    ver_sel += [F.col(c).alias(a) for c, a in ver_items]
-    right_vals = [a for _c, a in ver_items] + ["__vts"]
-    out = streaming_asof_join(
-        probe_sdf, ver_sdf.select(*ver_sel), pkey, asof_col, "__vts", right_vals,
-    )
-    if not left_join:
-        out = out.where(F.col("__vts").isNotNull())
-    sel = [
-        (F.col(a) if sd == "version" else F.col(c).alias(a))
-        for sd, c, a in items
-    ]
-    return out.select(*sel)
-
-
-# materialized-history parquet dirs, one per (fn name, registration
-# token) — see lower_streaming_temporal_fn. Keyed by a monotonically
-# increasing token stamped at create_temporal_table_function time, NOT
-# id(history_df): after a re-registration the old frame can be GC'd and
-# a new frame may reuse the same id(), which would resurrect a stale
-# materialized-history dir (wrong as-of results).
-import itertools as _it
-
-_TTF_REGISTRATION_COUNTER = _it.count()
-_TTF_HISTORY_CACHE: dict[tuple, str] = {}
-
-
-def lower_streaming_temporal_fn(
-    sql: str,
-    resolve: Callable[[str], tuple[DataFrame, tuple[str, str] | None]],
-    temporal_fns: dict,
-    spark: SparkSession,
-) -> DataFrame:
-    """STREAMING form of the legacy temporal table function join —
-    ``SELECT ... FROM probe [AS p], LATERAL TABLE (rates(p.rowtime))
-    [AS r] WHERE r.key = p.key [AND ...]`` (the reference's classic
-    streaming rates example: TemporalTableFunctionImpl.java +
-    LogicalCorrelateToJoinFromTemporalTableFunctionRule, executed by
-    the same TemporalRowTimeJoinOperator as the FOR SYSTEM_TIME form).
-    The registered history table becomes a one-shot file stream (the
-    as-of state machine unions both sides), the function-alias equality
-    conjunct is the join key, remaining WHERE conjuncts must be
-    probe-side and push below the join. Inner semantics — version-less
-    probe rows drop, as in the reference."""
-    import os as _os
-    import tempfile as _tf
-
-    m = _TEMPORAL_FN_JOIN.match(sql.strip().rstrip(";").strip())
-    if m is None:
-        raise ValueError(
-            "streaming LATERAL TABLE: supported shape is SELECT ... "
-            "FROM <probe> [AS p], LATERAL TABLE (fn(p.<rowtime>)) "
-            "[AS r] WHERE r.<key> = p.<key> [AND probe-filters]"
-        )
-    if m.group("fn") not in temporal_fns:
-        raise ValueError(
-            f"streaming LATERAL TABLE: {m.group('fn')!r} is not a "
-            "registered temporal table function "
-            "(create_temporal_table_function) — UDTF laterals are a "
-            "batch surface"
-        )
-    if m.group("tail"):
-        raise ValueError(
-            "streaming LATERAL TABLE: GROUP/ORDER/LIMIT tails are out "
-            "of scope — aggregate in a separate statement"
-        )
-    entry = temporal_fns[m.group("fn")]
-    right_df, right_time, _pk = entry[:3]
-    reg_token = entry[3] if len(entry) > 3 else id(right_df)
-    lt = m.group("lt")
-    la = (m.group("la") or lt).lower()
-    ra = (m.group("ra") or m.group("fn")).lower()
-    probe_sdf, probe_wm = resolve(lt)
-    if probe_wm is None:
-        raise ValueError(
-            f"streaming LATERAL TABLE: probe table {lt!r} declares no "
-            "WATERMARK — the function argument must be its event-time "
-            "attribute"
-        )
-    arg_col = m.group("arg").split(".")[-1]
-    if arg_col != probe_wm[0]:
-        raise ValueError(
-            f"streaming LATERAL TABLE: the function argument must be "
-            f"the probe's event-time attribute {probe_wm[0]!r} "
-            f"(got {m.group('arg')!r})"
-        )
-
-    def _side(ref: str) -> str:
-        q = ref.split(".")[0].lower() if "." in ref else None
-        if q == la:
-            return "probe"
-        if q == ra:
-            return "version"
-        col = ref.split(".")[-1]
-        in_p, in_v = col in probe_sdf.columns, col in right_df.columns
-        if in_p and in_v:
-            raise ValueError(
-                f"streaming LATERAL TABLE: column {ref!r} is ambiguous "
-                "— qualify it"
-            )
-        return "version" if in_v else "probe"
-
-    # WHERE: one version-key equality, rest are probe-side filters
-    on_l = on_r = None
-    residual: list[str] = []
-    for part in _split_unquoted_and(m.group("cond") or ""):
-        if not part.strip():
-            continue
-        em = re.match(r"\s*([\w.]+)\s*=\s*([\w.]+)\s*$", part)
-        if em and {_side(em.group(1)), _side(em.group(2))} == {"probe", "version"}:
-            if on_l is not None:
-                raise ValueError(
-                    "streaming LATERAL TABLE: exactly one key equality "
-                    "is supported (the function's primary key)"
-                )
-            a, b = em.group(1), em.group(2)
-            if _side(a) == "version":
-                a, b = b, a
-            on_l, on_r = a.split(".")[-1], b.split(".")[-1]
-        else:
-            residual.append(part.strip())
-    if on_l is None:
-        raise ValueError(
-            "streaming LATERAL TABLE: WHERE needs the function-key "
-            "equality (e.g. WHERE r.currency = o.currency)"
-        )
-    items: list[tuple[str, str, str]] = []
-    for item in _split_top_commas(m.group("select")):
-        mi = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", item.strip(), re.IGNORECASE)
-        if mi is None:
-            raise ValueError(
-                f"streaming LATERAL TABLE: unsupported SELECT item "
-                f"{item!r} — items must be plain columns"
-            )
-        ref = mi.group(1)
-        items.append(
-            (_side(ref), ref.split(".")[-1], mi.group(2) or ref.split(".")[-1])
-        )
-    if residual:
-        bad = [r for r in residual if re.search(rf"\b{ra}\s*\.", r, re.IGNORECASE)]
-        if bad:
-            raise ValueError(
-                "streaming LATERAL TABLE: non-key WHERE conjuncts must "
-                "be probe-side (filter the history in "
-                "create_temporal_table_function instead)"
-            )
-        cond = " AND ".join(
-            re.sub(rf"\b(?:{re.escape(la)}|{re.escape(lt)})\s*\.", "", r,
-                   flags=re.IGNORECASE)
-            for r in residual
-        )
-        probe_sdf = probe_sdf.where(F.expr(cond))
-    # the history is a bounded registered table — feed it to the as-of
-    # union as a one-shot file stream. Materialize ONCE per registered
-    # function (cache keyed by the registration token): repeated
-    # statements over the same registration reuse the parquet dir
-    # instead of leaking a fresh mkdtemp per lowering; re-registration
-    # stamps a new token → new cache slot, never a stale dir.
-    ckey = (m.group("fn"), reg_token)
-    vdir = _TTF_HISTORY_CACHE.get(ckey)
-    if vdir is None or not _os.path.isdir(vdir):
-        vdir = _os.path.join(_tf.mkdtemp(prefix="ttf_stream_"), "versions")
-        right_df.write.mode("overwrite").parquet(vdir)
-        _TTF_HISTORY_CACHE[ckey] = vdir
-    ver_sdf = spark.readStream.schema(right_df.schema).parquet(vdir)
-    return _plan_streaming_asof(
-        probe_sdf, ver_sdf, right_time, on_l, on_r, arg_col, items,
-        left_join=False, what="streaming LATERAL TABLE",
-    )
 
 
 _ROWNUM_ITEM = re.compile(
@@ -1966,14 +1808,13 @@ def lower_streaming_topn(
                 raise ValueError("streaming Top-N: one ROW_NUMBER item only")
             rank = rmatch
             continue
-        pm = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", it, re.IGNORECASE)
-        if pm is None:
+        plain = _plain_item(it)
+        if plain is None:
             raise ValueError(
                 f"streaming Top-N: unsupported subquery item {it!r} — "
                 "plain columns plus one ROW_NUMBER() OVER (...) AS rn"
             )
-        col = pm.group(1).split(".")[-1]
-        passthrough.append((col, pm.group(2) or col))
+        passthrough.append(plain[1:])
     if rank is None:
         raise ValueError(
             "streaming Top-N: the subquery needs ROW_NUMBER() OVER "
@@ -2011,14 +1852,12 @@ def lower_streaming_topn(
         sel.append(F.col("rank_num").alias(rank.group("al")))
     else:
         for item in _split_top_commas(outer):
-            om = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", item.strip(),
-                          re.IGNORECASE)
-            if om is None:
+            plain = _plain_item(item)
+            if plain is None:
                 raise ValueError(
                     f"streaming Top-N: unsupported outer item {item!r}"
                 )
-            ref = om.group(1).split(".")[-1]
-            al = om.group(2) or ref
+            _ref, ref, al = plain
             if ref.lower() == rank.group("al").lower():
                 sel.append(F.col("rank_num").alias(al))
             elif ref in aliases:
@@ -2121,13 +1960,12 @@ def lower_streaming_window_topn(sql: str, specs: list[dict]) -> DataFrame:
                 raise ValueError("streaming window Top-N: one ROW_NUMBER item only")
             rank = rmatch
             continue
-        pm = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", it, re.IGNORECASE)
-        if pm is None:
+        plain = _plain_item(it)
+        if plain is None:
             raise ValueError(
                 f"streaming window Top-N: unsupported subquery item {it!r}"
             )
-        col = pm.group(1).split(".")[-1]
-        passthrough.append((col, pm.group(2) or col))
+        passthrough.append(plain[1:])
     if rank is None:
         raise ValueError(
             "streaming window Top-N: the subquery needs ROW_NUMBER() "
@@ -2179,14 +2017,12 @@ def lower_streaming_window_topn(sql: str, specs: list[dict]) -> DataFrame:
         sel.append(F.col("rank_num").alias(rank.group("al")))
     else:
         for item in _split_top_commas(outer):
-            om = re.match(r"^([\w.]+)(?:\s+AS\s+(\w+))?$", item.strip(),
-                          re.IGNORECASE)
-            if om is None:
+            plain = _plain_item(item)
+            if plain is None:
                 raise ValueError(
                     f"streaming window Top-N: unsupported outer item {item!r}"
                 )
-            ref = om.group(1).split(".")[-1]
-            al = om.group(2) or ref
+            _ref, ref, al = plain
             if ref.lower() == rank.group("al").lower():
                 sel.append(F.col("rank_num").alias(al))
             elif ref in aliases:

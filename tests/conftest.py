@@ -53,6 +53,7 @@ _SLOW_TESTS = {
     "test_stream_statement_set_window_agg_two_batches",
     "test_streaming_over_sql_bare_lead_rejected",
     "test_streaming_temporal_fn_reregistration_uses_new_history",
+    "test_temporal_join_batch_equals_stream",
     "test_kafka_contract_stream_window_and_upsert",
     "test_simhash_incremental_band_join_exact_and_capped",
     "test_simhash_incremental_band_equijoin",

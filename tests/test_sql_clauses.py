@@ -135,8 +135,6 @@ def test_temporal_join_rewrite(spark):
     are stripped, and an undeclared time attribute raises."""
     import datetime as dt
 
-    from flink_1_16_0_src_spark.sql_clauses import rewrite_temporal_join
-
     ts = lambda d: dt.datetime(2024, 1, d)  # noqa: E731
     spark.createDataFrame(
         [(1, "u1", ts(5)), (2, "u2", ts(5)), (3, "u1", ts(1))],
@@ -147,30 +145,30 @@ def test_temporal_join_rewrite(spark):
         "k string, vt timestamp, rate double",
     ).createOrReplaceTempView("tj_rates")
 
-    inner = spark.sql(rewrite_temporal_join(
+    inner = spark.sql(rewrite_flink_clauses(
         spark,
         "SELECT l.id, l.k, r.rate FROM tj_left AS l JOIN tj_rates "
         "FOR SYSTEM_TIME AS OF l.t AS r ON l.k = r.k",
-        {"tj_rates": "vt"},
+        time_attrs={"tj_rates": "vt"},
     ))
     assert {(r.id, r.rate) for r in inner.collect()} == {(1, 200.0)}
     # u2@Jan5 has no version yet (rate starts Jan6); u1@Jan1 predates all
 
-    left = spark.sql(rewrite_temporal_join(
+    left = spark.sql(rewrite_flink_clauses(
         spark,
         "SELECT l.id, r.rate FROM tj_left AS l LEFT JOIN tj_rates "
         "FOR SYSTEM_TIME AS OF l.t AS r ON l.k = r.k "
         "WHERE l.id < 10",
-        {"tj_rates": "vt"},
+        time_attrs={"tj_rates": "vt"},
     ))
     assert {(r.id, r.rate) for r in left.collect()} == {(1, 200.0), (2, None), (3, None)}
 
     with pytest.raises(ValueError):
-        rewrite_temporal_join(
+        rewrite_flink_clauses(
             spark,
             "SELECT l.id FROM tj_left AS l JOIN tj_rates "
             "FOR SYSTEM_TIME AS OF l.t AS r ON l.k = r.k",
-            {},
+            time_attrs={},
         )
 
 
@@ -560,12 +558,13 @@ def test_lookup_join_rewrite_proctime_vs_event_time():
     from flink_1_16_0_src_spark.sql_clauses import rewrite_lookup_join
 
     sql = "SELECT * FROM e JOIN d FOR SYSTEM_TIME AS OF e.pt AS v ON e.k = v.k"
-    out = rewrite_lookup_join(sql, {"pt"})
+    out, dims = rewrite_lookup_join(sql, {"pt"})
     import re as _re
     assert "SYSTEM_TIME" not in out
     assert _re.sub(r"\s+", " ", out).count("JOIN d AS v ON") == 1
+    assert dims == {"d"}
     # event-time column untouched
-    assert rewrite_lookup_join(sql, {"other"}) == sql
+    assert rewrite_lookup_join(sql, {"other"}) == (sql, set())
 
 
 def test_group_window_reaches_table_environment(spark):
@@ -671,3 +670,188 @@ def test_statement_from_skips_is_distinct_from(spark):
         GROUP BY k, k IS DISTINCT FROM 'u1', TUMBLE(ts, INTERVAL '1' HOUR)
     """))
     assert out.count() == 3
+
+
+# ---- temporal joins: one parser, two planners -------------------------------
+
+_PL_COLS = ["id", "k", "t", "note"]
+_PR_COLS = ["k", "vt", "rate"]
+
+
+def _parse(sql):
+    """parse_temporal_join over the pl / pr fixture schemas, with
+    ``rates`` registered as a temporal table function over pr — pure
+    text, no Spark."""
+    from types import SimpleNamespace
+
+    from flink_1_16_0_src_spark.sql_clauses import parse_temporal_join
+
+    fns = {"rates": (SimpleNamespace(columns=_PR_COLS), "vt", "k")}
+    return parse_temporal_join(sql, {"pl": _PL_COLS, "pr": _PR_COLS}.__getitem__, fns)
+
+
+@pytest.mark.parametrize("sql", [
+    "SELECT l.id, r.rate FROM pl AS l JOIN pr FOR SYSTEM_TIME AS OF l.t AS r ON l.k = r.k",
+    "SELECT l.id, r.rate FROM pl l JOIN pr FOR SYSTEM_TIME AS OF l.t r ON l.k = r.k",
+    "SELECT l.id, r.rate FROM pl l INNER JOIN pr FOR SYSTEM_TIME AS OF l.t r ON r.k = l.k ;",
+    "SELECT l.id, r.rate FROM pl AS l, LATERAL TABLE (rates(l.t)) AS r WHERE r.k = l.k",
+    "SELECT l.id, r.rate FROM pl l, LATERAL TABLE (rates(l.t)) r WHERE l.k = r.k;",
+])
+def test_parse_temporal_join_spellings_give_one_spec(sql):
+    spec = _parse(sql)
+    assert (spec.probe, spec.probe_alias, spec.version_alias) == ("pl", "l", "r")
+    assert spec.version == ("rates" if "LATERAL" in sql else "pr")
+    assert (spec.asof, spec.how, spec.keys) == ("t", "inner", [("k", "k")])
+    assert (spec.select, spec.tail) == ("l.id, r.rate", "")
+    assert spec.probe_where == spec.version_where == spec.mixed_where == []
+
+
+def test_parse_temporal_join_sorts_where_and_keeps_literals():
+    spec = _parse(
+        "SELECT l.id, r.rate * 2 AS r2 FROM pl l LEFT JOIN pr FOR SYSTEM_TIME "
+        "AS OF l.t r ON l.k = r.k AND l.id = r.rate "
+        "WHERE l.note = 'l.x AND r.y' AND r.rate > 1 AND l.id + r.rate > 2 "
+        "AND l.t BETWEEN vt AND l.t AND (l.id = 1 OR note = 'a') "
+        "ORDER BY r.rate LIMIT 3;"
+    )
+    assert spec.how == "left"
+    assert spec.keys == [("k", "k"), ("id", "rate")]
+    assert spec.probe_where == ["note = 'l.x AND r.y'", "(id = 1 OR note = 'a')"]
+    assert spec.version_where == ["rate > 1"]
+    assert spec.mixed_where == ["id + rate > 2", "t BETWEEN vt AND t"]
+    assert spec.tail == "ORDER BY r.rate LIMIT 3"
+    assert spec.bare(spec.select) == "id, rate * 2 AS r2"
+    # LATERAL: the key comes out of WHERE, the rest is sorted the same way
+    spec = _parse(
+        "SELECT note FROM pl o, LATERAL TABLE (rates(o.t)) v "
+        "WHERE o.note = 'o.x' AND rate = o.k AND v.rate > 1"
+    )
+    assert spec.keys == [("k", "rate")]
+    assert (spec.probe_where, spec.version_where) == (["note = 'o.x'"], ["rate > 1"])
+    # a top-level OR keeps the WHERE one conjunct, so it holds no key
+    for where in ("o.note = 'x'", "rate = o.k OR o.id = 1"):
+        with pytest.raises(ValueError, match="key equality"):
+            _parse(f"SELECT note FROM pl o, LATERAL TABLE (rates(o.t)) v WHERE {where}")
+
+
+def test_parse_temporal_join_rejections_and_passthrough():
+    assert _parse("SELECT 1 AS one") is None
+    assert _parse("SELECT 'FOR SYSTEM_TIME AS OF x' AS s FROM pl") is None
+    # LATERAL TABLE over a function that is not a temporal table function
+    assert _parse("SELECT w FROM pl, LATERAL TABLE(split(note)) AS T(w)") is None
+    with pytest.raises(ValueError, match="ambiguous"):
+        _parse("SELECT id FROM pl JOIN pr FOR SYSTEM_TIME AS OF t ON k = k")
+    with pytest.raises(ValueError, match="ambiguous"):
+        _parse("SELECT l.id FROM pl l JOIN pr FOR SYSTEM_TIME AS OF l.t r "
+               "ON l.k = r.k WHERE k = 'u1'")
+    with pytest.raises(ValueError, match="unsupported temporal-join condition"):
+        _parse("SELECT l.id FROM pl l JOIN pr FOR SYSTEM_TIME AS OF l.t r ON l.k > r.k")
+    with pytest.raises(ValueError, match="event-time attribute"):
+        _parse("SELECT l.id FROM pl l JOIN pr FOR SYSTEM_TIME AS OF r.vt r ON l.k = r.k")
+    with pytest.raises(ValueError, match="supported shapes"):
+        _parse("SELECT l.id FROM pl l JOIN pr FOR SYSTEM_TIME AS OF l.t r ON l.k = r.k "
+               "JOIN pr AS q ON q.k = l.k")
+
+
+@pytest.fixture(scope="module")
+def tj_env(spark, tmp_path_factory):
+    """pl (probe) and pr (versions), both DDL parquet tables with a
+    WATERMARK, plus ``rates`` — a temporal table function over pr."""
+    from flink_1_16_0_src_spark.session import TableEnvironment
+
+    tenv = TableEnvironment(spark)
+    d = tmp_path_factory.mktemp("tj")
+    ts = lambda day: dt.datetime(2024, 1, day)  # noqa: E731
+    spark.createDataFrame(
+        [(1, "u1", ts(5), "l.x"), (2, "u2", ts(5), "a"), (3, "u1", ts(1), "b")],
+        "id bigint, k string, t timestamp, note string",
+    ).write.parquet(str(d / "pl"))
+    spark.createDataFrame(
+        [("u1", ts(2), 100.0), ("u1", ts(4), 200.0), ("u2", ts(6), 300.0)],
+        "k string, vt timestamp, rate double",
+    ).write.parquet(str(d / "pr"))
+    tenv.execute_sql(
+        "CREATE TABLE pl (id BIGINT, k STRING, t TIMESTAMP(3), note STRING,"
+        " WATERMARK FOR t AS t - INTERVAL '1' MINUTE)"
+        f" WITH ('connector'='filesystem','path'='{d / 'pl'}','format'='parquet')"
+    )
+    tenv.execute_sql(
+        "CREATE TABLE pr (k STRING, vt TIMESTAMP(3), rate DOUBLE,"
+        " WATERMARK FOR vt AS vt - INTERVAL '1' MINUTE)"
+        f" WITH ('connector'='filesystem','path'='{d / 'pr'}','format'='parquet')"
+    )
+    tenv.create_temporal_table_function("rates", "pr", "vt", "k")
+    return tenv
+
+
+def _rows(df):
+    return sorted(((r[0], r[1]) for r in df.collect()), key=repr)
+
+
+def test_temporal_join_bare_aliases_batch(tj_env):
+    """Bare (AS-less) aliases on both sides, in both spellings."""
+    assert _rows(tj_env.execute_sql(
+        "SELECT l.id, r.rate FROM pl l JOIN pr FOR SYSTEM_TIME AS OF l.t r ON l.k = r.k"
+    )) == [(1, 200.0)]
+    assert _rows(tj_env.execute_sql(
+        "SELECT o.id, r.rate FROM pl o, LATERAL TABLE (rates(o.t)) r WHERE r.k = o.k"
+    )) == [(1, 200.0)]
+
+
+def test_temporal_join_keeps_alias_shaped_literals_batch(tj_env):
+    """A string literal that looks like ``alias.col`` is data, not a
+    qualifier: it survives the qualifier stripping in both spellings."""
+    assert _rows(tj_env.execute_sql(
+        "SELECT l.id, r.rate FROM pl AS l JOIN pr FOR SYSTEM_TIME AS OF l.t AS r "
+        "ON l.k = r.k WHERE l.note = 'l.x'"
+    )) == [(1, 200.0)]
+    assert _rows(tj_env.execute_sql(
+        "SELECT l.id, r.rate FROM pl AS l, LATERAL TABLE (rates(l.t)) AS r "
+        "WHERE r.k = l.k AND l.note = 'l.x'"
+    )) == [(1, 200.0)]
+
+
+def test_temporal_join_trailing_semicolon_batch(tj_env):
+    assert _rows(tj_env.execute_sql(
+        "SELECT l.id, r.rate FROM pl AS l JOIN pr FOR SYSTEM_TIME AS OF l.t AS r "
+        "ON l.k = r.k;"
+    )) == [(1, 200.0)]
+
+
+_INNER = [(1, 200.0)]
+_LEFT = [(1, 200.0), (2, None), (3, None)]
+_SPELLINGS = {
+    "as_aliases": ("SELECT l.id, r.rate FROM pl AS l JOIN pr FOR SYSTEM_TIME AS OF l.t AS r "
+                   "ON l.k = r.k", _INNER),
+    "bare_aliases": ("SELECT l.id, r.rate FROM pl l JOIN pr FOR SYSTEM_TIME AS OF l.t r "
+                     "ON l.k = r.k", _INNER),
+    "reversed_on": ("SELECT l.id, r.rate FROM pl l JOIN pr FOR SYSTEM_TIME AS OF l.t r "
+                    "ON r.k = l.k", _INNER),
+    "semicolon": ("SELECT l.id, r.rate FROM pl AS l JOIN pr FOR SYSTEM_TIME AS OF l.t AS r "
+                  "ON l.k = r.k;", _INNER),
+    "inner": ("SELECT l.id, r.rate FROM pl AS l INNER JOIN pr FOR SYSTEM_TIME AS OF l.t AS r "
+              "ON l.k = r.k", _INNER),
+    "left": ("SELECT l.id, r.rate FROM pl AS l LEFT JOIN pr FOR SYSTEM_TIME AS OF l.t AS r "
+             "ON l.k = r.k", _LEFT),
+    "left_literal_where": ("SELECT l.id, r.rate FROM pl l LEFT JOIN pr FOR SYSTEM_TIME AS OF "
+                           "l.t r ON l.k = r.k WHERE l.note = 'l.x'", _INNER),
+    "lateral_as": ("SELECT l.id, r.rate FROM pl AS l, LATERAL TABLE (rates(l.t)) AS r "
+                   "WHERE r.k = l.k", _INNER),
+    "lateral_bare": ("SELECT o.id, r.rate FROM pl o, LATERAL TABLE (rates(o.t)) r "
+                     "WHERE o.k = r.k;", _INNER),
+    "lateral_literal_where": ("SELECT l.id, r.rate FROM pl l, LATERAL TABLE (rates(l.t)) r "
+                              "WHERE l.note = 'l.x' AND l.k = r.k", _INNER),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SPELLINGS))
+def test_temporal_join_batch_equals_stream(tj_env, name):
+    """Every spelling returns the same rows from execute_sql (batch
+    as-of join) and from a stream_query drain (as-of state machine),
+    and both equal the hand-written expectation."""
+    from flink_1_16_0_src_spark.streaming import sources as ssrc
+
+    sql, want = _SPELLINGS[name]
+    batch = _rows(tj_env.execute_sql(sql))
+    stream = _rows(ssrc.run_to_memory(tj_env.stream_query(sql), f"tj_diff_{name}", "append"))
+    assert batch == stream == sorted(want, key=repr)
