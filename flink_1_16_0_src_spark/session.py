@@ -27,7 +27,18 @@ def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None)
     and AQE coalesces the excess at runtime. Python workers fork from
     ``worker_daemon``, PySpark's daemon plus a stat guard, because without
     it every task re-reads the directories of Spark's zip archives (about
-    0.3 CPU-s per task). An archive that does change is still re-read."""
+    0.3 CPU-s per task). An archive that does change is still re-read.
+    Streaming checkpoints commit through ``FileSystemBasedCheckpointFileManager``
+    because the default ``FileContext`` manager resolves links on every
+    rename, and without Hadoop's native library each resolution spawns a
+    ``readlink`` process (about 370 per drain, most of ``commitTimeMs``).
+    Its renames are not atomic: a plain rename (offset and commit logs)
+    checks that the target is absent and then renames, and an overwriting
+    one (the state ``.delta`` files of a replayed batch) moves the file
+    and then its ``.crc``. A checkpoint directory must therefore have one
+    writer at a time; Spark already refuses a second active query on it.
+    Checkpoint files still go through the checksummed local file system
+    and keep their ``.crc`` files."""
     cpus = cpus or CPUS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -49,6 +60,11 @@ def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None)
         # fixture events.parquet stores TIMESTAMP(NANOS); read as long + convert (tables.load)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "flink_1_16_0_src_spark.worker_daemon")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -31,10 +31,15 @@ from pyspark.sql import functions as F
 # at whatever spark.sql.shuffle.partitions says when the query starts — and
 # every partition pays a fixed per-batch cost (task schedule, state store
 # open/commit, for Python-stateful ops a worker round-trip) regardless of
-# how little data it holds. Measured at sf0.1: the tumble drain spends
-# ~40% of its wall on that fixed cost (32 partitions → 8 = 2.7 s → 1.6 s,
-# stateStoreSave commitTimeMs sum 18-48 s across partitions for 3.6k state
-# rows). The fix is the guide's partition-sizing rule: derive the stream's
+# how little data it holds. Measured at sf0.1 (the tumble drain, warm
+# session, local[32] on 4 vCPUs, checkpoints committed through the
+# FileSystem manager that session.get_spark sets): 32 partitions → 4 =
+# 2.5 s → 1.1 s wall, stateStoreSave commitTimeMs sum 1.2 s → 0.1 s across
+# partitions. Commit is no longer what the rule saves (it was 27 s summed
+# at 32 partitions under the FileContext manager, whose renames spawn
+# readlink); the other per-partition costs still make 32 partitions 2.2×
+# slower than 4.
+# The fix is the guide's partition-sizing rule: derive the stream's
 # shuffle partition count from the SOURCE bytes (target bytes/partition,
 # SPARK_GRAFT_STREAM_PARTITION_BYTES, default 32 MB), never RAISING above
 # the session's configured value — at 100 TB ceil(bytes/32MB) dwarfs any

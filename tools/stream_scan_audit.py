@@ -61,37 +61,39 @@ def main() -> int:
         return sp.sql(f"SELECT * FROM {name}")
 
     ssrc.run_to_memory = patched
-    from flink_1_16_0_src_spark.registry import all_queries
+    try:
+        from flink_1_16_0_src_spark.registry import all_queries
 
-    reg = all_queries()
-    names = sorted(n for n in reg if n.startswith("stream_"))
-    n_multi = 0
-    with open(out_path, "w") as fh:
-        for name in names:
-            captured.clear()
-            try:
-                reg[name].fn(spark, sf).count()
-                err = None
-            except Exception as ex:  # noqa: BLE001
-                err = str(ex)[:200]
-            entries = []
-            for qname, plan in captured:
-                scans = len(re.findall(r"FileScan |Scan parquet|MicroBatchScan", plan))
-                streams = len(re.findall(r"StreamingDataSourceV2ScanRelation|FileStreamSource|MicroBatchScan", plan))
-                entries.append({"stream": qname, "source_scans": scans,
-                                "stream_scans": streams})
-            multi = [e for e in entries if e["source_scans"] > 1]
-            n_multi += bool(multi)
-            fh.write(json.dumps({
-                "name": name,
-                "via_run_to_memory": bool(entries),
-                "plans": entries,
-                "multi_scan": bool(multi),
-                "err": err,
-            }) + "\n")
-            fh.flush()
-            print(name, "multi" if multi else ("-" if entries else "foreachBatch/insert"), flush=True)
-    ssrc.run_to_memory = orig
+        reg = all_queries()
+        names = sorted(n for n in reg if n.startswith("stream_"))
+        n_multi = 0
+        with open(out_path, "w") as fh:
+            for name in names:
+                captured.clear()
+                try:
+                    reg[name].fn(spark, sf).count()
+                    err = None
+                except Exception as ex:  # noqa: BLE001
+                    err = str(ex)[:200]
+                entries = []
+                for qname, plan in captured:
+                    scans = len(re.findall(r"FileScan |Scan parquet|MicroBatchScan", plan))
+                    streams = len(re.findall(r"StreamingDataSourceV2ScanRelation|FileStreamSource|MicroBatchScan", plan))
+                    entries.append({"stream": qname, "source_scans": scans,
+                                    "stream_scans": streams})
+                multi = [e for e in entries if e["source_scans"] > 1]
+                n_multi += bool(multi)
+                fh.write(json.dumps({
+                    "name": name,
+                    "via_run_to_memory": bool(entries),
+                    "plans": entries,
+                    "multi_scan": bool(multi),
+                    "err": err,
+                }) + "\n")
+                fh.flush()
+                print(name, "multi" if multi else ("-" if entries else "foreachBatch/insert"), flush=True)
+    finally:
+        ssrc.run_to_memory = orig
     print(json.dumps({"queries": len(names), "multi_scan_drains": n_multi}))
     return 0
 
