@@ -685,15 +685,15 @@ def duplicate_spans(
         # countDistinct expansion's TWO token-scale exchanges (partial
         # dedup on (gh, doc_id), then the per-gh count) — measured
         # 8.6 -> 3.4 s for the aggregate at the sf1 probe (r13).
-        # min_docs == 1 means every windowed gram is a hit; min != max
-        # would wrongly drop single-doc grams there, so it shares the
-        # >= 2 path only via the trivially-true filter below.
+        # min_docs == 1 means every gram with a non-NULL doc id is a hit
+        # (countDistinct ignores NULL ids; min is NULL iff every id is);
+        # min != max would wrongly drop single-doc grams there.
         agged = wins.groupBy("__gh").agg(
             F.min(id_col).alias("__lo"), F.max(id_col).alias("__hi")
         )
-        dup = (
-            agged if min_docs <= 1
-            else agged.where(F.col("__lo") != F.col("__hi"))
+        dup = agged.where(
+            F.col("__lo").isNotNull() if min_docs <= 1
+            else F.col("__lo") != F.col("__hi")
         ).select("__gh")
     else:
         dup = (

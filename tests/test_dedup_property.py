@@ -241,15 +241,21 @@ span_corpus = st.lists(span_doc, min_size=2, max_size=6)
 SPAN_K = 3
 
 
-def _py_spans(corpus: list[str], k: int = SPAN_K, min_docs: int = 2):
-    wins = {}  # gram -> set(doc ids)
+def _py_spans(corpus: list[str], k: int = SPAN_K, min_docs: int = 2, ids=None):
+    """Spans per doc id (``ids``, default the corpus index). A gram is a
+    hit when its distinct non-NULL doc ids number >= min_docs: the
+    ``countDistinct(id) >= min_docs`` rule, which ignores NULL ids."""
+    ids = list(range(len(corpus))) if ids is None else ids
+    wins = {}  # gram -> set(non-NULL doc ids)
     toks = [d.lower().strip().split() for d in corpus]
-    for i, t in enumerate(toks):
+    for i, t in zip(ids, toks):
         for p in range(len(t) - k + 1):
-            wins.setdefault(" ".join(t[p : p + k]), set()).add(i)
-    dup = {g for g, ids in wins.items() if len(ids) >= min_docs}
+            g = wins.setdefault(" ".join(t[p : p + k]), set())
+            if i is not None:
+                g.add(i)
+    dup = {g for g, gids in wins.items() if len(gids) >= min_docs}
     out = set()
-    for i, t in enumerate(toks):
+    for i, t in zip(ids, toks):
         hits = sorted(
             p for p in range(len(t) - k + 1) if " ".join(t[p : p + k]) in dup
         )
@@ -282,6 +288,28 @@ def test_duplicate_spans_match_python_oracle(spark, corpus):
         for r in duplicate_spans(df, "text", "doc_id", k=SPAN_K).collect()
     }
     assert got == _py_spans(corpus)
+
+
+@pytest.mark.parametrize("min_docs", [1, 2])
+def test_duplicate_spans_null_doc_id_matches_count_distinct(spark, min_docs):
+    """A gram seen only in the NULL-id document is no hit: countDistinct
+    ignores NULL ids, so the min/max fast path must too. The gram that
+    document shares with real ones still marks it."""
+    from flink_1_16_0_src_spark.pipeline.dedup import duplicate_spans
+
+    corpus = [
+        "spark flink join scan sort",
+        "window agg hash spark flink join",
+        "spark flink join hash",
+    ]
+    ids = [1, None, 2]
+    df = spark.createDataFrame(list(zip(ids, corpus)), "doc_id bigint, text string")
+    got = {
+        (r.doc_id, r.span_start, r.span_end, r.n_windows)
+        for r in duplicate_spans(df, "text", "doc_id", k=SPAN_K, min_docs=min_docs).collect()
+    }
+    assert got == _py_spans(corpus, min_docs=min_docs, ids=ids)
+    assert (None, 3, 6, 1) in got
 
 
 def test_ivf_assign_blas_matches_jvm(spark):

@@ -7,7 +7,11 @@ Next to the durations, ``_cpu_s`` splits each drain's CPU seconds, read
 from /proc: JVM threads grouped by name (JIT compiler threads apart,
 threads that exited mid-drain as one sum), the JVM's reaped children
 (shell spawns such as Hadoop's chmod/readlink) and the Python worker
-processes (daemon and workers, including reaped ones).
+processes (daemon and workers, including reaped ones). Beside the JIT
+threads it names codegen cost: ``janino_compiles`` counts the classes
+Spark's code generator compiled during the drain (``CodegenMetrics``,
+driver and executors, one JVM in local mode) and ``janino_mean_ms`` is
+their mean compile time (``CodeGenerator.compileTime``).
 
 Usage: python tools/stream_profile.py <query_name> [sf_dir]
 """
@@ -42,9 +46,10 @@ def _stat(path: str) -> tuple[str, int, int, int] | None:
     return comm, int(rest[1]), int(rest[11]) + int(rest[12]), int(rest[13]) + int(rest[14])
 
 
-def _cpu_snapshot(jvm_pid: int) -> dict:
+def _cpu_snapshot(jvm, jvm_pid: int) -> dict:
     """Cumulative CPU ticks of the JVM (per thread, own, reaped children)
-    and of the Python processes below it."""
+    and of the Python processes below it, plus the JVM's Janino compile
+    count and summed compile nanoseconds."""
     threads = {}
     for tid in os.listdir(f"/proc/{jvm_pid}/task"):
         st = _stat(f"/proc/{jvm_pid}/task/{tid}/stat")
@@ -61,7 +66,15 @@ def _cpu_snapshot(jvm_pid: int) -> dict:
         below |= frontier
     _, _, own, reaped = procs[jvm_pid]
     python = sum(procs[p][2] + procs[p][3] for p in below if procs[p][0].startswith("python"))
-    return {"threads": threads, "jvm": own, "reaped": reaped, "python": python}
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    return {
+        "threads": threads,
+        "jvm": own,
+        "reaped": reaped,
+        "python": python,
+        "janino": (compiles, codegen.compileTime()),
+    }
 
 
 def _cpu_split(before: dict, after: dict) -> dict:
@@ -75,9 +88,14 @@ def _cpu_split(before: dict, after: dict) -> dict:
     def sec(ticks: int) -> float:
         return round(ticks / _TICK, 2)
 
+    compiles = after["janino"][0] - before["janino"][0]
+    compile_ns = after["janino"][1] - before["janino"][1]
+
     return {
         "jvm_threads": {k: sec(v) for k, v in sorted(groups.items(), key=lambda kv: -kv[1]) if v},
         "jvm_jit_compiler": sec(jit),
+        "janino_compiles": compiles,
+        "janino_mean_ms": round(compile_ns / compiles / 1e6, 1) if compiles else 0.0,
         "jvm_exited_threads": sec(after["jvm"] - before["jvm"] - jit - sum(groups.values())),
         "jvm_reaped_children": sec(after["reaped"] - before["reaped"]),
         "python_workers": sec(after["python"] - before["python"]),
@@ -135,15 +153,16 @@ def main() -> int:
 
     ssrc.run_to_memory = patched
     registry = all_queries()
-    jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    jvm = spark.sparkContext._jvm
+    jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
     # warm-up then timed, mirroring bench methodology
     for run in range(2):
         progress.append({"_run": run})
         t0 = time.perf_counter()
-        cpu0 = _cpu_snapshot(jvm_pid)
+        cpu0 = _cpu_snapshot(jvm, jvm_pid)
         registry[name].fn(spark, sf_dir).count()
         progress.append({"_total_sec": round(time.perf_counter() - t0, 3)})
-        progress.append({"_cpu_s": _cpu_split(cpu0, _cpu_snapshot(jvm_pid))})
+        progress.append({"_cpu_s": _cpu_split(cpu0, _cpu_snapshot(jvm, jvm_pid))})
     ssrc.run_to_memory = orig
     print(json.dumps(progress, indent=1))
     spark.stop()
