@@ -665,11 +665,15 @@ def duplicate_spans(
       bounded by the doc's token count, never corpus-sized).
 
     Returns (id_col, span_start, span_end, n_windows) in 0-based token
-    offsets, end exclusive."""
+    offsets, end exclusive. Documents with a NULL id are left out: they
+    would all share one islands partition, merging their hits into
+    cross-document spans, and ``remove_duplicate_spans``'s equi-join on
+    the id could not apply their spans anyway. They count toward no
+    gram either (``countDistinct`` ignores NULL ids)."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    d = spread_input(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), toks.alias("__toks")
-    )
+    d = spread_input(
+        df.select(F.col(id_col), F.col(text_col)).where(F.col(id_col).isNotNull())
+    ).select(F.col(id_col), toks.alias("__toks"))
     # windows i = tokens [i, i+k) for i in 0..n-k; short docs produce
     # none (sequence(0, negative) would DESCEND — guard like shingles())
     grams = F.expr(
@@ -685,14 +689,13 @@ def duplicate_spans(
         # countDistinct expansion's TWO token-scale exchanges (partial
         # dedup on (gh, doc_id), then the per-gh count) — measured
         # 8.6 -> 3.4 s for the aggregate at the sf1 probe (r13).
-        # min_docs == 1 means every gram with a non-NULL doc id is a hit
-        # (countDistinct ignores NULL ids; min is NULL iff every id is);
+        # min_docs == 1 means every gram is a hit (NULL ids are gone);
         # min != max would wrongly drop single-doc grams there.
         agged = wins.groupBy("__gh").agg(
             F.min(id_col).alias("__lo"), F.max(id_col).alias("__hi")
         )
         dup = agged.where(
-            F.col("__lo").isNotNull() if min_docs <= 1
+            F.lit(True) if min_docs <= 1
             else F.col("__lo") != F.col("__hi")
         ).select("__gh")
     else:

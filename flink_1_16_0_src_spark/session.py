@@ -2191,6 +2191,7 @@ class TableEnvironment:
             _statement_from_kw as _statement_from_kw_early,
             _unquoted_text,
             parse_temporal_join,
+            parse_window_tvf,
             plan_streaming_temporal_join,
             rewrite_group_windows,
             rewrite_lookup_join,
@@ -2218,25 +2219,20 @@ class TableEnvironment:
         # filter-subquery → join-subquery → TVF agg is ONE statement
         # (the reference's planner nests Calc/Join under the window
         # agg exec node the same way).
-        while True:
-            mtvf = _re.search(
-                r"(?:TUMBLE|HOP|CUMULATE|SESSION)\s*\(\s*(?:DATA\s*=>\s*)?"
-                r"(?P<t>TABLE)\s*\(",
-                out, _re.IGNORECASE,
-            )
-            if mtvf is None:
-                break
-            open_idx = mtvf.end() - 1
-            close = _balanced(out, open_idx)
-            inner = out[open_idx + 1 : close - 1].strip()
-            if not _re.match(r"^SELECT\b", inner, _re.IGNORECASE):
+        pos = 0
+        while (tvf := parse_window_tvf(out, pos)) is not None:
+            if tvf.subquery is None:
+                pos = tvf.end
+                continue
+            if not _re.match(r"SELECT\b", tvf.subquery, _re.IGNORECASE):
                 raise ValueError(
                     "streaming TVF: TABLE ( ... ) argument must be a "
                     "SELECT subquery (a plain table name needs no "
                     "parentheses)"
                 )
-            view = self._stream_subquery_view(inner, _nested)
-            out = out[: mtvf.start("t")] + "TABLE " + view + out[close:]
+            out = tvf.with_table(
+                out, self._stream_subquery_view(tvf.subquery, _nested)
+            )
         fk0 = _statement_from_kw_early(out)
         if fk0 is not None:
             msub = _re.match(r"FROM\s*\(", out[fk0:], _re.IGNORECASE)
@@ -2597,22 +2593,9 @@ class StatementSet:
         return {"statements": len(self._inserts), "shared_subplans": len(cached)}
 
 
-_SSET_WIN_TVF = re.compile(
-    r"TABLE\s*\(\s*(?P<fn>TUMBLE|HOP|CUMULATE)\s*\(\s*(?:DATA\s*=>\s*)?"
-    r"TABLE\s+(?P<src>\w+)\s*,\s*"
-    r"(?:TIMECOL\s*=>\s*)?DESCRIPTOR\s*\(\s*(?P<ts>\w+)\s*\)\s*,\s*"
-    r"(?P<i1>INTERVAL\s*'[^']+'\s*\w+)\s*"
-    r"(?:,\s*(?P<i2>INTERVAL\s*'[^']+'\s*\w+)\s*)?\)\s*\)",
-    re.IGNORECASE,
-)
-_SSET_SESSION_TVF = re.compile(
-    r"TABLE\s*\(\s*SESSION\s*\(\s*(?:DATA\s*=>\s*)?"
-    r"TABLE\s+(?P<src>\w+)"
-    r"(?:\s+PARTITION\s+BY\s+(?P<keys>\w+(?:\s*,\s*\w+)*))?\s*,\s*"
-    r"(?:TIMECOL\s*=>\s*)?DESCRIPTOR\s*\(\s*(?P<ts>\w+)\s*\)\s*,\s*"
-    r"(?:GAP\s*=>\s*)?(?P<gap>INTERVAL\s*'[^']+'\s*\w+)\s*\)\s*\)",
-    re.IGNORECASE,
-)
+# the window-end columns a raw-row window stage segment carries; the
+# manifest records them so a resume never reads another layout
+_SSET_RAW_STAGE = ["__sset_fend", "__sset_lend"]
 _SSET_AGG_HEAD = re.compile(
     r"\b(?:COUNT|SUM|AVG|MIN|MAX|STDDEV\w*|VAR\w*|LISTAGG|COLLECT|"
     r"FIRST_VALUE|LAST_VALUE|APPROX_COUNT_DISTINCT)\s*\(",
@@ -2678,33 +2661,31 @@ class StreamStatementSet:
 
     - STATELESS statements (projection / filter / batch-dim or lookup
       joins) re-plan per micro-batch — exact by construction.
-    - TUMBLE window TVF aggregates (``GROUP BY window_start,
-      window_end``) run with real cross-batch semantics: raw source
-      rows stage per statement until the running watermark
-      (max event time − DDL delay, WindowOperator.java contract)
-      passes their window end, then the whole window is planned ONCE
-      over its complete row set and appended — never a per-batch
-      partial. Late rows whose window already closed are dropped,
-      exactly like the engine's append-mode window aggregate. Staged
-      state is bounded by (watermark delay + window size) of rows per
-      statement, the same horizon the engine's own window state keeps.
-    - HOP / CUMULATE TVF aggregates (r11): a row belongs to SEVERAL
-      windows, so rows stage until their LAST covering window closes
-      and emission post-filters the planned output on ``window_end``
-      (which the SELECT list must expose, un-aliased) to windows
-      closing in (previous watermark, current watermark] — every
-      window emits exactly once with its complete row set.
-    - Staging I/O (r12, VERDICT r11 #1): TUMBLE/HOP/CUMULATE staging
-      is APPEND-ONLY — each batch writes ONLY its own still-open rows
-      as a new parquet segment annotated with first/last covering
-      window end; segments drop whole once the watermark passes their
-      max end. Stage writes per batch are O(batch delta) — a row is
-      written to staging at most once per drain (the manifest's
-      ``staged_rows_cum`` is the receipt) — and emission planning
-      reads only rows covering a window closing this batch, skipping
-      batches whose watermark advance contains no window-end grid
-      point: the reference's per-record O(delta) slicing
-      (SlicingWindowOperator.java:101), not an O(horizon) rewrite.
+    - TUMBLE / HOP / CUMULATE TVF statements (``GROUP BY
+      window_start, window_end``, or row-level with window-scoped
+      OVER) run with real cross-batch semantics on one staging path.
+      The TVF is read once by ``sql_clauses.parse_window_tvf``, and its
+      windows are one (slide, size, offset) grid — TUMBLE is slide =
+      size; CUMULATE keeps its step/span grid. Each batch writes only
+      its own still-open rows to an APPEND-ONLY parquet segment,
+      annotated with the first and last window end covering each row,
+      so stage writes are O(batch delta): a row is staged at most once
+      per drain (the manifest's ``staged_rows_cum`` is the receipt).
+      Once the running watermark (max event time − DDL delay,
+      WindowOperator.java contract) passes a window end, the window is
+      planned ONCE over its complete row set and appended — never a
+      per-batch partial; batches whose watermark advance holds no
+      window-end grid point plan nothing, and segments drop whole once
+      the watermark passes their last end (SlicingWindowOperator.java:
+      101). Rows whose last window already closed are dropped, exactly
+      like the engine's append-mode window aggregate. Where a row can
+      fall in several windows (slide < size, or CUMULATE) the planned
+      output is post-filtered on ``window_end``, which the SELECT list
+      must then expose un-aliased. Statements made only of group keys
+      and plain COUNT/SUM/MIN/MAX/AVG stage one partial accumulator
+      row per open (window, keys) group instead of raw rows and merge
+      the partials at emission (MiniBatchIncrementalGroupAggFunction.
+      java); the choice follows the statement's shape.
     - SESSION TVF aggregates (r11): sessions MERGE, so a row's window
       identity isn't fixed on arrival — assignment is recomputed over
       staged ∪ new rows each batch, and a session is final (emitted
@@ -2748,16 +2729,16 @@ class StreamStatementSet:
 
     def __init__(self, tenv: "TableEnvironment"):
         self._tenv = tenv
-        # (sink, collist | None, body SQL, source, kind, tumble-info)
+        # (sink, collist | None, body SQL, source, kind, window info)
         self._inserts: list[tuple[str, str | None, str, str, str, dict | None]] = []
 
     def _classify(
         self, unquoted: str, body: str, src_name: str
     ) -> tuple[str, dict | None]:
-        """Admission gate: 'stateless' | 'tumble' (exact under the
-        per-batch model) or ValueError for shapes whose per-batch
-        re-planning would emit wrong (partial / duplicated) results
-        under a multi-batch drain. Keyword scans run on the
+        """Admission gate: 'stateless' | 'window' | 'session' (exact
+        under the per-batch model) or ValueError for shapes whose
+        per-batch re-planning would emit wrong (partial / duplicated)
+        results under a multi-batch drain. Keyword scans run on the
         quote-stripped text; the TVF parse needs the RAW body (the
         INTERVAL literal lives in quotes)."""
         if re.search(r"\bMATCH_RECOGNIZE\b", unquoted, re.IGNORECASE):
@@ -2787,61 +2768,13 @@ class StreamStatementSet:
             )
         gm = re.search(r"\bGROUP\s+BY\b(?P<keys>.*)$", unquoted,
                        re.IGNORECASE | re.DOTALL)
-        sm = _SSET_SESSION_TVF.search(body)
-        if sm is not None and overs:
-            raise ValueError(
-                "streaming statement set: OVER on a SESSION TVF is not "
-                "supported — sessions merge, so a row's window identity "
-                "isn't fixed; run it as its own stream_query"
-            )
-        if sm is not None:
-            # SESSION windows MERGE (a row's window identity isn't
-            # fixed on arrival — SessionWindowAssigner.java merging
-            # windows), but the staging model closes them exactly:
-            # rows of still-open sessions stay staged; a session is
-            # FINAL once the watermark passes max(ts)+gap, because any
-            # surviving (non-late) future row has ts+gap > wm ≥ that
-            # session's end and therefore starts a NEW session — the
-            # reference's purge-on-fire contract (WindowOperator.java).
-            keys_txt = gm.group("keys") if gm else ""
-            if not (re.search(r"\bwindow_start\b", keys_txt, re.IGNORECASE)
-                    and re.search(r"\bwindow_end\b", keys_txt,
-                                  re.IGNORECASE)):
-                raise ValueError(
-                    "streaming statement set: a SESSION TVF statement "
-                    "must GROUP BY window_start, window_end so every "
-                    "emitted row is a watermark-closed session"
-                )
-            wm = self._tenv._watermarks.get(src_name)
-            if wm is None:
-                raise ValueError(
-                    f"streaming statement set: source {src_name!r} "
-                    "needs a WATERMARK declaration — session closure "
-                    "is watermark-driven"
-                )
-            if sm.group("ts").lower() != wm[0].lower():
-                raise ValueError(
-                    f"streaming statement set: DESCRIPTOR"
-                    f"({sm.group('ts')}) must be the source's "
-                    f"event-time attribute {wm[0]!r}"
-                )
-            from flink_1_16_0_src_spark.sql_clauses import _interval_str
+        from flink_1_16_0_src_spark.sql_clauses import (
+            _split_top_commas,
+            parse_window_tvf,
+        )
 
-            return "session", {
-                "ts": wm[0],
-                "gap": _interval_str(sm.group("gap")),
-                "keys": [k.strip()
-                         for k in (sm.group("keys") or "").split(",")
-                         if k.strip()],
-            }
-        if re.search(r"TABLE\s*\(\s*SESSION\s*\(", unquoted, re.IGNORECASE):
-            raise ValueError(
-                "streaming statement set: unsupported SESSION TVF form "
-                "— expected TABLE(SESSION(TABLE src [PARTITION BY k], "
-                "DESCRIPTOR(ts), INTERVAL gap))"
-            )
-        tm = _SSET_WIN_TVF.search(body)
-        if tm is None:
+        tvf = parse_window_tvf(body)
+        if tvf is None:
             if overs:
                 raise ValueError(
                     "streaming statement set: OVER aggregates are "
@@ -2860,6 +2793,18 @@ class StreamStatementSet:
                     "CUMULATE window (GROUP BY window_start, window_end)"
                 )
             return "stateless", None
+        if (tvf.table or "").lower() != src_name.lower():
+            raise ValueError(
+                f"streaming statement set: the {tvf.fn} TVF must read the "
+                f"streaming source directly (TABLE {src_name}) — stage a "
+                "subquery or another table through its own stream_query"
+            )
+        if tvf.fn == "SESSION" and overs:
+            raise ValueError(
+                "streaming statement set: OVER on a SESSION TVF is not "
+                "supported — sessions merge, so a row's window identity "
+                "isn't fixed; run it as its own stream_query"
+            )
         for _s, _e, spec in overs:
             pspec = re.search(
                 r"PARTITION\s+BY\s+(?P<p>.*?)(?:\bORDER\s+BY\b|$)",
@@ -2876,7 +2821,7 @@ class StreamStatementSet:
                     "stateful across micro-batches"
                 )
         keys = gm.group("keys") if gm else ""
-        if gm is None:
+        if gm is None and tvf.fn != "SESSION":
             # row-level windowed statement (window Top-N / enrichment):
             # exact under raw-row staging — each window plans ONCE over
             # its complete row set — provided no bare aggregate
@@ -2894,10 +2839,14 @@ class StreamStatementSet:
                 )
         elif not (re.search(r"\bwindow_start\b", keys, re.IGNORECASE)
                   and re.search(r"\bwindow_end\b", keys, re.IGNORECASE)):
+            # SESSION windows MERGE (a row's window identity isn't
+            # fixed on arrival), but the staging model still closes
+            # them exactly when the statement groups on the session
             raise ValueError(
-                "streaming statement set: a window TVF statement must "
+                f"streaming statement set: a {tvf.fn} TVF statement must "
                 "GROUP BY window_start, window_end so every emitted row "
-                "is a watermark-closed window"
+                "is a watermark-closed "
+                + ("session" if tvf.fn == "SESSION" else "window")
             )
         wm = self._tenv._watermarks.get(src_name)
         if wm is None:
@@ -2906,58 +2855,63 @@ class StreamStatementSet:
                 "WATERMARK declaration — window closure is "
                 "watermark-driven"
             )
-        if tm.group("ts").lower() != wm[0].lower():
+        if tvf.ts.lower() != wm[0].lower():
             raise ValueError(
-                f"streaming statement set: DESCRIPTOR({tm.group('ts')}) "
+                f"streaming statement set: DESCRIPTOR({tvf.ts}) "
                 f"must be the source's event-time attribute {wm[0]!r}"
             )
-        from flink_1_16_0_src_spark.sql_clauses import _interval_str, _split_top_commas
+        if tvf.fn == "SESSION":
+            # a session is FINAL once the watermark passes max(ts)+gap:
+            # any surviving (non-late) future row has ts+gap > wm ≥ that
+            # session's end and therefore starts a NEW session — the
+            # reference's purge-on-fire contract (WindowOperator.java)
+            return "session", {"ts": wm[0], "gap": tvf.gap, "keys": tvf.keys}
+        import pandas as pd
 
-        fn = tm.group("fn").upper()
-        if fn == "TUMBLE":
-            return "tumble", {
-                "ts": wm[0],
-                "size": _interval_str(tm.group("i1")),
-                "offset": (_interval_str(tm.group("i2"))
-                           if tm.group("i2") else None),
-                "acc": self._parse_win_acc(body, tm),
-            }
-        # HOP(slide, size) / CUMULATE(step, max): a row belongs to
-        # SEVERAL windows, so emission post-filters the planned output
-        # on window_end — the SELECT list must expose it
-        if not tm.group("i2"):
+        def us(iv: str | None) -> int:
+            return int(pd.Timedelta(iv).total_seconds() * 1e6) if iv else 0
+
+        # one (slide, size, offset) grid: TUMBLE is slide = size
+        # (SliceAssigners.java:61-94); CUMULATE's slide is its step
+        size = us(tvf.size)
+        slide = us(tvf.step or tvf.slide) or size
+        if slide > size:
+            # rows between windows would explode into no window end and
+            # fail the drain mid-stream; Spark's window() rejects it too
             raise ValueError(
-                f"streaming statement set: {fn} takes two INTERVAL "
-                "arguments"
+                f"streaming statement set: {tvf.fn}'s "
+                f"{'step' if tvf.step else 'slide'} must not exceed its size"
             )
-        head = re.split(r"\bFROM\b", unquoted, maxsplit=1,
-                        flags=re.IGNORECASE)[0]
-        # Emission post-filters the PLANNED output on a column literally
-        # named window_end, so admission must guarantee a BARE window_end
-        # projection item — ``SELECT window_end AS we`` used to pass the
-        # old \bwindow_end\b scan and then abort the drain mid-stream
-        # with an unresolved column (ADVICE r11 #3).
-        items = _split_top_commas(
-            re.sub(r"^\s*SELECT\s+(DISTINCT\s+)?", "", head, flags=re.IGNORECASE)
-        )
-        if not any(
-            re.fullmatch(r"(?:\w+\.)?window_end", it, re.IGNORECASE)
-            for it in items
-        ):
-            raise ValueError(
-                f"streaming statement set: a {fn} statement must SELECT "
-                "window_end as a bare (un-aliased) column — emission "
-                "filters closed windows on it"
+        multi = tvf.fn == "CUMULATE" or slide < size
+        if multi:
+            # a row belongs to SEVERAL windows, so raw-row emission
+            # post-filters the PLANNED output on a column literally
+            # named window_end: admission must guarantee a BARE
+            # window_end projection item — ``SELECT window_end AS we``
+            # would abort the drain mid-stream with an unresolved
+            # column (ADVICE r11 #3)
+            head = re.split(r"\bFROM\b", unquoted, maxsplit=1,
+                            flags=re.IGNORECASE)[0]
+            items = _split_top_commas(
+                re.sub(r"^\s*SELECT\s+(DISTINCT\s+)?", "", head,
+                       flags=re.IGNORECASE)
             )
-        return "win_multi", {
-            "ts": wm[0],
-            "fn": fn,
-            "i1": _interval_str(tm.group("i1")),
-            "i2": _interval_str(tm.group("i2")),
-            "acc": self._parse_win_acc(body, tm),
+            if not any(
+                re.fullmatch(r"(?:\w+\.)?window_end", it, re.IGNORECASE)
+                for it in items
+            ):
+                raise ValueError(
+                    f"streaming statement set: a {tvf.fn} statement must "
+                    "SELECT window_end as a bare (un-aliased) column — "
+                    "emission filters closed windows on it"
+                )
+        return "window", {
+            "ts": wm[0], "fn": tvf.fn, "size": size, "slide": slide,
+            "offset": us(tvf.offset), "multi": multi,
+            "acc": self._parse_win_acc(body, tvf),
         }
 
-    def _parse_win_acc(self, body: str, tm: "re.Match") -> dict | None:
+    def _parse_win_acc(self, body: str, tvf) -> dict | None:
         """Decompose a TUMBLE/HOP/CUMULATE statement into PARTIAL ACCUMULATORS
         (r12, VERDICT r11 #1c): when every SELECT item is a group key
         or a plain COUNT/SUM/MIN/MAX/AVG aggregate, staging keeps ONE
@@ -2970,7 +2924,7 @@ class StreamStatementSet:
         Returns None (raw-row staging) for shapes the merge cannot
         express: expressions AROUND aggregates, HAVING, DISTINCT-agg,
         non-column group keys, un-aliased aggregates."""
-        head = body[:tm.start()]
+        head = body[:tvf.start]
         hm = re.fullmatch(r"\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+", head,
                           re.IGNORECASE | re.DOTALL)
         if hm is None:
@@ -2978,7 +2932,7 @@ class StreamStatementSet:
         rm = re.fullmatch(
             r"\s*(?:WHERE\s+(?P<w>.*?)\s+)?"
             r"GROUP\s+BY\s+(?P<g>[\w\s,\.]+?)\s*;?\s*",
-            body[tm.end():], re.IGNORECASE | re.DOTALL,
+            body[tvf.end:], re.IGNORECASE | re.DOTALL,
         )
         if rm is None:
             return None  # HAVING / exotic tail → raw-row staging
@@ -3030,20 +2984,19 @@ class StreamStatementSet:
 
     def _acc_stage_emit(
         self, rows, acc: dict, idx: int, batch_id, state: dict,
-        old_stages: list, lo, hi, bspark, batch_view: str,
-        sink_name: str, collist, emit_fn, stage_fn, ep_us,
-        grid: int | None = None, rem: int = 0, grid_exact: bool = True,
+        old_stages: list, lo, hi, plan_needed: bool, bspark,
+        sink_name: str, collist, emit_fn, stage_fn,
     ) -> None:
-        """Shared partial-accumulator stage+emit (r12, VERDICT r11 #1c)
-        for TUMBLE/HOP/CUMULATE: ``rows`` already carries
-        window_start/window_end (exploded per covering window for
-        HOP/CUMULATE) and the WHERE/late filters. Fold the batch into
-        ONE partial row per (window, keys) group (COUNT/SUM merge by
-        sum, MIN/MAX by min/max, AVG as a sum+count pair), stage the
-        partials as append-only segments, merge partials of windows
-        closing in (lo, hi] and emit — exact, no output post-filter,
-        no raw-row re-planning. ``grid``/``rem`` drive the
-        no-window-boundary planning skip when ``grid_exact``."""
+        """Partial-accumulator stage+emit (r12, VERDICT r11 #1c) for
+        TUMBLE/HOP/CUMULATE: ``rows`` already carries
+        window_start/window_end (one row per covering window) and the
+        WHERE/late filters. Fold the batch into ONE partial row per
+        (window, keys) group (COUNT/SUM merge by sum, MIN/MAX by
+        min/max, AVG as a sum+count pair), stage the partials as
+        append-only segments, merge partials of windows closing in
+        (lo, hi] and emit — exact, no output post-filter, no raw-row
+        re-planning. ``plan_needed`` is False when no window closes
+        in (lo, hi]."""
         paggs, aidx = [], []
         for i2_, it in enumerate(acc["sel"]):
             if it["kind"] != "agg":
@@ -3061,12 +3014,6 @@ class StreamStatementSet:
         pb = (rows.groupBy(*gb).agg(*paggs) if paggs
               else rows.select(*gb).distinct()).persist()
         segs = state["stage"][idx] or []
-        plan_needed = hi is not None
-        if hi is not None and lo is not None and grid and grid_exact:
-            hi_us, lo_us = ep_us(hi), ep_us(lo)
-            e_hi_us = hi_us - ((hi_us - rem) % grid)
-            if e_hi_us <= lo_us:
-                plan_needed = False
         if plan_needed:
             rel = pb
             if segs:
@@ -3249,10 +3196,10 @@ class StreamStatementSet:
         batch_view = f"__sset_batch_{next(_STREAM_SUB_SEQ)}"
         pat = rf"(?<![\w.]){re.escape(src_name)}(?![\w.])"
         win_idx = [i for i, it in enumerate(inserts)
-                   if it[4] in ("tumble", "win_multi", "session")]
+                   if it[4] in ("window", "session")]
         wm_spec = tenv._watermarks.get(src_name)
         # stage value per windowed statement: a LIST of append-only
-        # segment entries {dir, max_end, rows} for tumble/win_multi
+        # segment entries {dir, max_end, rows} for window statements
         # (r12 — written once per batch, dropped whole when the
         # watermark passes max_end); a single re-staged dir for
         # SESSION (merging windows need the full open-session row set
@@ -3313,6 +3260,18 @@ class StreamStatementSet:
                         "full-rewrite format — drain it with the old "
                         "build or start a fresh checkpoint dir"
                     )
+                info_ = inserts[i_][5]
+                if (v_ and m.get("raw_stage_columns") != _SSET_RAW_STAGE
+                        and info_["fn"] == "TUMBLE" and not info_["acc"]):
+                    # raw TUMBLE rows once staged one __sset_wend column;
+                    # read with today's schema they would come back
+                    # NULL-ended and drop without a trace
+                    raise ValueError(
+                        "streaming statement set: checkpoint "
+                        f"{checkpoint!r} staged TUMBLE rows in the "
+                        "single-end __sset_wend layout — drain it with "
+                        "the old build or start a fresh checkpoint dir"
+                    )
         delay = _pd.Timedelta(wm_spec[1]) if win_idx else None
         pend_root = (os.path.join(checkpoint, "sset_pending")
                      if checkpoint else None)
@@ -3365,6 +3324,7 @@ class StreamStatementSet:
                     "stage": state["stage"],
                     "pending": state["pending"],
                     "staged_rows_cum": state["staged_rows_cum"],
+                    "raw_stage_columns": _SSET_RAW_STAGE,
                 }, fh)
             os.replace(tmp, mpath)
 
@@ -3457,6 +3417,14 @@ class StreamStatementSet:
                 partitioned_by=parts,
             )
 
+        def _bind(parts, view):
+            """The statement text (split on its string literals) with
+            the source table read from ``view``."""
+            return "".join(
+                p if i % 2 else re.sub(pat, view, p, flags=re.IGNORECASE)
+                for i, p in enumerate(parts)
+            )
+
         def fn(batch_df, batch_id):
             if (state["last_batch"] is not None
                     and batch_id <= state["last_batch"]):
@@ -3485,124 +3453,99 @@ class StreamStatementSet:
                 for idx, (sink_name, collist, body, _s, kind, info) in enumerate(inserts):
                     parts = re.split(r"('(?:[^']|'')*')", body)
                     if kind == "stateless":
-                        sub = "".join(
-                            p if i % 2 else re.sub(pat, batch_view, p,
-                                                   flags=re.IGNORECASE)
-                            for i, p in enumerate(parts)
-                        )
-                        _emit(sink_name, collist, sub, bspark,
+                        _emit(sink_name, collist, _bind(parts, batch_view), bspark,
                               slot=(batch_id, idx))
                         continue
-                    if kind == "win_multi":
-                        # HOP / CUMULATE: a row belongs to SEVERAL
-                        # windows. r12 staging is APPEND-ONLY (VERDICT
-                        # r11 next-round #1): each batch writes ONLY
-                        # its own still-open rows as a new stage
-                        # SEGMENT annotated with first/last covering
-                        # window end; a segment drops whole when the
-                        # watermark passes its max last-end. Emission
-                        # plans the statement over (new rows ∪ live
-                        # segments) FILTERED to rows covering a window
-                        # closing in (wm_prev, wm_new] and post-filters
-                        # output on window_end — each window emits
-                        # once, complete (a window ending at e keeps
-                        # exactly the rows with fend <= e <= lend).
-                        # Batches where (wm_prev, wm_new] contains no
+                    if kind == "window":
+                        # TUMBLE / HOP / CUMULATE over one window-end
+                        # grid — TUMBLE is HOP with slide = size
+                        # (SliceAssigners.java:61-94). Staging is
+                        # APPEND-ONLY (r12): each batch writes ONLY its
+                        # own still-open rows as a stage SEGMENT
+                        # annotated with the first and last window end
+                        # covering each row; a segment drops whole when
+                        # the watermark passes its max last end.
+                        # Emission plans the statement over (new rows ∪
+                        # live segments) FILTERED to rows covering a
+                        # window closing in (wm_prev, wm_new] — a window
+                        # ending at e keeps exactly the rows with fend <=
+                        # e <= lend, and late rows (lend <= wm_prev)
+                        # drop. Batches where (wm_prev, wm_new] holds no
                         # window-end grid point skip planning entirely.
                         # Write per batch = O(batch delta), compute =
                         # O(rows of closing windows) — the reference's
                         # per-record O(delta) slicing
-                        # (SlicingWindowOperator.java:101), not
-                        # O(open horizon) per batch.
+                        # (SlicingWindowOperator.java:101).
                         tsu = F.unix_micros(F.col(info["ts"]))
-                        i1_us = int(_pd.Timedelta(info["i1"]).total_seconds() * 1e6)
-                        i2_us = int(_pd.Timedelta(info["i2"]).total_seconds() * 1e6)
-                        if info["fn"] == "HOP":
-                            # window ends = k*slide + size; a row at t
-                            # covers ends in (t, t + size]
-                            grid, rem = i1_us, i2_us % i1_us
-                            lend_us = (tsu - (tsu % F.lit(i1_us))) + F.lit(i2_us)
-                            d = tsu - F.lit(i2_us)
-                            fend_us = (d - F.pmod(d, F.lit(i1_us))) \
-                                + F.lit(i1_us + i2_us)
+                        size, slide = info["size"], info["slide"]
+                        if info["fn"] == "CUMULATE":
+                            # span [S, S + size) with S on the size
+                            # grid; slice ends S + j*step (slide holds
+                            # the step), the first one > t
+                            wstart = tsu - F.pmod(tsu, F.lit(size))
+                            lend_us = wstart + F.lit(size)
+                            fend_us = (tsu - F.pmod(tsu - wstart, F.lit(slide))
+                                       + F.lit(slide))
+                            rem, grid_exact = 0, size % slide == 0
                         else:
-                            # CUMULATE(step=i1, max=i2): span start
-                            # S = floor(t/max)*max, slice ends
-                            # S + j*step for j >= 1, first end > t
-                            grid, rem = i1_us, 0
-                            span = tsu - (tsu % F.lit(i2_us))
-                            off = tsu - span
-                            lend_us = span + F.lit(i2_us)
-                            fend_us = span + (off - (off % F.lit(i1_us))) \
-                                + F.lit(i1_us)
-                        if info.get("acc"):
-                            # PARTIAL-ACCUMULATOR staging for HOP /
-                            # CUMULATE (r12, VERDICT r11 #1c extended):
-                            # explode each row into its covering
-                            # windows, fold the batch into ONE partial
-                            # row per (window, keys) group, stage the
-                            # partials, and merge at emission — stage
-                            # I/O O(open groups × windows-per-row), no
-                            # raw-row re-planning, no output
-                            # post-filter (groups key on the window).
-                            acc = info["acc"]
-                            end_us = F.explode(
-                                F.sequence(fend_us, lend_us,
-                                           F.lit(i1_us))
-                            )
-                            rows = batch_df.withColumn("__sset_eus",
-                                                       end_us)
-                            ws_us = (
-                                F.col("__sset_eus") - F.lit(i2_us)
-                                if info["fn"] == "HOP"
-                                else tsu - (tsu % F.lit(i2_us))
-                            )
+                            # window starts k*slide + offset; a row at t
+                            # covers the ends in (t, t + size]
+                            off = info["offset"]
+                            lend_us = (tsu - F.pmod(tsu - F.lit(off), F.lit(slide))
+                                       + F.lit(size))
+                            fend_us = (tsu - F.pmod(tsu - F.lit(size + off),
+                                                    F.lit(slide))
+                                       + F.lit(slide))
+                            rem, grid_exact = (off + size) % slide, True
+                        lo, hi = wm_prev, wm_new
+                        plan_needed = hi is not None
+                        if hi is not None and lo is not None and grid_exact:
+                            # largest window-end grid point <= hi; none
+                            # in (lo, hi] → no window closes this batch
+                            hi_us = _ep_us(hi)
+                            if hi_us - (hi_us - rem) % slide <= _ep_us(lo):
+                                plan_needed = False
+                        if info["acc"]:
+                            # PARTIAL-ACCUMULATOR staging (r12, VERDICT
+                            # r11 #1c): explode each row into its
+                            # covering windows, fold the batch into ONE
+                            # partial row per (window, keys) group,
+                            # stage the partials, and merge at emission
+                            # — stage I/O O(open groups × windows per
+                            # row) at ANY row rate, no raw-row
+                            # re-planning, no output post-filter (groups
+                            # key on the window)
+                            # (MiniBatchIncrementalGroupAggFunction.java)
+                            eus = F.col("__sset_eus")
                             rows = (
-                                rows
-                                .withColumn("window_start",
-                                            F.timestamp_micros(ws_us))
-                                .withColumn(
-                                    "window_end",
-                                    F.timestamp_micros(
-                                        F.col("__sset_eus")
-                                    ),
-                                )
+                                batch_df
+                                .withColumn("__sset_eus", F.explode(
+                                    F.sequence(fend_us, lend_us, F.lit(slide))
+                                ))
+                                .withColumn("window_start", F.timestamp_micros(
+                                    wstart if info["fn"] == "CUMULATE"
+                                    else eus - F.lit(size)
+                                ))
+                                .withColumn("window_end", F.timestamp_micros(eus))
                                 .drop("__sset_eus")
                             )
-                            if acc["where"]:
-                                rows = rows.where(F.expr(acc["where"]))
-                            if wm_prev is not None:
-                                rows = rows.where(
-                                    F.col("window_end") > F.lit(wm_prev)
-                                )
+                            if info["acc"]["where"]:
+                                rows = rows.where(F.expr(info["acc"]["where"]))
+                            if lo is not None:
+                                rows = rows.where(F.col("window_end") > F.lit(lo))
                             self._acc_stage_emit(
-                                rows, acc, idx, batch_id,
-                                state, old_stages, wm_prev, wm_new,
-                                bspark, batch_view, sink_name, collist,
-                                _emit, _stage_segment, _ep_us,
-                                grid=i1_us, rem=rem,
-                                grid_exact=(info["fn"] == "HOP"
-                                            or i2_us % i1_us == 0),
+                                rows, info["acc"], idx, batch_id, state,
+                                old_stages, lo, hi, plan_needed, bspark,
+                                sink_name, collist, _emit, _stage_segment,
                             )
                             continue
-                        lcol, fcol = "__sset_lend", "__sset_fend"
+                        fcol, lcol = _SSET_RAW_STAGE
                         cur_new = (
                             batch_df
                             .withColumn(lcol, F.timestamp_micros(lend_us))
                             .withColumn(fcol, F.timestamp_micros(fend_us))
                         )
                         segs = state["stage"][idx] or []
-                        lo, hi = wm_prev, wm_new
-                        plan_needed = hi is not None
-                        if (hi is not None and lo is not None
-                                and (info["fn"] == "HOP"
-                                     or i2_us % i1_us == 0)):
-                            # largest window-end grid point <= hi; none
-                            # in (lo, hi] → no window closes this batch
-                            hi_us, lo_us = _ep_us(hi), _ep_us(lo)
-                            e_hi_us = hi_us - ((hi_us - rem) % grid)
-                            if e_hi_us <= lo_us:
-                                plan_needed = False
                         if plan_needed:
                             rel = cur_new
                             if segs:
@@ -3618,13 +3561,10 @@ class StreamStatementSet:
                                 wview = f"{batch_view}_w{idx}"
                                 rel.drop(lcol, fcol) \
                                     .createOrReplaceTempView(wview)
-                                sub = "".join(
-                                    p if i % 2 else re.sub(
-                                        pat, wview, p, flags=re.IGNORECASE)
-                                    for i, p in enumerate(parts)
-                                )
 
                                 def post(df, lo=lo, hi=hi):
+                                    # a row may sit in windows closing
+                                    # later or earlier: keep (lo, hi]
                                     cond = F.col("window_end") <= F.lit(hi)
                                     if lo is not None:
                                         cond = cond & (
@@ -3632,8 +3572,9 @@ class StreamStatementSet:
                                         )
                                     return df.where(cond)
 
-                                _emit(sink_name, collist, sub, bspark,
-                                      post, slot=(batch_id, idx))
+                                _emit(sink_name, collist, _bind(parts, wview), bspark,
+                                      post if info["multi"] else None,
+                                      slot=(batch_id, idx))
                             rel.unpersist()
                         keep_new = (
                             cur_new.where(F.col(lcol) > F.lit(hi))
@@ -3717,12 +3658,7 @@ class StreamStatementSet:
                             wview = f"{batch_view}_w{idx}"
                             closed.drop(scol, "__sset_sid") \
                                 .createOrReplaceTempView(wview)
-                            sub = "".join(
-                                p if i % 2 else re.sub(
-                                    pat, wview, p, flags=re.IGNORECASE)
-                                for i, p in enumerate(parts)
-                            )
-                            _emit(sink_name, collist, sub, bspark,
+                            _emit(sink_name, collist, _bind(parts, wview), bspark,
                                   slot=(batch_id, idx))
                         new_stage = os.path.join(
                             stage_root, f"s{idx}_b{batch_id}"
@@ -3733,117 +3669,6 @@ class StreamStatementSet:
                         if stg is not None:
                             old_stages.append(stg)
                         state["stage"][idx] = new_stage
-                        continue
-                    if kind == "tumble" and info.get("acc"):
-                        # PARTIAL-ACCUMULATOR staging (r12, VERDICT r11
-                        # #1c): the batch's rows fold into ONE partial
-                        # row per (window, keys) group before staging
-                        # (COUNT/SUM/MIN/MAX merge by sum/min/max, AVG
-                        # by a sum+count pair) — stage I/O is O(open
-                        # groups) per batch at ANY row rate, the
-                        # reference's incremental accumulator contract
-                        # (MiniBatchIncrementalGroupAggFunction.java,
-                        # SlicingWindowOperator.java:101).
-                        acc = info["acc"]
-                        wargs = [F.col(info["ts"]), info["size"]]
-                        if info["offset"]:
-                            wargs += [info["size"], info["offset"]]
-                        win = F.window(*wargs)
-                        rows = (batch_df
-                                .withColumn("window_start", win.start)
-                                .withColumn("window_end", win.end))
-                        if acc["where"]:
-                            rows = rows.where(F.expr(acc["where"]))
-                        if wm_prev is not None:
-                            rows = rows.where(
-                                F.col("window_end") > F.lit(wm_prev)
-                            )
-                        size_us = int(
-                            _pd.Timedelta(info["size"]).total_seconds()
-                            * 1e6
-                        )
-                        off_us = (
-                            int(_pd.Timedelta(info["offset"])
-                                .total_seconds() * 1e6)
-                            if info["offset"] else 0
-                        )
-                        self._acc_stage_emit(
-                            rows, acc, idx, batch_id,
-                            state, old_stages, wm_prev, wm_new,
-                            bspark, batch_view, sink_name, collist,
-                            _emit, _stage_segment, _ep_us,
-                            grid=size_us, rem=off_us % size_us,
-                        )
-                        continue
-                    # TUMBLE window agg (raw-row staging — shapes the
-                    # accumulator decomposition can't express): each row
-                    # belongs to exactly ONE window; rows stage until it
-                    # closes, then the statement plans once over the
-                    # window's COMPLETE row set. r12 staging is
-                    # APPEND-ONLY (see the win_multi note): the batch's
-                    # open-window rows write ONCE as a segment; emission
-                    # reads new ∪ live segments row-filtered to windows
-                    # closing in (wm_prev, wm_new] (exact for TUMBLE —
-                    # no output post-filter needed), and segments drop
-                    # whole once the watermark passes their max end.
-                    wargs = [F.col(info["ts"]), info["size"]]
-                    if info["offset"]:
-                        wargs += [info["size"], info["offset"]]
-                    # window() only resolves under Project/Aggregate —
-                    # tag the window end as a column, filter on that
-                    wcol = "__sset_wend"
-                    cur_new = batch_df.withColumn(wcol, F.window(*wargs).end)
-                    if wm_prev is not None:
-                        # late rows of already-emitted windows drop —
-                        # append-mode window-agg semantics
-                        cur_new = cur_new.where(F.col(wcol) > F.lit(wm_prev))
-                    segs = state["stage"][idx] or []
-                    lo, hi = wm_prev, wm_new
-                    plan_needed = hi is not None
-                    if hi is not None and lo is not None:
-                        # no window-end grid point in (lo, hi] → no
-                        # window closes this batch; skip even reading
-                        # the segments
-                        size_us = int(
-                            _pd.Timedelta(info["size"]).total_seconds() * 1e6
-                        )
-                        off_us = (
-                            int(_pd.Timedelta(info["offset"])
-                                .total_seconds() * 1e6)
-                            if info["offset"] else 0
-                        )
-                        hi_us, lo_us = _ep_us(hi), _ep_us(lo)
-                        e_hi_us = hi_us - ((hi_us - off_us % size_us)
-                                           % size_us)
-                        if e_hi_us <= lo_us:
-                            plan_needed = False
-                    if plan_needed:
-                        closed = cur_new
-                        if segs:
-                            closed = closed.unionByName(
-                                bspark.read.schema(cur_new.schema)
-                                .parquet(*[s_["dir"] for s_ in segs])
-                            )
-                        closed = closed.where(F.col(wcol) <= F.lit(hi))
-                        if lo is not None:
-                            closed = closed.where(F.col(wcol) > F.lit(lo))
-                        closed = closed.persist()
-                        if closed.limit(1).count():
-                            wview = f"{batch_view}_w{idx}"
-                            closed.drop(wcol).createOrReplaceTempView(wview)
-                            sub = "".join(
-                                p if i % 2 else re.sub(
-                                    pat, wview, p, flags=re.IGNORECASE)
-                                for i, p in enumerate(parts)
-                            )
-                            _emit(sink_name, collist, sub, bspark,
-                              slot=(batch_id, idx))
-                        closed.unpersist()
-                    keep_new = (cur_new.where(F.col(wcol) > F.lit(hi))
-                                if hi is not None else cur_new)
-                    state["stage"][idx] = _stage_segment(
-                        keep_new, wcol, idx, batch_id, segs, hi, old_stages
-                    )
                 if win_idx:
                     state["wm"] = wm_new
                 # durability point: pending outputs + staging +

@@ -167,6 +167,147 @@ def _interval_str(arg: str) -> str:
     return f"{qty} {unit}"
 
 
+# interval parameters of each window TVF, in positional order, and how
+# many of them a call must give
+_TVF_PARAMS = {
+    "TUMBLE": ("SIZE", "OFFSET"),
+    "HOP": ("SLIDE", "SIZE", "OFFSET"),
+    "CUMULATE": ("STEP", "SIZE"),
+    "SESSION": ("GAP",),
+}
+_TVF_REQUIRED = {"TUMBLE": 1, "HOP": 2, "CUMULATE": 2, "SESSION": 1}
+
+
+@dataclass
+class WindowTVF:
+    """One window-TVF call as :func:`parse_window_tvf` reads it.
+    Intervals are Spark duration strings (``'30 minutes'``); those the
+    function does not take, or the call leaves out, are None."""
+
+    start: int  # span of the whole TABLE(fn(...)) call in the statement
+    end: int
+    fn: str
+    table: str | None  # the table argument, None for a subquery
+    subquery: str | None  # the SELECT of a TABLE (SELECT ...) argument
+    keys: list[str]  # PARTITION BY keys
+    ts: str  # the DESCRIPTOR column
+    table_span: tuple[int, int]  # TABLE t / TABLE (...) in the statement
+    size: str | None = None
+    slide: str | None = None
+    step: str | None = None
+    gap: str | None = None
+    offset: str | None = None
+
+    def with_table(self, sql: str, name: str) -> str:
+        """``sql`` with this call's table argument replaced by ``TABLE
+        name``."""
+        a, b = self.table_span
+        return f"{sql[:a]}TABLE {name}{sql[b:]}"
+
+
+def _tvf_arity(fn: str, n: int) -> ValueError:
+    lo, params = _TVF_REQUIRED[fn], _TVF_PARAMS[fn]
+    takes = f"{lo} to {len(params)}" if len(params) > lo else str(lo)
+    return ValueError(
+        f"{fn} takes {takes} INTERVAL argument(s) ({', '.join(params)}) "
+        f"after the table and DESCRIPTOR, got {n}"
+    )
+
+
+def parse_window_tvf(sql: str, pos: int = 0) -> WindowTVF | None:
+    """The first window-TVF call at or after ``pos`` in ``sql`` (string
+    literals skipped), or None. The one reader of the clause: batch SQL,
+    ``stream_query`` and the streaming statement set all take its spec.
+
+    Supported spellings (SqlTumbleTableFunction.java:37,
+    SqlHopTableFunction.java:38, SqlCumulateTableFunction.java:37,
+    SqlSessionTableFunction.java), each interval an ``INTERVAL 'n'
+    UNIT`` literal:
+
+    - ``TABLE(TUMBLE(TABLE t, DESCRIPTOR(ts), size [, offset]))``
+    - ``TABLE(HOP(TABLE t, DESCRIPTOR(ts), slide, size [, offset]))``
+    - ``TABLE(CUMULATE(TABLE t, DESCRIPTOR(ts), step, size))``
+    - ``TABLE(SESSION(TABLE t [PARTITION BY k, ...], DESCRIPTOR(ts),
+      gap))``
+
+    So TUMBLE takes 1–2 intervals, HOP 2–3, CUMULATE 2 and SESSION 1.
+    Any argument may be named instead, in any order after the
+    positional ones: ``DATA =>``, ``TIMECOL =>``, ``SIZE =>``,
+    ``SLIDE =>``, ``STEP =>``, ``GAP =>``, ``OFFSET =>``. ``TABLE t``
+    may be ``TABLE (SELECT ...)``. Keywords are case-insensitive. A
+    call with too many or too few intervals, an unknown or repeated
+    argument name, or a malformed argument raises ValueError."""
+    blanked = _LITERAL_SPLIT.sub(lambda m: " " * len(m.group()), sql)
+    head = _TVF_HEAD.search(blanked, pos)
+    if head is None:
+        return None
+    fn = head.group(1).upper()
+    names = ("DATA", "TIMECOL", *_TVF_PARAMS[fn])
+    open_ = head.end() - 1
+    close = _balanced(sql, open_)
+    outer = re.match(r"\s*\)", sql[close:])
+    if outer is None:
+        raise ValueError(f"{fn}: expected ')' closing TABLE( after the call")
+    body = sql[open_ + 1 : close - 1]
+    cuts = [i for i, c in enumerate(_top_level(body)) if c == ","]
+    parts: list[tuple[str, int]] = []  # (argument text, offset in sql)
+    for a, b in zip([-1, *cuts], [*cuts, len(body)]):
+        text = body[a + 1 : b]
+        if parts and re.fullmatch(r"\s*[\w.]+\s*", text) and re.search(
+            r"\bPARTITION\s+BY\b", parts[-1][0], re.IGNORECASE
+        ):
+            # PARTITION BY k1, k2: the key list spans commas
+            parts[-1] = (f"{parts[-1][0]},{text}", parts[-1][1])
+            continue
+        parts.append((text.strip(), open_ + a + 2 + len(text) - len(text.lstrip())))
+    args: dict[str, tuple[str, int]] = {}  # name -> (text, offset in sql)
+    for k, (text, at) in enumerate(parts):
+        named = re.match(r"(\w+)\s*=>\s*", text)
+        if named:
+            name, at = named.group(1).upper(), at + named.end()
+            if name not in names:
+                raise ValueError(f"{fn} has no argument named {name}")
+        elif k >= len(names):
+            raise _tvf_arity(fn, len(parts) - 2)
+        elif any(n_ != names[j] for j, n_ in enumerate(args)):
+            raise ValueError(f"{fn}: a positional argument follows a named one")
+        else:
+            name = names[k]
+        if name in args:
+            raise ValueError(f"{fn}: argument {name} given twice")
+        args[name] = (text[named.end() if named else 0 :], at)
+    if any(p not in args for p in names[: 2 + _TVF_REQUIRED[fn]]):
+        if "DATA" not in args or "TIMECOL" not in args:
+            raise ValueError(f"{fn} needs a table and a DESCRIPTOR argument")
+        raise _tvf_arity(fn, len(args) - 2)
+
+    data, data_at = args["DATA"]
+    dm = re.match(r"TABLE(?:\s+(\w+)|\s*\()", data, re.IGNORECASE)
+    if dm is None:
+        raise ValueError(f"unsupported TVF table argument {data!r}")
+    if dm.group(1):
+        table, subquery, tend = dm.group(1), None, dm.end()
+    else:
+        tend = _balanced(sql, data_at + dm.end() - 1) - data_at
+        table, subquery = None, data[dm.end() : tend - 1].strip()
+    pm = re.fullmatch(r"\s*(?:PARTITION\s+BY\s+(.+))?", data[tend:],
+                      re.IGNORECASE | re.DOTALL)
+    if pm is None:
+        raise ValueError(f"unsupported TVF table argument {data!r}")
+    tm = re.fullmatch(r"DESCRIPTOR\s*\(\s*(\w+)\s*\)", args["TIMECOL"][0],
+                      re.IGNORECASE)
+    if tm is None:
+        raise ValueError(f"expected DESCRIPTOR(col), got {args['TIMECOL'][0]!r}")
+    return WindowTVF(
+        start=head.start(), end=close + outer.end(), fn=fn,
+        table=table, subquery=subquery,
+        keys=[k.strip() for k in (pm.group(1) or "").strip("() ").split(",") if k.strip()],
+        ts=tm.group(1), table_span=(data_at, data_at + tend),
+        **{p.lower(): _interval_str(args[p][0])
+           for p in _TVF_PARAMS[fn] if p in args},
+    )
+
+
 def rewrite_window_tvfs(
     spark: SparkSession,
     sql: str,
@@ -174,8 +315,9 @@ def rewrite_window_tvfs(
     keep_struct: bool = False,
     specs: list | None = None,
 ) -> str:
-    """Replace every ``TABLE(TUMBLE|HOP|CUMULATE|SESSION(...))``
-    occurrence with a temp view holding the windowed relation.
+    """Replace every ``TABLE(TUMBLE|HOP|CUMULATE|SESSION(...))`` call
+    (read by :func:`parse_window_tvf`) with a temp view holding the
+    windowed relation.
 
     ``resolver`` maps a table name to its DataFrame (default
     ``spark.table``). TableEnvironment.stream_query passes a STREAMING
@@ -194,73 +336,43 @@ def rewrite_window_tvfs(
     (SessionWindowAssigner.java:36 / merging windows)."""
     resolver = resolver or spark.table
     counter = 0
-    while True:
-        m = _TVF_HEAD.search(sql)
-        if m is None:
-            return sql
-        fn = m.group(1).upper()
-        inner_open = sql.index("(", m.end() - 1)
-        end_inner = _balanced(sql, inner_open)
-        # past the wrapping TABLE( ... )
-        end_outer = sql.index(")", end_inner)
-        args = _split_top_commas(sql[inner_open + 1 : end_inner - 1])
-
-        def named(prefix: str, a: str) -> str:
-            # 'DATA => TABLE t' / 'TIMECOL => DESCRIPTOR(ts)' named-arg forms
-            return re.sub(rf"^{prefix}\s*=>\s*", "", a, flags=re.IGNORECASE).strip()
-
-        table_arg = named("DATA", args[0])
-        tm = re.match(
-            r"TABLE\s+(\w+)(?:\s+PARTITION\s+BY\s+(.+))?$",
-            table_arg,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if tm is None:
-            raise ValueError(f"unsupported TVF table argument {table_arg!r}")
-        tbl, part_by = tm.group(1), tm.group(2)
-        dm = re.match(
-            r"DESCRIPTOR\s*\(\s*(\w+)\s*\)", named("TIMECOL", args[1]), re.IGNORECASE
-        )
-        if dm is None:
-            raise ValueError(f"expected DESCRIPTOR(col), got {args[1]!r}")
-        ts = dm.group(1)
-        df = resolver(tbl)
-        rest = args[2:]
+    while (tvf := parse_window_tvf(sql)) is not None:
+        fn, ts = tvf.fn, tvf.ts
+        if tvf.table is None:
+            raise ValueError(
+                "TVF table argument TABLE (SELECT ...): a subquery "
+                "argument is a stream_query surface — register the "
+                "SELECT as a view here"
+            )
+        df = resolver(tvf.table)
         # src + window parameters ride the spec so downstream lowerings
         # that regroup from the RAW stream (window Top-N) can re-window
         spec: dict = {"fn": fn, "ts": ts, "src": df}
         if fn == "TUMBLE":
-            size = _interval_str(named("SIZE", rest[0]))
-            offset = _interval_str(rest[1]) if len(rest) > 1 else None
-            spec.update(size=size, offset=offset)
-            out = windows.tumble(df, ts, size, offset, keep_struct=keep_struct)
+            spec.update(size=tvf.size, offset=tvf.offset)
+            out = windows.tumble(df, ts, tvf.size, tvf.offset, keep_struct=keep_struct)
         elif fn == "HOP":
-            slide = _interval_str(named("SLIDE", rest[0]))
-            size = _interval_str(named("SIZE", rest[1]))
-            offset = _interval_str(rest[2]) if len(rest) > 2 else None
-            spec.update(size=size, slide=slide, offset=offset)
-            out = windows.hop(df, ts, slide, size, offset, keep_struct=keep_struct)
+            spec.update(size=tvf.size, slide=tvf.slide, offset=tvf.offset)
+            out = windows.hop(
+                df, ts, tvf.slide, tvf.size, tvf.offset, keep_struct=keep_struct
+            )
         elif fn == "CUMULATE":
-            step = _interval_str(named("STEP", rest[0]))
-            max_size = _interval_str(named("SIZE", rest[1]))
-            out = windows.cumulate(df, ts, step, max_size)
-        else:  # SESSION
-            gap = _interval_str(named("GAP", rest[0]))
-            keys = [k.strip() for k in (part_by or "").split(",") if k.strip()]
-            if keep_struct and specs is not None:
-                # streaming: no per-row assignment — the caller regroups
-                # onto session_window(ts, gap) (merging state machine)
-                out = df
-                spec.update(gap=gap, keys=keys)
-            else:
-                out = windows.session(df, ts, gap, *keys)
-        view = f"__tvf_{fn.lower()}_{tbl}_{counter}"
+            out = windows.cumulate(df, ts, tvf.step, tvf.size)
+        elif keep_struct and specs is not None:
+            # streaming SESSION: no per-row assignment — the caller
+            # regroups onto session_window(ts, gap) (merging state machine)
+            out = df
+            spec.update(gap=tvf.gap, keys=tvf.keys)
+        else:
+            out = windows.session(df, ts, tvf.gap, *tvf.keys)
+        view = f"__tvf_{fn.lower()}_{tvf.table}_{counter}"
         counter += 1
         out.createOrReplaceTempView(view)
         if specs is not None:
             spec["view"] = view
             specs.append(spec)
-        sql = sql[: m.start()] + view + sql[end_outer + 1 :]
+        sql = sql[: tvf.start] + view + sql[tvf.end :]
+    return sql
 
 
 # ---- Legacy group windows (GROUP BY TUMBLE/HOP/SESSION) -------------------

@@ -51,6 +51,7 @@ _SLOW_TESTS = {
     "test_stream_statement_set_session_two_batches",
     "test_stream_statement_set_staging_writes_are_batch_delta",
     "test_stream_statement_set_window_agg_two_batches",
+    "test_statement_set_equals_stream_query",
     "test_streaming_over_sql_bare_lead_rejected",
     "test_streaming_temporal_fn_reregistration_uses_new_history",
     "test_temporal_join_batch_equals_stream",

@@ -244,7 +244,8 @@ SPAN_K = 3
 def _py_spans(corpus: list[str], k: int = SPAN_K, min_docs: int = 2, ids=None):
     """Spans per doc id (``ids``, default the corpus index). A gram is a
     hit when its distinct non-NULL doc ids number >= min_docs: the
-    ``countDistinct(id) >= min_docs`` rule, which ignores NULL ids."""
+    ``countDistinct(id) >= min_docs`` rule, which ignores NULL ids.
+    NULL-id documents get no spans."""
     ids = list(range(len(corpus))) if ids is None else ids
     wins = {}  # gram -> set(non-NULL doc ids)
     toks = [d.lower().strip().split() for d in corpus]
@@ -256,6 +257,8 @@ def _py_spans(corpus: list[str], k: int = SPAN_K, min_docs: int = 2, ids=None):
     dup = {g for g, gids in wins.items() if len(gids) >= min_docs}
     out = set()
     for i, t in zip(ids, toks):
+        if i is None:
+            continue
         hits = sorted(
             p for p in range(len(t) - k + 1) if " ".join(t[p : p + k]) in dup
         )
@@ -293,8 +296,9 @@ def test_duplicate_spans_match_python_oracle(spark, corpus):
 @pytest.mark.parametrize("min_docs", [1, 2])
 def test_duplicate_spans_null_doc_id_matches_count_distinct(spark, min_docs):
     """A gram seen only in the NULL-id document is no hit: countDistinct
-    ignores NULL ids, so the min/max fast path must too. The gram that
-    document shares with real ones still marks it."""
+    ignores NULL ids, so the min/max fast path must too. The NULL-id
+    document itself gets no span (remove_duplicate_spans could not
+    apply one to it)."""
     from flink_1_16_0_src_spark.pipeline.dedup import duplicate_spans
 
     corpus = [
@@ -309,7 +313,25 @@ def test_duplicate_spans_null_doc_id_matches_count_distinct(spark, min_docs):
         for r in duplicate_spans(df, "text", "doc_id", k=SPAN_K, min_docs=min_docs).collect()
     }
     assert got == _py_spans(corpus, min_docs=min_docs, ids=ids)
-    assert (None, 3, 6, 1) in got
+    assert got and all(r[0] is not None for r in got)
+
+
+def test_duplicate_spans_null_doc_ids_never_merge(spark):
+    """Two NULL-id documents must not merge their hits into one span
+    across documents (they once shared one islands partition and gave
+    ``(NULL, 0, 6, 2)`` here, from position 0 of one document and
+    position 3 of the other): NULL-id documents get no span at all."""
+    from flink_1_16_0_src_spark.pipeline.dedup import duplicate_spans
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f"), (None, "a b c x y z"), (None, "q r s d e f")],
+        "doc_id bigint, text string",
+    )
+    got = {
+        (r.doc_id, r.span_start, r.span_end, r.n_windows)
+        for r in duplicate_spans(df, "text", "doc_id", k=3, min_docs=1).collect()
+    }
+    assert got == {(1, 0, 6, 4)}
 
 
 def test_ivf_assign_blas_matches_jvm(spark):

@@ -1,0 +1,305 @@
+"""One window-TVF reader, one TUMBLE/HOP/CUMULATE staging path.
+
+``sql_clauses.parse_window_tvf`` reads every spelling of a window-TVF
+call once; batch SQL, ``stream_query`` and the streaming statement set
+all consume its spec, so they accept and reject the same calls. The
+statement set stages TUMBLE, HOP and CUMULATE on one window-end grid
+(TUMBLE is slide = size), and its drains must equal ``stream_query``'s.
+"""
+
+from __future__ import annotations
+
+import ast
+import datetime as dt
+import glob
+import json
+import os
+import pathlib
+import shutil
+import tempfile
+
+import pytest
+
+PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "flink_1_16_0_src_spark"
+
+H = lambda h, m=0: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
+
+
+@pytest.fixture(scope="module")
+def tenv(spark):
+    from flink_1_16_0_src_spark.session import TableEnvironment
+
+    return TableEnvironment(spark)
+
+
+def _one_file(spark, df, path, mtime):
+    """``df`` as ONE parquet file at ``path`` with a pinned mtime (the
+    file stream source orders files by modification time)."""
+    tmp = tempfile.mkdtemp(prefix="tvf_onefile_")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], path)
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.utime(path, (mtime, mtime))
+
+
+def _source(tenv, spark, tmp_path, name, batches):
+    """A watermarked DDL source ``name`` made of one file per batch."""
+    src = tmp_path / f"{name}_src"
+    src.mkdir()
+    for i, rows in enumerate(batches):
+        _one_file(
+            spark,
+            spark.createDataFrame(rows, "eid bigint, k string, ts timestamp, v double"),
+            str(src / f"f{i}.parquet"), mtime=1_000_000 * (i + 1),
+        )
+    tenv.execute_sql(
+        f"CREATE TABLE {name} (eid BIGINT, k STRING, ts TIMESTAMP(3), v DOUBLE,"
+        f" WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE)"
+        f" WITH ('connector'='filesystem','path'='{src}','format'='parquet')"
+    )
+
+
+def _sink(tenv, tmp_path, name):
+    path = tmp_path / name
+    tenv.execute_sql(
+        f"CREATE TABLE {name} WITH ('connector'='filesystem',"
+        f"'path'='{path}','format'='parquet')"
+    )
+    return str(path)
+
+
+def _rows(df):
+    return sorted(
+        (r.k, r.window_start, r.window_end, r.n, r.s) for r in df.collect()
+    )
+
+
+# three event-time-ordered batches, no late row: the final watermark
+# (12:49) closes every window ending by 12:30 (12:40 with the offset)
+_BATCHES = [
+    [(1, "a", H(10, 5), 1.0), (2, "b", H(10, 20), 2.0), (3, "a", H(10, 40), 4.0)],
+    [(4, "a", H(11, 0), 8.0), (5, "b", H(11, 25), 16.0), (6, "a", H(11, 35), 32.0)],
+    [(7, "b", H(12, 10), 64.0), (8, "a", H(12, 20), 128.0), (9, "a", H(12, 50), 256.0)],
+]
+
+_SPELLINGS = {
+    "positional": "TABLE(TUMBLE(TABLE {t}, DESCRIPTOR(ts), INTERVAL '1' HOUR))",
+    "named": "TABLE(TUMBLE(DATA => TABLE {t}, TIMECOL => DESCRIPTOR(ts), "
+             "SIZE => INTERVAL '1' HOUR))",
+    "tumble_offset": "TABLE(TUMBLE(TABLE {t}, DESCRIPTOR(ts), INTERVAL '1' HOUR, "
+                     "INTERVAL '10' MINUTE))",
+    "hop": "TABLE(HOP(TABLE {t}, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+           "INTERVAL '1' HOUR))",
+    "hop_offset": "TABLE(HOP(TABLE {t}, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+                  "INTERVAL '1' HOUR, INTERVAL '10' MINUTE))",
+    "cumulate": "TABLE(CUMULATE(TABLE {t}, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+                "INTERVAL '1' HOUR))",
+    "lower_case": "table(hop(table {t}, descriptor(ts), interval '30' minute, "
+                  "interval '1' hour))",
+}
+# plain COUNT/SUM stages partial accumulators; ROUND around the SUM
+# defeats the decomposition and stages raw rows
+_SELECTS = {
+    "acc": "SELECT k, window_start, window_end, COUNT(*) AS n, SUM(v) AS s "
+           "FROM {tvf} GROUP BY k, window_start, window_end",
+    "raw": "SELECT k, window_start, window_end, COUNT(*) AS n, ROUND(SUM(v), 2) AS s "
+           "FROM {tvf} GROUP BY k, window_start, window_end",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SPELLINGS))
+def test_statement_set_equals_stream_query(tenv, spark, tmp_path, name):
+    """Every spelling, on both staging paths, drains the same windows
+    through a three-batch statement set as through ``stream_query``'s
+    one-batch drain of the same SELECT. CUMULATE drains ``stream_query``
+    in update mode, which also holds the still-open slices, so its rows
+    are cut at the final watermark."""
+    from flink_1_16_0_src_spark.streaming import sources as ssrc
+
+    t = f"tvfeq_{name}"
+    _source(tenv, spark, tmp_path, t, _BATCHES)
+    tvf = _SPELLINGS[name].format(t=t)
+    ss = tenv.create_stream_statement_set()
+    sinks = {}
+    for path, sel in _SELECTS.items():
+        sinks[path] = _sink(tenv, tmp_path, f"{t}_{path}")
+        ss.add_insert_sql(f"INSERT INTO {t}_{path} " + sel.format(tvf=tvf))
+    receipt = ss.execute(checkpoint=str(tmp_path / "ck"), max_files_per_trigger=1)
+    assert receipt["window_agg_statements"] == 2
+    final_wm = H(12, 49)
+    for path, sel in _SELECTS.items():
+        mode = "update" if name == "cumulate" else "append"
+        drained = ssrc.run_to_memory(
+            tenv.stream_query(sel.format(tvf=tvf)), f"{t}_{path}_q", mode
+        )
+        want = [r for r in _rows(drained) if r[2] <= final_wm]
+        got = _rows(spark.read.parquet(sinks[path]))
+        assert got == want, path
+        assert got, path
+
+
+_EXTRA_ARG = {
+    "TUMBLE": "TUMBLE(TABLE {t}, DESCRIPTOR(ts), INTERVAL '1' HOUR, "
+              "INTERVAL '1' MINUTE, INTERVAL '2' MINUTE)",
+    "HOP": "HOP(TABLE {t}, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+           "INTERVAL '1' HOUR, INTERVAL '1' MINUTE, INTERVAL '2' MINUTE)",
+    "CUMULATE": "CUMULATE(TABLE {t}, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+                "INTERVAL '1' HOUR, INTERVAL '1' MINUTE)",
+    "SESSION": "SESSION(TABLE {t}, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+               "INTERVAL '1' HOUR)",
+}
+
+
+@pytest.fixture(scope="module")
+def extra_env(tenv, spark, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("tvf_extra")
+    _source(tenv, spark, tmp, "tvfx_ev", _BATCHES[:1])
+    _sink(tenv, tmp, "tvfx_snk")
+    return tenv
+
+
+@pytest.mark.parametrize("fn", sorted(_EXTRA_ARG))
+def test_extra_interval_argument_raises_everywhere(extra_env, fn):
+    """An interval argument past the function's arity is an error in
+    batch, in ``stream_query`` and in the statement set — never
+    silently ignored."""
+    sql = (
+        "SELECT window_start, window_end, COUNT(*) AS n FROM TABLE("
+        + _EXTRA_ARG[fn].format(t="tvfx_ev")
+        + ") GROUP BY window_start, window_end"
+    )
+    with pytest.raises(ValueError, match=f"{fn} takes"):
+        extra_env.execute_sql(sql)
+    with pytest.raises(ValueError, match=f"{fn} takes"):
+        extra_env.stream_query(sql)
+    with pytest.raises(ValueError, match=f"{fn} takes"):
+        extra_env.create_stream_statement_set().add_insert_sql(
+            "INSERT INTO tvfx_snk " + sql
+        )
+
+
+def test_statement_set_rejects_slide_past_size(extra_env):
+    """A HOP slide or CUMULATE step larger than the size leaves rows in
+    no window; the statement set rejects it when the statement is
+    added instead of failing the drain mid-stream."""
+    for tvf in ("HOP(TABLE tvfx_ev, DESCRIPTOR(ts), INTERVAL '1' HOUR, "
+                "INTERVAL '30' MINUTE)",
+                "CUMULATE(TABLE tvfx_ev, DESCRIPTOR(ts), INTERVAL '1' HOUR, "
+                "INTERVAL '30' MINUTE)"):
+        with pytest.raises(ValueError, match="must not exceed its size"):
+            extra_env.create_stream_statement_set().add_insert_sql(
+                "INSERT INTO tvfx_snk SELECT window_start, window_end, "
+                f"COUNT(*) AS n FROM TABLE({tvf}) GROUP BY window_start, window_end"
+            )
+
+
+def test_parse_window_tvf_spellings():
+    from flink_1_16_0_src_spark.sql_clauses import parse_window_tvf
+
+    sql = ("SELECT * FROM TABLE(HOP(DATA => TABLE ev, TIMECOL => DESCRIPTOR(ts), "
+           "SIZE => INTERVAL '1' HOUR, SLIDE => INTERVAL '30' MINUTE)) w")
+    tvf = parse_window_tvf(sql)
+    assert (tvf.fn, tvf.table, tvf.ts) == ("HOP", "ev", "ts")
+    assert (tvf.slide, tvf.size, tvf.offset) == ("30 minutes", "1 hours", None)
+    assert sql[tvf.start:tvf.end].startswith("TABLE(HOP(") and sql[tvf.end:] == " w"
+    tvf = parse_window_tvf(
+        "select * from table(session(table ev partition by a, b, "
+        "descriptor(ts), interval '5' minute))"
+    )
+    assert (tvf.fn, tvf.keys, tvf.gap) == ("SESSION", ["a", "b"], "5 minutes")
+    sql = ("SELECT * FROM TABLE(TUMBLE(TABLE (SELECT ts FROM ev WHERE k = 'x,y'), "
+           "DESCRIPTOR(ts), INTERVAL '1' HOUR))")
+    tvf = parse_window_tvf(sql)
+    assert (tvf.table, tvf.subquery) == (None, "SELECT ts FROM ev WHERE k = 'x,y'")
+    assert tvf.with_table(sql, "v") == (
+        "SELECT * FROM TABLE(TUMBLE(TABLE v, DESCRIPTOR(ts), INTERVAL '1' HOUR))"
+    )
+    assert parse_window_tvf("SELECT 'TABLE(TUMBLE(' AS s FROM ev") is None
+    for bad, msg in [
+        ("HOP(TABLE ev, DESCRIPTOR(ts), INTERVAL '1' HOUR)", "HOP takes 2 to 3"),
+        ("TUMBLE(TABLE ev, DESCRIPTOR(ts), GAP => INTERVAL '1' HOUR)", "no argument named GAP"),
+        ("TUMBLE(TABLE ev, DESCRIPTOR(ts), SIZE => INTERVAL '1' HOUR, "
+         "SIZE => INTERVAL '2' HOUR)", "given twice"),
+        ("TUMBLE(TABLE ev, ts, INTERVAL '1' HOUR)", "DESCRIPTOR"),
+    ]:
+        with pytest.raises(ValueError, match=msg):
+            parse_window_tvf(f"SELECT * FROM TABLE({bad})")
+
+
+_HOP = ("FROM TABLE(HOP(TABLE tvf_pre70, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+        "INTERVAL '1' HOUR)) GROUP BY window_start, window_end")
+
+
+def test_hop_before_1970_on_both_staging_paths(tenv, spark, tmp_path):
+    """Window ends of pre-1970 rows: the grid arithmetic must floor
+    toward minus infinity. Both staging paths emit exactly the five
+    closed HOP windows."""
+    dec31 = lambda h, m: dt.datetime(1969, 12, 31, h, m)  # noqa: E731
+    jan1 = lambda h, m: dt.datetime(1970, 1, 1, h, m)  # noqa: E731
+    _source(tenv, spark, tmp_path, "tvf_pre70", [[
+        (1, "a", dec31(22, 10), 1.0), (2, "a", dec31(22, 40), 1.0),
+        (3, "a", dec31(23, 50), 1.0), (4, "a", jan1(3, 0), 1.0),
+    ]])
+    acc = _sink(tenv, tmp_path, "tvf_pre70_acc")
+    raw = _sink(tenv, tmp_path, "tvf_pre70_raw")
+    tenv.create_stream_statement_set().add_insert_sql(
+        f"INSERT INTO tvf_pre70_acc SELECT window_start, window_end, COUNT(*) AS n {_HOP}"
+    ).add_insert_sql(
+        f"INSERT INTO tvf_pre70_raw SELECT window_start, window_end, "
+        f"COUNT(*) + 0 AS n {_HOP}"
+    ).execute(checkpoint=str(tmp_path / "ck"))
+    want = [
+        (dec31(21, 30), dec31(22, 30), 1),
+        (dec31(22, 0), dec31(23, 0), 2),
+        (dec31(22, 30), dec31(23, 30), 1),
+        (dec31(23, 0), jan1(0, 0), 1),
+        (dec31(23, 30), jan1(0, 30), 1),
+    ]
+    for path in (acc, raw):
+        got = sorted((r.window_start, r.window_end, r.n)
+                     for r in spark.read.parquet(path).collect())
+        assert got == want, path
+
+
+def test_resume_rejects_single_end_tumble_stage(tenv, spark, tmp_path):
+    """A raw-row TUMBLE stage segment in the older layout (one
+    ``__sset_wend`` column, no first/last window-end columns) would read
+    back NULL-ended and drop without an error; resuming from it must
+    fail and name the layout instead."""
+    _source(tenv, spark, tmp_path, "tvf_old_ev", _BATCHES[:1])
+    _sink(tenv, tmp_path, "tvf_old_snk")
+    ss = tenv.create_stream_statement_set().add_insert_sql(
+        "INSERT INTO tvf_old_snk SELECT window_end, COUNT(*) AS n, "
+        "ROUND(SUM(v), 2) AS s FROM TABLE(TUMBLE(TABLE tvf_old_ev, "
+        "DESCRIPTOR(ts), INTERVAL '1' HOUR)) GROUP BY window_start, window_end"
+    )
+    sink, collist, body = ss._inserts[0][:3]
+    ck = tmp_path / "ck"
+    seg = ck / "sset_stage" / "s0_b0"
+    spark.createDataFrame(
+        [(3, "a", H(10, 40), 4.0, H(11))],
+        "eid bigint, k string, ts timestamp, v double, __sset_wend timestamp",
+    ).write.parquet(str(seg))
+    (ck / "sset_manifest.json").write_text(json.dumps({
+        "statements": [f"{sink}::{collist or ''}::{body}"],
+        "max_ts": H(10, 40).isoformat(), "wm": H(10, 39).isoformat(),
+        "last_batch": 0,
+        "stage": {"0": [{"dir": str(seg), "max_end": H(11).isoformat(), "rows": 1}]},
+        "pending": [], "staged_rows_cum": 1,
+    }))
+    with pytest.raises(ValueError, match="__sset_wend"):
+        ss.execute(checkpoint=str(ck))
+
+
+def test_only_sql_clauses_reads_descriptor():
+    """The window-TVF reader must not fork again: no library module but
+    ``sql_clauses.py`` holds a regex that matches ``DESCRIPTOR(``."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name == "sql_clauses.py" and path.parent == PACKAGE:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                    and "DESCRIPTOR\\s*\\(" in node.value):
+                offenders.append((str(path.relative_to(PACKAGE)), node.lineno))
+    assert not offenders, f"window-TVF regex outside sql_clauses: {offenders}"
