@@ -4,9 +4,10 @@ Reference parity:
 - TUMBLE/HOP TVF: SqlTumbleTableFunction.java:37, SqlHopTableFunction.java:38
   → Spark ``F.window(ts, size[, slide])`` (built-in).
 - CUMULATE TVF: SqlCumulateTableFunction.java:37 + slicing runtime
-  (SliceAssigners.java:94) — **no Spark builtin**: implemented here by
-  exploding each row into the slice-end windows that contain it
-  (JVM-side explode(sequence(...)), no Python in the hot path).
+  (SliceAssigners.java:94) — **no Spark builtin**: each cumulative
+  window is the HOP window ``F.window(ts, size, step)`` with the same
+  end, cut down to the rows of that end's own size-span (JVM-side, no
+  Python in the hot path, append-capable in streaming).
 - SESSION windows: SessionWindowAssigner.java:36 →
   ``F.session_window`` (built-in, batch + streaming).
 
@@ -18,8 +19,8 @@ columns; window_time = window_end - 1ms = TimeWindow.maxTimestamp,
 the rowtime attribute cascading window aggregations group on).
 
 Scale: tumble/hop/session group-bys shuffle once on (window, keys);
-CUMULATE fan-out is bounded by max_size/step (a small constant), so
-data volume grows by that factor pre-shuffle — same cost shape as
+HOP and CUMULATE fan-out is bounded by size/slide (a small constant),
+so data volume grows by that factor pre-shuffle — same cost shape as
 Flink's sliced execution without shared-pane state.
 """
 
@@ -45,6 +46,9 @@ def hop(
     df: DataFrame, ts: str, slide: str, size: str, offset: str | None = None,
     keep_struct: bool = False,
 ) -> DataFrame:
+    if _duration_seconds(slide) > _duration_seconds(size):
+        # rows between windows would fall in no window at all
+        raise ValueError("HOP's slide must not exceed its size")
     if offset is None:
         return _with_window(df, F.window(ts, size, slide), keep_struct)
     return _with_window(df, F.window(ts, size, slide, offset), keep_struct)
@@ -66,33 +70,48 @@ def _with_window(df: DataFrame, w: Column, keep_struct: bool = False) -> DataFra
     return out if keep_struct else out.drop("__w")
 
 
-def cumulate(df: DataFrame, ts: str, step: str, max_size: str) -> DataFrame:
+def cumulate_start_sql(end: str, max_size: str) -> str:
+    """SQL for the start of the CUMULATE window that ends at ``end``:
+    the start of the max_size span holding ``end`` − 1 µs, floored
+    toward minus infinity so pre-1970 spans come out right."""
+    last = f"(unix_micros({end}) - 1)"
+    return f"timestamp_micros({last} - pmod({last}, {_micros(max_size)}))"
+
+
+def cumulate(
+    df: DataFrame, ts: str, step: str, max_size: str, keep_struct: bool = False,
+) -> DataFrame:
     """CUMULATE(ts, step, max_size): within each max_size span the
     window start is pinned to the span start and the end advances in
-    ``step`` increments; a row belongs to every slice whose end is
-    strictly after its timestamp (matches Flink's
-    CumulativeSliceAssigner: expanding windows [start, start+k*step]).
-    """
-    step_i = F.expr(f"INTERVAL {step}")
-    span = F.window(ts, max_size)
-    n_slices = int(_duration_seconds(max_size) / _duration_seconds(step))
-    ends = F.sequence(F.lit(1), F.lit(n_slices))
-    return (
-        df.withColumn("window_start", span.start)
-        .withColumn("__k", F.explode(ends))
-        .withColumn(
-            "window_end",
-            (
-                F.col("window_start").cast("timestamp")
-                + F.col("__k") * step_i
-            ),
+    ``step`` increments; a row belongs to every window whose end is
+    strictly after its timestamp (Flink's CumulativeSliceAssigner:
+    expanding windows [start, start+k*step]).
+
+    The window [S, e) is the HOP window ``F.window(ts, max_size, step)``
+    ending at e, cut down to the rows of e's own span, so the assigner
+    keeps the HOP rows whose span equals the span of ``e`` − 1 µs and
+    sets window_start to that span's start. ``keep_struct`` retains the
+    HOP struct ``__w``: a streaming aggregation grouped on it closes
+    each window at e in append mode (select window_start as
+    :func:`cumulate_start_sql` of ``__w.end``)."""
+    size_us, step_us = _micros(max_size), _micros(step)
+    if step_us > size_us:
+        raise ValueError("CUMULATE's step must not exceed its size")
+    if size_us % step_us:
+        raise ValueError(
+            "CUMULATE's size must be an integral multiple of its step"
         )
-        .where(F.col("window_end") > F.col(ts))
-        .withColumn(
-            "window_time", F.col("window_end") - F.expr("INTERVAL '0.001' SECOND")
-        )
-        .drop("__k")
+    tsu = F.unix_micros(F.col(ts))
+    last = F.unix_micros(F.col("__w.end")) - F.lit(1)
+    size = F.lit(size_us)
+    out = (
+        df.withColumn("__w", F.window(ts, max_size, step))
+        .where(tsu - F.pmod(tsu, size) == last - F.pmod(last, size))
+        .withColumn("window_start", F.expr(cumulate_start_sql("__w.end", max_size)))
+        .withColumn("window_end", F.col("__w.end"))
+        .withColumn("window_time", F.col("__w.end") - F.expr("INTERVAL '0.001' SECOND"))
     )
+    return out if keep_struct else out.drop("__w")
 
 
 def session(df: DataFrame, ts: str, gap: str, *keys: str | Column) -> DataFrame:
@@ -135,3 +154,7 @@ def _duration_seconds(s: str) -> float:
     unit = unit.rstrip("s").lower()
     mult = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}[unit]
     return float(qty) * mult
+
+
+def _micros(s: str) -> int:
+    return round(_duration_seconds(s) * 1_000_000)

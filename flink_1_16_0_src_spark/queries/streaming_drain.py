@@ -2691,18 +2691,16 @@ def stream_sql_window_topn_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sql_statement_set_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING statement set (VERDICT r9 #8 —
     StreamStatementSetImpl.java): two INSERTs reading the SAME events
-    source drain as ONE streaming job; the shared scan is structural
-    (a single readStream + foreachBatch persisting each micro-batch,
-    both sinks planned over the persisted frame — the Spark analog of
-    the reference's common-subgraph reuse). Sink A takes the click
-    projection; sink B a per-(user, 1h-TUMBLE-window) purchase
-    aggregate that the set executor emits ONLY when the running
-    watermark closes the window (VERDICT r10 #2 — a non-windowed
-    aggregate would append one partial row per micro-batch and is now
-    rejected at add time), so every sink-B row is a complete window
-    regardless of how many batches the drain takes. The result joins
-    both sinks back, proving each received its statement's rows; the
-    execute() receipt pins streaming_queries == 1."""
+    source drain as ONE streaming query — one tagged branch per
+    statement, unioned and routed to its sink in foreachBatch. Sink A
+    takes the click projection; sink B a per-(user, 1h-TUMBLE-window)
+    purchase aggregate held in Spark's window state and emitted ONLY
+    when the watermark closes the window (a non-windowed aggregate
+    would append one partial row per micro-batch and is rejected at
+    add time), so every sink-B row is a complete window regardless of
+    how many batches the drain takes. The result joins both sinks
+    back, proving each received its statement's rows; the execute()
+    receipt pins streaming_queries == 1."""
     import os as _os
     import tempfile as _tf
 
@@ -2864,12 +2862,11 @@ def stream_sql_statement_set_exec_drain(spark: SparkSession, sf_dir: str) -> Dat
 def stream_sql_statement_set_hop_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HOP window aggregate inside a STREAMING statement set (r11 —
     the reference's StreamStatementSetImpl runs any window kind; here
-    multi-window rows stage until their LAST covering window closes
-    and emission post-filters planned output on window_end, so every
-    1h/30m-slide window emits exactly once with its complete row set
-    whatever the batch boundaries). Oracle: each purchase contributes
-    to its two covering hop windows (30-minute grid), gated at the
-    final watermark."""
+    Spark's window state holds each open 1h/30m-slide window, and the
+    watermark, computed before the statement's WHERE, closes it once
+    with its complete row set whatever the batch boundaries). Oracle:
+    each purchase contributes to its two covering hop windows
+    (30-minute grid), gated at the final watermark."""
     import os as _os
     import tempfile as _tf
 
@@ -2938,15 +2935,13 @@ def stream_sql_statement_set_hop_drain(spark: SparkSession, sf_dir: str) -> Data
     tags=("streaming", "statement-set", "sql-surface"),
 )
 def stream_sql_statement_set_cumacc_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUMULATE window aggregate inside a streaming statement set on
-    the r12 PARTIAL-ACCUMULATOR path: the SELECT list decomposes
-    (COUNT/SUM/MIN/MAX/AVG over expressions + bare window columns), so
-    each batch stages one partial row per (window, keys) group —
-    exploded per covering slice — and emission merges partials
-    (AVG = sum+count pair) instead of re-planning raw rows
-    (MiniBatchIncrementalGroupAggFunction.java contract). The query fn
-    asserts the decomposition actually engaged. Oracle: each click
-    contributes to its span's still-open slices (30-minute step,
+    """CUMULATE window aggregate inside a streaming statement set,
+    planned by ``stream_query``: Spark's state holds one partial
+    aggregate (COUNT/SUM/MIN/MAX/AVG) per open expanding window
+    (MiniBatchIncrementalGroupAggFunction.java contract), grouped on
+    the filtered-HOP window struct of the CUMULATE assigner. The query
+    fn asserts the statement took that aggregate branch. Oracle: each
+    click contributes to its span's still-open slices (30-minute step,
     1-hour max), gated at the final watermark; integer cents keep
     SUM/AVG exact."""
     import os as _os
@@ -2980,7 +2975,7 @@ def stream_sql_statement_set_cumacc_drain(spark: SparkSession, sf_dir: str) -> D
         f"WHERE event_type = 'click' "
         f"GROUP BY window_start, window_end"
     )
-    assert ss._inserts[0][5]["acc"] is not None, "acc path must engage"
+    assert ss._inserts[0].kind == "agg", "stream_query must plan the aggregate"
     receipt = ss.execute()
     assert receipt["window_agg_statements"] == 1
     return spark.read.parquet(d).select(
@@ -3020,8 +3015,8 @@ def stream_sql_statement_set_topn_drain(spark: SparkSession, sf_dir: str) -> Dat
     window-rank-after-window-TVF statement-set pattern
     (WindowRankProcessor.java; window-topn.md "Window Top-N follows
     after Window TVF"). Admission requires every OVER to partition by
-    (window_start, window_end); raw-row staging then plans each window
-    ONCE over its complete row set, so the rank is exact without
+    (window_start, window_end); the set ships each closed window's rows
+    and ranks them once, complete, so the rank is exact without
     cross-batch rank state. Integer cents + the unique event_id
     tiebreak keep the rank deterministic on both engines; the oracle
     gates windows at the final watermark."""
@@ -3249,11 +3244,9 @@ def stream_sql_statement_set_session_drain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """SESSION window aggregate inside a STREAMING statement set (r11
-    — merging windows under the staging model: session assignment is
-    recomputed over staged ∪ new rows each batch and a session emits
-    once, complete, when the watermark passes max(ts)+gap; the
-    reference's StreamStatementSetImpl.java runs merging windows the
-    same way via WindowOperator purge-on-fire). Per-user 30-minute
+    — merging windows in Spark's ``session_window`` state: a session
+    ships its rows once, complete, when the watermark passes
+    max(ts)+gap, and the statement then aggregates them). Per-user 30-minute
     activity sessions; the WHERE filters purchases AFTER session
     assignment (TVF semantics), so session bounds derive from ALL the
     user's events. Oracle replays gaps-and-islands per user, gated at

@@ -10,6 +10,7 @@ reference user can keep their DDL.
 
 from __future__ import annotations
 
+import dataclasses
 import functools
 import os
 import re
@@ -473,7 +474,7 @@ class TableEnvironment:
                 cand = self.create_stream_statement_set()
                 for ins in stmts:
                     cand.add_insert_sql(ins)
-                srcs_used = {t[3] for t in cand._inserts}
+                srcs_used = {st.source for st in cand._inserts}
                 if srcs_used and all(s in self._watermarks
                                      for s in srcs_used):
                     sset = cand
@@ -886,9 +887,9 @@ class TableEnvironment:
         whose micro-batch frame lives in a CLONED session — temp views
         registered there are invisible to the main one).
 
-        ``rest`` may also be an already-built DataFrame (r13: the
-        statement-set accumulator path hands its merged frame over
-        directly) — then no SQL text is parsed or planned here, only
+        ``rest`` may also be an already-built DataFrame (the streaming
+        statement set hands over a window aggregate's closed rows) —
+        then no SQL text is parsed or planned here, only
         the column-list/positional mapping to the sink schema applies
         (a static PARTITION clause has no text to ride in on)."""
         spark = spark or self.spark
@@ -2003,6 +2004,21 @@ class TableEnvironment:
         untouched; this is the streaming-side bridge of the same table.
         ``options`` pass through to the reader (e.g.
         maxFilesPerTrigger to force multi-batch drains in tests)."""
+        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
+
+        sdf, path = self._read_stream(name, options)
+        note_source_bytes(path)
+        if name in self._watermarks:
+            sdf = sdf.withWatermark(*self._watermarks[name])
+        return sdf
+
+    def _read_stream(
+        self, name: str, options: dict | None = None
+    ) -> "tuple[DataFrame, str]":
+        """:meth:`stream`'s frame before its watermark, and the path it
+        monitors. It notes nothing for the next drain's partition count
+        (the statement set plans with a stream at add time, long before
+        its drain)."""
         props = self._sources.get(name)
         if props is None:
             raise ValueError(f"{name!r} was not registered by execute_sql DDL")
@@ -2026,13 +2042,7 @@ class TableEnvironment:
             if not os.path.exists(link):
                 os.symlink(path, link)
             path = link_dir
-        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
-
-        note_source_bytes(path)
-        sdf = getattr(reader, props.get("format", "parquet"))(path)
-        if name in self._watermarks:
-            sdf = sdf.withWatermark(*self._watermarks[name])
-        return sdf
+        return getattr(reader, props.get("format", "parquet"))(path), path
 
     def create_streaming_view(self, name: str, sql: str) -> DataFrame:
         """CREATE TEMPORARY VIEW over a STREAMING pipeline —
@@ -2161,13 +2171,14 @@ class TableEnvironment:
         surrounding SELECT compiles to a streaming plan — feed the
         result to writeStream / streaming.sources.run_to_memory.
 
-        All four window TVFs stream (SqlSessionTableFunction.java,
-        SliceAssigners.java:61-94): SESSION regroups onto Spark's
-        merging ``session_window`` aggregate (the batch gaps-and-islands
-        rewrite uses lag() windows, not streamable); CUMULATE resolves
-        to the slice-explode view whose plain window_start/window_end
-        grouping can't prove append closure — drain it in UPDATE mode
-        with availableNow (the stream_cumulate_drain contract).
+        All four window TVFs stream in append mode
+        (SqlSessionTableFunction.java, SliceAssigners.java:61-94):
+        SESSION regroups onto Spark's merging ``session_window``
+        aggregate (the batch gaps-and-islands rewrite uses lag()
+        windows, not streamable); CUMULATE groups on the HOP window
+        struct of ``operators.windows.cumulate`` (rows cut to each
+        end's span), so the watermark closes every expanding window at
+        its end like a TUMBLE or HOP window.
 
         STATEMENT COMPOSITION (r10, depth lifted r11 — the reference
         plans arbitrary multi-operator streaming DAGs from one
@@ -2360,8 +2371,6 @@ class TableEnvironment:
                 "streaming SESSION/CUMULATE SQL supports a single window "
                 "TVF per statement"
             )
-        if "CUMULATE" in kinds:
-            return self.spark.sql(out)
         session_spec = next((s for s in specs if s["fn"] == "SESSION"), None)
         if session_spec is None:
             struct_tok = "__w"
@@ -2371,6 +2380,24 @@ class TableEnvironment:
                 f" '{session_spec['gap']}')"
             )
         start_ext, end_ext = f"{struct_tok}.start", f"{struct_tok}.end"
+        if "CUMULATE" in kinds:
+            # __w is the HOP window with the cumulative window's end;
+            # the start is that end's span start
+            from flink_1_16_0_src_spark.operators.windows import cumulate_start_sql
+
+            start_ext = cumulate_start_sql(end_ext, specs[0]["size"])
+        shift = next((
+            f.metadata.get(_EVENT_TIME_SHIFT, 0) for s in specs[:1] if "src" in s
+            for f in s["src"].schema.fields if f.name.lower() == s["ts"].lower()
+        ), 0)
+        if shift:
+            # windowed on a time column moved forward by ``shift`` µs
+            # (the streaming statement set's event time): report the
+            # window bounds in the original time
+            start_ext, end_ext = (
+                f"timestamp_micros(unix_micros({e}) - {shift})"
+                for e in (start_ext, end_ext)
+            )
         # STREAMING aggregation must group by the TimeWindow struct —
         # only it carries the event-time attribute (extracted start/end
         # columns lose the watermark linkage and Spark rejects append
@@ -2593,9 +2620,6 @@ class StatementSet:
         return {"statements": len(self._inserts), "shared_subplans": len(cached)}
 
 
-# the window-end columns a raw-row window stage segment carries; the
-# manifest records them so a resume never reads another layout
-_SSET_RAW_STAGE = ["__sset_fend", "__sset_lend"]
 _SSET_AGG_HEAD = re.compile(
     r"\b(?:COUNT|SUM|AVG|MIN|MAX|STDDEV\w*|VAR\w*|LISTAGG|COLLECT|"
     r"FIRST_VALUE|LAST_VALUE|APPROX_COUNT_DISTINCT)\s*\(",
@@ -2635,130 +2659,135 @@ def _over_clauses(txt: str) -> list[tuple[int, int, str]]:
     return out
 
 
+# schema metadata key of a time column moved forward by that many µs
+_EVENT_TIME_SHIFT = "event_time_shift_us"
+# µs from 0001-01-01 to 1970-01-01
+_EPOCH_SPAN_US = 62_135_596_800_000_000
+
+
+def _bind(sql: str, views: dict[str, str]) -> str:
+    """``sql`` with each table name in ``views`` (whole words, outside
+    string literals, any case) replaced by its view."""
+    lower = {k.lower(): v for k, v in views.items()}
+    pat = re.compile(
+        r"(?<![\w.])(" + "|".join(map(re.escape, views)) + r")(?![\w.])",
+        re.IGNORECASE,
+    )
+    return "".join(
+        p if i % 2 else pat.sub(lambda m: lower[m.group(1).lower()], p)
+        for i, p in enumerate(re.split(r"('(?:[^']|'')*')", sql))
+    )
+
+
+@dataclasses.dataclass
+class _SetStatement:
+    """One INSERT buffered by :class:`StreamStatementSet`."""
+
+    sink: str
+    collist: str | None
+    body: str  # the query after INSERT INTO <sink> [(cols)]
+    source: str  # the streaming DDL source it reads
+    kind: str  # "stateless", "agg" (planned by stream_query) or "rows"
+    tvf: object | None  # its sql_clauses.WindowTVF; None when stateless
+    dims: list[str]  # the other DDL tables it reads (batch dimensions)
+    text: str = ""  # "agg": stream_query's text; else the per-batch SQL
+    view: str = ""  # the temp view the per-batch SQL reads its rows from
+    shift: int = 0  # µs the query moves event times forward
+
+    def bind(self) -> None:
+        """Set ``text`` and ``view`` for the statement's kind."""
+        if self.kind == "agg":
+            self.text = _bind(self.tvf.with_time(self.body, "__sset_ets"), {
+                self.source: f"__sset_src_{self.source}",
+                **{d: f"__sset_dim_{d}" for d in self.dims},
+            })
+        elif self.kind == "rows":
+            self.view = f"__sset_w{next(_STREAM_SUB_SEQ)}"
+            b, t = self.body, self.tvf
+            self.text = b[:t.start] + self.view + b[t.end:]
+        else:
+            self.view = f"__sset_r{next(_STREAM_SUB_SEQ)}"
+            self.text = _bind(self.body, {self.source: self.view})
+
+
 class StreamStatementSet:
     """STREAMING multi-sink statement set — StreamStatementSetImpl.java
-    (flink-table-api-bridge) parity: all buffered INSERTs optimize as
-    ONE job and the shared source scan is computed once
-    (StreamCommonSubGraphBasedOptimizer.scala:49 splits the multi-sink
-    DAG into shared sub-graphs). Spark has no multi-sink streaming
-    query, so ``execute()`` reproduces the sharing with the canonical
-    Spark pattern: ONE streaming read of the common DDL source +
-    ``foreachBatch`` that persists each micro-batch and plans every
-    buffered INSERT over it — source listing, decode, and batch
-    materialization happen once per batch regardless of how many sinks
-    consume it.
+    (flink-table-api-bridge) parity: all buffered INSERTs run as one
+    job. ``execute()`` starts ONE append-mode streaming query per
+    streaming source. The query unions one tagged branch per statement,
+    and ``foreachBatch`` sends each branch's rows to its sink. Window
+    state, the watermark, late-row drops and resume are Spark's own:
+    the state store plus the checkpoint's offset and commit logs, as
+    Flink keeps window state in its managed, snapshotted backend and
+    gets exactly-once from consistent snapshots plus replay (VLDB 2017).
 
-    Statements over DIFFERENT streaming sources may share one set
-    (r11): they group by source and each group runs as its own
-    streaming query with its own provably-shared scan — identical to
-    the reference, where common-subgraph sharing merges only
-    IDENTICAL scans and disjoint sources are disjoint subgraphs of
-    the one job. The receipt's ``streaming_queries`` counts the
-    groups.
+    Each statement becomes one of two branch kinds, picked at add time
+    from its shape:
 
-    Statement admission mirrors the per-batch execution model
-    (VERDICT r10 "What's wrong" #2 closed the partial-aggregate hole):
+    - GROUP BY window aggregates over TUMBLE, HOP or CUMULATE (any
+      aggregate expression, HAVING, batch dimension joins) are planned
+      by :meth:`TableEnvironment.stream_query`. Spark keeps one partial
+      aggregate per open (window, keys) group and emits the group once,
+      when the watermark passes its window end.
+    - Row-level statements ship rows, and the statement's own text runs
+      as batch SQL over them in ``foreachBatch``. A stateless statement
+      (projection, filter, batch dimension or lookup join) ships each
+      micro-batch's rows. A windowed one — window-scoped OVER such as
+      window Top-N and window dedup, a TVF read without GROUP BY, every
+      SESSION aggregate, and an aggregate ``stream_query`` cannot run in
+      append mode — ships each closed window's rows, collected by
+      ``groupBy(<window struct>).agg(collect_list(struct(*)))``; its TVF
+      call then reads those rows with their window columns, so every
+      window is computed once over its complete rows. SESSION takes this
+      path because ``session_window`` would apply the statement's WHERE
+      before sessionizing, where the TVF applies it after.
 
-    - STATELESS statements (projection / filter / batch-dim or lookup
-      joins) re-plan per micro-batch — exact by construction.
-    - TUMBLE / HOP / CUMULATE TVF statements (``GROUP BY
-      window_start, window_end``, or row-level with window-scoped
-      OVER) run with real cross-batch semantics on one staging path.
-      The TVF is read once by ``sql_clauses.parse_window_tvf``, and its
-      windows are one (slide, size, offset) grid — TUMBLE is slide =
-      size; CUMULATE keeps its step/span grid. Each batch writes only
-      its own still-open rows to an APPEND-ONLY parquet segment,
-      annotated with the first and last window end covering each row,
-      so stage writes are O(batch delta): a row is staged at most once
-      per drain (the manifest's ``staged_rows_cum`` is the receipt).
-      Once the running watermark (max event time − DDL delay,
-      WindowOperator.java contract) passes a window end, the window is
-      planned ONCE over its complete row set and appended — never a
-      per-batch partial; batches whose watermark advance holds no
-      window-end grid point plan nothing, and segments drop whole once
-      the watermark passes their last end (SlicingWindowOperator.java:
-      101). Rows whose last window already closed are dropped, exactly
-      like the engine's append-mode window aggregate. Where a row can
-      fall in several windows (slide < size, or CUMULATE) the planned
-      output is post-filtered on ``window_end``, which the SELECT list
-      must then expose un-aliased. Statements made only of group keys
-      and plain COUNT/SUM/MIN/MAX/AVG stage one partial accumulator
-      row per open (window, keys) group instead of raw rows and merge
-      the partials at emission (MiniBatchIncrementalGroupAggFunction.
-      java); the choice follows the statement's shape.
-    - SESSION TVF aggregates (r11): sessions MERGE, so a row's window
-      identity isn't fixed on arrival — assignment is recomputed over
-      staged ∪ new rows each batch, and a session is final (emitted
-      once, complete) when the watermark passes max(ts)+gap: any
-      surviving non-late future row necessarily starts a NEW session,
-      the reference's purge-on-fire contract (WindowOperator.java /
-      SessionWindowAssigner.java merging windows). SESSION keeps the
-      per-batch rewrite — but of OPEN-session rows only, so its stage
-      footprint is bounded by the live sessions, not the drain
-      history. KEYLESS session assignment orders the whole open set
-      in one window task (the global gap chain is inherently
-      sequential); keyed sessions parallelize per key — bound the
-      keyless form's open horizon via the watermark delay, or key the
-      session (PARTITION BY) for scale.
-    - Anything else stateful across batches (non-windowed GROUP BY /
-      global aggregates, DISTINCT, OVER, MATCH_RECOGNIZE,
-      and stream-stream joins) is REJECTED at add time:
-      those need their own ``stream_query`` statement — one stateful
-      pipeline per sink, the same granularity the reference gives each
-      exec-node chain.
+    Admission keeps only the rules for shapes neither kind runs exactly
+    across micro-batches: non-windowed aggregates, DISTINCT, unscoped
+    OVER, OVER on SESSION, MATCH_RECOGNIZE, stream-stream joins, window
+    statements not grouped on window_start and window_end, a TVF over
+    anything but the source, and windows over a source with no
+    WATERMARK. A Spark AnalysisException at add time is re-raised as
+    ValueError, so EXECUTE STATEMENT SET falls back to the batch set.
 
-    Recovery (r11, SURVEY §7.3 risk 3 closed): with an explicit
-    ``checkpoint`` dir, window staging + the running watermark persist
-    INSIDE it next to Spark's offset log, tracked by an atomically-
-    replaced manifest written after each batch's emissions — a
-    killed-and-restarted (or re-executed) drain resumes mid-window:
-    offsets skip consumed files, staged open windows carry over, and a
-    replayed already-manifested batch is skipped (no duplicate
-    emissions). Emissions to unpartitioned filesystem sinks are
-    EXACTLY-ONCE end-to-end via a two-phase file commit (FileSink's
-    pending→finalized rename protocol / TwoPhaseCommittingSink
-    parity): each batch writes sink output to a pending dir, the
-    manifest records the moves BEFORE any sink mutation, then
-    idempotent renames finalize — a crash before the manifest
-    recomputes the batch onto the overwritten pending dir (sinks
-    untouched); a crash after it finishes the moves at the next
-    startup. Partitioned / non-filesystem sinks keep the direct
-    append (at-least-once on a mid-emit crash). Resuming requires
-    the same statements in the same order (the manifest fingerprints
-    them and rejects a mismatch)."""
+    Exactly-once: a write to an unpartitioned filesystem sink is keyed
+    by (batch id, statement) — its files are named
+    ``sset-b<batch>-s<statement>-<checkpoint key>-*`` — and a replayed
+    batch replaces them, so no batch lands twice. Other sinks are
+    appended to, at least once across a crash. A drain resumes from
+    its ``checkpoint`` only with the same statements in the same order:
+    the checkpoint's ``statement_set.json`` fingerprints them.
+
+    Event time: inside the query every window runs on ``__sset_ets``,
+    the source's event time moved forward past the epoch by a multiple
+    of every window's grid, and the bounds a statement sees are moved
+    back. Spark's watermark never falls below the epoch, so without the
+    move a window ending before 1970 would be late on arrival. A row is
+    late when its window ended by the watermark its micro-batch started
+    with. A window closes at the end of the first micro-batch that
+    starts past its end, after that batch's rows are merged in — so a
+    SESSION row arriving in that batch still extends the session, where
+    Flink would have fired and purged it first.
+
+    Scale: each branch scans the source, so a batch's ``numInputRows``
+    is statements × rows. A row-level HOP branch holds every row once
+    per covering window (size/slide copies) until the window closes;
+    an aggregate branch holds one partial row per open group."""
 
     def __init__(self, tenv: "TableEnvironment"):
         self._tenv = tenv
-        # (sink, collist | None, body SQL, source, kind, window info)
-        self._inserts: list[tuple[str, str | None, str, str, str, dict | None]] = []
+        self._inserts: list[_SetStatement] = []
 
-    def _classify(
-        self, unquoted: str, body: str, src_name: str
-    ) -> tuple[str, dict | None]:
-        """Admission gate: 'stateless' | 'window' | 'session' (exact
-        under the per-batch model) or ValueError for shapes whose
-        per-batch re-planning would emit wrong (partial / duplicated)
-        results under a multi-batch drain. Keyword scans run on the
-        quote-stripped text; the TVF parse needs the RAW body (the
-        INTERVAL literal lives in quotes)."""
+    def _admit(self, unquoted: str, body: str, src_name: str):
+        """(kind, WindowTVF | None) of a statement, or ValueError for a
+        shape neither branch kind runs exactly across micro-batches.
+        Keyword scans run on the quote-stripped text; the TVF parse needs
+        the raw body (the INTERVAL literal lives in quotes)."""
         if re.search(r"\bMATCH_RECOGNIZE\b", unquoted, re.IGNORECASE):
             raise ValueError(
                 "streaming statement set: MATCH_RECOGNIZE is stateful "
                 "across micro-batches — run it as its own stream_query"
             )
-        # OVER is admissible ONLY when every window function is scoped
-        # to a (window_start, window_end) partition of a window TVF —
-        # then each frame lives inside one watermark-closed window and
-        # the per-window raw-row plan is exact (the reference's window
-        # Top-N / window rank inside statement sets,
-        # WindowRankProcessor.java). Validated below once the TVF is
-        # known; unscoped OVER stays rejected. Scale note: these
-        # statements stage the OPEN windows' full row sets (bounded by
-        # watermark delay + window span — the generic raw-row bound),
-        # not the k-bounded rank state the standalone stream_query
-        # window Top-N keeps (streaming/windows.py window_topn,
-        # TopNBuffer parity) — for very hot windows with a small k,
-        # prefer the standalone form.
         overs = _over_clauses(unquoted)
         if re.search(r"\bSELECT\s+DISTINCT\b|\(\s*DISTINCT\b", unquoted,
                      re.IGNORECASE):
@@ -2768,10 +2797,7 @@ class StreamStatementSet:
             )
         gm = re.search(r"\bGROUP\s+BY\b(?P<keys>.*)$", unquoted,
                        re.IGNORECASE | re.DOTALL)
-        from flink_1_16_0_src_spark.sql_clauses import (
-            _split_top_commas,
-            parse_window_tvf,
-        )
+        from flink_1_16_0_src_spark.sql_clauses import parse_window_tvf
 
         tvf = parse_window_tvf(body)
         if tvf is None:
@@ -2822,11 +2848,9 @@ class StreamStatementSet:
                 )
         keys = gm.group("keys") if gm else ""
         if gm is None and tvf.fn != "SESSION":
-            # row-level windowed statement (window Top-N / enrichment):
-            # exact under raw-row staging — each window plans ONCE over
-            # its complete row set — provided no bare aggregate
-            # collapses rows ACROSS windows (window functions excised
-            # before the scan; their frames are window-scoped above)
+            # row-level: no bare aggregate may collapse rows ACROSS
+            # windows (window functions excised before the scan; their
+            # frames are window-scoped above)
             bare = unquoted
             for s_, e_, _spec in sorted(overs, reverse=True):
                 bare = bare[:s_] + bare[e_:]
@@ -2839,9 +2863,6 @@ class StreamStatementSet:
                 )
         elif not (re.search(r"\bwindow_start\b", keys, re.IGNORECASE)
                   and re.search(r"\bwindow_end\b", keys, re.IGNORECASE)):
-            # SESSION windows MERGE (a row's window identity isn't
-            # fixed on arrival), but the staging model still closes
-            # them exactly when the statement groups on the session
             raise ValueError(
                 f"streaming statement set: a {tvf.fn} TVF statement must "
                 "GROUP BY window_start, window_end so every emitted row "
@@ -2860,230 +2881,97 @@ class StreamStatementSet:
                 f"streaming statement set: DESCRIPTOR({tvf.ts}) "
                 f"must be the source's event-time attribute {wm[0]!r}"
             )
-        if tvf.fn == "SESSION":
-            # a session is FINAL once the watermark passes max(ts)+gap:
-            # any surviving (non-late) future row has ts+gap > wm ≥ that
-            # session's end and therefore starts a NEW session — the
-            # reference's purge-on-fire contract (WindowOperator.java)
-            return "session", {"ts": wm[0], "gap": tvf.gap, "keys": tvf.keys}
-        import pandas as pd
+        return ("agg" if gm and tvf.fn != "SESSION" else "rows"), tvf
 
-        def us(iv: str | None) -> int:
-            return int(pd.Timedelta(iv).total_seconds() * 1e6) if iv else 0
+    def _branch(self, st: _SetStatement, sdf: DataFrame) -> DataFrame:
+        """The streaming rows statement ``st`` sends to foreachBatch,
+        read from ``sdf``, the source's stream."""
+        cols = [F.col(f"`{c}`") for c in sdf.columns if c != "__sset_ets"]
+        if st.kind == "stateless":
+            return sdf.select(*cols)
+        tenv = self._tenv
+        if st.kind == "agg":
+            sdf.createOrReplaceTempView(f"__sset_src_{st.source}")
+            for d in st.dims:
+                tenv.table(d).createOrReplaceTempView(f"__sset_dim_{d}")
+            return tenv.stream_query(st.text)
+        from flink_1_16_0_src_spark.operators import windows
 
-        # one (slide, size, offset) grid: TUMBLE is slide = size
-        # (SliceAssigners.java:61-94); CUMULATE's slide is its step
-        size = us(tvf.size)
-        slide = us(tvf.step or tvf.slide) or size
-        if slide > size:
-            # rows between windows would explode into no window end and
-            # fail the drain mid-stream; Spark's window() rejects it too
-            raise ValueError(
-                f"streaming statement set: {tvf.fn}'s "
-                f"{'step' if tvf.step else 'slide'} must not exceed its size"
-            )
-        multi = tvf.fn == "CUMULATE" or slide < size
-        if multi:
-            # a row belongs to SEVERAL windows, so raw-row emission
-            # post-filters the PLANNED output on a column literally
-            # named window_end: admission must guarantee a BARE
-            # window_end projection item — ``SELECT window_end AS we``
-            # would abort the drain mid-stream with an unresolved
-            # column (ADVICE r11 #3)
-            head = re.split(r"\bFROM\b", unquoted, maxsplit=1,
-                            flags=re.IGNORECASE)[0]
-            items = _split_top_commas(
-                re.sub(r"^\s*SELECT\s+(DISTINCT\s+)?", "", head,
-                       flags=re.IGNORECASE)
-            )
-            if not any(
-                re.fullmatch(r"(?:\w+\.)?window_end", it, re.IGNORECASE)
-                for it in items
-            ):
-                raise ValueError(
-                    f"streaming statement set: a {tvf.fn} statement must "
-                    "SELECT window_end as a bare (un-aliased) column — "
-                    "emission filters closed windows on it"
-                )
-        return "window", {
-            "ts": wm[0], "fn": tvf.fn, "size": size, "slide": slide,
-            "offset": us(tvf.offset), "multi": multi,
-            "acc": self._parse_win_acc(body, tvf),
-        }
+        t, ts = st.tvf, "__sset_ets"
+        rows = F.collect_list(F.struct(*cols)).alias("rows")
+        if t.fn == "SESSION":
+            w = F.session_window(ts, t.gap).alias("__w")
+            return sdf.groupBy(w, *t.keys).agg(rows)
+        if t.fn == "TUMBLE":
+            sdf = windows.tumble(sdf, ts, t.size, t.offset, keep_struct=True)
+        elif t.fn == "HOP":
+            sdf = windows.hop(sdf, ts, t.slide, t.size, t.offset, keep_struct=True)
+        else:
+            sdf = windows.cumulate(sdf, ts, t.step, t.size, keep_struct=True)
+        return sdf.groupBy("__w").agg(rows)
 
-    def _parse_win_acc(self, body: str, tvf) -> dict | None:
-        """Decompose a TUMBLE/HOP/CUMULATE statement into PARTIAL ACCUMULATORS
-        (r12, VERDICT r11 #1c): when every SELECT item is a group key
-        or a plain COUNT/SUM/MIN/MAX/AVG aggregate, staging keeps ONE
-        partial row per open (window, keys) group instead of raw rows
-        — the reference's incremental window accumulators
-        (MiniBatchIncrementalGroupAggFunction.java local/global split,
-        SlicingWindowOperator.java:101 per-record accumulate). Stage
-        volume becomes O(open groups) regardless of row rate; a 1-hour
-        window at any throughput stages one row per trigger per group.
-        Returns None (raw-row staging) for shapes the merge cannot
-        express: expressions AROUND aggregates, HAVING, DISTINCT-agg,
-        non-column group keys, un-aliased aggregates."""
-        head = body[:tvf.start]
-        hm = re.fullmatch(r"\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+", head,
-                          re.IGNORECASE | re.DOTALL)
-        if hm is None:
-            return None
-        rm = re.fullmatch(
-            r"\s*(?:WHERE\s+(?P<w>.*?)\s+)?"
-            r"GROUP\s+BY\s+(?P<g>[\w\s,\.]+?)\s*;?\s*",
-            body[tvf.end:], re.IGNORECASE | re.DOTALL,
+    def _source(
+        self, src: str, shift: int, options: dict | None = None,
+        note: bool = False,
+    ) -> DataFrame:
+        """The stream of ``src`` with its watermark on ``__sset_ets``,
+        the event time moved ``shift`` µs forward (a watermark-less
+        source streams as is). ``note`` records the source size for the
+        drain's partition count."""
+        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
+
+        sdf, path = self._tenv._read_stream(src, options)
+        if note:
+            note_source_bytes(path)
+        wm = self._tenv._watermarks.get(src)
+        if wm is None:
+            return sdf
+        ets = F.timestamp_micros(F.unix_micros(F.col(wm[0])) + F.lit(shift))
+        # observe() stops the optimizer from pushing a statement's WHERE
+        # below the watermark, which would then be computed from the
+        # filtered rows only (and, as the minimum over the branches,
+        # hold back every statement)
+        return sdf.select(
+            "*", ets.alias("__sset_ets", metadata={_EVENT_TIME_SHIFT: shift})
+        ).withWatermark("__sset_ets", wm[1]).observe(
+            f"__sset_rows_{src}", F.count(F.lit(1)).alias("rows")
         )
-        if rm is None:
-            return None  # HAVING / exotic tail → raw-row staging
-        gkeys = [k.strip().split(".")[-1].lower()
-                 for k in rm.group("g").split(",") if k.strip()]
-        data_keys = [k for k in gkeys
-                     if k not in ("window_start", "window_end")]
-        from flink_1_16_0_src_spark.sql_clauses import _split_top_commas
 
-        sel: list[dict] = []
-        aggs = {"COUNT", "SUM", "MIN", "MAX", "AVG"}
-        for it in _split_top_commas(hm.group("sel")):
-            km = re.fullmatch(
-                r"(?:\w+\.)?(\w+)(?:\s+AS\s+(\w+))?", it, re.IGNORECASE
-            )
-            if km and km.group(1).lower() in gkeys:
-                sel.append({"kind": "key", "col": km.group(1).lower(),
-                            "alias": km.group(2) or km.group(1)})
-                continue
-            am = re.fullmatch(
-                r"(\w+)\s*\((.*)\)\s+AS\s+(\w+)", it,
-                re.IGNORECASE | re.DOTALL,
-            )
-            if am is None or am.group(1).upper() not in aggs:
-                return None
-            inner = am.group(2).strip()
-            # inner must be balanced (the fullmatch above could pair
-            # the fn's '(' with a later ')'), aggregate-free, and not
-            # reference the window columns
-            d = 0
-            for ch in inner:
-                d += ch == "("
-                d -= ch == ")"
-                if d < 0:
-                    return None
-            if d != 0 or _SSET_AGG_HEAD.search(inner):
-                return None
-            if re.search(r"\bwindow_(start|end)\b|\bDISTINCT\b", inner,
-                         re.IGNORECASE):
-                return None
-            fn_u = am.group(1).upper()
-            if inner == "*" and fn_u != "COUNT":
-                return None
-            if am.group(3).lower() in gkeys:
-                return None  # alias shadows a group key → ambiguous
-            sel.append({"kind": "agg", "fn": fn_u, "expr": inner,
-                        "alias": am.group(3)})
-        return {"where": rm.group("w"), "keys": data_keys, "sel": sel}
+    @staticmethod
+    def _shift_us(sts: list[_SetStatement]) -> int:
+        """How far a query running ``sts`` moves event times forward:
+        past the epoch from year 1, by a multiple of every window's
+        grid, so each window maps onto a window."""
+        import math
 
-    def _acc_stage_emit(
-        self, rows, acc: dict, idx: int, batch_id, state: dict,
-        old_stages: list, lo, hi, plan_needed: bool, bspark,
-        sink_name: str, collist, emit_fn, stage_fn,
-    ) -> None:
-        """Partial-accumulator stage+emit (r12, VERDICT r11 #1c) for
-        TUMBLE/HOP/CUMULATE: ``rows`` already carries
-        window_start/window_end (one row per covering window) and the
-        WHERE/late filters. Fold the batch into ONE partial row per
-        (window, keys) group (COUNT/SUM merge by sum, MIN/MAX by
-        min/max, AVG as a sum+count pair), stage the partials as
-        append-only segments, merge partials of windows closing in
-        (lo, hi] and emit — exact, no output post-filter, no raw-row
-        re-planning. ``plan_needed`` is False when no window closes
-        in (lo, hi]."""
-        paggs, aidx = [], []
-        for i2_, it in enumerate(acc["sel"]):
-            if it["kind"] != "agg":
-                continue
-            aidx.append(i2_)
-            e = F.lit(1) if it["expr"] == "*" else F.expr(it["expr"])
-            if it["fn"] == "AVG":
-                paggs.append(F.sum(e).alias(f"__p{i2_}_s"))
-                paggs.append(F.count(e).alias(f"__p{i2_}_c"))
-            else:
-                agg_fn = {"COUNT": F.count, "SUM": F.sum,
-                          "MIN": F.min, "MAX": F.max}[it["fn"]]
-                paggs.append(agg_fn(e).alias(f"__p{i2_}"))
-        gb = ["window_start", "window_end", *acc["keys"]]
-        pb = (rows.groupBy(*gb).agg(*paggs) if paggs
-              else rows.select(*gb).distinct()).persist()
-        segs = state["stage"][idx] or []
-        if plan_needed:
-            rel = pb
-            if segs:
-                rel = rel.unionByName(
-                    bspark.read.schema(pb.schema)
-                    .parquet(*[s_["dir"] for s_ in segs])
-                )
-            rel = rel.where(F.col("window_end") <= F.lit(hi))
-            if lo is not None:
-                rel = rel.where(F.col("window_end") > F.lit(lo))
-            rel = rel.persist()
-            if rel.limit(1).count():
-                # merge-result types must equal the RAW plan's aggregate
-                # types or the sink schema drifts between the acc and
-                # raw-row paths — e.g. AVG(DECIMAL(10,2)) is
-                # DECIMAL(14,6) under Spark's typing while the naive
-                # sum/count division is not, and SUM-of-SUMs widens
-                # decimal precision. Resolve the raw types ONCE PER
-                # STATEMENT (cached on the acc dict — r13: this is a
-                # plan analysis, and re-running it per emission boundary
-                # made every boundary pay an analyzer pass for types
-                # that cannot change across batches).
-                raw_types = acc.get("_raw_types")
-                if raw_types is None:
-                    raw_types = [
-                        f.dataType
-                        for f in rows.select(*[
-                            F.expr(
-                                f"{acc['sel'][i2_]['fn']}"
-                                f"({acc['sel'][i2_]['expr']})"
-                            )
-                            for i2_ in aidx
-                        ]).schema.fields
-                    ]
-                    acc["_raw_types"] = raw_types
-                maggs = []
-                for j_, i2_ in enumerate(aidx):
-                    it = acc["sel"][i2_]
-                    if it["fn"] == "AVG":
-                        mcol = F.sum(f"__p{i2_}_s") / F.sum(f"__p{i2_}_c")
-                    else:
-                        merge_fn = {"COUNT": F.sum, "SUM": F.sum,
-                                    "MIN": F.min, "MAX": F.max}[it["fn"]]
-                        mcol = merge_fn(f"__p{i2_}")
-                    maggs.append(
-                        mcol.cast(raw_types[j_]).alias(it["alias"])
-                    )
-                merged = (rel.groupBy(*gb).agg(*maggs) if maggs
-                          else rel.select(*gb).distinct())
-                final = merged.select(*[
-                    F.col(it["col"]).alias(it["alias"])
-                    if it["kind"] == "key" else F.col(it["alias"])
-                    for it in acc["sel"]
-                ])
-                # hand the merged DataFrame to the emitter directly
-                # (r13, VERDICT r12 #6): the former temp-view +
-                # "SELECT * FROM wview" hop re-planned SQL text at
-                # every emission boundary for a frame this code had
-                # already built — accumulator statements now plan ZERO
-                # statement text after classification, O(#statements)
-                # not O(#boundaries) (full_statement_plans receipt)
-                emit_fn(sink_name, collist, final,
-                        bspark, slot=(batch_id, idx))
-            rel.unpersist()
-        keep_new = (pb.where(F.col("window_end") > F.lit(hi))
-                    if hi is not None else pb)
-        state["stage"][idx] = stage_fn(
-            keep_new, "window_end", idx, batch_id, segs, hi, old_stages
+        from flink_1_16_0_src_spark.operators.windows import _micros
+
+        grid = 1
+        for st in sts:
+            if st.tvf is not None and st.tvf.fn != "SESSION":
+                grid = math.lcm(grid, _micros(st.tvf.slide or st.tvf.size))
+        return -(-_EPOCH_SPAN_US // grid) * grid
+
+    @staticmethod
+    def _batch_rows(st: _SetStatement, part: DataFrame) -> DataFrame:
+        """What a row-level statement's per-batch SQL reads from its
+        branch's micro-batch rows ``part``: the source rows, each closed
+        window's rows with their window columns."""
+        if st.kind == "stateless":
+            return part
+        start = F.col("__w.start")
+        if st.tvf.fn == "CUMULATE":
+            from flink_1_16_0_src_spark.operators.windows import cumulate_start_sql
+
+            start = F.expr(cumulate_start_sql("__w.end", st.tvf.size))
+        start, end = (
+            F.timestamp_micros(F.unix_micros(c) - F.lit(st.shift))
+            for c in (start, F.col("__w.end"))
         )
-        pb.unpersist()
+        return part.select("__w", F.explode("rows").alias("__r")).select(
+            "__r.*", start.alias("window_start"), end.alias("window_end"),
+            (end - F.expr("INTERVAL '0.001' SECOND")).alias("window_time"),
+        )
 
     def add_insert_sql(self, sql: str) -> "StreamStatementSet":
         mi = _INSERT_INTO.match(sql.strip())
@@ -3092,22 +2980,23 @@ class StreamStatementSet:
         if mi.group(1).upper() == "OVERWRITE":
             raise ValueError("streaming INSERT is append-only (no OVERWRITE)")
         sink_name, body = mi.group(2), mi.group("body")
-        if sink_name not in self._tenv._sinks:
+        tenv = self._tenv
+        if sink_name not in tenv._sinks:
             raise KeyError(f"unknown sink table {sink_name!r}")
+        from pyspark.errors import AnalysisException
+
         from flink_1_16_0_src_spark.sql_clauses import _unquoted_text
 
         unquoted = _unquoted_text(body)
         refs = [
-            s for s in self._tenv._sources
+            s for s in tenv._sources
             if re.search(rf"(?<![\w.]){re.escape(s)}(?![\w.])", unquoted,
                          re.IGNORECASE)
         ]
         # the STREAM side is the watermarked source; other referenced
-        # DDL tables are batch DIMENSIONS and resolve through their
-        # batch temp views inside the per-batch planning (the
-        # stream-dim enrichment shape). A watermark-less statement
-        # keeps the old rule: its single DDL source IS the stream.
-        wm_srcs = [s for s in refs if s in self._tenv._watermarks]
+        # DDL tables are batch DIMENSIONS. A watermark-less statement's
+        # single DDL source IS the stream.
+        wm_srcs = [s for s in refs if s in tenv._watermarks]
         srcs_in = wm_srcs if wm_srcs else refs
         if len(srcs_in) != 1:
             raise ValueError(
@@ -3116,10 +3005,38 @@ class StreamStatementSet:
                 f"{srcs_in or 'none'}); batch DDL dims may join freely, "
                 "stream-stream joins run as their own stream_query"
             )
-        kind, info = self._classify(unquoted, body, srcs_in[0])
-        self._inserts.append(
-            (sink_name, mi.group("collist"), body, srcs_in[0], kind, info)
-        )
+        src = srcs_in[0]
+        kind, tvf = self._admit(unquoted, body, src)
+        st = _SetStatement(sink_name, mi.group("collist"), body, src, kind,
+                           tvf, [s for s in refs if s != src])
+        st.bind()
+        st.shift = self._shift_us([st])
+        sdf = self._source(src, st.shift)
+        try:
+            if st.kind == "agg":
+                try:
+                    branch = self._branch(st, sdf)
+                    jvm = tenv.spark._jvm
+                    jvm.org.apache.spark.sql.catalyst.analysis \
+                        .UnsupportedOperationChecker.checkForStreaming(
+                            branch._jdf.queryExecution().analyzed(),
+                            jvm.org.apache.spark.sql.streaming.OutputMode.Append(),
+                        )
+                except (ValueError, AnalysisException):
+                    # not an append-mode stream_query plan: ship the
+                    # closed windows' rows instead
+                    st.kind = "rows"
+                    st.bind()
+            if st.kind != "agg":
+                # analyze the per-batch SQL over an empty micro-batch
+                empty = tenv.spark.createDataFrame(
+                    [], self._branch(st, sdf).schema
+                )
+                self._batch_rows(st, empty).createOrReplaceTempView(st.view)
+                tenv._build_insert_df(tenv._sinks[sink_name], st.collist, st.text)
+        except AnalysisException as e:
+            raise ValueError(f"streaming statement set: {e}") from e
+        self._inserts.append(st)
         return self
 
     def execute(
@@ -3129,593 +3046,188 @@ class StreamStatementSet:
     ) -> dict:
         """Drain all statements (availableNow). Statements GROUP BY
         their streaming source: each distinct source runs as ONE
-        streaming query whose scan its statements provably share —
-        the reference's common-subgraph sharing merges IDENTICAL
-        scans the same way (StreamCommonSubGraphBasedOptimizer.scala:
-        49); distinct sources are distinct subgraphs there too, they
-        merely ride one job. ``streaming_queries`` in the receipt =
-        number of distinct sources (1 for the classic shared-scan
-        set). With a checkpoint dir and several sources, each group
-        persists under its own ``src<i>/`` subdir.
-        ``max_files_per_trigger`` forces multi-batch drains (tests
-        use it to prove cross-batch window correctness)."""
+        streaming query — the reference's common-subgraph sharing
+        merges identical scans the same way
+        (StreamCommonSubGraphBasedOptimizer.scala:49); distinct sources
+        are distinct subgraphs there too, they merely ride one job.
+        ``streaming_queries`` in the receipt = number of distinct
+        sources. With a checkpoint dir and several sources, each group
+        keeps its checkpoint in its own ``src<i>/`` subdir.
+        ``max_files_per_trigger`` forces multi-batch drains (tests use
+        it to prove cross-batch window correctness)."""
         if not self._inserts:
             raise ValueError("streaming statement set: no statements buffered")
         groups: dict[str, list] = {}
-        for it in self._inserts:
-            groups.setdefault(it[3], []).append(it)
-        total = {
+        for st in self._inserts:
+            groups.setdefault(st.source, []).append(st)
+        for gi, (src_name, sts) in enumerate(groups.items()):
+            ck = (os.path.join(checkpoint, f"src{gi}")
+                  if checkpoint and len(groups) > 1 else checkpoint)
+            self._drain(src_name, sts, ck, max_files_per_trigger)
+        return {
             "statements": len(self._inserts),
             "shared_source": (next(iter(groups)) if len(groups) == 1
                               else sorted(groups)),
-            "window_agg_statements": 0,
-            "streaming_queries": 0,
-            # r13 (VERDICT r12 #6): how many times any statement's SQL
-            # TEXT was planned during the drain. Accumulator-decomposed
-            # window statements contribute 0 (their merged frame is
-            # handed to the emitter as a DataFrame); stateless and
-            # raw-row-staged statements inherently re-plan per boundary
-            # (their text must bind each batch's view content).
-            "full_statement_plans": 0,
+            "window_agg_statements": sum(
+                st.kind != "stateless" for st in self._inserts
+            ),
+            "streaming_queries": len(groups),
         }
-        for gi, (src_name, inserts) in enumerate(groups.items()):
-            ck = (os.path.join(checkpoint, f"src{gi}")
-                  if checkpoint and len(groups) > 1 else checkpoint)
-            r = self._execute_group(
-                src_name, inserts, ck, max_files_per_trigger
-            )
-            total["window_agg_statements"] += r["window_agg_statements"]
-            total["full_statement_plans"] += r["full_statement_plans"]
-            total["streaming_queries"] += 1
-        return total
 
-    def _execute_group(
+    def _drain(
         self,
         src_name: str,
-        inserts: list,
+        sts: list[_SetStatement],
         checkpoint: str | None,
         max_files_per_trigger: int | None,
-    ) -> dict:
-        """One streaming query draining every statement that reads
-        ``src_name`` — the shared-scan unit of execute()."""
-        import shutil as _sh
-        import tempfile as _tf
-
-        import pandas as _pd
-
-        from flink_1_16_0_src_spark import sources as srcs
-
-        tenv, spark = self._tenv, self._tenv.spark
-        sdf = tenv.stream(
-            src_name,
-            options=(
-                {"maxFilesPerTrigger": str(max_files_per_trigger)}
-                if max_files_per_trigger else None
-            ),
-        )
-        batch_view = f"__sset_batch_{next(_STREAM_SUB_SEQ)}"
-        pat = rf"(?<![\w.]){re.escape(src_name)}(?![\w.])"
-        win_idx = [i for i, it in enumerate(inserts)
-                   if it[4] in ("window", "session")]
-        wm_spec = tenv._watermarks.get(src_name)
-        # stage value per windowed statement: a LIST of append-only
-        # segment entries {dir, max_end, rows} for window statements
-        # (r12 — written once per batch, dropped whole when the
-        # watermark passes max_end); a single re-staged dir for
-        # SESSION (merging windows need the full open-session row set
-        # each batch — that rewrite is bounded by OPEN sessions only)
-        state: dict = {"max_ts": None, "wm": None, "last_batch": None,
-                       "stage": {i: ([] if inserts[i][4] != "session"
-                                     else None) for i in win_idx},
-                       "pending": [], "staged_rows_cum": 0,
-                       "full_plans": 0}
-        # Persistent staging (r11, SURVEY §7.3 risk 3): with an
-        # explicit checkpoint dir, window staging + the running
-        # watermark live INSIDE it next to Spark's offset log, tracked
-        # by an atomically-replaced manifest — a killed-and-restarted
-        # (or simply re-executed) drain resumes mid-window instead of
-        # replaying offsets over empty staging. A fully-processed
-        # replayed batch is skipped (no duplicate emissions), and
-        # unpartitioned-filesystem emissions ride the two-phase file
-        # commit below (pending dir → manifest → idempotent renames)
-        # for exactly-once across crashes at ANY point.
-        import datetime as _dt
-        import json as _json
-
-        stmt_sig = [f"{s}::{c or ''}::{b}" for s, c, b, _s2, _k, _i
-                    in inserts]
-        mpath = (os.path.join(checkpoint, "sset_manifest.json")
-                 if checkpoint else None)
-        if checkpoint:
-            os.makedirs(checkpoint, exist_ok=True)
-            stage_root = os.path.join(checkpoint, "sset_stage")
-            os.makedirs(stage_root, exist_ok=True)
-        else:
-            stage_root = _tf.mkdtemp(prefix="spark_graft_sset_state_") \
-                if win_idx else None
-        if mpath and os.path.exists(mpath):
-            with open(mpath) as fh:
-                m = _json.load(fh)
-            if m["statements"] != stmt_sig:
-                raise ValueError(
-                    "streaming statement set: checkpoint "
-                    f"{checkpoint!r} was written by a DIFFERENT "
-                    "statement set — resume requires the same INSERTs "
-                    "in the same order, or a fresh checkpoint dir"
-                )
-            state["max_ts"] = (_dt.datetime.fromisoformat(m["max_ts"])
-                               if m["max_ts"] else None)
-            state["wm"] = (_dt.datetime.fromisoformat(m["wm"])
-                           if m["wm"] else None)
-            state["last_batch"] = m["last_batch"]
-            state["stage"] = {int(k): v
-                              for k, v in m["stage"].items()}
-            state["pending"] = m.get("pending", [])
-            state["staged_rows_cum"] = m.get("staged_rows_cum", 0)
-            for i_, v_ in state["stage"].items():
-                if inserts[i_][4] != "session" and isinstance(v_, str):
-                    raise ValueError(
-                        "streaming statement set: checkpoint "
-                        f"{checkpoint!r} staged windows in the pre-r12 "
-                        "full-rewrite format — drain it with the old "
-                        "build or start a fresh checkpoint dir"
-                    )
-                info_ = inserts[i_][5]
-                if (v_ and m.get("raw_stage_columns") != _SSET_RAW_STAGE
-                        and info_["fn"] == "TUMBLE" and not info_["acc"]):
-                    # raw TUMBLE rows once staged one __sset_wend column;
-                    # read with today's schema they would come back
-                    # NULL-ended and drop without a trace
-                    raise ValueError(
-                        "streaming statement set: checkpoint "
-                        f"{checkpoint!r} staged TUMBLE rows in the "
-                        "single-end __sset_wend layout — drain it with "
-                        "the old build or start a fresh checkpoint dir"
-                    )
-        delay = _pd.Timedelta(wm_spec[1]) if win_idx else None
-        pend_root = (os.path.join(checkpoint, "sset_pending")
-                     if checkpoint else None)
-
-        def _commit_pending():
-            """Phase 2 of the two-phase file commit: move each
-            manifested pending file into its sink under a
-            batch/statement-deterministic name. Idempotent — a file
-            already moved is absent from its pending dir and skipped,
-            so a crash anywhere inside the move loop re-runs safely
-            (FileSink's pending→finalized rename protocol,
-            StreamingFileSink/TwoPhaseCommittingSink parity)."""
-            import glob as _glob
-
-            for ent in state["pending"]:
-                files = sorted(
-                    _glob.glob(os.path.join(ent["src"], "part-*"))
-                )
-                os.makedirs(ent["dst"], exist_ok=True)
-                for f in files:
-                    dst = os.path.join(
-                        ent["dst"], ent["prefix"] + os.path.basename(f)
-                    )
-                    if os.path.exists(f):
-                        try:
-                            os.replace(f, dst)
-                        except OSError:
-                            # checkpoint and sink on different
-                            # filesystems: copy-then-delete keeps the
-                            # protocol (the pending copy is the
-                            # durable one until the delete)
-                            _sh.copy2(f, dst)
-                            os.remove(f)
-                _sh.rmtree(ent["src"], ignore_errors=True)
-            state["pending"] = []
-
-
-        def _write_manifest(batch_id):
-            if mpath is None:
-                return
-            tmp = mpath + ".tmp"
-            with open(tmp, "w") as fh:
-                _json.dump({
-                    "statements": stmt_sig,
-                    "max_ts": (state["max_ts"].isoformat()
-                               if state["max_ts"] else None),
-                    "wm": (state["wm"].isoformat()
-                           if state["wm"] else None),
-                    "last_batch": batch_id,
-                    "stage": state["stage"],
-                    "pending": state["pending"],
-                    "staged_rows_cum": state["staged_rows_cum"],
-                    "raw_stage_columns": _SSET_RAW_STAGE,
-                }, fh)
-            os.replace(tmp, mpath)
-
-        def _ep_us(dt_):
-            """Epoch micros of a (naive, UTC-semantics) datetime —
-            avoids .timestamp()'s local-TZ interpretation."""
-            return ((dt_ - _dt.datetime(1970, 1, 1))
-                    // _dt.timedelta(microseconds=1))
-
-        def _stage_segment(keep_new, end_col, idx, batch_id, segs, hi,
-                           old_stages):
-            """Append-only staging (r12, VERDICT r11 #1): write ONLY
-            the batch's own still-open rows as a new segment annotated
-            with its max window-end and row count, then drop whole
-            segments the watermark has passed. Per-batch stage writes
-            are O(batch delta); a row is written to staging AT MOST
-            ONCE over the drain (staged_rows_cum in the manifest is
-            the auditable receipt)."""
-            smax, srows = keep_new.agg(
-                F.max(end_col), F.count("*")
-            ).first()
-            segs = list(segs)
-            if srows:
-                segdir = os.path.join(stage_root, f"s{idx}_b{batch_id}")
-                keep_new.write.mode("overwrite").parquet(segdir)
-                segs.append({"dir": segdir, "max_end": smax.isoformat(),
-                             "rows": int(srows)})
-                state["staged_rows_cum"] += int(srows)
-            if hi is not None:
-                live = []
-                for s_ in segs:
-                    if _dt.datetime.fromisoformat(s_["max_end"]) <= hi:
-                        old_stages.append(s_["dir"])
-                    else:
-                        live.append(s_)
-                segs = live
-            return segs
-
-        if state["pending"]:
-            # the previous run crashed between manifest and commit —
-            # finish the moves before consuming anything new, then
-            # persist the cleared pending list
-            _commit_pending()
-            _write_manifest(state["last_batch"])
-
-        def _emit(sink_name, collist, sub, bspark, post=None, slot=None):
-            sink = tenv._sinks[sink_name]
-            if isinstance(sub, str):
-                # statement TEXT re-planned for this boundary — the
-                # receipt's full_statement_plans counts these (r13;
-                # accumulator statements pass a built DataFrame instead
-                # and never re-plan their text)
-                state["full_plans"] += 1
-            df, static_parts = tenv._build_insert_df(
-                sink, collist, sub, spark=bspark
-            )
-            if post is not None:
-                df = post(df)
-            parts = (sink.get("partitioned_by")
-                     or (list(static_parts) or None))
-            if (pend_root is not None and slot is not None
-                    and sink["connector"] == "filesystem" and not parts):
-                # phase 1 of the two-phase file commit: write the
-                # batch's output to a pending dir (overwrite — a
-                # recompute-replay after a pre-manifest crash lands on
-                # the same dir) and record the move in the manifest
-                # BEFORE any sink mutation. Partitioned / non-file
-                # sinks keep the direct append (at-least-once on a
-                # mid-emit crash, documented).
-                bid, sidx = slot
-                pdir = os.path.join(pend_root, f"b{bid}_s{sidx}")
-                srcs.write_table(
-                    df, pdir, "filesystem",
-                    sink["props"].get("format", "parquet"),
-                    {**sink["props"], "sink.mode": "overwrite"},
-                    partitioned_by=None,
-                )
-                state["pending"].append({
-                    "src": pdir,
-                    "dst": sink["props"]["path"],
-                    "prefix": f"sset-b{bid}-s{sidx}-",
-                })
-                return
-            srcs.write_table(
-                df,
-                sink["props"].get("path"),
-                sink["connector"],
-                sink["props"].get("format", "parquet"),
-                {**sink["props"], "sink.mode": "append"},
-                partitioned_by=parts,
-            )
-
-        def _bind(parts, view):
-            """The statement text (split on its string literals) with
-            the source table read from ``view``."""
-            return "".join(
-                p if i % 2 else re.sub(pat, view, p, flags=re.IGNORECASE)
-                for i, p in enumerate(parts)
-            )
-
-        def fn(batch_df, batch_id):
-            if (state["last_batch"] is not None
-                    and batch_id <= state["last_batch"]):
-                # replay of a batch the manifest already recorded as
-                # fully processed (emissions + staging + watermark) —
-                # skip, exactly-once across restarts
-                return
-            old_stages: list[str] = []
-            state["pending"] = []
-            batch_df.persist()
-            batch_df.createOrReplaceTempView(batch_view)
-            bspark = batch_df.sparkSession
-            # running watermark = max event time seen − delay (the
-            # engine's WatermarkStrategy contract); a bounded 1-row agg
-            wm_prev, wm_new = state["wm"], state["wm"]
-            if win_idx:
-                bmax = batch_df.agg(F.max(wm_spec[0])).first()[0]
-                if bmax is not None:
-                    state["max_ts"] = (
-                        bmax if state["max_ts"] is None
-                        else max(state["max_ts"], bmax)
-                    )
-                if state["max_ts"] is not None:
-                    wm_new = state["max_ts"] - delay
-            try:
-                for idx, (sink_name, collist, body, _s, kind, info) in enumerate(inserts):
-                    parts = re.split(r"('(?:[^']|'')*')", body)
-                    if kind == "stateless":
-                        _emit(sink_name, collist, _bind(parts, batch_view), bspark,
-                              slot=(batch_id, idx))
-                        continue
-                    if kind == "window":
-                        # TUMBLE / HOP / CUMULATE over one window-end
-                        # grid — TUMBLE is HOP with slide = size
-                        # (SliceAssigners.java:61-94). Staging is
-                        # APPEND-ONLY (r12): each batch writes ONLY its
-                        # own still-open rows as a stage SEGMENT
-                        # annotated with the first and last window end
-                        # covering each row; a segment drops whole when
-                        # the watermark passes its max last end.
-                        # Emission plans the statement over (new rows ∪
-                        # live segments) FILTERED to rows covering a
-                        # window closing in (wm_prev, wm_new] — a window
-                        # ending at e keeps exactly the rows with fend <=
-                        # e <= lend, and late rows (lend <= wm_prev)
-                        # drop. Batches where (wm_prev, wm_new] holds no
-                        # window-end grid point skip planning entirely.
-                        # Write per batch = O(batch delta), compute =
-                        # O(rows of closing windows) — the reference's
-                        # per-record O(delta) slicing
-                        # (SlicingWindowOperator.java:101).
-                        tsu = F.unix_micros(F.col(info["ts"]))
-                        size, slide = info["size"], info["slide"]
-                        if info["fn"] == "CUMULATE":
-                            # span [S, S + size) with S on the size
-                            # grid; slice ends S + j*step (slide holds
-                            # the step), the first one > t
-                            wstart = tsu - F.pmod(tsu, F.lit(size))
-                            lend_us = wstart + F.lit(size)
-                            fend_us = (tsu - F.pmod(tsu - wstart, F.lit(slide))
-                                       + F.lit(slide))
-                            rem, grid_exact = 0, size % slide == 0
-                        else:
-                            # window starts k*slide + offset; a row at t
-                            # covers the ends in (t, t + size]
-                            off = info["offset"]
-                            lend_us = (tsu - F.pmod(tsu - F.lit(off), F.lit(slide))
-                                       + F.lit(size))
-                            fend_us = (tsu - F.pmod(tsu - F.lit(size + off),
-                                                    F.lit(slide))
-                                       + F.lit(slide))
-                            rem, grid_exact = (off + size) % slide, True
-                        lo, hi = wm_prev, wm_new
-                        plan_needed = hi is not None
-                        if hi is not None and lo is not None and grid_exact:
-                            # largest window-end grid point <= hi; none
-                            # in (lo, hi] → no window closes this batch
-                            hi_us = _ep_us(hi)
-                            if hi_us - (hi_us - rem) % slide <= _ep_us(lo):
-                                plan_needed = False
-                        if info["acc"]:
-                            # PARTIAL-ACCUMULATOR staging (r12, VERDICT
-                            # r11 #1c): explode each row into its
-                            # covering windows, fold the batch into ONE
-                            # partial row per (window, keys) group,
-                            # stage the partials, and merge at emission
-                            # — stage I/O O(open groups × windows per
-                            # row) at ANY row rate, no raw-row
-                            # re-planning, no output post-filter (groups
-                            # key on the window)
-                            # (MiniBatchIncrementalGroupAggFunction.java)
-                            eus = F.col("__sset_eus")
-                            rows = (
-                                batch_df
-                                .withColumn("__sset_eus", F.explode(
-                                    F.sequence(fend_us, lend_us, F.lit(slide))
-                                ))
-                                .withColumn("window_start", F.timestamp_micros(
-                                    wstart if info["fn"] == "CUMULATE"
-                                    else eus - F.lit(size)
-                                ))
-                                .withColumn("window_end", F.timestamp_micros(eus))
-                                .drop("__sset_eus")
-                            )
-                            if info["acc"]["where"]:
-                                rows = rows.where(F.expr(info["acc"]["where"]))
-                            if lo is not None:
-                                rows = rows.where(F.col("window_end") > F.lit(lo))
-                            self._acc_stage_emit(
-                                rows, info["acc"], idx, batch_id, state,
-                                old_stages, lo, hi, plan_needed, bspark,
-                                sink_name, collist, _emit, _stage_segment,
-                            )
-                            continue
-                        fcol, lcol = _SSET_RAW_STAGE
-                        cur_new = (
-                            batch_df
-                            .withColumn(lcol, F.timestamp_micros(lend_us))
-                            .withColumn(fcol, F.timestamp_micros(fend_us))
-                        )
-                        segs = state["stage"][idx] or []
-                        if plan_needed:
-                            rel = cur_new
-                            if segs:
-                                rel = rel.unionByName(
-                                    bspark.read.schema(cur_new.schema)
-                                    .parquet(*[s_["dir"] for s_ in segs])
-                                )
-                            rel = rel.where(F.col(fcol) <= F.lit(hi))
-                            if lo is not None:
-                                rel = rel.where(F.col(lcol) > F.lit(lo))
-                            rel = rel.persist()
-                            if rel.limit(1).count():
-                                wview = f"{batch_view}_w{idx}"
-                                rel.drop(lcol, fcol) \
-                                    .createOrReplaceTempView(wview)
-
-                                def post(df, lo=lo, hi=hi):
-                                    # a row may sit in windows closing
-                                    # later or earlier: keep (lo, hi]
-                                    cond = F.col("window_end") <= F.lit(hi)
-                                    if lo is not None:
-                                        cond = cond & (
-                                            F.col("window_end") > F.lit(lo)
-                                        )
-                                    return df.where(cond)
-
-                                _emit(sink_name, collist, _bind(parts, wview), bspark,
-                                      post if info["multi"] else None,
-                                      slot=(batch_id, idx))
-                            rel.unpersist()
-                        keep_new = (
-                            cur_new.where(F.col(lcol) > F.lit(hi))
-                            if hi is not None else cur_new
-                        )
-                        state["stage"][idx] = _stage_segment(
-                            keep_new, lcol, idx, batch_id, segs, hi,
-                            old_stages,
-                        )
-                        continue
-                    if kind == "session":
-                        # SESSION: recompute session assignment over
-                        # staged ∪ new rows each batch (merging
-                        # windows); sessions whose end = max(ts)+gap
-                        # has passed the watermark are final — feed
-                        # their COMPLETE row sets to the statement
-                        # (recomputing the TVF over whole closed
-                        # sessions reproduces exactly those sessions,
-                        # since sessions are maximal disjoint row
-                        # groups). Open-session rows re-stage raw.
-                        from pyspark.sql import Window as _W
-
-                        gap_us = int(
-                            _pd.Timedelta(info["gap"]).total_seconds()
-                            * 1e6
-                        )
-                        tsu = F.unix_micros(F.col(info["ts"]))
-                        cur = batch_df
-                        if wm_prev is not None:
-                            # isWindowLate (allowed lateness 0): the
-                            # row's prospective session [ts, ts+gap)
-                            # closed before the watermark and fired
-                            # state was purged — drop
-                            cur = cur.where(
-                                F.timestamp_micros(tsu + F.lit(gap_us))
-                                > F.lit(wm_prev)
-                            )
-                        stg = state["stage"][idx]
-                        if stg is not None:
-                            cur = cur.unionByName(
-                                bspark.read.schema(cur.schema)
-                                .parquet(stg)
-                            )
-                        pk = ([F.col(k) for k in info["keys"]]
-                              if info["keys"] else [F.lit(1)])
-                        kw = _W.partitionBy(*pk).orderBy(info["ts"])
-                        cur = cur.withColumn(
-                            "__sset_sid",
-                            F.sum(
-                                F.coalesce(
-                                    (tsu - F.unix_micros(
-                                        F.lag(F.col(info["ts"])).over(kw)
-                                    ) > F.lit(gap_us)).cast("int"),
-                                    F.lit(1),
-                                )
-                            ).over(
-                                kw.rowsBetween(_W.unboundedPreceding, 0)
-                            ),
-                        )
-                        scol = "__sset_send"
-                        cur = cur.withColumn(
-                            scol,
-                            F.timestamp_micros(
-                                F.max(tsu).over(
-                                    _W.partitionBy(
-                                        *pk, F.col("__sset_sid")
-                                    )
-                                )
-                                + F.lit(gap_us)
-                            ),
-                        ).persist()
-                        closed = (
-                            cur.where(F.col(scol) <= F.lit(wm_new))
-                            if wm_new is not None else None
-                        )
-                        open_df = (
-                            cur.where(F.col(scol) > F.lit(wm_new))
-                            if wm_new is not None else cur
-                        )
-                        if closed is not None and closed.limit(1).count():
-                            wview = f"{batch_view}_w{idx}"
-                            closed.drop(scol, "__sset_sid") \
-                                .createOrReplaceTempView(wview)
-                            _emit(sink_name, collist, _bind(parts, wview), bspark,
-                                  slot=(batch_id, idx))
-                        new_stage = os.path.join(
-                            stage_root, f"s{idx}_b{batch_id}"
-                        )
-                        open_df.drop(scol, "__sset_sid").write \
-                            .mode("overwrite").parquet(new_stage)
-                        cur.unpersist()
-                        if stg is not None:
-                            old_stages.append(stg)
-                        state["stage"][idx] = new_stage
-                if win_idx:
-                    state["wm"] = wm_new
-                # durability point: pending outputs + staging +
-                # watermark + batch id hit the manifest BEFORE any
-                # sink mutation (phase 1 of the two-phase commit),
-                # THEN pending files move into their sinks (phase 2,
-                # idempotent renames), THEN the manifest clears its
-                # pending list and superseded stage dirs drop (never
-                # delete a dir a manifest still references). A crash
-                # before the manifest recomputes the batch
-                # (deterministic, pending overwritten, sinks
-                # untouched); after it, startup finishes the moves —
-                # exactly-once for unpartitioned filesystem sinks.
-                state["last_batch"] = batch_id
-                _write_manifest(batch_id)
-                if state["pending"]:
-                    _commit_pending()
-                    _write_manifest(batch_id)
-                for d_ in old_stages:
-                    _sh.rmtree(d_, ignore_errors=True)
-            finally:
-                batch_df.unpersist()
+    ) -> None:
+        """One append-mode streaming query running every statement that
+        reads ``src_name``."""
+        import hashlib
+        import json
+        import shutil
+        import tempfile
 
         from flink_1_16_0_src_spark.streaming.sources import (
             _scoped_shuffle_partitions,
             derived_stream_partitions,
         )
 
-        _sess = sdf.sparkSession
-        with _scoped_shuffle_partitions(
-            _sess, derived_stream_partitions(_sess)
-        ):
-            q = (
-                sdf.writeStream.foreachBatch(fn)
-                .trigger(availableNow=True)
-                .option(
-                    "checkpointLocation",
-                    checkpoint or _tf.mkdtemp(prefix="spark_graft_sset_"),
-                )
-                .start()
+        spark = self._tenv.spark
+        own_ck = checkpoint is None
+        if own_ck:
+            checkpoint = tempfile.mkdtemp(prefix="spark_graft_sset_")
+        elif os.path.exists(os.path.join(checkpoint, "sset_manifest.json")):
+            raise ValueError(
+                f"streaming statement set: checkpoint {checkpoint!r} holds "
+                "the older layout with sset_manifest.json and private "
+                "window staging — drain it with the older build or start "
+                "a fresh checkpoint dir"
             )
-            q.awaitTermination()
-        if stage_root is not None and not checkpoint:
-            # windows still open at end-of-drain are NOT emitted
-            # (append-mode contract, same as the stream_query drains);
-            # with a checkpoint dir they PERSIST — a later execute()
-            # with the same checkpoint resumes them mid-window
-            _sh.rmtree(stage_root, ignore_errors=True)
-        return {"window_agg_statements": len(win_idx),
-                "full_statement_plans": state["full_plans"]}
+        else:
+            sig = [f"{st.sink}::{st.collist or ''}::{st.body}" for st in sts]
+            fp = os.path.join(checkpoint, "statement_set.json")
+            if os.path.exists(fp):
+                with open(fp) as fh:
+                    if json.load(fh) != sig:
+                        raise ValueError(
+                            "streaming statement set: checkpoint "
+                            f"{checkpoint!r} was written by a DIFFERENT "
+                            "statement set — resume requires the same "
+                            "INSERTs in the same order, or a fresh "
+                            "checkpoint dir"
+                        )
+            else:
+                os.makedirs(checkpoint, exist_ok=True)
+                with open(fp + ".tmp", "w") as fh:
+                    json.dump(sig, fh)
+                os.replace(fp + ".tmp", fp)
+        # sink files carry the checkpoint's key, so a replay replaces
+        # only the files of its own query
+        key = hashlib.sha1(os.path.abspath(checkpoint).encode()).hexdigest()[:8]
+        shift = self._shift_us(sts)
+        for st in sts:
+            st.shift = shift
+        sdf = self._source(
+            src_name, shift, note=True,
+            options=(
+                {"maxFilesPerTrigger": str(max_files_per_trigger)}
+                if max_files_per_trigger else None
+            ),
+        )
+        union = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [
+                self._branch(st, sdf).select(
+                    F.lit(i).alias("__sset_stmt"),
+                    F.struct("*").alias(f"__sset_s{i}"),
+                )
+                for i, st in enumerate(sts)
+            ],
+        )
+
+        def route(batch_df, batch_id):
+            batch_df.persist()
+            try:
+                present = {r[0] for r in
+                           batch_df.select("__sset_stmt").distinct().collect()}
+                for i, st in enumerate(sts):
+                    if i in present:
+                        self._write(
+                            st,
+                            batch_df.where(F.col("__sset_stmt") == i)
+                            .select(f"__sset_s{i}.*"),
+                            batch_df.sparkSession,
+                            f"sset-b{batch_id}-s{i}-{key}-",
+                        )
+            finally:
+                batch_df.unpersist()
+
+        # Two aggregates with equal partial aggregates would share one
+        # reused exchange, and the second would then emit nothing. And
+        # where stateful operators may chain, Spark drops a row as late
+        # against the previous batch's watermark, not this batch's; the
+        # branches run side by side, never chained.
+        confs = {"spark.sql.exchange.reuse": "false",
+                 "spark.sql.streaming.statefulOperator.allowMultiple": "false"}
+        prev = {k: spark.conf.get(k) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            with _scoped_shuffle_partitions(
+                spark, derived_stream_partitions(spark, union)
+            ):
+                q = (
+                    union.writeStream.foreachBatch(route)
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .option("checkpointLocation", checkpoint)
+                    .start()
+                )
+                q.awaitTermination()
+        finally:
+            for k, v in prev.items():
+                spark.conf.set(k, v)
+            if own_ck:
+                shutil.rmtree(checkpoint, ignore_errors=True)
+
+    def _write(
+        self, st: _SetStatement, rows: DataFrame, bspark, prefix: str
+    ) -> None:
+        """Write statement ``st``'s output for one micro-batch, computed
+        from its branch's ``rows`` in the micro-batch session ``bspark``.
+        An unpartitioned filesystem sink gets files named ``prefix*``,
+        replacing any that an earlier run of the same batch left; other
+        sinks are appended to."""
+        import glob
+        import shutil
+
+        from flink_1_16_0_src_spark import sources as srcs
+
+        tenv = self._tenv
+        sink = tenv._sinks[st.sink]
+        if st.kind != "agg":
+            self._batch_rows(st, rows).createOrReplaceTempView(st.view)
+            rows = st.text
+        df, static_parts = tenv._build_insert_df(
+            sink, st.collist, rows, spark=bspark
+        )
+        props = sink["props"]
+        fmt = props.get("format", "parquet")
+        parts = sink.get("partitioned_by") or (list(static_parts) or None)
+        if sink["connector"] != "filesystem" or parts:
+            srcs.write_table(
+                df, props.get("path"), sink["connector"], fmt,
+                {**props, "sink.mode": "append"}, partitioned_by=parts,
+            )
+            return
+        path = props["path"]
+        tmp = os.path.join(path, "_" + prefix)
+        srcs.write_table(
+            df, tmp, "filesystem", fmt, {**props, "sink.mode": "overwrite"}
+        )
+        for f in glob.glob(os.path.join(path, glob.escape(prefix) + "*")):
+            os.remove(f)
+        for f in sorted(glob.glob(os.path.join(tmp, "part-*"))):
+            os.replace(f, os.path.join(path, prefix + os.path.basename(f)))
+        shutil.rmtree(tmp, ignore_errors=True)

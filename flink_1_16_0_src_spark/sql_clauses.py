@@ -192,6 +192,7 @@ class WindowTVF:
     keys: list[str]  # PARTITION BY keys
     ts: str  # the DESCRIPTOR column
     table_span: tuple[int, int]  # TABLE t / TABLE (...) in the statement
+    time_span: tuple[int, int]  # DESCRIPTOR(col) in the statement
     size: str | None = None
     slide: str | None = None
     step: str | None = None
@@ -203,6 +204,12 @@ class WindowTVF:
         name``."""
         a, b = self.table_span
         return f"{sql[:a]}TABLE {name}{sql[b:]}"
+
+    def with_time(self, sql: str, col: str) -> str:
+        """``sql`` with this call's DESCRIPTOR column replaced by
+        ``col``."""
+        a, b = self.time_span
+        return f"{sql[:a]}DESCRIPTOR({col}){sql[b:]}"
 
 
 def _tvf_arity(fn: str, n: int) -> ValueError:
@@ -294,15 +301,16 @@ def parse_window_tvf(sql: str, pos: int = 0) -> WindowTVF | None:
                       re.IGNORECASE | re.DOTALL)
     if pm is None:
         raise ValueError(f"unsupported TVF table argument {data!r}")
-    tm = re.fullmatch(r"DESCRIPTOR\s*\(\s*(\w+)\s*\)", args["TIMECOL"][0],
-                      re.IGNORECASE)
+    timecol, time_at = args["TIMECOL"]
+    tm = re.fullmatch(r"DESCRIPTOR\s*\(\s*(\w+)\s*\)", timecol, re.IGNORECASE)
     if tm is None:
-        raise ValueError(f"expected DESCRIPTOR(col), got {args['TIMECOL'][0]!r}")
+        raise ValueError(f"expected DESCRIPTOR(col), got {timecol!r}")
     return WindowTVF(
         start=head.start(), end=close + outer.end(), fn=fn,
         table=table, subquery=subquery,
         keys=[k.strip() for k in (pm.group(1) or "").strip("() ").split(",") if k.strip()],
         ts=tm.group(1), table_span=(data_at, data_at + tend),
+        time_span=(time_at, time_at + len(timecol)),
         **{p.lower(): _interval_str(args[p][0])
            for p in _TVF_PARAMS[fn] if p in args},
     )
@@ -339,12 +347,12 @@ def rewrite_window_tvfs(
     while (tvf := parse_window_tvf(sql)) is not None:
         fn, ts = tvf.fn, tvf.ts
         if tvf.table is None:
-            raise ValueError(
-                "TVF table argument TABLE (SELECT ...): a subquery "
-                "argument is a stream_query surface — register the "
-                "SELECT as a view here"
-            )
-        df = resolver(tvf.table)
+            # TABLE (SELECT ...): stream_query compiles the subquery to
+            # a view before it gets here, so this is the batch path
+            # (clauses inside the subquery rewrite recursively)
+            df = spark.sql(rewrite_flink_clauses(spark, tvf.subquery))
+        else:
+            df = resolver(tvf.table)
         # src + window parameters ride the spec so downstream lowerings
         # that regroup from the RAW stream (window Top-N) can re-window
         spec: dict = {"fn": fn, "ts": ts, "src": df}
@@ -357,7 +365,8 @@ def rewrite_window_tvfs(
                 df, ts, tvf.slide, tvf.size, tvf.offset, keep_struct=keep_struct
             )
         elif fn == "CUMULATE":
-            out = windows.cumulate(df, ts, tvf.step, tvf.size)
+            spec.update(size=tvf.size, step=tvf.step)
+            out = windows.cumulate(df, ts, tvf.step, tvf.size, keep_struct=keep_struct)
         elif keep_struct and specs is not None:
             # streaming SESSION: no per-row assignment — the caller
             # regroups onto session_window(ts, gap) (merging state machine)
@@ -365,7 +374,7 @@ def rewrite_window_tvfs(
             spec.update(gap=tvf.gap, keys=tvf.keys)
         else:
             out = windows.session(df, ts, tvf.gap, *tvf.keys)
-        view = f"__tvf_{fn.lower()}_{tvf.table}_{counter}"
+        view = f"__tvf_{fn.lower()}_{tvf.table or 'sub'}_{counter}"
         counter += 1
         out.createOrReplaceTempView(view)
         if specs is not None:
@@ -2115,6 +2124,7 @@ def lower_streaming_window_topn(sql: str, specs: list[dict]) -> DataFrame:
     out = window_topn(
         src, spec["ts"], spec["size"], keys, order_col, k,
         payload, descending=descending, slide=spec.get("slide"),
+        offset=spec.get("offset"),
     )
     if op == "=":
         out = out.where(F.col("rank_num") == n)

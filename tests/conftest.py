@@ -49,7 +49,7 @@ _SLOW_TESTS = {
     "test_stream_statement_set_restart_resumes_staging",
     "test_stream_statement_set_session_purge_on_fire",
     "test_stream_statement_set_session_two_batches",
-    "test_stream_statement_set_staging_writes_are_batch_delta",
+    "test_stream_statement_set_state_holds_only_open_windows",
     "test_stream_statement_set_window_agg_two_batches",
     "test_statement_set_equals_stream_query",
     "test_streaming_over_sql_bare_lead_rejected",

@@ -1909,11 +1909,11 @@ def test_stream_query_window_topn_sql(tenv, spark, tmp_path):
 
 def test_stream_statement_set(tenv, spark, tmp_path):
     """StreamStatementSet: two INSERTs over one DDL streaming source
-    drain as ONE streaming job (the shared-scan receipt pins
-    streaming_queries == 1); statements reading no source are
-    rejected, and so is every shape the per-batch model cannot
-    keep exact across micro-batches (VERDICT r10 #2): non-windowed
-    GROUP BY, DISTINCT, OVER, non-TUMBLE TVFs."""
+    drain as ONE streaming job (the receipt pins streaming_queries ==
+    1); statements reading no source are rejected, and so is every
+    shape neither branch kind keeps exact across micro-batches:
+    non-windowed GROUP BY, DISTINCT, unscoped OVER, window statements
+    not grouped on window_start and window_end."""
     import datetime as dt
 
     import pytest
@@ -1954,9 +1954,6 @@ def test_stream_statement_set(tenv, spark, tmp_path):
     assert receipt == {
         "statements": 2, "shared_source": "sset_ev",
         "window_agg_statements": 1, "streaming_queries": 1,
-        # one batch × one stateless statement = 1 text plan; the
-        # TUMBLE statement is accumulator-decomposed and plans no text
-        "full_statement_plans": 1,
     }
     assert [(r.eid, r.v) for r in spark.read.parquet(a).collect()] == [(1, 1.0)]
     # final watermark 11:30-1min closes ONLY the 10:00 window; the
@@ -1985,9 +1982,8 @@ def test_stream_statement_set(tenv, spark, tmp_path):
             "INSERT INTO sset_a SELECT eid, SUM(v) OVER (PARTITION BY et "
             "ORDER BY ts) AS s FROM sset_ev"
         )
-    # SESSION TVF statements are ADMITTED since r11 (merging windows
-    # close exactly under the staging model) — but only grouped on
-    # window_start/window_end so every emitted row is a closed session
+    # SESSION TVF statements are ADMITTED since r11 — but only grouped
+    # on window_start/window_end so every emitted row is a closed session
     ss.add_insert_sql(
         "INSERT INTO sset_b SELECT et, window_end, COUNT(*) AS n, SUM(v) AS s "
         "FROM TABLE(SESSION(TABLE sset_ev PARTITION BY et, "
@@ -2000,23 +1996,16 @@ def test_stream_statement_set(tenv, spark, tmp_path):
             "FROM TABLE(SESSION(TABLE sset_ev PARTITION BY et, "
             "DESCRIPTOR(ts), INTERVAL '30' MINUTE)) GROUP BY et"
         )
-    with pytest.raises(ValueError, match="SELECT\\s+window_end|must SELECT"):
+    # a HOP aggregate need not SELECT window_end, bare or aliased:
+    # Spark's window state closes each window on its own
+    for sel in ("et, COUNT(*) AS n", "et, window_end AS we, COUNT(*) AS n"):
         ss.add_insert_sql(
-            "INSERT INTO sset_b SELECT et, COUNT(*) AS n "
+            f"INSERT INTO sset_b SELECT {sel} "
             "FROM TABLE(HOP(TABLE sset_ev, DESCRIPTOR(ts), "
             "INTERVAL '30' MINUTE, INTERVAL '1' HOUR)) "
             "GROUP BY et, window_start, window_end"
         )
-    # ADVICE r11 #3: an ALIASED window_end passes a naive \b-scan but
-    # would abort the drain mid-stream (emission filters on the bare
-    # column) — must be rejected at add time instead
-    with pytest.raises(ValueError, match="bare"):
-        ss.add_insert_sql(
-            "INSERT INTO sset_b SELECT et, window_end AS we, COUNT(*) AS n "
-            "FROM TABLE(HOP(TABLE sset_ev, DESCRIPTOR(ts), "
-            "INTERVAL '30' MINUTE, INTERVAL '1' HOUR)) "
-            "GROUP BY et, window_start, window_end"
-        )
+        assert ss._inserts[-1].kind == "agg"
     with pytest.raises(ValueError, match="window_start, window_end"):
         ss.add_insert_sql(
             "INSERT INTO sset_b SELECT et, COUNT(*) AS n, SUM(v) AS s "
@@ -2090,14 +2079,11 @@ def test_stream_statement_set_window_agg_two_batches(tenv, spark, tmp_path):
         "FROM TABLE(TUMBLE(TABLE sset2_ev, DESCRIPTOR(ts), INTERVAL '1' HOUR)) "
         "GROUP BY window_start, window_end"
     )
-    r2 = tenv.create_stream_statement_set().add_insert_sql(stmt).execute(
-        checkpoint=str(tmp_path / "ckpt2"), max_files_per_trigger=1
-    )
-    # r13 (VERDICT r12 #6): the accumulator path hands its merged frame
-    # to the emitter as a DataFrame — the statement TEXT is planned
-    # O(#statements) times (here: zero, classification extracted the
-    # agg recipe at add time), NOT once per emission boundary
-    assert r2["full_statement_plans"] == 0
+    ss = tenv.create_stream_statement_set().add_insert_sql(stmt)
+    # planned once by stream_query: Spark's window state, not a
+    # re-plan of the statement text per emission boundary
+    assert ss._inserts[0].kind == "agg"
+    ss.execute(checkpoint=str(tmp_path / "ckpt2"), max_files_per_trigger=1)
     got = sorted((r.window_end.hour, r.n, r.s)
                  for r in spark.read.parquet(sink).collect())
     # 10:00 window: batch-1 rows only (late eid=5 dropped); 11:00
@@ -2120,11 +2106,10 @@ def test_stream_statement_set_window_agg_two_batches(tenv, spark, tmp_path):
 
 
 def test_stream_statement_set_acc_decimal_type_parity(tenv, spark, tmp_path):
-    """The partial-accumulator staging path emits the SAME result types
-    as the raw plan (r12 self-review): AVG(DECIMAL(10,2)) is
+    """A statement-set window aggregate emits the SAME result types as
+    the batch plan (r12 self-review): AVG(DECIMAL(10,2)) is
     DECIMAL(14,6) under Spark's typing — the naive sum/count division
-    is not — and SUM-of-SUMs would silently widen decimal precision
-    without the merge cast."""
+    is not — and SUM-of-SUMs would silently widen decimal precision."""
     import datetime as dt
     from decimal import Decimal
 
@@ -2153,7 +2138,7 @@ def test_stream_statement_set_acc_decimal_type_parity(tenv, spark, tmp_path):
         "FROM TABLE(TUMBLE(TABLE accdec_ev, DESCRIPTOR(ts), INTERVAL '1' HOUR)) "
         "GROUP BY window_start, window_end"
     )
-    assert ss._inserts[0][5]["acc"] is not None  # acc path engaged
+    assert ss._inserts[0].kind == "agg"  # planned by stream_query
     ss.execute()
     got = spark.read.parquet(sink)
     exp = (
@@ -2172,10 +2157,9 @@ def test_stream_statement_set_window_topn_two_batches(tenv, spark, tmp_path):
     """Window Top-N inside a streaming statement set (r12 — the
     reference's window-rank-after-window-TVF statement-set pattern,
     WindowRankProcessor.java): ROW_NUMBER() OVER (PARTITION BY
-    window_start, window_end ...) is exact under raw-row staging —
-    each window plans ONCE over its complete row set, so a window
-    spanning two micro-batches emits its true top-k once, and a late
-    row into a closed window is dropped."""
+    window_start, window_end ...) ranks each closed window's rows once,
+    complete, so a window spanning two micro-batches emits its true
+    top-k once, and a late row into a closed window is dropped."""
     import datetime as dt
     import os
 
@@ -2234,8 +2218,8 @@ def test_stream_statement_set_window_topn_two_batches(tenv, spark, tmp_path):
 def test_stream_statement_set_hop_topn(tenv, spark, tmp_path):
     """Window Top-N over a HOP TVF in a statement set: a row belongs to
     SEVERAL windows; the rank partitions per (window_start, window_end)
-    so each closing window emits its own exact top-k, and output
-    post-filters to windows the watermark closed."""
+    so each closing window emits its own exact top-k, and only windows
+    the watermark closed emit."""
     import datetime as dt
 
     d = str(tmp_path / "hoptopn")
@@ -2343,18 +2327,13 @@ def test_relation_positions_backticked_identifiers():
     assert "src" in rels
 
 
-def test_stream_statement_set_staging_writes_are_batch_delta(tenv, spark, tmp_path):
-    """VERDICT r11 next-round #1 done-criterion: statement-set window
-    staging is APPEND-ONLY — files written to staging per batch cover
-    O(batch delta) rows, not O(open horizon). Over the whole drain each
-    row is written to staging AT MOST ONCE; the manifest's
-    staged_rows_cum is the auditable receipt. Here a 1-hour window stays
-    open across three single-file batches: the pre-r12 full-horizon
-    rewrite would stage 2+4+5=11 row-writes, the segment design stages
-    2+2+1=5 (the batch-3 13:00 row; the other batch-3 row joins the
-    closing window and never stages)."""
+def test_stream_statement_set_state_holds_only_open_windows(tenv, spark, tmp_path):
+    """Window state is Spark's and holds only what is still open: a
+    1-hour window stays open across three single-file batches and then
+    closes, and after the drain each aggregate's state store holds one
+    partial-aggregate row per open (window, keys) group — the 13:00
+    window — however many rows the closed window held."""
     import datetime as dt
-    import json
     import os
 
     src = str(tmp_path / "odsrc")
@@ -2396,38 +2375,32 @@ def test_stream_statement_set_staging_writes_are_batch_delta(tenv, spark, tmp_pa
     )
     ck = str(tmp_path / "od_ck")
     tenv.create_stream_statement_set().add_insert_sql(
-        # plain COUNT/SUM → the r12 PARTIAL-ACCUMULATOR path: one
-        # partial row per open (window, keys) group per batch
         "INSERT INTO od_w SELECT window_end, COUNT(*) AS n, SUM(v) AS s "
         "FROM TABLE(TUMBLE(TABLE od_ev, DESCRIPTOR(ts), INTERVAL '1' HOUR)) "
         "GROUP BY window_start, window_end"
     ).add_insert_sql(
-        # ROUND around the aggregate defeats the decomposition → the
-        # raw-row segment path
         "INSERT INTO od_w_raw SELECT window_end, COUNT(*) AS n, "
         "ROUND(SUM(v), 2) AS s "
         "FROM TABLE(TUMBLE(TABLE od_ev, DESCRIPTOR(ts), INTERVAL '1' HOUR)) "
         "GROUP BY window_start, window_end"
     ).execute(checkpoint=ck, max_files_per_trigger=1)
-    # correctness: the 10:00 window emits once, complete (5 rows), on
-    # BOTH paths
+    # correctness: the 10:00 window emits once, complete (5 rows), for
+    # both statements
     got = sorted((r.window_end.hour, r.n, r.s)
                  for r in spark.read.parquet(sink).collect())
     assert got == [(11, 5, 31.0)]
     got_r = sorted((r.window_end.hour, r.n, r.s)
                    for r in spark.read.parquet(sink_r).collect())
     assert got_r == [(11, 5, 31.0)]
-    m = json.load(open(os.path.join(ck, "sset_manifest.json")))
-    # acc path (statement 0): one PARTIAL row per batch per open group
-    # (1+1+1); raw path (statement 1): each row staged at most once
-    # (2+2+1) — vs the pre-r12 horizon rewrite's 2+4+5
-    assert m["staged_rows_cum"] == 3 + 5
-    segs_acc, segs_raw = (m["stage"][k] for k in sorted(m["stage"]))
-    # one live segment each: the open 13:00-window partial / raw row
-    assert [s["rows"] for s in segs_acc] == [1]
-    assert [s["rows"] for s in segs_raw] == [1]
-    # HOP variant: same three files, 30-min slide / 1-hour size; every
-    # row is still written to staging at most once (cum <= input rows)
+
+    def state_rows(ck, op):
+        return (spark.read.format("statestore").option("operatorId", op)
+                .load(ck).count())
+
+    # one open group each: the 13:00 window's partial aggregate
+    assert [state_rows(ck, op) for op in (0, 1)] == [1, 1]
+    # HOP variant: same three files, 30-min slide / 1-hour size; the
+    # 13:00 row's two windows (ends 13:30 and 14:00) are all that stays
     tenv.execute_sql(
         f"CREATE TABLE od_ev2 (eid BIGINT, et STRING, ts TIMESTAMP(3),"
         f" v DOUBLE, WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE)"
@@ -2445,18 +2418,7 @@ def test_stream_statement_set_staging_writes_are_batch_delta(tenv, spark, tmp_pa
         "INTERVAL '30' MINUTE, INTERVAL '1' HOUR)) "
         "GROUP BY window_start, window_end"
     ).execute(checkpoint=ck2, max_files_per_trigger=1)
-    m2 = json.load(open(os.path.join(ck2, "sset_manifest.json")))
-    # HOP also rides the r12 PARTIAL-ACCUMULATOR path (plain COUNT):
-    # each batch stages one partial per open (window_end) group —
-    # b1: ends 10:30,11:00 (2); b2: ends 10:30,11:00,11:30 (3);
-    # b3: ends 13:30,14:00 (2, the closed ends never stage) = 7,
-    # independent of the row rate within each group
-    assert m2["staged_rows_cum"] == 7
-    # final wm 12:59 → hop window ends 10:30 / 11:00 / 11:30 closed,
-    # each once, complete (rows spanning all three batches)
-    got2 = sorted((r.window_end.hour, r.window_end.minute, r.n)
-                  for r in spark.read.parquet(sink2).collect())
-    assert got2 == [(10, 30, 3), (11, 0, 5), (11, 30, 2)]
+    assert state_rows(ck2, 0) == 2
 
 
 def test_datagen_sequence_bounded_deterministic(tenv, spark):
@@ -2679,9 +2641,7 @@ def test_stream_query_nested_from_subqueries_any_depth(tenv, spark, tmp_path):
 
 def test_stream_statement_set_hop_two_batches(tenv, spark, tmp_path):
     """HOP window aggregates in a statement set are exact under a
-    forced multi-batch drain (r11): rows stage until their LAST
-    covering window closes, emission post-filters planned output on
-    window_end in (prev wm, new wm] — a row contributes to EVERY
+    forced multi-batch drain (r11): a row contributes to EVERY
     covering window exactly once even when those windows close in
     different batches."""
     import datetime as dt
@@ -2749,8 +2709,7 @@ def test_stream_statement_set_hop_two_batches(tenv, spark, tmp_path):
 def test_stream_statement_set_cumulate_two_batches(tenv, spark, tmp_path):
     """CUMULATE statement-set aggregates: expanding slices emit as the
     watermark passes each slice end — across batches, each slice
-    exactly once with the full span prefix (rows stage until the span
-    ends)."""
+    exactly once with the full span prefix."""
     import datetime as dt
     import os
 
@@ -2799,10 +2758,9 @@ def test_stream_statement_set_cumulate_two_batches(tenv, spark, tmp_path):
 
 def test_stream_statement_set_session_two_batches(tenv, spark, tmp_path):
     """SESSION TVF aggregates in a statement set (r11): sessions merge
-    across batch boundaries while open (assignment recomputed over
-    staged ∪ new rows) and emit exactly once, complete, when the
-    watermark passes max(ts)+gap — multi-batch equals single-batch
-    when no session fires between a merge."""
+    across batch boundaries while open and emit exactly once,
+    complete, when the watermark passes max(ts)+gap — multi-batch
+    equals single-batch when no session fires between a merge."""
     import datetime as dt
     import os
 
@@ -2924,9 +2882,8 @@ def test_stream_statement_set_session_purge_on_fire(tenv, spark, tmp_path):
 def test_stream_statement_set_mixed_kinds_two_batches(tenv, spark, tmp_path):
     """One statement set mixing all three admission kinds — stateless
     projection, TUMBLE aggregate, SESSION aggregate — over ONE shared
-    scan, exact under a forced two-batch drain: each statement keeps
-    its own staging lane and the receipt still pins one streaming
-    query."""
+    scan, exact under a forced two-batch drain: each statement is its
+    own branch of one streaming query, which the receipt pins."""
     import datetime as dt
     import os
 
@@ -2978,10 +2935,6 @@ def test_stream_statement_set_mixed_kinds_two_batches(tenv, spark, tmp_path):
     assert receipt == {
         "statements": 3, "shared_source": "mix_ev",
         "window_agg_statements": 2, "streaming_queries": 1,
-        # stateless plans per batch (2), SESSION re-plans raw rows at
-        # its one emitting boundary (1); the TUMBLE statement is
-        # accumulator-decomposed and plans no text
-        "full_statement_plans": 3,
     }
     # stateless: every u row, both batches
     assert sorted((r.eid, r.v) for r in
@@ -2997,13 +2950,13 @@ def test_stream_statement_set_mixed_kinds_two_batches(tenv, spark, tmp_path):
 
 
 def test_stream_statement_set_restart_resumes_staging(tenv, spark, tmp_path):
-    """Persistent staging (r11, SURVEY §7.3 risk 3): a second
-    execute() against the SAME checkpoint dir resumes mid-window —
-    Spark's offset log skips the already-consumed file, the manifest
-    restores staged open windows + the running watermark, and a
-    session/tumble window SPANNING THE TWO RUNS emits once, complete.
-    A third run with no new data emits nothing, and a different
-    statement list on the same checkpoint is rejected."""
+    """Resume (r11, SURVEY §7.3 risk 3): a second execute() against
+    the SAME checkpoint dir resumes mid-window — Spark's offset log
+    skips the already-consumed file, its state store restores the open
+    windows and the watermark, and a session/tumble window SPANNING THE
+    TWO RUNS emits once, complete. A third run with no new data emits
+    nothing, and a different statement list on the same checkpoint is
+    rejected."""
     import datetime as dt
     import os
 
@@ -3033,7 +2986,6 @@ def test_stream_statement_set_restart_resumes_staging(tenv, spark, tmp_path):
             f"'path'='{snk[tag]}','format'='parquet')"
         )
     stmts = [
-        # plain COUNT → r12 partial-ACCUMULATOR tumble path
         "INSERT INTO rs_t SELECT window_end, COUNT(*) AS n "
         "FROM TABLE(TUMBLE(TABLE rs_ev, DESCRIPTOR(ts), "
         "INTERVAL '1' HOUR)) GROUP BY window_start, window_end",
@@ -3041,12 +2993,10 @@ def test_stream_statement_set_restart_resumes_staging(tenv, spark, tmp_path):
         "COUNT(*) AS n FROM TABLE(SESSION(TABLE rs_ev PARTITION BY k, "
         "DESCRIPTOR(ts), INTERVAL '30' MINUTE)) "
         "GROUP BY k, window_start, window_end",
-        # ROUND defeats the decomposition → RAW-row segment tumble path
         "INSERT INTO rs_r SELECT window_end, COUNT(*) AS n, "
         "ROUND(SUM(v), 2) AS s "
         "FROM TABLE(TUMBLE(TABLE rs_ev, DESCRIPTOR(ts), "
         "INTERVAL '1' HOUR)) GROUP BY window_start, window_end",
-        # HOP on the accumulator path (multi-window partials)
         "INSERT INTO rs_h SELECT window_end, COUNT(*) AS n "
         "FROM TABLE(HOP(TABLE rs_ev, DESCRIPTOR(ts), "
         "INTERVAL '30' MINUTE, INTERVAL '1' HOUR)) "
@@ -3068,7 +3018,7 @@ def test_stream_statement_set_restart_resumes_staging(tenv, spark, tmp_path):
             (4, dt.datetime(2024, 1, 1, 12, 0), "w", 8.0)]),
         os.path.join(src, "f2.parquet"), mtime=2_000_000,
     )
-    run()  # run 2: only f2 is consumed; staged rows carry over
+    run()  # run 2: only f2 is consumed; open windows carry over
     # tumble window [10:00, 11:00) spans both RUNS: eids 1, 2, 3
     assert [(r.window_end.hour, r.n) for r in
             spark.read.parquet(snk["t"]).collect()] == [(11, 3)]
@@ -3076,15 +3026,15 @@ def test_stream_statement_set_restart_resumes_staging(tenv, spark, tmp_path):
     assert sorted((r.k, r.window_end.strftime("%H:%M"), r.n) for r in
                   spark.read.parquet(snk["s"]).collect()) == \
         [("u", "10:50", 2), ("w", "10:55", 1)]
-    # raw-row tumble path resumed the same spanning window, with values
+    # the second tumble statement resumed the same window, with values
     assert [(r.window_end.hour, r.n, r.s) for r in
             spark.read.parquet(snk["r"]).collect()] == [(11, 3, 7.0)]
-    # hop-accumulator partials from run 1 merged with run 2's: ends
-    # 10:30 and 11:00 each cover all three early rows
+    # hop partials from run 1 merged with run 2's: ends 10:30 and
+    # 11:00 each cover all three early rows
     assert sorted((r.window_end.strftime("%H:%M"), r.n) for r in
                   spark.read.parquet(snk["h"]).collect()) == \
         [("10:30", 3), ("11:00", 3)]
-    run()  # run 3: no new files — nothing re-emits (manifest skip)
+    run()  # run 3: no new files — nothing re-emits
     assert spark.read.parquet(snk["t"]).count() == 1
     assert spark.read.parquet(snk["s"]).count() == 2
     assert spark.read.parquet(snk["r"]).count() == 1
@@ -3149,7 +3099,6 @@ def test_stream_statement_set_multi_source(tenv, spark, tmp_path):
     assert r1 == {
         "statements": 2, "shared_source": ["ms_ev_a", "ms_ev_b"],
         "window_agg_statements": 2, "streaming_queries": 2,
-        "full_statement_plans": 0,
     }
     # run 2: one closing row lands in EACH source; every group's
     # window spans the two runs and emits once, complete
@@ -3166,72 +3115,85 @@ def test_stream_statement_set_multi_source(tenv, spark, tmp_path):
         assert got == [(t0 + 1, 2, 3.0)], (tag, got)
 
 
-def test_stream_statement_set_two_phase_commit_recovery(tenv, spark, tmp_path):
-    """Exactly-once sink protocol (FileSink pending→finalized rename
-    parity): pending output that was MANIFESTED but never moved (a
-    crash between phase 1 and phase 2) is finalized at the next
-    startup, exactly once — re-running again changes nothing, and
-    normal drains leave no pending residue."""
+def test_stream_statement_set_crash_resumes_exactly_once(
+    tenv, spark, tmp_path, monkeypatch
+):
+    """Crash and resume (Flink's exactly-once from consistent snapshots
+    plus replay, VLDB 2017): three statements — a TUMBLE count, a HOP
+    window Top-N and a stateless projection — drain three
+    event-time-ordered files one per batch. The first run fails in the
+    sink right after batch 1's writes, before Spark's commit log; the
+    second run restarts from the same checkpoint and replays batch 1.
+    Every sink must equal one uninterrupted drain, with no row written
+    twice."""
     import datetime as dt
-    import glob
-    import json
     import os
 
-    src = str(tmp_path / "tpcsrc")
+    from flink_1_16_0_src_spark.session import StreamStatementSet
+
+    src = str(tmp_path / "crsrc")
     os.makedirs(src)
-    ck = str(tmp_path / "ck")
-    sink = str(tmp_path / "tpc_snk")
     mk = lambda rows: spark.createDataFrame(
-        rows, "eid bigint, ts timestamp, v double")
-    _write_single_parquet_file(
-        spark,
-        mk([(1, dt.datetime(2024, 1, 1, 10, 5), 1.0),
-            (2, dt.datetime(2024, 1, 1, 12, 0), 2.0)]),
-        os.path.join(src, "f1.parquet"), mtime=1_000_000,
-    )
+        rows, "eid bigint, k string, ts timestamp, v double")
+    for i, hour in enumerate((10, 11, 12)):
+        _write_single_parquet_file(
+            spark,
+            mk([(10 * i + j, "ab"[j % 2], dt.datetime(2024, 1, 1, hour, 7 * j),
+                 float((7 * i + 3 * j) % 11)) for j in range(8)]),
+            os.path.join(src, f"f{i}.parquet"), mtime=1_000_000 * (i + 1),
+        )
     tenv.execute_sql(
-        f"CREATE TABLE tpc_ev (eid BIGINT, ts TIMESTAMP(3), v DOUBLE,"
+        f"CREATE TABLE cr_ev (eid BIGINT, k STRING, ts TIMESTAMP(3), v DOUBLE,"
         f" WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE)"
         f" WITH ('connector'='filesystem','path'='{src}','format'='parquet')"
     )
-    tenv.execute_sql(
-        f"CREATE TABLE tpc_w WITH ('connector'='filesystem',"
-        f"'path'='{sink}','format'='parquet')"
-    )
+    stmts = [
+        "INSERT INTO {p}_t SELECT k, window_end, COUNT(*) AS n "
+        "FROM TABLE(TUMBLE(TABLE cr_ev, DESCRIPTOR(ts), INTERVAL '30' MINUTE)) "
+        "GROUP BY k, window_start, window_end",
+        "INSERT INTO {p}_h SELECT window_end, eid, v, rn FROM ("
+        "SELECT window_start, window_end, eid, v, ROW_NUMBER() OVER ("
+        "PARTITION BY window_start, window_end ORDER BY v DESC, eid) AS rn "
+        "FROM TABLE(HOP(TABLE cr_ev, DESCRIPTOR(ts), INTERVAL '30' MINUTE, "
+        "INTERVAL '1' HOUR))) WHERE rn <= 2",
+        "INSERT INTO {p}_p SELECT eid, v FROM cr_ev WHERE k = 'a'",
+    ]
+    for p in ("crash", "once"):
+        for tag in ("t", "h", "p"):
+            tenv.execute_sql(
+                f"CREATE TABLE {p}_{tag} WITH ('connector'='filesystem',"
+                f"'path'='{tmp_path / p / tag}','format'='parquet')"
+            )
 
-    def run():
-        return tenv.create_stream_statement_set().add_insert_sql(
-            "INSERT INTO tpc_w SELECT window_end, COUNT(*) AS n "
-            "FROM TABLE(TUMBLE(TABLE tpc_ev, DESCRIPTOR(ts), "
-            "INTERVAL '1' HOUR)) GROUP BY window_start, window_end"
-        ).execute(checkpoint=ck)
+    def run(p):
+        ss = tenv.create_stream_statement_set()
+        for st in stmts:
+            ss.add_insert_sql(st.format(p=p))
+        ss.execute(checkpoint=str(tmp_path / f"ck_{p}"), max_files_per_trigger=1)
 
-    run()  # the 10:00 window closes (wm 11:59) and commits via 2PC
-    assert spark.read.parquet(sink).count() == 1
-    # committed files carry the protocol's deterministic prefix and
-    # the pending area is empty
-    assert glob.glob(os.path.join(sink, "sset-b*-s0-part-*"))
-    assert not glob.glob(os.path.join(ck, "sset_pending", "*"))
-    mpath = os.path.join(ck, "sset_manifest.json")
-    m = json.load(open(mpath))
-    assert m["pending"] == []
-    # simulate a crash AFTER the manifest, BEFORE the move: plant a
-    # pending dir + manifest entry, as phase 1 leaves them
-    pdir = os.path.join(ck, "sset_pending", "b99_s0")
-    spark.createDataFrame(
-        [(dt.datetime(2024, 1, 1, 13, 0), 7)], "window_end timestamp, n bigint"
-    ).coalesce(1).write.parquet(pdir)
-    m["pending"] = [{"src": pdir, "dst": sink, "prefix": "sset-b99-s0-"}]
-    json.dump(m, open(mpath, "w"))
-    run()  # startup recovery finalizes the orphaned pending output
-    got = sorted((r.window_end.hour, r.n)
-                 for r in spark.read.parquet(sink).collect())
-    assert got == [(11, 1), (13, 7)]
-    assert not glob.glob(os.path.join(ck, "sset_pending", "*"))
-    assert json.load(open(mpath))["pending"] == []
-    run()  # idempotent — nothing re-commits, nothing re-emits
-    assert sorted((r.window_end.hour, r.n)
-                  for r in spark.read.parquet(sink).collect()) == got
+    write, written, crash = StreamStatementSet._write, [], [True]
+
+    def crash_after_batch_1(self, st, rows, bspark, prefix):
+        write(self, st, rows, bspark, prefix)
+        written.append(prefix)
+        if crash[0] and prefix.startswith("sset-b1-s2-"):
+            raise RuntimeError("crash after writing batch 1")
+
+    monkeypatch.setattr(StreamStatementSet, "_write", crash_after_batch_1)
+    with pytest.raises(Exception, match="crash after writing batch 1"):
+        run("crash")
+    crash[0] = False
+    run("crash")
+    # the restart replayed batch 1 into the same sink files
+    assert sum(p.startswith("sset-b1-s2-") for p in written) == 2
+    run("once")
+    for tag in ("t", "h", "p"):
+        got, want = (
+            sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / p / tag)).collect())
+            for p in ("crash", "once")
+        )
+        assert got == want, tag
+        assert got and len(set(got)) == len(got), tag
 
 
 def test_create_view_sql_routes_streaming(tenv, spark, tmp_path):

@@ -1,10 +1,13 @@
-"""One window-TVF reader, one TUMBLE/HOP/CUMULATE staging path.
+"""One window-TVF reader; batch, ``stream_query`` and the statement set
+agree.
 
 ``sql_clauses.parse_window_tvf`` reads every spelling of a window-TVF
 call once; batch SQL, ``stream_query`` and the streaming statement set
-all consume its spec, so they accept and reject the same calls. The
-statement set stages TUMBLE, HOP and CUMULATE on one window-end grid
-(TUMBLE is slide = size), and its drains must equal ``stream_query``'s.
+all consume its spec, so they accept and reject the same calls.
+``stream_query`` drains every spelling in append mode to the closed
+windows of batch SQL, and the statement set, which plans its window
+aggregates through ``stream_query`` on Spark's window state, must equal
+``stream_query``'s drains.
 """
 
 from __future__ import annotations
@@ -12,7 +15,6 @@ from __future__ import annotations
 import ast
 import datetime as dt
 import glob
-import json
 import os
 import pathlib
 import shutil
@@ -97,8 +99,8 @@ _SPELLINGS = {
     "lower_case": "table(hop(table {t}, descriptor(ts), interval '30' minute, "
                   "interval '1' hour))",
 }
-# plain COUNT/SUM stages partial accumulators; ROUND around the SUM
-# defeats the decomposition and stages raw rows
+# two aggregates with equal partial aggregates: the statement set's
+# query must keep both stateful branches emitting
 _SELECTS = {
     "acc": "SELECT k, window_start, window_end, COUNT(*) AS n, SUM(v) AS s "
            "FROM {tvf} GROUP BY k, window_start, window_end",
@@ -109,11 +111,11 @@ _SELECTS = {
 
 @pytest.mark.parametrize("name", sorted(_SPELLINGS))
 def test_statement_set_equals_stream_query(tenv, spark, tmp_path, name):
-    """Every spelling, on both staging paths, drains the same windows
-    through a three-batch statement set as through ``stream_query``'s
-    one-batch drain of the same SELECT. CUMULATE drains ``stream_query``
-    in update mode, which also holds the still-open slices, so its rows
-    are cut at the final watermark."""
+    """Every spelling drains the same windows through a three-batch
+    statement set as through ``stream_query``'s one-batch drain of the
+    same SELECT. CUMULATE drains ``stream_query`` in update mode, which
+    also holds the still-open slices, so its rows are cut at the final
+    watermark."""
     from flink_1_16_0_src_spark.streaming import sources as ssrc
 
     t = f"tvfeq_{name}"
@@ -261,34 +263,127 @@ def test_hop_before_1970_on_both_staging_paths(tenv, spark, tmp_path):
         assert got == want, path
 
 
-def test_resume_rejects_single_end_tumble_stage(tenv, spark, tmp_path):
-    """A raw-row TUMBLE stage segment in the older layout (one
-    ``__sset_wend`` column, no first/last window-end columns) would read
-    back NULL-ended and drop without an error; resuming from it must
-    fail and name the layout instead."""
+def test_resume_rejects_old_statement_set_layout(tenv, spark, tmp_path):
+    """A checkpoint that the older statement set wrote, with its own
+    window staging under ``sset_manifest.json``, cannot resume on
+    Spark's state store; execute() refuses it and names the layout."""
     _source(tenv, spark, tmp_path, "tvf_old_ev", _BATCHES[:1])
     _sink(tenv, tmp_path, "tvf_old_snk")
     ss = tenv.create_stream_statement_set().add_insert_sql(
-        "INSERT INTO tvf_old_snk SELECT window_end, COUNT(*) AS n, "
-        "ROUND(SUM(v), 2) AS s FROM TABLE(TUMBLE(TABLE tvf_old_ev, "
-        "DESCRIPTOR(ts), INTERVAL '1' HOUR)) GROUP BY window_start, window_end"
+        "INSERT INTO tvf_old_snk SELECT window_end, COUNT(*) AS n "
+        "FROM TABLE(TUMBLE(TABLE tvf_old_ev, DESCRIPTOR(ts), "
+        "INTERVAL '1' HOUR)) GROUP BY window_start, window_end"
     )
-    sink, collist, body = ss._inserts[0][:3]
     ck = tmp_path / "ck"
-    seg = ck / "sset_stage" / "s0_b0"
-    spark.createDataFrame(
-        [(3, "a", H(10, 40), 4.0, H(11))],
-        "eid bigint, k string, ts timestamp, v double, __sset_wend timestamp",
-    ).write.parquet(str(seg))
-    (ck / "sset_manifest.json").write_text(json.dumps({
-        "statements": [f"{sink}::{collist or ''}::{body}"],
-        "max_ts": H(10, 40).isoformat(), "wm": H(10, 39).isoformat(),
-        "last_batch": 0,
-        "stage": {"0": [{"dir": str(seg), "max_end": H(11).isoformat(), "rows": 1}]},
-        "pending": [], "staged_rows_cum": 1,
-    }))
-    with pytest.raises(ValueError, match="__sset_wend"):
+    ck.mkdir()
+    (ck / "sset_manifest.json").write_text("{}")
+    with pytest.raises(ValueError, match="older layout.*sset_manifest.json"):
         ss.execute(checkpoint=str(ck))
+
+
+# the statement set rejects a TVF over anything but its source, so the
+# subquery spelling is compared between batch and stream_query only
+_BATCH_SPELLINGS = {
+    **_SPELLINGS,
+    "subquery": "TABLE(TUMBLE(TABLE (SELECT k, ts, v FROM {t} WHERE v < 100), "
+                "DESCRIPTOR(ts), INTERVAL '1' HOUR))",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BATCH_SPELLINGS))
+def test_batch_equals_stream_query(tenv, spark, tmp_path, name):
+    """Batch ``execute_sql`` and ``stream_query``'s append-mode drain of
+    the same SELECT agree on every window the final watermark closed,
+    for every spelling, CUMULATE and a ``TABLE (SELECT ...)`` argument
+    included."""
+    from flink_1_16_0_src_spark.streaming import sources as ssrc
+
+    t = f"tvfbs_{name}"
+    _source(tenv, spark, tmp_path, t, _BATCHES)
+    sql = _SELECTS["acc"].format(tvf=_BATCH_SPELLINGS[name].format(t=t))
+    want = [r for r in _rows(tenv.execute_sql(sql)) if r[2] <= H(12, 49)]
+    got = _rows(ssrc.run_to_memory(tenv.stream_query(sql), f"{t}_q", "append"))
+    assert got == want
+    assert got
+
+
+_CUMULATE = (
+    "SELECT window_start, window_end, COUNT(*) AS n, SUM(v) AS s "
+    "FROM TABLE(CUMULATE(TABLE {t}, DESCRIPTOR(ts), {step}, INTERVAL '1' HOUR)) "
+    "GROUP BY window_start, window_end"
+)
+
+
+def test_cumulate_before_1970_in_statement_set(tenv, spark, tmp_path):
+    """CUMULATE spans are aligned to the epoch, so every window holding
+    a pre-1970 row ends by 1970-01-01. Spark's watermark never falls
+    below the epoch; the statement set runs its windows on event time
+    moved past it and must still equal batch SQL, across batches."""
+    dec31 = lambda h, m: dt.datetime(1969, 12, 31, h, m)  # noqa: E731
+    jan1 = lambda h, m: dt.datetime(1970, 1, 1, h, m)  # noqa: E731
+    _source(tenv, spark, tmp_path, "tvf_cum70", [
+        [(1, "a", dec31(22, 10), 1.0), (2, "a", dec31(22, 50), 2.0)],
+        [(3, "a", dec31(23, 20), 4.0), (4, "a", jan1(0, 10), 8.0)],
+        [(5, "a", jan1(2, 0), 16.0)],
+    ])
+    sink = _sink(tenv, tmp_path, "tvf_cum70_snk")
+    sql = _CUMULATE.format(t="tvf_cum70", step="INTERVAL '30' MINUTE")
+    tenv.create_stream_statement_set().add_insert_sql(
+        "INSERT INTO tvf_cum70_snk " + sql
+    ).execute(checkpoint=str(tmp_path / "ck"), max_files_per_trigger=1)
+    want = sorted(
+        (r.window_start, r.window_end, r.n, r.s)
+        for r in tenv.execute_sql(sql).collect() if r.window_end <= jan1(1, 59)
+    )
+    got = sorted((r.window_start, r.window_end, r.n, r.s)
+                 for r in spark.read.parquet(sink).collect())
+    assert got == want
+    assert [w[:3] for w in got] == [
+        (dec31(22, 0), dec31(22, 30), 1), (dec31(22, 0), dec31(23, 0), 2),
+        (dec31(23, 0), dec31(23, 30), 1), (dec31(23, 0), jan1(0, 0), 1),
+        (jan1(0, 0), jan1(0, 30), 1), (jan1(0, 0), jan1(1, 0), 1),
+    ]
+
+
+def test_cumulate_size_must_be_a_multiple_of_step(extra_env):
+    """Flink's CumulativeSliceAssigner requires the size to be an
+    integral multiple of the step; batch, ``stream_query`` and the
+    statement set all raise ValueError instead of truncating."""
+    sql = _CUMULATE.format(t="tvfx_ev", step="INTERVAL '40' MINUTE")
+    ss = extra_env.create_stream_statement_set()
+    for run in (extra_env.execute_sql, extra_env.stream_query,
+                lambda q: ss.add_insert_sql("INSERT INTO tvfx_snk " + q)):
+        with pytest.raises(ValueError, match="integral multiple of its step"):
+            run(sql)
+
+
+def test_window_topn_offset_batch_equals_stream(tenv, spark, tmp_path):
+    """Window Top-N over a TUMBLE with an offset ranks on the offset
+    grid in ``stream_query`` as in batch: 10:05 and 10:15 share
+    [09:30, 10:30), 10:40 opens [10:30, 11:30)."""
+    from flink_1_16_0_src_spark.streaming import sources as ssrc
+
+    _source(tenv, spark, tmp_path, "tvf_topn_off", [[
+        (1, "a", H(10, 5), 1.0), (2, "a", H(10, 15), 5.0),
+        (3, "a", H(10, 40), 2.0), (4, "a", H(12, 50), 1.0),
+    ]])
+    sql = (
+        "SELECT window_start, window_end, eid, rn FROM ("
+        "SELECT window_start, window_end, eid, ROW_NUMBER() OVER ("
+        "PARTITION BY window_start, window_end ORDER BY v DESC) AS rn "
+        "FROM TABLE(TUMBLE(TABLE tvf_topn_off, DESCRIPTOR(ts), "
+        "INTERVAL '1' HOUR, INTERVAL '30' MINUTE))) WHERE rn <= 1"
+    )
+
+    def rows(df):
+        return sorted((r.window_start, r.window_end, r.eid, r.rn)
+                      for r in df.collect() if r.window_end <= H(12, 49))
+
+    batch = rows(tenv.execute_sql(sql))
+    stream = rows(ssrc.run_to_memory(tenv.stream_query(sql), "tvf_topn_off_q", "append"))
+    assert stream == batch == [
+        (H(9, 30), H(10, 30), 2, 1), (H(10, 30), H(11, 30), 3, 1),
+    ]
 
 
 def test_only_sql_clauses_reads_descriptor():
