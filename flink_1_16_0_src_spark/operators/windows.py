@@ -30,6 +30,38 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# Spark's watermark never falls below the epoch, so a streaming window
+# ending at or before 1970-01-01 is late on arrival. A watermarked stream
+# therefore windows on SHIFTED_TS, its event time moved SHIFT_US forward
+# (0001-01-01 -> 1970-01-01): the assigners below keep every window grid
+# where the unshifted time has it, the flat window columns they add are
+# moved back, and a caller grouping on the ``__w`` struct moves its bounds
+# back with :func:`unshift_sql`.
+SHIFTED_TS = "__ets"
+SHIFT_US = 62_135_596_800_000_000
+
+
+def shift_event_time(df: DataFrame, ts: str, delay: str) -> DataFrame:
+    """``df`` with SHIFTED_TS = ``ts`` + SHIFT_US, watermarked ``delay``
+    behind."""
+    ets = F.timestamp_micros(F.unix_micros(F.col(ts)) + F.lit(SHIFT_US))
+    return df.withColumn(SHIFTED_TS, ets).withWatermark(SHIFTED_TS, delay)
+
+
+def unshift_sql(expr: str) -> str:
+    """SQL for the SHIFTED_TS timestamp ``expr`` moved back."""
+    return f"timestamp_micros(unix_micros({expr}) - {SHIFT_US})"
+
+
+def _start_time(ts: str, offset: str | None, slide: str) -> str | None:
+    """window()'s startTime for a grid of ``slide`` moved by ``offset``;
+    on SHIFTED_TS the grid moves by SHIFT_US as well."""
+    if ts != SHIFTED_TS:
+        return offset
+    us = ((_micros(offset) if offset else 0) + SHIFT_US) % _micros(slide)
+    return f"{us} microseconds" if us else None
+
+
 def tumble(
     df: DataFrame, ts: str, size: str, offset: str | None = None,
     keep_struct: bool = False,
@@ -37,9 +69,10 @@ def tumble(
     """TUMBLE(ts, size [, offset]) — the optional offset shifts window
     boundaries (SqlTumbleTableFunction.java:37 third operand;
     TumblingWindowAssigner.withOffset). Spark: window()'s startTime."""
-    if offset is None:
-        return _with_window(df, F.window(ts, size), keep_struct)
-    return _with_window(df, F.window(ts, size, size, offset), keep_struct)
+    start = _start_time(ts, offset, size)
+    if start is None:
+        return _with_window(df, ts, F.window(ts, size), keep_struct)
+    return _with_window(df, ts, F.window(ts, size, size, start), keep_struct)
 
 
 def hop(
@@ -49,23 +82,27 @@ def hop(
     if _duration_seconds(slide) > _duration_seconds(size):
         # rows between windows would fall in no window at all
         raise ValueError("HOP's slide must not exceed its size")
-    if offset is None:
-        return _with_window(df, F.window(ts, size, slide), keep_struct)
-    return _with_window(df, F.window(ts, size, slide, offset), keep_struct)
+    start = _start_time(ts, offset, slide)
+    if start is None:
+        return _with_window(df, ts, F.window(ts, size, slide), keep_struct)
+    return _with_window(df, ts, F.window(ts, size, slide, start), keep_struct)
 
 
-def _with_window(df: DataFrame, w: Column, keep_struct: bool = False) -> DataFrame:
+def _with_window(
+    df: DataFrame, ts: str, w: Column, keep_struct: bool = False
+) -> DataFrame:
     # materialize the window struct ONCE — a sliding window expression
     # explodes rows where it is evaluated, so referencing it twice
     # (start + end) would square the fan-out. keep_struct retains the
     # raw ``__w`` TimeWindow column: STREAMING aggregation must group
     # by the struct itself (only it carries the event-time attribute —
     # extracted start/end columns lose the watermark linkage).
+    back = (lambda c: F.expr(unshift_sql(c))) if ts == SHIFTED_TS else F.col
     out = (
         df.withColumn("__w", w)
-        .withColumn("window_start", F.col("__w.start"))
-        .withColumn("window_end", F.col("__w.end"))
-        .withColumn("window_time", F.col("__w.end") - F.expr("INTERVAL '0.001' SECOND"))
+        .withColumn("window_start", back("__w.start"))
+        .withColumn("window_end", back("__w.end"))
+        .withColumn("window_time", F.col("window_end") - F.expr("INTERVAL '0.001' SECOND"))
     )
     return out if keep_struct else out.drop("__w")
 
@@ -93,7 +130,8 @@ def cumulate(
     sets window_start to that span's start. ``keep_struct`` retains the
     HOP struct ``__w``: a streaming aggregation grouped on it closes
     each window at e in append mode (select window_start as
-    :func:`cumulate_start_sql` of ``__w.end``)."""
+    :func:`cumulate_start_sql` of ``__w.end``, moved back first on
+    SHIFTED_TS)."""
     size_us, step_us = _micros(max_size), _micros(step)
     if step_us > size_us:
         raise ValueError("CUMULATE's step must not exceed its size")
@@ -101,15 +139,20 @@ def cumulate(
         raise ValueError(
             "CUMULATE's size must be an integral multiple of its step"
         )
-    tsu = F.unix_micros(F.col(ts))
-    last = F.unix_micros(F.col("__w.end")) - F.lit(1)
+    # span arithmetic on the unshifted time, so spans stay epoch-aligned
+    base = F.lit(SHIFT_US if ts == SHIFTED_TS else 0)
+    tsu = F.unix_micros(F.col(ts)) - base
+    last = F.unix_micros(F.col("__w.end")) - F.lit(1) - base
     size = F.lit(size_us)
+    start = _start_time(ts, None, step)
+    hop_w = (F.window(ts, max_size, step) if start is None
+             else F.window(ts, max_size, step, start))
     out = (
-        df.withColumn("__w", F.window(ts, max_size, step))
+        df.withColumn("__w", hop_w)
         .where(tsu - F.pmod(tsu, size) == last - F.pmod(last, size))
-        .withColumn("window_start", F.expr(cumulate_start_sql("__w.end", max_size)))
-        .withColumn("window_end", F.col("__w.end"))
-        .withColumn("window_time", F.col("__w.end") - F.expr("INTERVAL '0.001' SECOND"))
+        .withColumn("window_start", F.timestamp_micros(last - F.pmod(last, size)))
+        .withColumn("window_end", F.timestamp_micros(last + F.lit(1)))
+        .withColumn("window_time", F.col("window_end") - F.expr("INTERVAL '0.001' SECOND"))
     )
     return out if keep_struct else out.drop("__w")
 

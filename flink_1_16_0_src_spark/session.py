@@ -2132,6 +2132,61 @@ class TableEnvironment:
             q.awaitTermination()
         return q
 
+    def _event_time_stream(
+        self, name: str, options: dict | None = None, note: bool = True
+    ) -> DataFrame:
+        """The stream of watermarked DDL source ``name`` with its watermark
+        on ``operators.windows.SHIFTED_TS``, the event time moved past the
+        epoch. observe() keeps the optimizer from pushing a statement's
+        WHERE below the watermark, which would then be computed from the
+        filtered rows only. ``note`` records the source size for the next
+        drain's partition count."""
+        from flink_1_16_0_src_spark.operators.windows import shift_event_time
+        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
+
+        sdf, path = self._read_stream(name, options)
+        if note:
+            note_source_bytes(path)
+        return shift_event_time(sdf, *self._watermarks[name]).observe(
+            f"__rows_{next(_STREAM_SUB_SEQ)}", F.count(F.lit(1)).alias("rows")
+        )
+
+    def _shift_window_tvfs(self, sql: str) -> str:
+        """``sql`` with every window TVF reading its watermarked DDL source
+        on ``operators.windows.SHIFTED_TS``, so windows before 1970 close
+        too. ``sql`` comes back unchanged unless every TVF windows such a
+        source on its watermark column and nothing else reads one: a query
+        has one watermark, and shifted and unshifted event times cannot
+        share it."""
+        import re as _re
+
+        from flink_1_16_0_src_spark.operators.windows import SHIFTED_TS
+        from flink_1_16_0_src_spark.sql_clauses import (
+            _unquoted_text,
+            parse_window_tvf,
+        )
+
+        wms = {n.lower(): n for n in self._watermarks if n in self._sources}
+        tvfs, pos = [], 0
+        while (t := parse_window_tvf(sql, pos)) is not None:
+            name = wms.get((t.table or "").lower())
+            if name is None or t.ts.lower() != self._watermarks[name][0].lower():
+                return sql
+            tvfs.append((t, name))
+            pos = t.end
+        out, views = sql, {}
+        for t, name in reversed(tvfs):
+            view = f"__stream_ets_{next(_STREAM_SUB_SEQ)}"
+            views[view] = name
+            out = t.with_table(t.with_time(out, SHIFTED_TS), view)
+        rest = _unquoted_text(out)
+        if any(_re.search(rf"(?<![\w.]){_re.escape(n)}(?![\w.])", rest,
+                          _re.IGNORECASE) for n in wms.values()):
+            return sql
+        for view, name in views.items():
+            self._event_time_stream(name).createOrReplaceTempView(view)
+        return out
+
     def _ddl_stream(self, name: str):
         """(streaming DataFrame, declared watermark) of the CREATE TABLE
         source ``name`` (case-insensitive) — the resolver of the
@@ -2178,7 +2233,11 @@ class TableEnvironment:
         windows, not streamable); CUMULATE groups on the HOP window
         struct of ``operators.windows.cumulate`` (rows cut to each
         end's span), so the watermark closes every expanding window at
-        its end like a TUMBLE or HOP window.
+        its end like a TUMBLE or HOP window. A TVF over a watermarked
+        DDL source windows on its event time moved past the epoch
+        (``operators.windows.SHIFTED_TS``), so windows ending before
+        1970 close too; window Top-N, OVER and nested statements keep
+        the unmoved time.
 
         STATEMENT COMPOSITION (r10, depth lifted r11 — the reference
         plans arbitrary multi-operator streaming DAGs from one
@@ -2267,6 +2326,11 @@ class TableEnvironment:
             out = rewrite_match_recognize(
                 self.spark, out, resolver=resolver, streaming=True
             )
+        if _nested == 0 and not _re.search(
+            r"\b(ROW_NUMBER|OVER)\s*\(", _unquoted_text(out), _re.IGNORECASE
+        ):
+            # window Top-N and OVER lowerings derive their own bounds
+            out = self._shift_window_tvfs(out)
         specs: list[dict] = []
         out = rewrite_window_tvfs(
             self.spark, out, resolver, keep_struct=True, specs=specs,
@@ -2380,24 +2444,18 @@ class TableEnvironment:
                 f" '{session_spec['gap']}')"
             )
         start_ext, end_ext = f"{struct_tok}.start", f"{struct_tok}.end"
+        from flink_1_16_0_src_spark.operators.windows import (
+            SHIFTED_TS,
+            cumulate_start_sql,
+            unshift_sql,
+        )
+
+        if any(s["ts"] == SHIFTED_TS for s in specs):
+            start_ext, end_ext = unshift_sql(start_ext), unshift_sql(end_ext)
         if "CUMULATE" in kinds:
             # __w is the HOP window with the cumulative window's end;
             # the start is that end's span start
-            from flink_1_16_0_src_spark.operators.windows import cumulate_start_sql
-
             start_ext = cumulate_start_sql(end_ext, specs[0]["size"])
-        shift = next((
-            f.metadata.get(_EVENT_TIME_SHIFT, 0) for s in specs[:1] if "src" in s
-            for f in s["src"].schema.fields if f.name.lower() == s["ts"].lower()
-        ), 0)
-        if shift:
-            # windowed on a time column moved forward by ``shift`` µs
-            # (the streaming statement set's event time): report the
-            # window bounds in the original time
-            start_ext, end_ext = (
-                f"timestamp_micros(unix_micros({e}) - {shift})"
-                for e in (start_ext, end_ext)
-            )
         # STREAMING aggregation must group by the TimeWindow struct —
         # only it carries the event-time attribute (extracted start/end
         # columns lose the watermark linkage and Spark rejects append
@@ -2659,12 +2717,6 @@ def _over_clauses(txt: str) -> list[tuple[int, int, str]]:
     return out
 
 
-# schema metadata key of a time column moved forward by that many µs
-_EVENT_TIME_SHIFT = "event_time_shift_us"
-# µs from 0001-01-01 to 1970-01-01
-_EPOCH_SPAN_US = 62_135_596_800_000_000
-
-
 def _bind(sql: str, views: dict[str, str]) -> str:
     """``sql`` with each table name in ``views`` (whole words, outside
     string literals, any case) replaced by its view."""
@@ -2690,14 +2742,16 @@ class _SetStatement:
     kind: str  # "stateless", "agg" (planned by stream_query) or "rows"
     tvf: object | None  # its sql_clauses.WindowTVF; None when stateless
     dims: list[str]  # the other DDL tables it reads (batch dimensions)
+    keys: list[str] = dataclasses.field(default_factory=list)  # row groups
     text: str = ""  # "agg": stream_query's text; else the per-batch SQL
     view: str = ""  # the temp view the per-batch SQL reads its rows from
-    shift: int = 0  # µs the query moves event times forward
 
     def bind(self) -> None:
         """Set ``text`` and ``view`` for the statement's kind."""
+        from flink_1_16_0_src_spark.operators.windows import SHIFTED_TS
+
         if self.kind == "agg":
-            self.text = _bind(self.tvf.with_time(self.body, "__sset_ets"), {
+            self.text = _bind(self.tvf.with_time(self.body, SHIFTED_TS), {
                 self.source: f"__sset_src_{self.source}",
                 **{d: f"__sset_dim_{d}" for d in self.dims},
             })
@@ -2708,6 +2762,70 @@ class _SetStatement:
         else:
             self.view = f"__sset_r{next(_STREAM_SUB_SEQ)}"
             self.text = _bind(self.body, {self.source: self.view})
+
+
+# SESSION row branches hash their keys into this many state groups, so
+# each micro-batch makes a few Python calls rather than one per key
+_SESSION_BUCKETS = 32
+
+
+def _session_fire(gap_us: int, keys: list[str]):
+    """The applyInPandasWithState function of a SESSION row branch. Per
+    bucket of ``keys`` it holds the rows of the open sessions (event
+    time in ``__sset_eus``, shifted µs) and emits a session's rows with
+    its bounds once the watermark passes the session's end. As Flink's
+    WindowOperator purges on fire, it fires the sessions the watermark
+    has passed BEFORE it merges the micro-batch's rows, so a later row
+    starts a new session; and it drops a row whose own session
+    [ts, ts + gap) ended by the watermark (isWindowLate)."""
+
+    def fire(bucket, pdfs, state):
+        import pickle
+
+        import numpy as np
+        import pandas as pd
+
+        from flink_1_16_0_src_spark.operators.windows import SHIFT_US
+
+        def sessions(rows):
+            """``rows`` in (key, time) order, and each row's session
+            (start, end) in shifted µs."""
+            g = (rows.groupby(keys, dropna=False, sort=False).ngroup().to_numpy()
+                 if keys else np.zeros(len(rows), dtype=np.int64))
+            order = np.lexsort((rows["__sset_eus"].to_numpy(), g))
+            rows, g = rows.iloc[order].reset_index(drop=True), g[order]
+            t = rows["__sset_eus"].to_numpy()
+            cut = np.r_[True, (np.diff(t) > gap_us) | (np.diff(g) != 0)]
+            first = np.flatnonzero(cut)
+            sid = np.cumsum(cut) - 1
+            last = np.r_[first[1:], len(t)] - 1
+            return rows, t[first][sid], t[last][sid] + gap_us
+
+        wm = state.getCurrentWatermarkMs() * 1000
+        frames = []
+        if state.exists:
+            held, start, end = sessions(pickle.loads(state.get[0]))
+            closed = end <= wm
+            if closed.any():
+                out = held[closed].drop(columns="__sset_eus")
+                out["window_start"] = pd.to_datetime(start[closed] - SHIFT_US, unit="us")
+                out["window_end"] = pd.to_datetime(end[closed] - SHIFT_US, unit="us")
+                yield out
+            frames.append(held[~closed])
+        for p in pdfs:
+            frames.append(p[p["__sset_eus"] + gap_us > wm].drop(
+                columns=["__sset_b", "__sset_wm"]))
+        frames = [f for f in frames if len(f)]
+        if not frames:
+            state.remove()
+            return
+        held = pd.concat(frames, ignore_index=True)
+        state.update((pickle.dumps(held),))
+        # a timeout fires once the watermark is past it: the ms before
+        # the first session's end
+        state.setTimeoutTimestamp(-(-int(sessions(held)[2].min()) // 1000) - 1)
+
+    return fire
 
 
 class StreamStatementSet:
@@ -2733,14 +2851,21 @@ class StreamStatementSet:
       as batch SQL over them in ``foreachBatch``. A stateless statement
       (projection, filter, batch dimension or lookup join) ships each
       micro-batch's rows. A windowed one — window-scoped OVER such as
-      window Top-N and window dedup, a TVF read without GROUP BY, every
-      SESSION aggregate, and an aggregate ``stream_query`` cannot run in
-      append mode — ships each closed window's rows, collected by
-      ``groupBy(<window struct>).agg(collect_list(struct(*)))``; its TVF
-      call then reads those rows with their window columns, so every
-      window is computed once over its complete rows. SESSION takes this
-      path because ``session_window`` would apply the statement's WHERE
-      before sessionizing, where the TVF applies it after.
+      window Top-N and window dedup, a TVF read without GROUP BY, and an
+      aggregate ``stream_query`` cannot run in append mode — ships each
+      closed window's rows, collected by ``stream_query`` as
+      ``collect_list(struct(...))`` per (window, keys) group, the keys
+      being the source columns its GROUP BY and PARTITION BY name, so a
+      hot window splits across tasks; its TVF call then reads those
+      rows with their window columns, so every window is computed once
+      over its complete rows.
+    - A SESSION aggregate ships each closed session's rows too, from a
+      keyed ``applyInPandasWithState`` operator that holds the rows of
+      the open sessions (``_session_fire``): Spark's ``session_window``
+      would apply the statement's WHERE before sessionizing, where the
+      TVF applies it after, and would merge a micro-batch's rows into a
+      session the watermark already passed, where Flink fires and purges
+      it first.
 
     Admission keeps only the rules for shapes neither kind runs exactly
     across micro-batches: non-windowed aggregates, DISTINCT, unscoped
@@ -2758,21 +2883,18 @@ class StreamStatementSet:
     its ``checkpoint`` only with the same statements in the same order:
     the checkpoint's ``statement_set.json`` fingerprints them.
 
-    Event time: inside the query every window runs on ``__sset_ets``,
-    the source's event time moved forward past the epoch by a multiple
-    of every window's grid, and the bounds a statement sees are moved
-    back. Spark's watermark never falls below the epoch, so without the
-    move a window ending before 1970 would be late on arrival. A row is
-    late when its window ended by the watermark its micro-batch started
-    with. A window closes at the end of the first micro-batch that
-    starts past its end, after that batch's rows are merged in — so a
-    SESSION row arriving in that batch still extends the session, where
-    Flink would have fired and purged it first.
+    Event time: windows run on ``operators.windows.SHIFTED_TS``, the
+    source's event time moved past the epoch, so windows before 1970
+    close as well. A row is late when its window ended by the watermark
+    its micro-batch started with; a window closes in the first
+    micro-batch that starts past its end.
 
     Scale: each branch scans the source, so a batch's ``numInputRows``
     is statements × rows. A row-level HOP branch holds every row once
-    per covering window (size/slide copies) until the window closes;
-    an aggregate branch holds one partial row per open group."""
+    per covering window (size/slide copies) until the window closes, a
+    SESSION branch every row of an open session (pickled in the state
+    store, and in a Python worker while its key bucket runs); an
+    aggregate branch holds one partial row per open group."""
 
     def __init__(self, tenv: "TableEnvironment"):
         self._tenv = tenv
@@ -2886,71 +3008,93 @@ class StreamStatementSet:
     def _branch(self, st: _SetStatement, sdf: DataFrame) -> DataFrame:
         """The streaming rows statement ``st`` sends to foreachBatch,
         read from ``sdf``, the source's stream."""
-        cols = [F.col(f"`{c}`") for c in sdf.columns if c != "__sset_ets"]
+        from flink_1_16_0_src_spark.operators.windows import SHIFTED_TS, _micros
+
+        names = [c for c in sdf.columns if c != SHIFTED_TS]
+        cols = [F.col(f"`{c}`") for c in names]
         if st.kind == "stateless":
             return sdf.select(*cols)
         tenv = self._tenv
+        sdf.createOrReplaceTempView(f"__sset_src_{st.source}")
         if st.kind == "agg":
-            sdf.createOrReplaceTempView(f"__sset_src_{st.source}")
             for d in st.dims:
                 tenv.table(d).createOrReplaceTempView(f"__sset_dim_{d}")
             return tenv.stream_query(st.text)
-        from flink_1_16_0_src_spark.operators import windows
-
-        t, ts = st.tvf, "__sset_ets"
-        rows = F.collect_list(F.struct(*cols)).alias("rows")
+        t = st.tvf
         if t.fn == "SESSION":
-            w = F.session_window(ts, t.gap).alias("__w")
-            return sdf.groupBy(w, *t.keys).agg(rows)
-        if t.fn == "TUMBLE":
-            sdf = windows.tumble(sdf, ts, t.size, t.offset, keep_struct=True)
-        elif t.fn == "HOP":
-            sdf = windows.hop(sdf, ts, t.slide, t.size, t.offset, keep_struct=True)
-        else:
-            sdf = windows.cumulate(sdf, ts, t.step, t.size, keep_struct=True)
-        return sdf.groupBy("__w").agg(rows)
+            from pyspark.sql.streaming.state import GroupStateTimeout
+
+            bucket = (F.pmod(F.hash(*st.keys), F.lit(_SESSION_BUCKETS))
+                      if st.keys else F.lit(0))
+            # the watermark mark rides a null column: Spark then hands
+            # the operator the query's watermark, and pandas never sees
+            # the shifted timestamps, which are past its year 2262
+            rows = sdf.select(
+                *cols, bucket.alias("__sset_b"),
+                F.unix_micros(SHIFTED_TS).alias("__sset_eus"),
+                F.lit(None).cast("timestamp").alias(
+                    "__sset_wm", metadata=sdf.schema[SHIFTED_TS].metadata),
+            )
+            out = sdf.select(*cols).schema.add("window_start", "timestamp") \
+                .add("window_end", "timestamp")
+            return rows.groupBy("__sset_b").applyInPandasWithState(
+                _session_fire(_micros(t.gap), st.keys), out, "rows binary",
+                "append", GroupStateTimeout.EventTimeTimeout,
+            )
+        # each closed window's rows, one list per (window, keys) group:
+        # all groups of a window close in the same micro-batch
+        keys = "".join(f", `{k}`" for k in st.keys)
+        call = t.with_table(t.with_time(st.body, SHIFTED_TS),
+                            f"__sset_src_{st.source}")
+        call = call[t.start:t.end + len(call) - len(st.body)]
+        return tenv.stream_query(
+            f"SELECT window_start, window_end{keys}, collect_list(struct("
+            + ", ".join(f"`{c}`" for c in names)
+            + f")) AS __sset_rows FROM {call} "
+            f"GROUP BY window_start, window_end{keys}"
+        )
 
     def _source(
-        self, src: str, shift: int, options: dict | None = None,
-        note: bool = False,
+        self, src: str, options: dict | None = None, note: bool = False
     ) -> DataFrame:
-        """The stream of ``src`` with its watermark on ``__sset_ets``,
-        the event time moved ``shift`` µs forward (a watermark-less
-        source streams as is). ``note`` records the source size for the
-        drain's partition count."""
+        """The stream of ``src``, windowing on ``operators.windows.
+        SHIFTED_TS`` when it has a watermark. ``note`` records the
+        source size for the drain's partition count."""
+        if src in self._tenv._watermarks:
+            return self._tenv._event_time_stream(src, options, note)
         from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
 
         sdf, path = self._tenv._read_stream(src, options)
         if note:
             note_source_bytes(path)
-        wm = self._tenv._watermarks.get(src)
-        if wm is None:
-            return sdf
-        ets = F.timestamp_micros(F.unix_micros(F.col(wm[0])) + F.lit(shift))
-        # observe() stops the optimizer from pushing a statement's WHERE
-        # below the watermark, which would then be computed from the
-        # filtered rows only (and, as the minimum over the branches,
-        # hold back every statement)
-        return sdf.select(
-            "*", ets.alias("__sset_ets", metadata={_EVENT_TIME_SHIFT: shift})
-        ).withWatermark("__sset_ets", wm[1]).observe(
-            f"__sset_rows_{src}", F.count(F.lit(1)).alias("rows")
-        )
+        return sdf
 
     @staticmethod
-    def _shift_us(sts: list[_SetStatement]) -> int:
-        """How far a query running ``sts`` moves event times forward:
-        past the epoch from year 1, by a multiple of every window's
-        grid, so each window maps onto a window."""
-        import math
-
-        from flink_1_16_0_src_spark.operators.windows import _micros
-
-        grid = 1
-        for st in sts:
-            if st.tvf is not None and st.tvf.fn != "SESSION":
-                grid = math.lcm(grid, _micros(st.tvf.slide or st.tvf.size))
-        return -(-_EPOCH_SPAN_US // grid) * grid
+    def _row_keys(unquoted: str, tvf, columns: list[str]) -> list[str]:
+        """The columns a windowed row branch groups its rows by besides
+        the window, so a hot window splits across tasks: SESSION's
+        PARTITION BY keys, else the source columns named in the GROUP BY
+        and in every OVER's PARTITION BY. Other row-branch keys only
+        spread the work: every group of a window closes in the same
+        micro-batch, whose SQL reads them all."""
+        by_name = {c.lower(): c for c in columns}
+        if tvf.fn == "SESSION":
+            return [by_name.get(k.split(".")[-1].strip("`").lower(), k)
+                    for k in tvf.keys]
+        lists = [m.group("p") for *_span, spec in _over_clauses(unquoted)
+                 if (m := re.search(r"PARTITION\s+BY\s+(?P<p>.*?)(?:\bORDER\s+BY\b|$)",
+                                    spec, re.IGNORECASE | re.DOTALL))]
+        gm = re.search(r"\bGROUP\s+BY\b(?P<keys>.*)$", unquoted,
+                       re.IGNORECASE | re.DOTALL)
+        if gm:
+            lists.append(gm.group("keys"))
+        keys: set | None = None
+        for txt in lists:
+            found = {by_name[e] for e in (x.strip().strip("`").lower()
+                                          for x in txt.split(","))
+                     if e in by_name}
+            keys = found if keys is None else keys & found
+        return sorted(keys or ())
 
     @staticmethod
     def _batch_rows(st: _SetStatement, part: DataFrame) -> DataFrame:
@@ -2959,18 +3103,13 @@ class StreamStatementSet:
         window's rows with their window columns."""
         if st.kind == "stateless":
             return part
-        start = F.col("__w.start")
-        if st.tvf.fn == "CUMULATE":
-            from flink_1_16_0_src_spark.operators.windows import cumulate_start_sql
-
-            start = F.expr(cumulate_start_sql("__w.end", st.tvf.size))
-        start, end = (
-            F.timestamp_micros(F.unix_micros(c) - F.lit(st.shift))
-            for c in (start, F.col("__w.end"))
-        )
-        return part.select("__w", F.explode("rows").alias("__r")).select(
-            "__r.*", start.alias("window_start"), end.alias("window_end"),
-            (end - F.expr("INTERVAL '0.001' SECOND")).alias("window_time"),
+        if st.tvf.fn != "SESSION":
+            part = part.select(
+                F.explode("__sset_rows").alias("__r"), "window_start",
+                "window_end",
+            ).select("__r.*", "window_start", "window_end")
+        return part.withColumn(
+            "window_time", F.col("window_end") - F.expr("INTERVAL '0.001' SECOND")
         )
 
     def add_insert_sql(self, sql: str) -> "StreamStatementSet":
@@ -3009,9 +3148,10 @@ class StreamStatementSet:
         kind, tvf = self._admit(unquoted, body, src)
         st = _SetStatement(sink_name, mi.group("collist"), body, src, kind,
                            tvf, [s for s in refs if s != src])
+        if tvf is not None:
+            st.keys = self._row_keys(unquoted, tvf, tenv.spark.table(src).columns)
         st.bind()
-        st.shift = self._shift_us([st])
-        sdf = self._source(src, st.shift)
+        sdf = self._source(src)
         try:
             if st.kind == "agg":
                 try:
@@ -3125,11 +3265,8 @@ class StreamStatementSet:
         # sink files carry the checkpoint's key, so a replay replaces
         # only the files of its own query
         key = hashlib.sha1(os.path.abspath(checkpoint).encode()).hexdigest()[:8]
-        shift = self._shift_us(sts)
-        for st in sts:
-            st.shift = shift
         sdf = self._source(
-            src_name, shift, note=True,
+            src_name, note=True,
             options=(
                 {"maxFilesPerTrigger": str(max_files_per_trigger)}
                 if max_files_per_trigger else None
@@ -3174,8 +3311,12 @@ class StreamStatementSet:
         for k, v in confs.items():
             spark.conf.set(k, v)
         try:
+            # sized by source bytes even with a SESSION branch's Python
+            # operator: every other branch is a state-store operator,
+            # and a five-statement drain of 60k rows took 242 s of CPU
+            # at the session's shuffle partitions, 92 s sized by bytes
             with _scoped_shuffle_partitions(
-                spark, derived_stream_partitions(spark, union)
+                spark, derived_stream_partitions(spark)
             ):
                 q = (
                     union.writeStream.foreachBatch(route)

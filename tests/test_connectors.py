@@ -2418,6 +2418,11 @@ def test_stream_statement_set_state_holds_only_open_windows(tenv, spark, tmp_pat
         "INTERVAL '30' MINUTE, INTERVAL '1' HOUR)) "
         "GROUP BY window_start, window_end"
     ).execute(checkpoint=ck2, max_files_per_trigger=1)
+    # final wm 12:59 → hop window ends 10:30 / 11:00 / 11:30 closed,
+    # each once, complete (rows spanning all three batches)
+    got2 = sorted((r.window_end.hour, r.window_end.minute, r.n)
+                  for r in spark.read.parquet(sink2).collect())
+    assert got2 == [(10, 30, 3), (11, 0, 5), (11, 30, 2)]
     assert state_rows(ck2, 0) == 2
 
 

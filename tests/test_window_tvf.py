@@ -290,21 +290,36 @@ _BATCH_SPELLINGS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_BATCH_SPELLINGS))
+# the batches moved to straddle 1970-01-01 (10:05 → 1969-12-31 23:05,
+# the final watermark 01:49)
+_TO_1969 = H(0) - dt.datetime(1969, 12, 31, 13, 0)
+
+
+@pytest.mark.parametrize(
+    "name", sorted(_BATCH_SPELLINGS) + [f"{n}@1969" for n in sorted(_SPELLINGS)]
+)
 def test_batch_equals_stream_query(tenv, spark, tmp_path, name):
     """Batch ``execute_sql`` and ``stream_query``'s append-mode drain of
     the same SELECT agree on every window the final watermark closed,
     for every spelling, CUMULATE and a ``TABLE (SELECT ...)`` argument
-    included."""
+    included. A ``@1969`` case moves the rows across 1970-01-01:
+    ``stream_query`` windows a watermarked source on event time moved
+    past the epoch, so windows ending by then close as well."""
     from flink_1_16_0_src_spark.streaming import sources as ssrc
 
-    t = f"tvfbs_{name}"
-    _source(tenv, spark, tmp_path, t, _BATCHES)
-    sql = _SELECTS["acc"].format(tvf=_BATCH_SPELLINGS[name].format(t=t))
-    want = [r for r in _rows(tenv.execute_sql(sql)) if r[2] <= H(12, 49)]
+    spelling, _, era = name.partition("@")
+    move = _TO_1969 if era else dt.timedelta(0)
+    t = f"tvfbs_{spelling}{era}"
+    _source(tenv, spark, tmp_path, t, [
+        [(e, k, ts - move, v) for e, k, ts, v in rows] for rows in _BATCHES
+    ])
+    sql = _SELECTS["acc"].format(tvf=_BATCH_SPELLINGS[spelling].format(t=t))
+    want = [r for r in _rows(tenv.execute_sql(sql)) if r[2] <= H(12, 49) - move]
     got = _rows(ssrc.run_to_memory(tenv.stream_query(sql), f"{t}_q", "append"))
     assert got == want
     assert got
+    if era:
+        assert any(r[2] <= dt.datetime(1970, 1, 1) for r in got)
 
 
 _CUMULATE = (
