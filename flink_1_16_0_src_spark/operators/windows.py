@@ -54,11 +54,11 @@ def unshift_sql(expr: str) -> str:
 
 
 def _start_time(ts: str, offset: str | None, slide: str) -> str | None:
-    """window()'s startTime for a grid of ``slide`` moved by ``offset``;
-    on SHIFTED_TS the grid moves by SHIFT_US as well."""
-    if ts != SHIFTED_TS:
-        return offset
-    us = ((_micros(offset) if offset else 0) + SHIFT_US) % _micros(slide)
+    """window()'s startTime for a grid of ``slide`` moved by ``offset``
+    (any offset: window() takes one in [0, slide)); on SHIFTED_TS the
+    grid moves by SHIFT_US as well."""
+    shift = SHIFT_US if ts == SHIFTED_TS else 0
+    us = ((_micros(offset) if offset else 0) + shift) % _micros(slide)
     return f"{us} microseconds" if us else None
 
 

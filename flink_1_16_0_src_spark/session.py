@@ -201,6 +201,17 @@ import itertools as _itertools
 
 _STREAM_SUB_SEQ = _itertools.count()
 
+
+def _watermark_at_source(sdf: DataFrame) -> DataFrame:
+    """Watermarked stream ``sdf`` behind an observe() barrier. The
+    optimizer cannot push a statement's WHERE below it, so the watermark
+    is computed from every source row, as Flink sets it at the source,
+    not from the rows the filter keeps."""
+    return sdf.observe(
+        f"__rows_{next(_STREAM_SUB_SEQ)}", F.count(F.lit(1)).alias("rows")
+    )
+
+
 _INSERT_INTO = re.compile(
     # optional column list (SqlInsert column list, Flink 1.16 FLIP-219
     # partial-insert): strictly identifiers+commas so a parenthesized
@@ -446,6 +457,19 @@ class TableEnvironment:
 
     def drop_temporary_view(self, name: str) -> None:
         self.catalog_manager.get_catalog().drop_table(name)
+        self._forget(name)
+
+    def _ddl_maps(self) -> tuple[dict, ...]:
+        """The per-table maps a CREATE TABLE fills."""
+        return (self._registrations, self._sources, self._sinks,
+                self._watermarks, self._proctimes)
+
+    def _forget(self, name: str) -> None:
+        """Remove table ``name`` (any case) from every DDL map, so a later
+        CREATE of the same name starts clean."""
+        for d in self._ddl_maps():
+            for k in [k for k in d if k.lower() == name.lower()]:
+                del d[k]
 
     def execute_sql(self, sql: str) -> DataFrame | None:
         from flink_1_16_0_src_spark import sources as srcs
@@ -817,6 +841,10 @@ class TableEnvironment:
             r"^DROP\s+TEMPORARY\s+(VIEW|TABLE)\b", r"DROP \1", stmt,
             flags=re.IGNORECASE,
         )
+        mdrop = re.match(r"^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*;?\s*$",
+                         stmt, re.IGNORECASE)
+        if mdrop:
+            self._forget(mdrop.group(1))
         # EXPLAIN with ExplainDetails (SqlRichExplain + ExplainDetail
         # enum; explain.md "ExplainDetails"): ESTIMATED_COST → Spark's
         # cost mode (optimizer Statistics per node), JSON_EXECUTION_PLAN
@@ -1270,8 +1298,7 @@ class TableEnvironment:
         if mren:
             new_name = mren.group(1)
             self.catalog_manager.get_catalog().rename_table(name, new_name)
-            for d in (self._registrations, self._sources, self._sinks,
-                      self._watermarks):
+            for d in self._ddl_maps():
                 if name in d:
                     d[new_name] = d.pop(name)
             return None
@@ -2009,7 +2036,7 @@ class TableEnvironment:
         sdf, path = self._read_stream(name, options)
         note_source_bytes(path)
         if name in self._watermarks:
-            sdf = sdf.withWatermark(*self._watermarks[name])
+            sdf = _watermark_at_source(sdf.withWatermark(*self._watermarks[name]))
         return sdf
 
     def _read_stream(
@@ -2137,19 +2164,15 @@ class TableEnvironment:
     ) -> DataFrame:
         """The stream of watermarked DDL source ``name`` with its watermark
         on ``operators.windows.SHIFTED_TS``, the event time moved past the
-        epoch. observe() keeps the optimizer from pushing a statement's
-        WHERE below the watermark, which would then be computed from the
-        filtered rows only. ``note`` records the source size for the next
-        drain's partition count."""
+        epoch, set at the source like :meth:`stream`'s. ``note`` records
+        the source size for the next drain's partition count."""
         from flink_1_16_0_src_spark.operators.windows import shift_event_time
         from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
 
         sdf, path = self._read_stream(name, options)
         if note:
             note_source_bytes(path)
-        return shift_event_time(sdf, *self._watermarks[name]).observe(
-            f"__rows_{next(_STREAM_SUB_SEQ)}", F.count(F.lit(1)).alias("rows")
-        )
+        return _watermark_at_source(shift_event_time(sdf, *self._watermarks[name]))
 
     def _shift_window_tvfs(self, sql: str) -> str:
         """``sql`` with every window TVF reading its watermarked DDL source
@@ -2233,11 +2256,13 @@ class TableEnvironment:
         windows, not streamable); CUMULATE groups on the HOP window
         struct of ``operators.windows.cumulate`` (rows cut to each
         end's span), so the watermark closes every expanding window at
-        its end like a TUMBLE or HOP window. A TVF over a watermarked
-        DDL source windows on its event time moved past the epoch
+        its end like a TUMBLE or HOP window. Legacy ``GROUP BY
+        TUMBLE|HOP|SESSION(...)`` windows are rewritten to their TVF
+        first. A TVF over a watermarked DDL source — aggregate or window
+        Top-N — windows on its event time moved past the epoch
         (``operators.windows.SHIFTED_TS``), so windows ending before
-        1970 close too; window Top-N, OVER and nested statements keep
-        the unmoved time.
+        1970 close too; TVFs over subqueries and statements that also
+        read the source outside a TVF keep the unmoved time.
 
         STATEMENT COMPOSITION (r10, depth lifted r11 — the reference
         plans arbitrary multi-operator streaming DAGs from one
@@ -2255,7 +2280,6 @@ class TableEnvironment:
         import re as _re
 
         from flink_1_16_0_src_spark.sql_clauses import (
-            _GW_CALL,
             _balanced,
             _depth_at,
             _statement_from_kw as _statement_from_kw_early,
@@ -2326,22 +2350,15 @@ class TableEnvironment:
             out = rewrite_match_recognize(
                 self.spark, out, resolver=resolver, streaming=True
             )
-        if _nested == 0 and not _re.search(
-            r"\b(ROW_NUMBER|OVER)\s*\(", _unquoted_text(out), _re.IGNORECASE
-        ):
-            # window Top-N and OVER lowerings derive their own bounds
+        # legacy GROUP BY TUMBLE/HOP/SESSION(...) — the pre-FLIP-145
+        # classic — becomes its window TVF
+        out = rewrite_group_windows(out, streaming=True)
+        if _nested == 0:
             out = self._shift_window_tvfs(out)
         specs: list[dict] = []
         out = rewrite_window_tvfs(
             self.spark, out, resolver, keep_struct=True, specs=specs,
         )
-        if _GW_CALL.search(out):
-            # legacy GROUP BY TUMBLE/HOP/SESSION(...) streaming syntax —
-            # the pre-FLIP-145 classic; same struct-regroup path as the
-            # TVFs (SESSION contributes a session_window spec)
-            out = rewrite_group_windows(
-                self.spark, out, resolver, keep_struct=True, specs=specs
-            )
         # processing-time temporal joins (lookup joins): the dim side of
         # ``JOIN d FOR SYSTEM_TIME AS OF probe.<proctime>`` is the
         # CURRENT batch snapshot (StreamExecLookupJoin) — drop the
@@ -2843,17 +2860,19 @@ class StreamStatementSet:
     from its shape:
 
     - GROUP BY window aggregates over TUMBLE, HOP or CUMULATE (any
-      aggregate expression, HAVING, batch dimension joins) are planned
-      by :meth:`TableEnvironment.stream_query`. Spark keeps one partial
-      aggregate per open (window, keys) group and emits the group once,
-      when the watermark passes its window end.
+      aggregate expression, HAVING, batch dimension joins) and window
+      Top-N over TUMBLE or HOP are planned by
+      :meth:`TableEnvironment.stream_query`. Spark keeps one partial
+      aggregate per open (window, keys) group, the Top-N operator at
+      most k rows, and emits the group once, when the watermark passes
+      its window end.
     - Row-level statements ship rows, and the statement's own text runs
       as batch SQL over them in ``foreachBatch``. A stateless statement
       (projection, filter, batch dimension or lookup join) ships each
-      micro-batch's rows. A windowed one — window-scoped OVER such as
-      window Top-N and window dedup, a TVF read without GROUP BY, and an
-      aggregate ``stream_query`` cannot run in append mode — ships each
-      closed window's rows, collected by ``stream_query`` as
+      micro-batch's rows. A windowed one — other window-scoped OVER, a
+      TVF read without GROUP BY, and any statement ``stream_query``
+      cannot plan in append mode — ships each closed window's rows,
+      collected by ``stream_query`` as
       ``collect_list(struct(...))`` per (window, keys) group, the keys
       being the source columns its GROUP BY and PARTITION BY name, so a
       hot window splits across tasks; its TVF call then reads those
@@ -2894,7 +2913,8 @@ class StreamStatementSet:
     per covering window (size/slide copies) until the window closes, a
     SESSION branch every row of an open session (pickled in the state
     store, and in a Python worker while its key bucket runs); an
-    aggregate branch holds one partial row per open group."""
+    aggregate branch holds one partial row per open group, a window
+    Top-N branch at most k rows."""
 
     def __init__(self, tenv: "TableEnvironment"):
         self._tenv = tenv
@@ -3003,7 +3023,7 @@ class StreamStatementSet:
                 f"streaming statement set: DESCRIPTOR({tvf.ts}) "
                 f"must be the source's event-time attribute {wm[0]!r}"
             )
-        return ("agg" if gm and tvf.fn != "SESSION" else "rows"), tvf
+        return ("agg" if (gm or overs) and tvf.fn != "SESSION" else "rows"), tvf
 
     def _branch(self, st: _SetStatement, sdf: DataFrame) -> DataFrame:
         """The streaming rows statement ``st`` sends to foreachBatch,

@@ -390,7 +390,6 @@ _GW_AUX = re.compile(
     r"\b(TUMBLE|HOP|SESSION)_(START|END|ROWTIME|PROCTIME)\s*\(", re.IGNORECASE
 )
 _GW_CALL = re.compile(r"\b(TUMBLE|HOP|SESSION)\s*\(", re.IGNORECASE)
-_GW_COUNTER = 0
 
 
 def _statement_from_kw(sql: str) -> int | None:
@@ -420,18 +419,20 @@ def _statement_from(sql: str) -> tuple[int, int, str] | None:
     return i + m.start(1), i + m.end(1), m.group(1)
 
 
-def rewrite_group_windows(
-    spark: SparkSession,
-    sql: str,
-    resolver=None,
-    keep_struct: bool = False,
-    specs: list | None = None,
-) -> str:
-    """Lower the LEGACY group-window SQL syntax — ``GROUP BY
+def rewrite_group_windows(sql: str, streaming: bool = False) -> str:
+    """Rewrite the LEGACY group-window SQL syntax — ``GROUP BY
     TUMBLE(ts, INTERVAL '1' HOUR)`` / ``HOP(ts, slide, size)`` /
     ``SESSION(ts, gap)`` plus the auxiliary functions
-    ``TUMBLE_START/END/ROWTIME`` (and HOP_*/SESSION_*) — onto the same
-    ``operators.windows`` helpers the TVF path uses.
+    ``TUMBLE_START/END/ROWTIME`` (and HOP_*/SESSION_*) — into the
+    window-TVF form, which the TVF rewrite then lowers:
+
+        FROM t ... GROUP BY keys, TUMBLE(ts, size [, offset])
+        → FROM TABLE(TUMBLE(TABLE t, DESCRIPTOR(ts), size [, offset]))
+          ... GROUP BY keys, window_start, window_end
+
+    HOP keeps its (slide, size) order; SESSION partitions by the other
+    grouping keys (``TABLE t PARTITION BY keys``), as its
+    SessionWindowAssigner merges per key.
 
     Reference parity: the pre-FLIP-145 group-window functions
     (FlinkSqlOperatorTable.java TUMBLE/HOP/SESSION group functions,
@@ -442,8 +443,9 @@ def rewrite_group_windows(
     Scope (same single-relation shape as the temporal-join rewrite):
     one group window per GROUP BY (the reference's own restriction),
     a single named table/view in FROM, simple column refs as the other
-    grouping keys. ``*_PROCTIME`` needs a processing-time attribute —
-    nondeterministic by definition — and is rejected like PROCTIME().
+    grouping keys of a SESSION. ``*_PROCTIME`` needs a processing-time
+    attribute — nondeterministic by definition — and is rejected like
+    PROCTIME(); ``streaming`` rejects ``*_ROWTIME``.
     """
     if not _GW_CALL.search(sql):
         return sql
@@ -502,62 +504,25 @@ def rewrite_group_windows(
     args = _split_top_commas(call[call.index("(") + 1 : _balanced(call, call.index("(")) - 1])
     ts_col = args[0].strip().split(".")[-1]
     keys = [e for k, e in enumerate(entries) if k != win[0]]
+    part = ""
+    if fn == "SESSION":
+        key_cols = [k.split(".")[-1] for k in keys]
+        if any(not re.fullmatch(r"\w+", k) for k in key_cols):
+            raise ValueError("SESSION group window keys must be simple columns")
+        if key_cols:
+            part = " PARTITION BY " + ", ".join(key_cols)
 
     fm = _statement_from(sql)
     if fm is None:
         raise ValueError("legacy group window needs a single named FROM table")
-    tbl = fm[2]
-    df = (resolver or spark.table)(tbl)
-    if fn == "TUMBLE":
-        out = windows.tumble(
-            df, ts_col, _interval_str(args[1]),
-            _interval_str(args[2]) if len(args) > 2 else None,
-            keep_struct=keep_struct,
-        )
-    elif fn == "HOP":
-        out = windows.hop(
-            df, ts_col, _interval_str(args[1]), _interval_str(args[2]),
-            keep_struct=keep_struct,
-        )
-    else:  # SESSION — per remaining grouping keys, like SessionWindowAssigner
-        key_cols = [k.split(".")[-1] for k in keys]
-        if any(not re.fullmatch(r"\w+", k) for k in key_cols):
-            raise ValueError("SESSION group window keys must be simple columns")
-        if keep_struct:
-            if specs is None:
-                raise ValueError(
-                    "SESSION group windows in streaming mode: use "
-                    "streaming.windows.session_agg (merging-window state "
-                    "machine) or TableEnvironment.stream_query"
-                )
-            # streaming: the batch gaps-and-islands rewrite uses lag()
-            # windows (not streamable) — register the raw frame and let
-            # the caller regroup onto the merging session_window
-            # aggregate, same contract as the SESSION TVF spec path
-            out = df
-            specs.append(
-                {
-                    "fn": "SESSION",
-                    "ts": ts_col,
-                    "gap": _interval_str(args[1]),
-                    "keys": key_cols,
-                }
-            )
-        else:
-            out = windows.session(df, ts_col, _interval_str(args[1]), *key_cols)
-    # uniquified like the TVF views: same table + different window
-    # specs in one session must not collide
-    global _GW_COUNTER
-    _GW_COUNTER += 1
-    view = f"__gw_{fn.lower()}_{tbl}_{_GW_COUNTER}"
-    out.createOrReplaceTempView(view)
-
     new_clause = ", ".join(keys + ["window_start", "window_end"])
     sql = sql[: gbm.end()] + " " + new_clause + " " + sql[clause_end:]
     # FROM precedes GROUP BY in the supported single-SELECT shape, so
-    # re-locating it post-edit is safe; substitute only the table token.
-    fs, fe, _ = _statement_from(sql)
-    sql = sql[:fs] + view + sql[fe:]
+    # its span is unchanged; substitute only the table token
+    fs, fe, tbl = fm
+    tvf = (f"TABLE({fn}(TABLE {tbl}{part}, DESCRIPTOR({ts_col}), "
+           + ", ".join(a.strip() for a in args[1:]) + "))")
+    sql = sql[:fs] + tvf + sql[fe:]
     # auxiliary functions anywhere in the statement (SELECT/HAVING)
     while True:
         am = _GW_AUX.search(sql)
@@ -570,7 +535,7 @@ def rewrite_group_windows(
                 "properties are nondeterministic (PROCTIME class) — use the "
                 "*_ROWTIME / *_START / *_END event-time properties"
             )
-        if prop == "ROWTIME" and keep_struct:
+        if prop == "ROWTIME" and streaming:
             raise ValueError(
                 "*_ROWTIME in streaming mode: cascade on the window TVF's "
                 "window_time column instead (tvf_window_time_cascade shape)"
@@ -1230,10 +1195,9 @@ def rewrite_flink_clauses(
 ) -> str:
     if re.search(r"MATCH_RECOGNIZE", sql, re.IGNORECASE):
         sql = rewrite_match_recognize(spark, sql)
+    sql = rewrite_group_windows(sql)
     if _TVF_HEAD.search(sql):
         sql = rewrite_window_tvfs(spark, sql)
-    if _GW_CALL.search(sql):
-        sql = rewrite_group_windows(spark, sql)
     sql, _dims = rewrite_lookup_join(sql, proctime_attrs or set())
     spec = parse_temporal_join(
         sql, lambda name: spark.table(name).columns, temporal_fns or {}

@@ -154,8 +154,13 @@ def pytest_deselected(items):
 
 def pytest_terminal_summary(terminalreporter, exitstatus, config):
     # the default tier silently leaves the slow tier out: say how much
-    # was left out and how to run it
-    if "not slow" in (config.option.markexpr or "") and _deselected_slow:
+    # was left out and how to run it, whenever the -m expression rejects
+    # slow tests (-k deselection alone says nothing)
+    from _pytest.mark.expression import Expression
+
+    markexpr = config.option.markexpr or ""
+    if (markexpr and _deselected_slow
+            and not Expression.compile(markexpr).evaluate(lambda m: m == "slow")):
         terminalreporter.write_line(
             f"{len(_deselected_slow)} slow-tier tests deselected by "
             f"-m {config.option.markexpr!r}; run them with: "

@@ -172,6 +172,39 @@ def test_alter_table_rename_moves_registration(tenv):
     assert tenv.sql_query("SELECT count(*) c FROM alt_ren2").collect()[0].c > 0
 
 
+def _ddl_records(tenv, name):
+    return [m for m in (tenv._registrations, tenv._sources, tenv._sinks,
+                        tenv._watermarks, tenv._proctimes) if name in m]
+
+
+def test_drop_table_forgets_registration(tenv):
+    """DROP TABLE, DROP TEMPORARY TABLE and drop_temporary_view leave no
+    DDL record of the table behind, so a re-CREATE without a WATERMARK
+    has none; RENAME moves the processing-time attribute with the rest."""
+    events = f"'connector'='filesystem','path'='{SF_DIR}/events.parquet'"
+    for name, drop in [
+        ("drop_pw", lambda: tenv.execute_sql("DROP TABLE drop_pw")),
+        ("drop_tmp", lambda: tenv.execute_sql("DROP TEMPORARY TABLE IF EXISTS drop_tmp")),
+        ("drop_api", lambda: tenv.drop_temporary_view("drop_api")),
+    ]:
+        tenv.execute_sql(
+            f"CREATE TABLE {name} (ts TIMESTAMP(3), user_id BIGINT, pt AS PROCTIME(),"
+            f" WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE) WITH ({events})"
+        )
+        assert len(_ddl_records(tenv, name)) == 4, name  # a source, not a sink
+        drop()
+        assert _ddl_records(tenv, name) == [], name
+    tenv.execute_sql(f"CREATE TABLE drop_pw (ts TIMESTAMP(3), user_id BIGINT) WITH ({events})")
+    assert "drop_pw" not in tenv._watermarks
+    assert "drop_pw" not in tenv._proctimes
+    tenv.execute_sql(
+        f"CREATE TABLE ren_pt (ts TIMESTAMP(3), pt AS PROCTIME()) WITH ({events})"
+    )
+    tenv.execute_sql("ALTER TABLE ren_pt RENAME TO ren_pt2")
+    assert tenv._proctimes.get("ren_pt2") == "pt"
+    assert _ddl_records(tenv, "ren_pt") == []
+
+
 def test_show_create_table_roundtrip(tenv):
     """SHOW CREATE TABLE (SqlShowCreateTable.java): the printed DDL
     re-executes into an equivalent registration (rename-free

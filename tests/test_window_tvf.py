@@ -288,6 +288,39 @@ _BATCH_SPELLINGS = {
     "subquery": "TABLE(TUMBLE(TABLE (SELECT k, ts, v FROM {t} WHERE v < 100), "
                 "DESCRIPTOR(ts), INTERVAL '1' HOUR))",
 }
+# window Top-N and legacy group windows, spelled so that _rows reads them
+_TOPN = (
+    "SELECT k, window_start, window_end, eid AS n, v AS s FROM ("
+    "SELECT k, window_start, window_end, eid, v, ROW_NUMBER() OVER ("
+    "PARTITION BY window_start, window_end, k ORDER BY v DESC) AS rn "
+    "FROM {tvf}{where}) WHERE rn <= 1"
+)
+_LEGACY = (
+    "SELECT k, {fn}_START(ts, {iv}) AS window_start, {fn}_END(ts, {iv}) "
+    "AS window_end, COUNT(*) AS n, SUM(v) AS s FROM {{t}}{where} "
+    "GROUP BY k, {fn}(ts, {iv})"
+)
+_HOUR, _HOP_IV = "INTERVAL '1' HOUR", "INTERVAL '30' MINUTE, INTERVAL '1' HOUR"
+# filters that drop the last batch's rows: the watermark must still come
+# from every source row, so the window [11:00, 12:00) closes
+_WHERE = " WHERE v < 64"
+_SHAPES = {
+    "topn": _TOPN.format(tvf=_SPELLINGS["positional"], where=""),
+    "topn_hop_offset": _TOPN.format(tvf=_SPELLINGS["hop_offset"], where=""),
+    "legacy_tumble": _LEGACY.format(fn="TUMBLE", iv=_HOUR, where=""),
+    "legacy_hop": _LEGACY.format(fn="HOP", iv=_HOP_IV, where=""),
+    "legacy_session": _LEGACY.format(fn="SESSION", iv="INTERVAL '30' MINUTE",
+                                     where=""),
+}
+_STATEMENTS = {
+    **{n: _SELECTS["acc"].format(tvf=tvf) for n, tvf in _BATCH_SPELLINGS.items()},
+    **_SHAPES,
+    "topn_where": _TOPN.format(tvf=_SPELLINGS["positional"], where=_WHERE),
+    "legacy_where": _LEGACY.format(fn="TUMBLE", iv=_HOUR, where=_WHERE),
+    "subquery_where": _SELECTS["acc"].format(
+        tvf="TABLE(TUMBLE(TABLE (SELECT * FROM {t}" + _WHERE + "), "
+            "DESCRIPTOR(ts), INTERVAL '1' HOUR))"),
+}
 
 
 # the batches moved to straddle 1970-01-01 (10:05 → 1969-12-31 23:05,
@@ -296,15 +329,19 @@ _TO_1969 = H(0) - dt.datetime(1969, 12, 31, 13, 0)
 
 
 @pytest.mark.parametrize(
-    "name", sorted(_BATCH_SPELLINGS) + [f"{n}@1969" for n in sorted(_SPELLINGS)]
+    "name", sorted(_STATEMENTS)
+    + [f"{n}@1969" for n in sorted(_SPELLINGS) + sorted(_SHAPES)]
 )
 def test_batch_equals_stream_query(tenv, spark, tmp_path, name):
     """Batch ``execute_sql`` and ``stream_query``'s append-mode drain of
     the same SELECT agree on every window the final watermark closed,
     for every spelling, CUMULATE and a ``TABLE (SELECT ...)`` argument
-    included. A ``@1969`` case moves the rows across 1970-01-01:
-    ``stream_query`` windows a watermarked source on event time moved
-    past the epoch, so windows ending by then close as well."""
+    included, for window Top-N and for legacy ``GROUP BY TUMBLE|HOP|
+    SESSION(...)`` windows. A ``@1969`` case moves the rows across
+    1970-01-01: ``stream_query`` windows a watermarked source on event
+    time moved past the epoch, so windows ending by then close as well.
+    A ``_where`` case filters out the last batch's rows, which must
+    still advance the watermark."""
     from flink_1_16_0_src_spark.streaming import sources as ssrc
 
     spelling, _, era = name.partition("@")
@@ -313,7 +350,7 @@ def test_batch_equals_stream_query(tenv, spark, tmp_path, name):
     _source(tenv, spark, tmp_path, t, [
         [(e, k, ts - move, v) for e, k, ts, v in rows] for rows in _BATCHES
     ])
-    sql = _SELECTS["acc"].format(tvf=_BATCH_SPELLINGS[spelling].format(t=t))
+    sql = _STATEMENTS[spelling].format(t=t)
     want = [r for r in _rows(tenv.execute_sql(sql)) if r[2] <= H(12, 49) - move]
     got = _rows(ssrc.run_to_memory(tenv.stream_query(sql), f"{t}_q", "append"))
     assert got == want
