@@ -2786,19 +2786,19 @@ class _SetStatement:
 _SESSION_BUCKETS = 32
 
 
-def _session_fire(gap_us: int, keys: list[str]):
+def _session_fire(gap_us: int, keys: list[str], buf):
     """The applyInPandasWithState function of a SESSION row branch. Per
     bucket of ``keys`` it holds the rows of the open sessions (event
-    time in ``__sset_eus``, shifted µs) and emits a session's rows with
-    its bounds once the watermark passes the session's end. As Flink's
+    time in ``__sset_eus``, shifted µs) in ``buf``, a
+    ``streaming.stateful.RowState`` of the branch's row columns and
+    ``__sset_eus``, and emits a session's rows with its bounds once the
+    watermark passes the session's end. As Flink's
     WindowOperator purges on fire, it fires the sessions the watermark
     has passed BEFORE it merges the micro-batch's rows, so a later row
     starts a new session; and it drops a row whose own session
     [ts, ts + gap) ended by the watermark (isWindowLate)."""
 
     def fire(bucket, pdfs, state):
-        import pickle
-
         import numpy as np
         import pandas as pd
 
@@ -2821,7 +2821,7 @@ def _session_fire(gap_us: int, keys: list[str]):
         wm = state.getCurrentWatermarkMs() * 1000
         frames = []
         if state.exists:
-            held, start, end = sessions(pickle.loads(state.get[0]))
+            held, start, end = sessions(buf.frame(buf.read(state)))
             closed = end <= wm
             if closed.any():
                 out = held[closed].drop(columns="__sset_eus")
@@ -2837,7 +2837,7 @@ def _session_fire(gap_us: int, keys: list[str]):
             state.remove()
             return
         held = pd.concat(frames, ignore_index=True)
-        state.update((pickle.dumps(held),))
+        buf.write(state, [held[c].tolist() for c in buf.names])
         # a timeout fires once the watermark is past it: the ms before
         # the first session's end
         state.setTimeoutTimestamp(-(-int(sessions(held)[2].min()) // 1000) - 1)
@@ -2911,8 +2911,9 @@ class StreamStatementSet:
     Scale: each branch scans the source, so a batch's ``numInputRows``
     is statements × rows. A row-level HOP branch holds every row once
     per covering window (size/slide copies) until the window closes, a
-    SESSION branch every row of an open session (pickled in the state
-    store, and in a Python worker while its key bucket runs); an
+    SESSION branch every row of an open session (in the state store as
+    its ``RowState``, and in a Python worker while its key bucket
+    runs); an
     aggregate branch holds one partial row per open group, a window
     Top-N branch at most k rows."""
 
@@ -3044,6 +3045,8 @@ class StreamStatementSet:
         if t.fn == "SESSION":
             from pyspark.sql.streaming.state import GroupStateTimeout
 
+            from flink_1_16_0_src_spark.streaming.stateful import RowState
+
             bucket = (F.pmod(F.hash(*st.keys), F.lit(_SESSION_BUCKETS))
                       if st.keys else F.lit(0))
             # the watermark mark rides a null column: Spark then hands
@@ -3055,10 +3058,12 @@ class StreamStatementSet:
                 F.lit(None).cast("timestamp").alias(
                     "__sset_wm", metadata=sdf.schema[SHIFTED_TS].metadata),
             )
+            buf = RowState([f for f in rows.schema.fields
+                            if f.name not in ("__sset_b", "__sset_wm")])
             out = sdf.select(*cols).schema.add("window_start", "timestamp") \
                 .add("window_end", "timestamp")
             return rows.groupBy("__sset_b").applyInPandasWithState(
-                _session_fire(_micros(t.gap), st.keys), out, "rows binary",
+                _session_fire(_micros(t.gap), st.keys, buf), out, buf.schema,
                 "append", GroupStateTimeout.EventTimeTimeout,
             )
         # each closed window's rows, one list per (window, keys) group:

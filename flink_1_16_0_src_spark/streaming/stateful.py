@@ -21,18 +21,22 @@ Reference parity:
   (union-tag both sides, per-key sorted version store).
 
 State layout: every Python-state operator of the library (here, in
-``dedup``, ``joins``, ``late``, ``triggers`` and ``windows``, and the
-streaming CEP matchers) that buffers rows stores its per-key state
-through one codec, :class:`RowState`; the two that
-keep only scalars (:func:`keyed_inactivity_timer`,
-:func:`changelog_group_aggregate`) use a plain ``StructType``. A buffer
-of rows is one ``ArrayType(field.dataType)`` field per buffered column,
-for any Spark type, so a row reads back from state with the types it
-was stored with (Flink's one typed serializer per state descriptor).
-An operator's own scalar or array fields follow, and an optional
-trailing ``__updated`` wall-clock second carries the lazy TTL.
-:func:`_frame` builds every output frame from columns in one
-constructor call.
+``dedup``, ``joins``, ``late``, ``triggers`` and ``windows``, the
+streaming CEP matchers and the streaming statement set's SESSION
+branch) that buffers rows stores its per-key state through one codec,
+:class:`RowState`; the two that keep only scalars
+(:func:`keyed_inactivity_timer`, :func:`changelog_group_aggregate`) use
+a plain ``StructType``. The codec's declared layout is one
+``ArrayType(field.dataType)`` per buffered column, for any Spark type,
+then an operator's own scalar, array or map fields, then an optional
+trailing ``__updated`` wall-clock second for the lazy TTL. Spark holds
+the layout's values as one BINARY field, pickled (protocol 5) from
+Python natives and read back through a restricted unpickler that admits
+only the ``datetime`` and ``decimal`` classes, so a row reads back with
+the types it was stored with (Flink's one typed serializer per state
+descriptor) and Spark's state encoder is the same class in every
+micro-batch. :func:`_frame` builds every output frame from columns in
+one constructor call.
 
 Scale: every op keys its state (state size = O(k) / O(1) / O(versions)
 per key, never O(stream)); Arrow moves batches, no per-row Python; the
@@ -43,7 +47,9 @@ reference's keyed-state operators.
 from __future__ import annotations
 
 import bisect
+import io
 import os
+import pickle
 import time
 from decimal import Decimal
 from typing import Iterable
@@ -56,6 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     DoubleType,
     IntegerType,
     IntegralType,
@@ -67,8 +74,8 @@ from pyspark.sql.types import (
 
 
 def _py(v, integral: bool = False):
-    """Normalize one value for the JVM-side state pickler, which rejects
-    numpy/pandas scalars: Python natives, NaN/NaT → None, and floats or
+    """Normalize one value for the state pickle, whose reader admits no
+    numpy/pandas class: Python natives, NaN/NaT → None, and floats or
     Decimals back to ints for an integral field (a nullable integer
     column arrives in pandas as float64; :func:`_side_cols` sends one as
     DECIMAL(20,0))."""
@@ -82,6 +89,8 @@ def _py(v, integral: bool = False):
         return None
     if hasattr(v, "to_pydatetime"):
         return v.to_pydatetime()
+    if hasattr(v, "to_pytimedelta"):
+        return v.to_pytimedelta()
     if hasattr(v, "tolist"):  # numpy scalars and arrays
         return v.tolist()
     return v
@@ -114,23 +123,71 @@ def _null_low(v):
     return (False, 0) if v is None or v != v else (True, v)
 
 
+def _plain(v):
+    """An operator's own state value as Python natives, recursively
+    through lists and dicts: numpy scalars and arrays, pandas Timestamps
+    and Timedeltas (the conversions ``GroupState.update`` applies at the
+    top level), NaT → None, tuples → lists."""
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return [_plain(x) for x in v]
+    if isinstance(v, dict):
+        return {_plain(k): _plain(x) for k, x in v.items()}
+    if v is pd.NaT:
+        return None
+    if isinstance(v, np.generic):
+        return v.tolist()
+    if hasattr(v, "to_pytimedelta"):
+        return v.to_pytimedelta()
+    if hasattr(v, "to_pydatetime"):
+        return v.to_pydatetime()
+    return v
+
+
+# The only classes a state pickle may name: the Python types of the
+# typed layout's DATE, TIMESTAMP, INTERVAL and DECIMAL values. Every
+# other value is a pickle primitive (int, float, str, bytes, bool,
+# None, list, dict).
+_STATE_CLASSES = {
+    ("datetime", "date"), ("datetime", "datetime"), ("datetime", "timedelta"),
+    ("decimal", "Decimal"),
+}
+
+
+class _StateUnpickler(pickle.Unpickler):
+    """Reads state bytes without running code from them: a pickle that
+    names any other class or function, ``os.system`` say, raises
+    ``UnpicklingError`` before it is called."""
+
+    def find_class(self, module, name):
+        if (module, name) in _STATE_CLASSES:
+            return super().find_class(module, name)
+        raise pickle.UnpicklingError(f"state may not reference {module}.{name}")
+
+
 class RowState:
-    """The state codec of a per-key row buffer: one
-    ``ArrayType(field.dataType)`` per buffered column, then ``extra``
-    fields (an operator's own accumulators), then — with ``ttl`` — the
-    wall-clock second of the last write. The arrays of one buffer need
-    not share a length, so two buffers (the sides of a join) can share
-    one state."""
+    """The state codec of a per-key row buffer. Its declared layout
+    (``layout``) is one ``ArrayType(field.dataType)`` per buffered
+    column, then ``extra`` fields (an operator's own accumulators), then
+    — with ``ttl`` — the wall-clock second of the last write. Spark
+    stores it as one BINARY field (``schema``): the layout's values
+    pickled as one list, read back through :class:`_StateUnpickler`.
+    With the typed layout as the state schema, Spark would build its
+    state encoder with ``MapObjects``, whose lambda variables get fresh
+    ids in every micro-batch, so the encoder would compile anew in each;
+    one binary field compiles once. The arrays of one buffer need not
+    share a length, so two buffers (the sides of a join) can share one
+    state."""
 
     def __init__(self, fields, extra=(), ttl: bool = False):
         self.names = [f.name for f in fields]
         self.integral = [isinstance(f.dataType, IntegralType) for f in fields]
         self._ttl = ttl
-        self.schema = StructType(
+        self.layout = StructType(
             [StructField(f.name, ArrayType(f.dataType)) for f in fields]
             + list(extra)
             + ([StructField("__updated", DoubleType())] if ttl else [])
         )
+        self.schema = StructType([StructField("__state", BinaryType())])
 
     def read(self, state, ttl_ms: int | None = None) -> list | None:
         """Per-column value lists followed by the extra fields; None when
@@ -139,20 +196,19 @@ class RowState:
         OnReadAndWrite visibility)."""
         if not state.exists:
             return None
-        v = state.get
+        v = _StateUnpickler(io.BytesIO(state.get[0])).load()
         if self._ttl:
             if ttl_ms is not None and (time.time() - v[-1]) * 1000.0 > ttl_ms:
                 return None
-            v = v[:-1]
-        n = len(self.names)
-        return [list(a) for a in v[:n]] + list(v[n:])
+            v.pop()
+        return v
 
     def write(self, state, cols, *extra) -> None:
-        state.update(
-            tuple([_py(v, i) for v in c] for c, i in zip(cols, self.integral))
-            + extra
-            + ((time.time(),) if self._ttl else ())
-        )
+        v = [[_py(x, i) for x in c] for c, i in zip(cols, self.integral)]
+        v += [_plain(e) for e in extra]
+        if self._ttl:
+            v.append(time.time())
+        state.update((pickle.dumps(v, protocol=5),))
 
     def frame(self, cols) -> pd.DataFrame:
         """The buffered rows as a pandas frame."""

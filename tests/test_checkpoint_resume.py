@@ -12,6 +12,10 @@ checkpoint, so batch 1 replays: its state ``.delta`` files and its sink
 directory are both rewritten in place. The union of the batch outputs
 must equal the DuckDB oracle with no row emitted twice (Flink's
 exactly-once through consistent snapshots plus replay).
+
+A checkpoint whose Python-operator state has another layout than the
+operator's (the typed-array layout of earlier releases) must stop the
+restart with Spark's state-schema error instead of being misread.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from flink_1_16_0_src_spark.oracle import compare_frames
 from flink_1_16_0_src_spark.streaming import sources, stateful, windows
@@ -181,3 +186,51 @@ def test_crash_after_sink_write_resumes_exactly_once(spark, events_dir, tmp_path
     for f in deltas:
         d, name = os.path.split(f)
         assert os.path.exists(os.path.join(d, f".{name}.crc")), f
+
+
+def test_typed_array_state_checkpoint_fails_loudly(spark, events_dir, tmp_path):
+    """Python-state checkpoints written before the state became one
+    binary field need a fresh directory: restarting keep-first dedup on
+    one raises an error that names both state schemas."""
+    checkpoint = str(tmp_path / "checkpoint")
+    cols = ["user_id", "event_type", "ts", "value"]
+
+    def stream():
+        return sources.stream_table(
+            spark, events_dir, "events", watermark=("ts", DELAY), max_files_per_trigger=1
+        ).select(*cols)
+
+    sdf = stream()
+    _, vals = stateful._split(sdf, ["user_id"])
+    typed = stateful.RowState(vals, ttl=True).layout  # one array per column, then __updated
+
+    def keep_first_typed(key, pdfs, state):
+        for pdf in pdfs:
+            first = pdf.sort_values("ts").head(1)
+            state.update(tuple(first[f.name].tolist() for f in vals) + (0.0,))
+            yield first
+
+    def crash(df, batch_id):
+        raise RuntimeError(f"crash in batch {batch_id}")
+
+    old = sdf.groupBy("user_id").applyInPandasWithState(
+        keep_first_typed, sdf.schema, typed, "update", GroupStateTimeout.NoTimeout
+    )
+    with pytest.raises(StreamingQueryException, match="crash in batch 0"):
+        old.writeStream.foreachBatch(crash).outputMode("update") \
+            .option("checkpointLocation", checkpoint).trigger(availableNow=True) \
+            .start().awaitTermination()
+
+    seen = []
+    q = (
+        stateful.keep_first_dedup(stream(), ["user_id"], order_col="ts")
+        .writeStream.foreachBatch(lambda df, batch_id: seen.append(batch_id))
+        .outputMode("update").option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True).start()
+    )
+    with pytest.raises(StreamingQueryException) as err:
+        q.awaitTermination()
+    msg = str(err.value)
+    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in msg
+    assert "ArrayType(TimestampType" in msg and "__state,BinaryType" in msg
+    assert seen == []

@@ -1,9 +1,13 @@
 """Source-scan pin: every Python-state operator of the library stores
-per-key row buffers through exactly one layout, ``stateful.RowState`` —
-one typed array per buffered column. A second encoding (JSON strings per
-row, timestamps as text, a whitelist of carried columns) reads rows back
-with other types than they were stored with, so a new operator must
-not bring one back."""
+per-key row buffers through exactly one codec, ``stateful.RowState``:
+its declared layout is one typed array per buffered column, and Spark
+stores it as one binary field that only ``RowState`` pickles and reads
+back through its restricted unpickler. A second encoding (JSON strings
+per row, timestamps as text, a whitelist of carried columns, a pickled
+pandas frame) reads rows back with other types than they were stored
+with, or past the restricted unpickler, so a new operator must not
+bring one back. The streaming statement set's SESSION branch
+(``session.py``) is scanned too."""
 
 from __future__ import annotations
 
@@ -16,6 +20,8 @@ MODULES = [
     "streaming/stateful.py", "streaming/dedup.py", "streaming/joins.py", "streaming/late.py",
     "streaming/windows.py", "streaming/triggers.py", "operators/cep.py",
 ]
+# modules with a state operator that may use JSON for other things
+STATE_MODULES = MODULES + ["session.py"]
 
 # The one exemption: the per-window ``Trigger`` state dict of
 # triggered_tumble_window. Its documented contract is "a JSON-serializable
@@ -26,9 +32,18 @@ MODULES = [
 JSON_EXEMPTION = ("streaming/triggers.py", {"loads": 1, "dumps": 1})
 
 
-def _trees():
-    for name in MODULES:
+def _trees(modules=MODULES):
+    for name in modules:
         yield name, ast.parse((PACKAGE / name).read_text())
+
+
+def _functions(tree):
+    """Module-level functions and the methods of module-level classes."""
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            yield node
+        elif isinstance(node, ast.ClassDef):
+            yield from (n for n in node.body if isinstance(n, ast.FunctionDef))
 
 
 def _callee(node: ast.Call) -> str | None:
@@ -90,10 +105,8 @@ def test_every_state_schema_comes_from_the_codec():
     operator, or a name bound to a literal ``StructType`` of scalar
     fields (an operator that buffers no rows)."""
     calls, offenders = 0, []
-    for name, tree in _trees():
-        for fn in tree.body:
-            if not isinstance(fn, ast.FunctionDef):
-                continue
+    for name, tree in _trees(STATE_MODULES):
+        for fn in _functions(tree):
             assigns = [
                 (t.id, node.value)
                 for node in ast.walk(fn)
@@ -115,5 +128,18 @@ def test_every_state_schema_comes_from_the_codec():
                     )
                     if not (from_codec or (isinstance(arg, ast.Name) and arg.id in scalar)):
                         offenders.append((name, fn.name, node.lineno))
-    assert calls >= 16, f"found only {calls} applyInPandasWithState calls"
+    assert calls >= 17, f"found only {calls} applyInPandasWithState calls"
     assert not offenders, f"state schema not from RowState: {offenders}"
+
+
+def test_only_the_codec_pickles():
+    """``pickle`` appears in ``stateful.py`` alone, where ``RowState``
+    writes and reads its binary field."""
+    offenders = []
+    for name, tree in _trees(STATE_MODULES):
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                mods = [a.name for a in node.names] + [getattr(node, "module", None)]
+                if any(m and "pickle" in m for m in mods) and name != "streaming/stateful.py":
+                    offenders.append((name, node.lineno))
+    assert not offenders, f"state pickled outside RowState: {offenders}"
