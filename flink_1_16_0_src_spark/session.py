@@ -29,6 +29,11 @@ def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None)
     ``worker_daemon``, PySpark's daemon plus a stat guard, because without
     it every task re-reads the directories of Spark's zip archives (about
     0.3 CPU-s per task). An archive that does change is still re-read.
+    The daemon also imports pandas and Arrow and freezes its heap
+    (``gc.freeze()``) before it forks, so the workers share those pages
+    and PySpark's ``gc.collect()`` after each task walks only what the
+    worker made since the fork (about 700 objects, not 73,000: 35 ms of
+    CPU per task before).
     Streaming checkpoints commit through ``FileSystemBasedCheckpointFileManager``
     because the default ``FileContext`` manager resolves links on every
     rename, and without Hadoop's native library each resolution spawns a
