@@ -1070,7 +1070,6 @@ class TableEnvironment:
 
         props = reg["props"]
         connector = props.get("connector", "filesystem")
-        fmt = props.get("format", "parquet")
         schema = ", ".join(reg["cols"]) or None
         self._registrations[name] = reg
         if reg["watermark"] is not None:
@@ -1174,8 +1173,7 @@ class TableEnvironment:
                     f"table {name!r}: connector 'filesystem' requires a "
                     "'path' property (WITH ('path'='...'))"
                 )
-            path = props["path"]
-            if not os.path.exists(path.removeprefix("file://")):
+            if not os.path.exists(props["path"].removeprefix("file://")):
                 # path doesn't exist yet → it's a sink table
                 self._sinks[name] = {
                     "connector": connector,
@@ -1184,14 +1182,31 @@ class TableEnvironment:
                     "schema": schema,
                 }
                 return None
-            df = srcs.read_table(self.spark, path, fmt, schema, props)
-            for cname, cexpr in reg["computed_cols"].items():
-                df = df.withColumn(cname, F.expr(cexpr))
-            df = self._apply_overlay(df, reg)
+            df = self._read_file_table(name)
             df.createOrReplaceTempView(name)
             self._sources[name] = props
             return df
         raise NotImplementedError(f"connector {connector!r}")
+
+    def _read_file_table(
+        self, name: str, streaming: bool = False, options: dict | None = None
+    ) -> DataFrame:
+        """Filesystem table ``name`` as its DDL declares it: the declared
+        physical columns read from its path, then its computed columns,
+        then its ALTER overlay. With ``streaming`` it is a file stream of
+        the rows the batch view holds; ``options`` pass through to Spark's
+        stream reader (e.g. maxFilesPerTrigger)."""
+        from flink_1_16_0_src_spark import sources as srcs
+
+        reg = self._registrations[name]
+        props = reg["props"]
+        df = srcs.read_table(
+            self.spark, props["path"], props.get("format", "parquet"),
+            ", ".join(reg["cols"]) or None, props, streaming, options,
+        )
+        for cname, cexpr in reg["computed_cols"].items():
+            df = df.withColumn(cname, F.expr(cexpr))
+        return self._apply_overlay(df, reg)
 
     @staticmethod
     def _apply_overlay(df: DataFrame, reg: dict) -> DataFrame:
@@ -2036,45 +2051,12 @@ class TableEnvironment:
         untouched; this is the streaming-side bridge of the same table.
         ``options`` pass through to the reader (e.g.
         maxFilesPerTrigger to force multi-batch drains in tests)."""
-        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
-
-        sdf, path = self._read_stream(name, options)
-        note_source_bytes(path)
+        if name not in self._sources:
+            raise ValueError(f"{name!r} was not registered by execute_sql DDL")
+        sdf = self._read_file_table(name, streaming=True, options=options)
         if name in self._watermarks:
             sdf = _watermark_at_source(sdf.withWatermark(*self._watermarks[name]))
         return sdf
-
-    def _read_stream(
-        self, name: str, options: dict | None = None
-    ) -> "tuple[DataFrame, str]":
-        """:meth:`stream`'s frame before its watermark, and the path it
-        monitors. It notes nothing for the next drain's partition count
-        (the statement set plans with a stream at add time, long before
-        its drain)."""
-        props = self._sources.get(name)
-        if props is None:
-            raise ValueError(f"{name!r} was not registered by execute_sql DDL")
-        schema = self.spark.table(name).schema
-        reader = self.spark.readStream.schema(schema)
-        for k, v in (options or {}).items():
-            reader = reader.option(k, v)
-        path = props["path"]
-        if os.path.isfile(path):
-            # the file-stream source monitors a DIRECTORY; expose a
-            # single-file table through a symlink dir (same trick as
-            # streaming.sources.stream_table, no data copy)
-            import tempfile as _tf
-
-            link_dir = os.path.join(
-                _tf.gettempdir(), "spark_graft_streams",
-                f"ddl_{abs(hash(path))}_{name}",
-            )
-            os.makedirs(link_dir, exist_ok=True)
-            link = os.path.join(link_dir, os.path.basename(path))
-            if not os.path.exists(link):
-                os.symlink(path, link)
-            path = link_dir
-        return getattr(reader, props.get("format", "parquet"))(path), path
 
     def create_streaming_view(self, name: str, sql: str) -> DataFrame:
         """CREATE TEMPORARY VIEW over a STREAMING pipeline —
@@ -2143,40 +2125,32 @@ class TableEnvironment:
             checkpoint or _tf.mkdtemp(prefix="spark_graft_ckpt_"),
         )
         conn = sink["connector"]
-        from flink_1_16_0_src_spark.streaming.sources import (
-            _scoped_shuffle_partitions,
-            derived_stream_partitions,
-        )
+        if conn == "filesystem":
+            writer = writer.format(sink["props"].get("format", "parquet")).option(
+                "path", sink["props"]["path"]
+            )
+        elif conn in ("blackhole", "print"):
+            writer = writer.format("noop")
+        else:
+            raise ValueError(
+                f"streaming insert: unsupported sink connector {conn!r}"
+            )
+        from flink_1_16_0_src_spark.streaming.sources import sized_partitions
 
-        with _scoped_shuffle_partitions(
-            self.spark, derived_stream_partitions(self.spark, out)
-        ):
-            if conn == "filesystem":
-                q = writer.format(sink["props"].get("format", "parquet")).option(
-                    "path", sink["props"]["path"]
-                ).outputMode("append").start()
-            elif conn in ("blackhole", "print"):
-                q = writer.format("noop").outputMode("append").start()
-            else:
-                raise ValueError(
-                    f"streaming insert: unsupported sink connector {conn!r}"
-                )
-            q.awaitTermination()
+        with sized_partitions(out):
+            q = writer.outputMode("append").start()
+        q.awaitTermination()
         return q
 
     def _event_time_stream(
-        self, name: str, options: dict | None = None, note: bool = True
+        self, name: str, options: dict | None = None
     ) -> DataFrame:
         """The stream of watermarked DDL source ``name`` with its watermark
         on ``operators.windows.SHIFTED_TS``, the event time moved past the
-        epoch, set at the source like :meth:`stream`'s. ``note`` records
-        the source size for the next drain's partition count."""
+        epoch, set at the source like :meth:`stream`'s."""
         from flink_1_16_0_src_spark.operators.windows import shift_event_time
-        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
 
-        sdf, path = self._read_stream(name, options)
-        if note:
-            note_source_bytes(path)
+        sdf = self._read_file_table(name, streaming=True, options=options)
         return _watermark_at_source(shift_event_time(sdf, *self._watermarks[name]))
 
     def _shift_window_tvfs(self, sql: str) -> str:
@@ -3084,20 +3058,12 @@ class StreamStatementSet:
             f"GROUP BY window_start, window_end{keys}"
         )
 
-    def _source(
-        self, src: str, options: dict | None = None, note: bool = False
-    ) -> DataFrame:
+    def _source(self, src: str, options: dict | None = None) -> DataFrame:
         """The stream of ``src``, windowing on ``operators.windows.
-        SHIFTED_TS`` when it has a watermark. ``note`` records the
-        source size for the drain's partition count."""
+        SHIFTED_TS`` when it has a watermark."""
         if src in self._tenv._watermarks:
-            return self._tenv._event_time_stream(src, options, note)
-        from flink_1_16_0_src_spark.streaming.sources import note_source_bytes
-
-        sdf, path = self._tenv._read_stream(src, options)
-        if note:
-            note_source_bytes(path)
-        return sdf
+            return self._tenv._event_time_stream(src, options)
+        return self._tenv.stream(src, options)
 
     @staticmethod
     def _row_keys(unquoted: str, tvf, columns: list[str]) -> list[str]:
@@ -3258,10 +3224,7 @@ class StreamStatementSet:
         import shutil
         import tempfile
 
-        from flink_1_16_0_src_spark.streaming.sources import (
-            _scoped_shuffle_partitions,
-            derived_stream_partitions,
-        )
+        from flink_1_16_0_src_spark.streaming.sources import sized_partitions
 
         spark = self._tenv.spark
         own_ck = checkpoint is None
@@ -3296,7 +3259,7 @@ class StreamStatementSet:
         # only the files of its own query
         key = hashlib.sha1(os.path.abspath(checkpoint).encode()).hexdigest()[:8]
         sdf = self._source(
-            src_name, note=True,
+            src_name,
             options=(
                 {"maxFilesPerTrigger": str(max_files_per_trigger)}
                 if max_files_per_trigger else None
@@ -3341,13 +3304,9 @@ class StreamStatementSet:
         for k, v in confs.items():
             spark.conf.set(k, v)
         try:
-            # sized by source bytes even with a SESSION branch's Python
-            # operator: every other branch is a state-store operator,
-            # and a five-statement drain of 60k rows took 242 s of CPU
-            # at the session's shuffle partitions, 92 s sized by bytes
-            with _scoped_shuffle_partitions(
-                spark, derived_stream_partitions(spark)
-            ):
+            # a five-statement drain of 60k rows took 242 s of CPU at
+            # the session's shuffle partitions, 92 s sized by bytes
+            with sized_partitions(union):
                 q = (
                     union.writeStream.foreachBatch(route)
                     .outputMode("append")
@@ -3355,7 +3314,7 @@ class StreamStatementSet:
                     .option("checkpointLocation", checkpoint)
                     .start()
                 )
-                q.awaitTermination()
+            q.awaitTermination()
         finally:
             for k, v in prev.items():
                 spark.conf.set(k, v)

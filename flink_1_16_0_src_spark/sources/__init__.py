@@ -20,6 +20,10 @@ with .explain(): PushedFilters / ReadSchema.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,12 +41,47 @@ _JSON_OPTS = {
 }
 
 
+def stream_dir(path: str) -> str:
+    """The directory a file stream watches to read ``path``. A file-stream
+    source monitors a directory, so a single file is exposed through a
+    directory holding one symlink to it (no data copy). The directory is
+    named by a digest of the file's absolute path, so every process and
+    every call reuses the same one."""
+    if not os.path.isfile(path):
+        return path
+    path = os.path.abspath(path)
+    link_dir = os.path.join(
+        tempfile.gettempdir(), "spark_graft_streams",
+        hashlib.sha256(path.encode()).hexdigest()[:16],
+    )
+    os.makedirs(link_dir, exist_ok=True)
+    try:
+        os.symlink(path, os.path.join(link_dir, os.path.basename(path)))
+    except FileExistsError:
+        pass
+    return link_dir
+
+
 def read_table(
-    spark: SparkSession, path: str, fmt: str, schema: str | None = None, options: dict | None = None
+    spark: SparkSession,
+    path: str,
+    fmt: str,
+    schema: str | None = None,
+    options: dict | None = None,
+    streaming: bool = False,
+    reader_options: dict | None = None,
 ) -> DataFrame:
-    """Batch read with Flink→Spark option translation."""
+    """A filesystem table read with Flink→Spark option translation: a
+    batch frame, or with ``streaming`` a file stream of the same rows.
+    ``reader_options`` pass through to Spark's reader (e.g.
+    ``maxFilesPerTrigger``). A stream without a ``schema`` takes the
+    batch read's, since file streams need one."""
     options = options or {}
-    reader = spark.read
+    if fmt not in FILE_FORMATS:
+        raise ValueError(f"unsupported format {fmt!r} (supported: {sorted(FILE_FORMATS)})")
+    if streaming and not schema:
+        schema = read_table(spark, path, fmt, None, options).schema
+    reader = spark.readStream if streaming else spark.read
     if schema:
         reader = reader.schema(schema)
     if fmt == "csv":
@@ -56,26 +95,16 @@ def read_table(
     elif fmt == "json":
         if options.get("json.ignore-parse-errors") == "true":
             reader = reader.option("mode", "PERMISSIVE")
-    if fmt not in FILE_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r} (supported: {sorted(FILE_FORMATS)})")
+    for k, v in (reader_options or {}).items():
+        reader = reader.option(k, v)
     try:
-        return getattr(reader, fmt)(path)
+        return getattr(reader, fmt)(stream_dir(path) if streaming else path)
     except Exception as e:  # avro lacking the external package, etc.
         if fmt == "avro":
             raise NotImplementedError(
                 "avro requires the spark-avro package on the cluster classpath"
             ) from e
         raise
-
-
-def read_stream_table(
-    spark: SparkSession, path: str, fmt: str, schema, options: dict | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(schema)
-    for k, v in (options or {}).items():
-        if not k.startswith(("csv.", "json.")):
-            reader = reader.option(k, v)
-    return getattr(reader, fmt)(path)
 
 
 def kafka_options(props: dict) -> dict[str, str]:
@@ -525,7 +554,6 @@ def compact_partitions(
     Run this per partition as it closes (partition-commit analog).
     """
     import math
-    import os
 
     def _size(p):
         total = 0
@@ -615,8 +643,6 @@ def list_partitions(path: str) -> list[dict[str, str]]:
     under a partitioned table path. Pure metadata (directory listing) —
     the same listing Spark's scan does before pruning; at 100 TB scale
     this is what a metastore caches."""
-    import os
-
     raw = path.removeprefix("file://")
     out: list[dict[str, str]] = []
 

@@ -130,16 +130,13 @@ def _drain(spark, events_dir, family, checkpoint, out_dir, crash_at=None):
         spark, events_dir, "events", watermark=("ts", DELAY), max_files_per_trigger=1
     )
     out, mode = _graph(family, sdf)
-    # size partitions as run_to_memory does; this also consumes the
-    # source bytes stream_table noted, so no later drain sees them
-    with sources._scoped_shuffle_partitions(
-        spark, sources.derived_stream_partitions(spark, out)
-    ):
+    # size partitions as run_to_memory does
+    with sources.sized_partitions(out):
         q = (
             out.writeStream.foreachBatch(sink).outputMode(mode)
             .option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
         )
-        q.awaitTermination()
+    q.awaitTermination()
     return seen
 
 

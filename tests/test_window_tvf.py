@@ -44,20 +44,37 @@ def _one_file(spark, df, path, mtime):
     os.utime(path, (mtime, mtime))
 
 
-def _source(tenv, spark, tmp_path, name, batches):
+# source layouts: the table's files and the DDL columns before its
+# watermark. "csv" is ;-delimited CSV; "computed" declares its time
+# attribute and one value column as computed columns over physical ones.
+_LAYOUTS = {
+    "parquet": "eid BIGINT, k STRING, ts TIMESTAMP(3), v DOUBLE",
+    "csv": "eid BIGINT, k STRING, ts TIMESTAMP(3), v DOUBLE",
+    "computed": "eid BIGINT, k STRING, s STRING, half DOUBLE, "
+                "ts AS TO_TIMESTAMP(s), v AS half * 2",
+}
+
+
+def _source(tenv, spark, tmp_path, name, batches, layout="parquet"):
     """A watermarked DDL source ``name`` made of one file per batch."""
     src = tmp_path / f"{name}_src"
     src.mkdir()
+    fmt = "csv" if layout == "csv" else "parquet"
     for i, rows in enumerate(batches):
-        _one_file(
-            spark,
-            spark.createDataFrame(rows, "eid bigint, k string, ts timestamp, v double"),
-            str(src / f"f{i}.parquet"), mtime=1_000_000 * (i + 1),
-        )
+        path, mtime = src / f"f{i}.{fmt}", 1_000_000 * (i + 1)
+        if fmt == "csv":
+            path.write_text("".join(f"{e};{k};{ts};{v}\n" for e, k, ts, v in rows))
+            os.utime(path, (mtime, mtime))
+            continue
+        df = spark.createDataFrame(rows, "eid bigint, k string, ts timestamp, v double")
+        if layout == "computed":
+            df = df.selectExpr("eid", "k", "CAST(ts AS STRING) AS s", "v / 2 AS half")
+        _one_file(spark, df, str(path), mtime=mtime)
     tenv.execute_sql(
-        f"CREATE TABLE {name} (eid BIGINT, k STRING, ts TIMESTAMP(3), v DOUBLE,"
+        f"CREATE TABLE {name} ({_LAYOUTS[layout]},"
         f" WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE)"
-        f" WITH ('connector'='filesystem','path'='{src}','format'='parquet')"
+        f" WITH ('connector'='filesystem','path'='{src}','format'='{fmt}'"
+        + (",'csv.field-delimiter'=';')" if fmt == "csv" else ")")
     )
 
 
@@ -109,17 +126,18 @@ _SELECTS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_SPELLINGS))
+@pytest.mark.parametrize("name", sorted(_SPELLINGS) + ["positional@computed"])
 def test_statement_set_equals_stream_query(tenv, spark, tmp_path, name):
     """Every spelling drains the same windows through a three-batch
     statement set as through ``stream_query``'s one-batch drain of the
     same SELECT. CUMULATE drains ``stream_query`` in update mode, which
     also holds the still-open slices, so its rows are cut at the final
-    watermark."""
+    watermark. A ``@computed`` source windows a computed time attribute."""
     from flink_1_16_0_src_spark.streaming import sources as ssrc
 
-    t = f"tvfeq_{name}"
-    _source(tenv, spark, tmp_path, t, _BATCHES)
+    name, _, layout = name.partition("@")
+    t = f"tvfeq_{name}{layout}"
+    _source(tenv, spark, tmp_path, t, _BATCHES, layout or "parquet")
     tvf = _SPELLINGS[name].format(t=t)
     ss = tenv.create_stream_statement_set()
     sinks = {}
@@ -331,6 +349,7 @@ _TO_1969 = H(0) - dt.datetime(1969, 12, 31, 13, 0)
 @pytest.mark.parametrize(
     "name", sorted(_STATEMENTS)
     + [f"{n}@1969" for n in sorted(_SPELLINGS) + sorted(_SHAPES)]
+    + ["positional@csv", "positional@computed"]
 )
 def test_batch_equals_stream_query(tenv, spark, tmp_path, name):
     """Batch ``execute_sql`` and ``stream_query``'s append-mode drain of
@@ -341,21 +360,22 @@ def test_batch_equals_stream_query(tenv, spark, tmp_path, name):
     1970-01-01: ``stream_query`` windows a watermarked source on event
     time moved past the epoch, so windows ending by then close as well.
     A ``_where`` case filters out the last batch's rows, which must
-    still advance the watermark."""
+    still advance the watermark. A ``@csv`` or ``@computed`` case reads
+    another source layout (``_LAYOUTS``)."""
     from flink_1_16_0_src_spark.streaming import sources as ssrc
 
     spelling, _, era = name.partition("@")
-    move = _TO_1969 if era else dt.timedelta(0)
+    move = _TO_1969 if era == "1969" else dt.timedelta(0)
     t = f"tvfbs_{spelling}{era}"
     _source(tenv, spark, tmp_path, t, [
         [(e, k, ts - move, v) for e, k, ts, v in rows] for rows in _BATCHES
-    ])
+    ], era if era in _LAYOUTS else "parquet")
     sql = _STATEMENTS[spelling].format(t=t)
     want = [r for r in _rows(tenv.execute_sql(sql)) if r[2] <= H(12, 49) - move]
     got = _rows(ssrc.run_to_memory(tenv.stream_query(sql), f"{t}_q", "append"))
     assert got == want
     assert got
-    if era:
+    if era == "1969":
         assert any(r[2] <= dt.datetime(1970, 1, 1) for r in got)
 
 

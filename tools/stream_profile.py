@@ -112,13 +112,14 @@ def main() -> int:
 
     def patched(sdf, qname, output_mode="append"):
         t0 = time.perf_counter()
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        with ssrc.sized_partitions(sdf):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
         t_started = time.perf_counter()
         q.awaitTermination()
         t_done = time.perf_counter()
