@@ -353,7 +353,7 @@ def _reclaim(spark) -> None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from flink_1_16_0_src_spark.registry import all_queries
-    from flink_1_16_0_src_spark.session import get_spark
+    from flink_1_16_0_src_spark.session import get_spark, jit_flags
 
     load_start = os.getloadavg()
     spark = get_spark("bench")
@@ -449,6 +449,10 @@ def main() -> None:
         # scale with these, not with canary_sec
         "pcanary_start_sec": pcanary_start,
         "pcanary_end_sec": _pcanary(),
+        # the JVM's effective compiler flags: the canaries time one long
+        # JIT-compiled loop, so their seconds and every ratio against
+        # them compare only between runs with the same flags
+        "jit_flags": jit_flags(spark),
     }
     print(json.dumps(out))
     # durability: the round driver stores only a ~2 KB tail of stdout

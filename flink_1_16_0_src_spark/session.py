@@ -21,6 +21,16 @@ from pyspark.sql import functions as F
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# HotSpot's C2 (tier 4) thresholds and their defaults. get_spark raises
+# each 30 times; C1's thresholds keep their defaults.
+_C2_THRESHOLDS = {
+    "Tier4InvocationThreshold": 5000,
+    "Tier4MinInvocationThreshold": 600,
+    "Tier4CompileThreshold": 15000,
+    "Tier4BackEdgeThreshold": 40000,
+}
+JIT_OPTIONS = " ".join(f"-XX:{flag}={30 * n}" for flag, n in _C2_THRESHOLDS.items())
+
 
 def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None) -> SparkSession:
     """Tuned local session. At cluster scale the same confs apply except
@@ -54,7 +64,19 @@ def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None)
     executors compile through the same cache. The cache keeps up to 1000
     classes alive, which bounds its memory: with the cache full (1200
     classes compiled) and after a GC, Metaspace read 125 MB against
-    122 MB at 100 entries, and the CodeHeap pools were the same."""
+    122 MB at 100 entries, and the CodeHeap pools were the same.
+    The JVM's C2 compiler starts later: ``JIT_OPTIONS`` in
+    ``spark.driver.defaultJavaOptions`` raise its four thresholds 30
+    times and leave C1's alone. Most code a micro-batch or a statement
+    runs is generated for it or lives only as long as it, so C2 spent
+    its compile time on code that was gone before it paid back; a loop
+    that stays hot, such as a long scan, still reaches C2 early
+    (``bench.py``'s 300M-row canary sum kept its time). C1 only (``-XX:TieredStopAtLevel=1``) cut compile
+    time further but made hot loops slow: ``bench.py``'s 300M-row
+    canary sum took 37-62 times as long. Spark puts
+    ``spark.driver.extraJavaOptions`` (``--driver-java-options``) after
+    these options, so both arrive; ``jit_flags`` reads what HotSpot
+    took."""
     cpus = cpus or CPUS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -82,10 +104,24 @@ def get_spark(app_name: str = "flink_1_16_0_src_spark", cpus: str | None = None)
             "FileSystemBasedCheckpointFileManager",
         )
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jit_flags(spark: SparkSession) -> dict[str, str]:
+    """The session JVM's effective compiler flags: ``TieredStopAtLevel``
+    and the C2 thresholds ``get_spark`` sets, as HotSpot reads them."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    return {
+        f: bean.getVMOption(f).getValue()
+        for f in ("TieredStopAtLevel", *_C2_THRESHOLDS)
+    }
 
 
 _CREATE_TABLE_AS = re.compile(

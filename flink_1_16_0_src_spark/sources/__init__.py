@@ -20,6 +20,7 @@ with .explain(): PushedFilters / ReadSchema.
 
 from __future__ import annotations
 
+import fcntl
 import hashlib
 import os
 import tempfile
@@ -40,26 +41,57 @@ _JSON_OPTS = {
     "json.ignore-parse-errors": "mode",
 }
 
+# lock file held while link directories under the stream root are made or removed
+_LOCK = ".lock"
+
 
 def stream_dir(path: str) -> str:
     """The directory a file stream watches to read ``path``. A file-stream
     source monitors a directory, so a single file is exposed through a
     directory holding one symlink to it (no data copy). The directory is
     named by a digest of the file's absolute path, so every process and
-    every call reuses the same one."""
+    every call reuses the same one. Creating a new directory removes each
+    sibling whose only entry is a symlink to a file that is gone, so the
+    directories do not outgrow the files that are still there. Creating
+    and removing hold one lock file under the same root, so a process
+    never removes a directory another one is filling for a file that has
+    just been written again."""
     if not os.path.isfile(path):
         return path
     path = os.path.abspath(path)
-    link_dir = os.path.join(
-        tempfile.gettempdir(), "spark_graft_streams",
-        hashlib.sha256(path.encode()).hexdigest()[:16],
-    )
-    os.makedirs(link_dir, exist_ok=True)
-    try:
-        os.symlink(path, os.path.join(link_dir, os.path.basename(path)))
-    except FileExistsError:
-        pass
+    root = os.path.join(tempfile.gettempdir(), "spark_graft_streams")
+    link_dir = os.path.join(root, hashlib.sha256(path.encode()).hexdigest()[:16])
+    os.makedirs(root, exist_ok=True)
+    with open(os.path.join(root, _LOCK), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        try:
+            os.mkdir(link_dir)
+        except FileExistsError:
+            pass
+        else:
+            _remove_dangling_link_dirs(root, link_dir)
+        try:
+            os.symlink(path, os.path.join(link_dir, os.path.basename(path)))
+        except FileExistsError:
+            pass
     return link_dir
+
+
+def _remove_dangling_link_dirs(root: str, keep: str) -> None:
+    for name in os.listdir(root):
+        link_dir = os.path.join(root, name)
+        if name == _LOCK or link_dir == keep:
+            continue
+        try:
+            entries = os.listdir(link_dir)
+            if len(entries) != 1:
+                continue
+            link = os.path.join(link_dir, entries[0])
+            if os.path.islink(link) and not os.path.exists(link):
+                os.unlink(link)
+                os.rmdir(link_dir)
+        except OSError:
+            pass  # changed by a process that does not take the lock
 
 
 def read_table(

@@ -11,12 +11,15 @@ query kept from its checkpoint's ``offsets/0``.
 from __future__ import annotations
 
 import datetime as dt
+import fcntl
 import json
 import math
 import os
 import shutil
 import subprocess
 import sys
+import tempfile
+import time
 
 import pytest
 
@@ -205,3 +208,62 @@ def test_link_directory_is_stable_across_processes(tmp_path):
     assert d.startswith(str(tmp))
     assert os.listdir(d) == ["one.parquet"]
     assert os.path.realpath(os.path.join(d, "one.parquet")) == os.path.realpath(f)
+
+
+def test_new_link_directory_removes_dangling_ones(tmp_path, monkeypatch):
+    """Creating a link directory removes each one whose file is gone and
+    keeps the ones whose file is still there."""
+    from flink_1_16_0_src_spark.sources import stream_dir
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    files = {}
+    for name in ("a", "b", "kept"):
+        files[name] = tmp_path / f"{name}.parquet"
+        files[name].write_bytes(b"x")
+    a_dir = stream_dir(str(files["a"]))
+    kept_dir = stream_dir(str(files["kept"]))
+    files["a"].unlink()
+    assert stream_dir(str(files["kept"])) == kept_dir  # not new: removes nothing
+    assert os.path.isdir(a_dir)
+    b_dir = stream_dir(str(files["b"]))
+    assert not os.path.exists(a_dir)
+    assert os.listdir(kept_dir) == ["kept.parquet"]
+    assert os.listdir(b_dir) == ["b.parquet"]
+
+
+def test_link_directory_removal_waits_for_the_lock(tmp_path):
+    """Removing dangling link directories waits for the lock that
+    creating one holds, so it runs wholly before or after another
+    process's ``stream_dir``; a file written again by then keeps its
+    directory."""
+    tmp = tmp_path / "tmp"
+    root = tmp / "spark_graft_streams"
+    root.mkdir(parents=True)
+    a, b = tmp_path / "a.parquet", tmp_path / "b.parquet"
+    a.write_bytes(b"x")
+    b.write_bytes(b"x")
+    code = (
+        "import sys; from flink_1_16_0_src_spark.sources import stream_dir; "
+        "print(stream_dir(sys.argv[1]))"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp)}
+
+    def stream_dir_in_subprocess(f):
+        return subprocess.Popen(
+            [sys.executable, "-c", code, str(f)], cwd=REPO, env=env,
+            stdout=subprocess.PIPE, text=True,
+        )
+
+    a_dir = stream_dir_in_subprocess(a).communicate(timeout=120)[0].strip()
+    a.unlink()
+    with open(root / ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        sweeper = stream_dir_in_subprocess(b)  # b's directory is new: it sweeps
+        time.sleep(3)
+        assert sweeper.poll() is None  # waits for the lock
+        a.write_bytes(b"y")  # written again while a's link dangled
+    sweeper.communicate(timeout=120)
+    assert os.listdir(a_dir) == ["a.parquet"]
+    assert open(os.path.join(a_dir, "a.parquet"), "rb").read() == b"y"

@@ -11,7 +11,10 @@ processes (daemon and workers, including reaped ones). Beside the JIT
 threads it names codegen cost: ``janino_compiles`` counts the classes
 Spark's code generator compiled during the drain (``CodegenMetrics``,
 driver and executors, one JVM in local mode) and ``janino_mean_ms`` is
-their mean compile time (``CodeGenerator.compileTime``).
+their mean compile time (``CodeGenerator.compileTime``). The header
+line names the JVM's effective compiler flags (``session.jit_flags``:
+``TieredStopAtLevel`` and the C2 thresholds), so a profile shows which
+compiler settings produced it.
 
 Usage: python tools/stream_profile.py <query_name> [sf_dir]
 """
@@ -27,7 +30,7 @@ from collections import defaultdict
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_1_16_0_src_spark.registry import all_queries  # noqa: E402
-from flink_1_16_0_src_spark.session import get_spark  # noqa: E402
+from flink_1_16_0_src_spark.session import get_spark, jit_flags  # noqa: E402
 from flink_1_16_0_src_spark.streaming import sources as ssrc  # noqa: E402
 
 
@@ -156,6 +159,8 @@ def main() -> int:
     registry = all_queries()
     jvm = spark.sparkContext._jvm
     jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
+    flags = " ".join(f"{f}={v}" for f, v in jit_flags(spark).items())
+    print(f"# stream_profile {name} {sf_dir} {flags}")
     # warm-up then timed, mirroring bench methodology
     for run in range(2):
         progress.append({"_run": run})
