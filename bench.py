@@ -455,15 +455,15 @@ def main() -> None:
         "jit_flags": jit_flags(spark),
     }
     print(json.dumps(out))
-    # durability: the round driver stores only a ~2 KB tail of stdout
-    # (BENCH_r08.json lost the per-query ratio map and the probe entry),
-    # so also write the full JSON to a repo file the round can commit —
-    # cross-round per-query comparisons never depend on the truncation
-    # window. Override the path with SPARK_GRAFT_BENCH_OUT; set it
-    # empty to skip the file write.
+    # durability: a caller that keeps only a short tail of stdout loses
+    # the per-query ratio map and the probe entry, so the full JSON also
+    # goes to a file, by default the git-ignored .bench_local.json at
+    # the repo root (a run leaves the tracked tree as it was). Override
+    # the path with SPARK_GRAFT_BENCH_OUT; set it empty to skip the
+    # file write.
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"),
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_local.json"),
     )
     if out_path:
         try:

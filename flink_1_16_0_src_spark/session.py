@@ -387,28 +387,6 @@ _LOCALTIME_EXPR = (
 )
 
 
-def relation_positions(unq: str) -> set[str]:
-    """Identifiers that appear in RELATION positions (after FROM / JOIN /
-    the ``TABLE src`` of a window TVF, plus comma-separated FROM lists)
-    of an already quote-stripped SQL body. Used by the CREATE VIEW
-    batch-vs-streaming router so a column or alias that merely SHARES a
-    watermarked source's name no longer false-positives a batch view
-    into the streaming path (ADVICE r11 #5)."""
-    rels: set[str] = set()
-    for m in re.finditer(r"\b(?:FROM|JOIN|TABLE)\s+`?([A-Za-z_]\w*)`?", unq,
-                         re.IGNORECASE):
-        rels.add(m.group(1))
-    # comma-separated FROM lists: FROM a [AS x], b [y], c
-    for m in re.finditer(
-        r"\bFROM\s+`?[A-Za-z_]\w*`?(?:\s+(?:AS\s+)?[A-Za-z_]\w*)?"
-        r"((?:\s*,\s*`?[A-Za-z_]\w*`?(?:\s+(?:AS\s+)?[A-Za-z_]\w*)?)+)",
-        unq, re.IGNORECASE,
-    ):
-        for mm in re.finditer(r",\s*`?([A-Za-z_]\w*)`?", m.group(1)):
-            rels.add(mm.group(1))
-    return {r.lower() for r in rels}
-
-
 def translate_niladic_clocks(sql: str) -> str:
     """Flink's niladic clock keywords Spark doesn't parse bare
     (BuiltInFunctionDefinitions localTimestamp/localTime):
@@ -429,9 +407,11 @@ def translate_niladic_clocks(sql: str) -> str:
             flags=re.IGNORECASE,
         )
 
+    from flink_1_16_0_src_spark.sql_clauses import _LITERAL_SPLIT
+
     # odd indices of the split are the quoted literals ('' = escaped
     # quote stays inside one literal token) — substitute only between
-    parts = re.split(r"('(?:[^']|'')*')", sql)
+    parts = _LITERAL_SPLIT.split(sql)
     return "".join(p if i % 2 else _subst(p) for i, p in enumerate(parts))
 
 
@@ -771,18 +751,17 @@ class TableEnvironment:
             # view is a STREAMING view (create_streaming_view — later
             # stream_query statements compose over it); anything else
             # keeps the plain batch temp-view registration.
-            from flink_1_16_0_src_spark.sql_clauses import _unquoted_text
+            from flink_1_16_0_src_spark.sql_clauses import read_relations
 
             body = mcview.group("q")
-            unq = _unquoted_text(body)
             streaming_rels = {
                 s.lower()
                 for s in set(self._watermarks) | set(self._stream_views)
             }
-            # match only FROM/JOIN/TABLE( relation positions — a column
-            # or alias sharing a streaming relation's name must NOT
-            # route a batch view through create_streaming_view
-            if streaming_rels & relation_positions(unq):
+            # only relation positions count: a column or alias sharing a
+            # streaming relation's name must NOT route a batch view
+            # through create_streaming_view
+            if streaming_rels & {r.name.lower() for r in read_relations(body)}:
                 self.create_streaming_view(mcview.group("name"), body)
                 return None
             self.spark.sql(
@@ -2141,21 +2120,11 @@ class TableEnvironment:
         sink = self._sinks[mi.group(2)]
         if mi.group(1).upper() == "OVERWRITE":
             raise ValueError("streaming INSERT is append-only (no OVERWRITE)")
-        out = self.stream_query(mi.group("body"))
-        # same FLIP-219 column-list contract as the batch INSERT path:
-        # listed target columns map positionally, declared-but-unlisted
-        # columns null-fill (all projection ops — streamable)
-        declared = {}
-        if sink.get("schema"):
-            from pyspark.sql.types import StructType
-
-            declared = {
-                f.name: f.dataType
-                for f in StructType.fromDDL(sink["schema"]).fields
-            }
-        out = _apply_insert_column_list(out, mi.group("collist"), declared)
-        if declared and not mi.group("collist") and len(out.columns) == len(declared):
-            out = out.toDF(*declared)
+        # the batch INSERT path's column-list and positional mapping
+        # (projections only, so the result still streams)
+        out, _ = self._build_insert_df(
+            sink, mi.group("collist"), self.stream_query(mi.group("body"))
+        )
         writer = out.writeStream.trigger(availableNow=True).option(
             "checkpointLocation",
             checkpoint or _tf.mkdtemp(prefix="spark_graft_ckpt_"),
@@ -2193,34 +2162,24 @@ class TableEnvironment:
         """``sql`` with every window TVF reading its watermarked DDL source
         on ``operators.windows.SHIFTED_TS``, so windows before 1970 close
         too. ``sql`` comes back unchanged unless every TVF windows such a
-        source on its watermark column and nothing else reads one: a query
-        has one watermark, and shifted and unshifted event times cannot
-        share it."""
-        import re as _re
-
+        source on its watermark column and no other relation is one: a
+        query has one watermark, and shifted and unshifted event times
+        cannot share it."""
         from flink_1_16_0_src_spark.operators.windows import SHIFTED_TS
-        from flink_1_16_0_src_spark.sql_clauses import (
-            _unquoted_text,
-            parse_window_tvf,
-        )
+        from flink_1_16_0_src_spark.sql_clauses import read_statement
 
         wms = {n.lower(): n for n in self._watermarks if n in self._sources}
-        tvfs, pos = [], 0
-        while (t := parse_window_tvf(sql, pos)) is not None:
+        st = read_statement(sql)
+        if any(r.kw != "TABLE" and r.name.lower() in wms for r in st.relations):
+            return sql
+        out, views = sql, {}
+        for t in reversed(st.tvfs):
             name = wms.get((t.table or "").lower())
             if name is None or t.ts.lower() != self._watermarks[name][0].lower():
                 return sql
-            tvfs.append((t, name))
-            pos = t.end
-        out, views = sql, {}
-        for t, name in reversed(tvfs):
             view = f"__stream_ets_{next(_STREAM_SUB_SEQ)}"
             views[view] = name
             out = t.with_table(t.with_time(out, SHIFTED_TS), view)
-        rest = _unquoted_text(out)
-        if any(_re.search(rf"(?<![\w.]){_re.escape(n)}(?![\w.])", rest,
-                          _re.IGNORECASE) for n in wms.values()):
-            return sql
         for view, name in views.items():
             self._event_time_stream(name).createOrReplaceTempView(view)
         return out
@@ -2297,13 +2256,18 @@ class TableEnvironment:
         from flink_1_16_0_src_spark.sql_clauses import (
             _balanced,
             _depth_at,
-            _statement_from_kw as _statement_from_kw_early,
-            _unquoted_text,
+            _statement_from_kw,
+            bind_relations,
+            lower_streaming_over,
+            lower_streaming_topn,
+            lower_streaming_window_topn,
             parse_temporal_join,
             parse_window_tvf,
             plan_streaming_temporal_join,
+            read_statement,
             rewrite_group_windows,
             rewrite_lookup_join,
+            rewrite_match_recognize,
             rewrite_window_tvfs,
         )
 
@@ -2342,26 +2306,21 @@ class TableEnvironment:
             out = tvf.with_table(
                 out, self._stream_subquery_view(tvf.subquery, _nested)
             )
-        fk0 = _statement_from_kw_early(out)
+        fk0 = _statement_from_kw(out)
         if fk0 is not None:
             msub = _re.match(r"FROM\s*\(", out[fk0:], _re.IGNORECASE)
             if msub:
                 open_idx = fk0 + msub.end() - 1
                 close = _balanced(out, open_idx)
                 inner = out[open_idx + 1 : close - 1].strip()
-                if _re.match(r"^SELECT\b", inner, _re.IGNORECASE) and not _re.search(
-                    r"\bROW_NUMBER\s*\(", _unquoted_text(inner), _re.IGNORECASE
-                ):
+                if (_re.match(r"^SELECT\b", inner, _re.IGNORECASE)
+                        and not read_statement(inner).row_number):
                     view = self._stream_subquery_view(inner, _nested)
                     out = out[:fk0] + "FROM " + view + out[close:]
-        if _re.search(r"\bMATCH_RECOGNIZE\b", out, _re.IGNORECASE):
+        if read_statement(out).match_recognize:
             # streaming MATCH_RECOGNIZE (StreamExecMatch): the NFA runs
             # in the per-key stateful buffer; the lowered view is a
             # streaming relation the surrounding SELECT composes over
-            from flink_1_16_0_src_spark.sql_clauses import (
-                rewrite_match_recognize,
-            )
-
             out = rewrite_match_recognize(
                 self.spark, out, resolver=resolver, streaming=True
             )
@@ -2391,32 +2350,24 @@ class TableEnvironment:
             return plan_streaming_temporal_join(
                 spec, resolve, self._temporal_fns, self.spark
             )
-        if _re.search(r"\bLATERAL\s+TABLE\b", _unquoted_text(out), _re.IGNORECASE):
+        shape = read_statement(out)
+        if shape.lateral_table:
             raise ValueError(
                 "streaming LATERAL TABLE: only a registered temporal table "
                 "function (create_temporal_table_function) streams — UDTF "
                 "laterals are a batch surface"
             )
-        lookup_dims = {d.lower() for d in lookup_dims}
-        # plain (non-TVF) references to DDL sources stream too: an
+        # plain (non-TVF) relations that are DDL sources stream too: an
         # interval join / filter / agg over raw attributes is a valid
         # streaming statement in the reference (StreamExecIntervalJoin
-        # et al.) — substitute each remaining source-table token with a
-        # streaming temp view of it (declared watermark applied).
-        # Quote-aware so string literals are untouched.
-        for name in self._sources:
-            if name.lower() in lookup_dims:
-                continue
-            pat = rf"(?<![\w.]){_re.escape(name)}(?![\w.])"
-            if not _re.search(pat, out, _re.IGNORECASE):
-                continue
-            sview = f"__stream_src_{name}"
-            self.stream(name).createOrReplaceTempView(sview)
-            parts = _re.split(r"('(?:[^']|'')*')", out)
-            out = "".join(
-                p if i % 2 else _re.sub(pat, sview, p, flags=_re.IGNORECASE)
-                for i, p in enumerate(parts)
-            )
+        # et al.) — each binds to a streaming temp view of it (declared
+        # watermark applied), lookup-join dimensions excepted
+        read = ({r.name.lower() for r in shape.relations}
+                - {d.lower() for d in lookup_dims})
+        views = {n: f"__stream_src_{n}" for n in self._sources if n.lower() in read}
+        for name, view in views.items():
+            self.stream(name).createOrReplaceTempView(view)
+        out = bind_relations(out, views)
         # streaming OVER aggregation has no Catalyst lowering (Spark
         # rejects non-time windows on streams at sink start with an
         # opaque error) — lower the single-spec SELECT ... OVER ...
@@ -2427,28 +2378,19 @@ class TableEnvironment:
         # above; statements mixing window TVFs with OVER are out of
         # scope (the reference plans them as separate exec nodes —
         # compose via two statements).
-        unquoted = _unquoted_text(out)
-        if _re.search(r"\bROW_NUMBER\s*\(", unquoted, _re.IGNORECASE):
+        if shape.row_number:
             if specs:
                 # window Top-N: ROW_NUMBER partitioned by window_start,
                 # window_end over a window TVF — StreamExecWindowRank
                 # (EXEC-S/StreamExecWindowRank.java:77); lowers onto the
                 # append-mode top-k-per-closed-window composition
-                from flink_1_16_0_src_spark.sql_clauses import (
-                    lower_streaming_window_topn,
-                )
-
                 return lower_streaming_window_topn(out, specs)
             # the canonical Top-N pattern (row_number-filter over an
             # OVER window) plans as StreamExecRank, never as a window —
             # FlinkLogicalRankRule parity; must run before the generic
             # OVER lowering, whose aggregate set excludes ranks
-            from flink_1_16_0_src_spark.sql_clauses import (
-                lower_streaming_topn,
-            )
-
             return lower_streaming_topn(out, self.spark.table)
-        if _re.search(r"\bOVER\s*\(", unquoted, _re.IGNORECASE):
+        if shape.overs:
             if specs:
                 raise ValueError(
                     "OVER aggregation combined with a window TVF in one "
@@ -2456,10 +2398,6 @@ class TableEnvironment:
                     "statement (or use streaming.windows.window_topn "
                     "for window Top-N)"
                 )
-            from flink_1_16_0_src_spark.sql_clauses import (
-                lower_streaming_over,
-            )
-
             return lower_streaming_over(self.spark, out, self.spark.table)
         kinds = {s["fn"] for s in specs}
         if ("CUMULATE" in kinds or "SESSION" in kinds) and len(specs) != 1:
@@ -2561,13 +2499,11 @@ class TableEnvironment:
         out = "".join(pieces) + out[pos:]
         # SELECT-list occurrences become aliased struct extracts (the
         # output keeps the TVF column names); everywhere else (WHERE/
-        # HAVING/ORDER BY) a bare extract — an alias there is invalid
-        # statement-level FROM via the depth-0 quote-aware scan — a
-        # SELECT-list FROM (TRIM/SUBSTRING/EXTRACT ... FROM ..., IS
-        # DISTINCT FROM) must not shift the head/tail split, or the
+        # HAVING/ORDER BY) a bare extract — an alias there is invalid.
+        # The split is the statement-level FROM of the depth-0
+        # quote-aware scan: a SELECT-list FROM (TRIM/SUBSTRING/EXTRACT
+        # ... FROM ..., IS DISTINCT FROM) must not shift it, or the
         # window_start items after it lose their aliases
-        from flink_1_16_0_src_spark.sql_clauses import _statement_from_kw
-
         fpos = _statement_from_kw(out)
         if fpos is None:
             fpos = len(out)
@@ -2710,59 +2646,6 @@ class StatementSet:
         return {"statements": len(self._inserts), "shared_subplans": len(cached)}
 
 
-_SSET_AGG_HEAD = re.compile(
-    r"\b(?:COUNT|SUM|AVG|MIN|MAX|STDDEV\w*|VAR\w*|LISTAGG|COLLECT|"
-    r"FIRST_VALUE|LAST_VALUE|APPROX_COUNT_DISTINCT)\s*\(",
-    re.IGNORECASE,
-)
-
-
-def _over_clauses(txt: str) -> list[tuple[int, int, str]]:
-    """Each window-function expression ``fn(args) OVER (spec)`` in
-    ``txt`` as (expr start, expr end, spec text) — the statement-set
-    admission gate uses the spec to decide whether every OVER is
-    window-scoped and the span to excise window functions before the
-    bare-aggregate scan."""
-    from flink_1_16_0_src_spark.sql_clauses import _balanced
-
-    out: list[tuple[int, int, str]] = []
-    for m in re.finditer(r"\bOVER\s*\(", txt, re.IGNORECASE):
-        end = _balanced(txt, m.end() - 1)
-        spec = txt[m.end():end - 1]
-        j = m.start()
-        while j > 0 and txt[j - 1].isspace():
-            j -= 1
-        fn_start = j
-        if j > 0 and txt[j - 1] == ")":
-            d, k = 0, j - 1
-            while k >= 0:
-                d += txt[k] == ")"
-                d -= txt[k] == "("
-                if d == 0:
-                    break
-                k -= 1
-            k -= 1
-            while k >= 0 and (txt[k].isalnum() or txt[k] == "_"):
-                k -= 1
-            fn_start = k + 1
-        out.append((fn_start, end, spec))
-    return out
-
-
-def _bind(sql: str, views: dict[str, str]) -> str:
-    """``sql`` with each table name in ``views`` (whole words, outside
-    string literals, any case) replaced by its view."""
-    lower = {k.lower(): v for k, v in views.items()}
-    pat = re.compile(
-        r"(?<![\w.])(" + "|".join(map(re.escape, views)) + r")(?![\w.])",
-        re.IGNORECASE,
-    )
-    return "".join(
-        p if i % 2 else pat.sub(lambda m: lower[m.group(1).lower()], p)
-        for i, p in enumerate(re.split(r"('(?:[^']|'')*')", sql))
-    )
-
-
 @dataclasses.dataclass
 class _SetStatement:
     """One INSERT buffered by :class:`StreamStatementSet`."""
@@ -2781,9 +2664,10 @@ class _SetStatement:
     def bind(self) -> None:
         """Set ``text`` and ``view`` for the statement's kind."""
         from flink_1_16_0_src_spark.operators.windows import SHIFTED_TS
+        from flink_1_16_0_src_spark.sql_clauses import bind_relations
 
         if self.kind == "agg":
-            self.text = _bind(self.tvf.with_time(self.body, SHIFTED_TS), {
+            self.text = bind_relations(self.tvf.with_time(self.body, SHIFTED_TS), {
                 self.source: f"__sset_src_{self.source}",
                 **{d: f"__sset_dim_{d}" for d in self.dims},
             })
@@ -2793,7 +2677,7 @@ class _SetStatement:
             self.text = b[:t.start] + self.view + b[t.end:]
         else:
             self.view = f"__sset_r{next(_STREAM_SUB_SEQ)}"
-            self.text = _bind(self.body, {self.source: self.view})
+            self.text = bind_relations(self.body, {self.source: self.view})
 
 
 # SESSION row branches hash their keys into this many state groups, so
@@ -2936,30 +2820,25 @@ class StreamStatementSet:
         self._tenv = tenv
         self._inserts: list[_SetStatement] = []
 
-    def _admit(self, unquoted: str, body: str, src_name: str):
-        """(kind, WindowTVF | None) of a statement, or ValueError for a
-        shape neither branch kind runs exactly across micro-batches.
-        Keyword scans run on the quote-stripped text; the TVF parse needs
-        the raw body (the INTERVAL literal lives in quotes)."""
-        if re.search(r"\bMATCH_RECOGNIZE\b", unquoted, re.IGNORECASE):
+    def _admit(self, shape, src_name: str):
+        """(kind, WindowTVF | None) of a statement read by
+        ``sql_clauses.read_statement``, or ValueError for a shape neither
+        branch kind runs exactly across micro-batches."""
+        from flink_1_16_0_src_spark.sql_clauses import names_window
+
+        if shape.match_recognize:
             raise ValueError(
                 "streaming statement set: MATCH_RECOGNIZE is stateful "
                 "across micro-batches — run it as its own stream_query"
             )
-        overs = _over_clauses(unquoted)
-        if re.search(r"\bSELECT\s+DISTINCT\b|\(\s*DISTINCT\b", unquoted,
-                     re.IGNORECASE):
+        if shape.distinct:
             raise ValueError(
                 "streaming statement set: DISTINCT deduplicates across "
                 "micro-batches — run it as its own stream_query"
             )
-        gm = re.search(r"\bGROUP\s+BY\b(?P<keys>.*)$", unquoted,
-                       re.IGNORECASE | re.DOTALL)
-        from flink_1_16_0_src_spark.sql_clauses import parse_window_tvf
-
-        tvf = parse_window_tvf(body)
+        grouped, tvf = shape.group_by is not None, shape.tvfs[0] if shape.tvfs else None
         if tvf is None:
-            if overs:
+            if shape.overs:
                 raise ValueError(
                     "streaming statement set: OVER aggregates are "
                     "stateful across micro-batches (per-batch "
@@ -2968,7 +2847,7 @@ class StreamStatementSet:
                     "window_end ...) or run them as their own "
                     "stream_query"
                 )
-            if gm is not None or _SSET_AGG_HEAD.search(unquoted):
+            if grouped or shape.bare_aggregate:
                 raise ValueError(
                     "streaming statement set: a non-windowed aggregate "
                     "re-planned per micro-batch appends one PARTIAL "
@@ -2983,20 +2862,14 @@ class StreamStatementSet:
                 f"streaming source directly (TABLE {src_name}) — stage a "
                 "subquery or another table through its own stream_query"
             )
-        if tvf.fn == "SESSION" and overs:
+        if tvf.fn == "SESSION" and shape.overs:
             raise ValueError(
                 "streaming statement set: OVER on a SESSION TVF is not "
                 "supported — sessions merge, so a row's window identity "
                 "isn't fixed; run it as its own stream_query"
             )
-        for _s, _e, spec in overs:
-            pspec = re.search(
-                r"PARTITION\s+BY\s+(?P<p>.*?)(?:\bORDER\s+BY\b|$)",
-                spec, re.IGNORECASE | re.DOTALL,
-            )
-            ptxt = pspec.group("p") if pspec else ""
-            if not (re.search(r"\bwindow_start\b", ptxt, re.IGNORECASE)
-                    and re.search(r"\bwindow_end\b", ptxt, re.IGNORECASE)):
+        for keys in shape.overs:
+            if not names_window(keys):
                 raise ValueError(
                     "streaming statement set: every OVER must "
                     "PARTITION BY window_start, window_end (plus any "
@@ -3004,23 +2877,18 @@ class StreamStatementSet:
                     "watermark-closed window — unscoped OVER is "
                     "stateful across micro-batches"
                 )
-        keys = gm.group("keys") if gm else ""
-        if gm is None and tvf.fn != "SESSION":
-            # row-level: no bare aggregate may collapse rows ACROSS
-            # windows (window functions excised before the scan; their
-            # frames are window-scoped above)
-            bare = unquoted
-            for s_, e_, _spec in sorted(overs, reverse=True):
-                bare = bare[:s_] + bare[e_:]
-            if _SSET_AGG_HEAD.search(bare):
+        if not grouped and tvf.fn != "SESSION":
+            # row-level: no aggregate outside a window function may
+            # collapse rows ACROSS windows (their frames are
+            # window-scoped above)
+            if shape.bare_aggregate:
                 raise ValueError(
                     "streaming statement set: aggregates over a window "
                     "TVF need GROUP BY window_start, window_end — "
                     "without it the aggregate collapses across windows "
                     "and re-plans one PARTIAL result per batch"
                 )
-        elif not (re.search(r"\bwindow_start\b", keys, re.IGNORECASE)
-                  and re.search(r"\bwindow_end\b", keys, re.IGNORECASE)):
+        elif not names_window(shape.group_by or []):
             raise ValueError(
                 f"streaming statement set: a {tvf.fn} TVF statement must "
                 "GROUP BY window_start, window_end so every emitted row "
@@ -3039,7 +2907,7 @@ class StreamStatementSet:
                 f"streaming statement set: DESCRIPTOR({tvf.ts}) "
                 f"must be the source's event-time attribute {wm[0]!r}"
             )
-        return ("agg" if (gm or overs) and tvf.fn != "SESSION" else "rows"), tvf
+        return ("agg" if (grouped or shape.overs) and tvf.fn != "SESSION" else "rows"), tvf
 
     def _branch(self, st: _SetStatement, sdf: DataFrame) -> DataFrame:
         """The streaming rows statement ``st`` sends to foreachBatch,
@@ -3102,7 +2970,7 @@ class StreamStatementSet:
         return self._tenv.stream(src, options)
 
     @staticmethod
-    def _row_keys(unquoted: str, tvf, columns: list[str]) -> list[str]:
+    def _row_keys(shape, tvf, columns: list[str]) -> list[str]:
         """The columns a windowed row branch groups its rows by besides
         the window, so a hot window splits across tasks: SESSION's
         PARTITION BY keys, else the source columns named in the GROUP BY
@@ -3113,17 +2981,12 @@ class StreamStatementSet:
         if tvf.fn == "SESSION":
             return [by_name.get(k.split(".")[-1].strip("`").lower(), k)
                     for k in tvf.keys]
-        lists = [m.group("p") for *_span, spec in _over_clauses(unquoted)
-                 if (m := re.search(r"PARTITION\s+BY\s+(?P<p>.*?)(?:\bORDER\s+BY\b|$)",
-                                    spec, re.IGNORECASE | re.DOTALL))]
-        gm = re.search(r"\bGROUP\s+BY\b(?P<keys>.*)$", unquoted,
-                       re.IGNORECASE | re.DOTALL)
-        if gm:
-            lists.append(gm.group("keys"))
+        lists = [keys for keys in shape.overs if keys]
+        if shape.group_by is not None:
+            lists.append(shape.group_by)
         keys: set | None = None
-        for txt in lists:
-            found = {by_name[e] for e in (x.strip().strip("`").lower()
-                                          for x in txt.split(","))
+        for names in lists:
+            found = {by_name[e] for e in (x.strip("`").lower() for x in names)
                      if e in by_name}
             keys = found if keys is None else keys & found
         return sorted(keys or ())
@@ -3156,14 +3019,11 @@ class StreamStatementSet:
             raise KeyError(f"unknown sink table {sink_name!r}")
         from pyspark.errors import AnalysisException
 
-        from flink_1_16_0_src_spark.sql_clauses import _unquoted_text
+        from flink_1_16_0_src_spark.sql_clauses import read_statement
 
-        unquoted = _unquoted_text(body)
-        refs = [
-            s for s in tenv._sources
-            if re.search(rf"(?<![\w.]){re.escape(s)}(?![\w.])", unquoted,
-                         re.IGNORECASE)
-        ]
+        shape = read_statement(body)
+        read = {r.name.lower() for r in shape.relations}
+        refs = [s for s in tenv._sources if s.lower() in read]
         # the STREAM side is the watermarked source; other referenced
         # DDL tables are batch DIMENSIONS. A watermark-less statement's
         # single DDL source IS the stream.
@@ -3177,11 +3037,11 @@ class StreamStatementSet:
                 "stream-stream joins run as their own stream_query"
             )
         src = srcs_in[0]
-        kind, tvf = self._admit(unquoted, body, src)
+        kind, tvf = self._admit(shape, src)
         st = _SetStatement(sink_name, mi.group("collist"), body, src, kind,
                            tvf, [s for s in refs if s != src])
         if tvf is not None:
-            st.keys = self._row_keys(unquoted, tvf, tenv.spark.table(src).columns)
+            st.keys = self._row_keys(shape, tvf, tenv.spark.table(src).columns)
         st.bind()
         sdf = self._source(src)
         try:

@@ -78,6 +78,14 @@ _PAREN_OR_LITERAL = re.compile(r"[()]|'[^']*(?:'|$)")
 _LITERAL_SPLIT = re.compile(r"('(?:[^']|'')*')")
 
 
+def _unquoted_text(sql: str) -> str:
+    """The statement with every string literal blanked to spaces of the
+    same length, so a keyword scan never matches inside a literal and
+    its offsets are the statement's (repo invariant: every regex guard
+    over SQL text is quote-aware)."""
+    return _LITERAL_SPLIT.sub(lambda m: " " * len(m.group()), sql)
+
+
 def _parens(sql: str, start: int = 0, end: int | None = None):
     """(index, char) of each parenthesis in ``sql[start:end]`` outside a
     string literal — the one quote-aware scan under the paren helpers."""
@@ -244,8 +252,7 @@ def parse_window_tvf(sql: str, pos: int = 0) -> WindowTVF | None:
     may be ``TABLE (SELECT ...)``. Keywords are case-insensitive. A
     call with too many or too few intervals, an unknown or repeated
     argument name, or a malformed argument raises ValueError."""
-    blanked = _LITERAL_SPLIT.sub(lambda m: " " * len(m.group()), sql)
-    head = _TVF_HEAD.search(blanked, pos)
+    head = _TVF_HEAD.search(_unquoted_text(sql), pos)
     if head is None:
         return None
     fn = head.group(1).upper()
@@ -314,6 +321,166 @@ def parse_window_tvf(sql: str, pos: int = 0) -> WindowTVF | None:
         **{p.lower(): _interval_str(args[p][0])
            for p in _TVF_PARAMS[fn] if p in args},
     )
+
+
+# ---- the statement reader: the relations and the shape of a statement ----
+
+_REL_NAME = r"(?!LATERAL\b)(?P<rel>`[^`]+`|[A-Za-z_]\w*)(?![\w.`]|\s*\()"
+# the keyword, then any '(' that opens a parenthesized join, not a subquery
+_REL_HEAD = re.compile(
+    rf"\b(FROM|JOIN|TABLE)(?:\s*\((?!\s*(?:SELECT|WITH|VALUES)\b))*\s*(?<=[\s(]){_REL_NAME}",
+    re.IGNORECASE,
+)
+_REL_NEXT = re.compile(rf"\s*,\s*{_REL_NAME}", re.IGNORECASE)
+# the alias after a relation: a word that does not go on with the statement
+_REL_ALIAS = re.compile(
+    r"\s+(?:AS\s+)?(?!(?:WHERE|GROUP|HAVING|ORDER|LIMIT|WINDOW|UNION|EXCEPT|INTERSECT|"
+    r"JOIN|INNER|LEFT|RIGHT|FULL|CROSS|NATURAL|ON|USING|LATERAL|FOR|MATCH_RECOGNIZE)\b)"
+    r"(`[^`]+`|[A-Za-z_]\w*)", re.IGNORECASE,
+)
+_SHAPE = re.compile(
+    r"(?P<distinct>\bSELECT\s+DISTINCT\b|\(\s*DISTINCT\b)|(?P<match_recognize>"
+    r"\bMATCH_RECOGNIZE\b)|(?P<row_number>\bROW_NUMBER\s*\()|(?P<lateral_table>"
+    r"\bLATERAL\s+TABLE\b)|(?P<over>\bOVER\s*\()|(?P<group_by>\bGROUP\s+BY\b)",
+    re.IGNORECASE,
+)
+_GROUP_BY_END = re.compile(
+    r"\b(?:HAVING|ORDER\s+BY|LIMIT|WINDOW|UNION|EXCEPT|INTERSECT)\b", re.IGNORECASE
+)
+_AGG_HEAD = re.compile(
+    r"\b(?:COUNT|SUM|AVG|MIN|MAX|STDDEV(?:_POP|_SAMP)?|VAR_POP|VAR_SAMP|VARIANCE|"
+    r"LISTAGG|COLLECT|FIRST_VALUE|LAST_VALUE|APPROX_COUNT_DISTINCT)\s*\(",
+    re.IGNORECASE,
+)
+
+
+@dataclass
+class Relation:
+    """A table name at a relation position of a statement."""
+
+    name: str  # without backticks
+    start: int  # span of the name as written, backticks included
+    end: int
+    alias: str | None  # the alias that follows it
+    kw: str  # FROM, JOIN or TABLE (a window TVF's argument)
+
+
+@dataclass
+class Statement:
+    """A statement as :func:`read_statement` reads it."""
+
+    relations: list[Relation]
+    tvfs: list[WindowTVF]
+    overs: list[list[str]] = field(default_factory=list)  # each OVER's PARTITION BY keys
+    group_by: list[str] | None = None  # the keys of the first GROUP BY
+    distinct: bool = False
+    bare_aggregate: bool = False  # an aggregate call with no OVER
+    match_recognize: bool = False
+    row_number: bool = False
+    lateral_table: bool = False
+
+
+def _group_by_end(sql: str, start: int) -> int:
+    """Where the GROUP BY list that starts at ``start`` ends: at the
+    first HAVING, ORDER BY, LIMIT, WINDOW or set operator of its block,
+    or at the ')' that closes the block."""
+    depth, end = 0, len(sql)
+    for i, c in _parens(sql, start):
+        depth += 1 if c == "(" else -1
+        if depth < 0:
+            end = i
+            break
+    kw = _GROUP_BY_END.search(_top_level(sql[start:end]))
+    return start + kw.start() if kw else end
+
+
+def _clause_from(text: str, at: int) -> bool:
+    """Whether the FROM at ``at`` opens a FROM clause: not the tail of
+    ``IS [NOT] DISTINCT FROM``, and in no parentheses but a subquery's
+    (``EXTRACT(YEAR FROM ts)``, ``TRIM(x FROM y)`` are calls)."""
+    if re.search(r"\bDISTINCT\s*$", text[:at], re.IGNORECASE):
+        return False
+    opens: list[int] = []
+    for i, c in _parens(text, 0, at):
+        if c == "(":
+            opens.append(i)
+        elif opens:
+            opens.pop()
+    return not opens or re.match(r"\(\s*(?:SELECT|WITH)\b", text[opens[-1]:],
+                                 re.IGNORECASE) is not None
+
+
+def read_relations(sql: str) -> list[Relation]:
+    """The table names at relation positions of ``sql``, at any depth:
+    after FROM and JOIN, in a FROM list's commas, and a window TVF's
+    ``TABLE t``. Names may be backticked; names in string literals,
+    qualified names, function calls and a call's ``FROM`` argument are
+    not relations."""
+    text, rels = _unquoted_text(sql), []
+    for m in _REL_HEAD.finditer(text):
+        kw = m.group(1).upper()
+        if kw == "FROM" and not _clause_from(text, m.start()):
+            continue
+        while m is not None:
+            a = None if kw == "TABLE" else _REL_ALIAS.match(text, m.end())
+            rels.append(Relation(m["rel"].strip("`"), m.start("rel"), m.end("rel"),
+                                 a and a.group(1).strip("`"), kw))
+            m = None if kw == "TABLE" else _REL_NEXT.match(text, (a or m).end())
+    return rels
+
+
+def bind_relations(sql: str, views: Mapping[str, str]) -> str:
+    """``sql`` with every relation (:func:`read_relations`) named in
+    ``views`` (any case) replaced by its view. A FROM or JOIN relation
+    with no alias becomes ``<view> AS <name>``, so ``name.col`` resolves
+    as in batch; a TVF's ``TABLE t`` and a relation followed by ``FOR
+    SYSTEM_TIME`` or ``MATCH_RECOGNIZE`` take the bare view."""
+    lower = {k.lower(): v for k, v in views.items()}
+    out, last = [], 0
+    for r in read_relations(sql):
+        if (view := lower.get(r.name.lower())) is None:
+            continue
+        if not (r.alias or r.kw == "TABLE"
+                or re.match(r"\s+(?:FOR|MATCH_RECOGNIZE)\b", sql[r.end:], re.IGNORECASE)):
+            view += f" AS {sql[r.start:r.end]}"
+        out += [sql[last:r.start], view]
+        last = r.end
+    return "".join(out) + sql[last:]
+
+
+def read_statement(sql: str) -> Statement:
+    """Read ``sql`` once: its relations, its window TVFs, the PARTITION
+    BY keys of each OVER, the keys of its first GROUP BY, and whether it
+    uses DISTINCT, an aggregate without OVER, MATCH_RECOGNIZE,
+    ROW_NUMBER or LATERAL TABLE, at any depth and never inside a string
+    literal. The one reader behind ``stream_query``'s routing and the
+    streaming statement set's admission."""
+    text, tvfs = _unquoted_text(sql), []
+    while (t := parse_window_tvf(sql, tvfs[-1].end if tvfs else 0)) is not None:
+        tvfs.append(t)
+    st = Statement(read_relations(sql), tvfs)
+    for m in _SHAPE.finditer(text):
+        if m.lastgroup == "over":
+            end = _balanced(text, m.end() - 1)
+            part = re.search(r"PARTITION\s+BY\s+(.*?)(?:\bORDER\s+BY\b|$)",
+                             sql[m.end():end - 1], re.IGNORECASE | re.DOTALL)
+            st.overs.append(_split_top_commas(part[1]) if part else [])
+        elif m.lastgroup == "group_by":
+            if st.group_by is None:
+                st.group_by = _split_top_commas(sql[m.end():_group_by_end(sql, m.end())])
+        else:
+            setattr(st, m.lastgroup, True)
+    st.bare_aggregate = any(
+        not re.match(r"\s*OVER\b", text[_balanced(text, m.end() - 1):], re.IGNORECASE)
+        for m in _AGG_HEAD.finditer(text)
+    )
+    return st
+
+
+def names_window(keys: Sequence[str]) -> bool:
+    """Whether ``keys`` (GROUP BY or PARTITION BY entries) name both
+    window_start and window_end."""
+    return {"window_start", "window_end"} <= set(re.findall(r"\w+", " ".join(keys).lower()))
 
 
 def rewrite_window_tvfs(
@@ -450,36 +617,13 @@ def rewrite_group_windows(sql: str, streaming: bool = False) -> str:
     if not _GW_CALL.search(sql):
         return sql
 
-    def _clause_end(start: int) -> int:
-        # GROUP BY clause extent: up to a depth-0 HAVING/ORDER/LIMIT/
-        # WINDOW keyword or the enclosing block's closing paren
-        i, depth, n = start, 0, len(sql)
-        while i < n:
-            c = sql[i]
-            if c == "'":
-                i += 1
-                while i < n and sql[i] != "'":
-                    i += 1
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and re.match(
-                r"(HAVING|ORDER|LIMIT|WINDOW)\b", sql[i:], re.IGNORECASE
-            ) and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                break
-            i += 1
-        return i
-
     # locate the GROUP BY whose clause holds the window call — the
     # FIRST textual GROUP BY may belong to a windowless subquery; a
     # window call inside a subquery is rejected rather than rewritten
     # against the statement-level FROM (single-block scope)
     gbm = clause_end = entries = win = None
     for cand in re.finditer(r"\bGROUP\s+BY\b", sql, re.IGNORECASE):
-        ce = _clause_end(cand.end())
+        ce = _group_by_end(sql, cand.end())
         ents = _split_top_commas(sql[cand.end():ce])
         w = [
             k for k, e in enumerate(ents)
@@ -1586,13 +1730,11 @@ def rewrite_lateral_table(sql: str) -> str:
     return _LATERAL_TABLE.sub(r"LATERAL \1", sql)
 
 
-def _unquoted_text(sql: str) -> str:
-    """The statement with string-literal contents blanked — keyword
-    guards must never match inside a literal (repo invariant: every
-    regex guard over SQL text is quote-aware)."""
-    return "".join(p if i % 2 == 0 else "''" for i, p in enumerate(_LITERAL_SPLIT.split(sql)))
-
-
+# FROM <table> [[AS] alias] <tail> of the single-table streaming lowerings
+_FROM_ONE_TABLE = re.compile(
+    r"FROM\s+(\w+)(?:\s+(?:AS\s+)?(?!(?:WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|JOIN)\b)"
+    r"(\w+))?\s*(.*)$", re.IGNORECASE | re.DOTALL,
+)
 _OVER_AGG_HEAD = re.compile(
     r"^(?P<fn>COUNT|SUM|AVG|MIN|MAX|LAG|LEAD|FIRST_VALUE|LAST_VALUE)"
     r"\s*\(\s*(?P<arg>\*|[\w.]+)\s*(?:,\s*(?P<off>\d+)\s*)?\)\s+OVER\s*\(",
@@ -1665,24 +1807,17 @@ def lower_streaming_over(
         )
     select_list = s[msel.end() : fk]
     rest = s[fk:]
-    # optional table alias (FROM t [AS] x): composed statements arrive
-    # here as `FROM __stream_sub_N AS x` after the subquery extraction;
-    # items/spec refs strip qualifiers already, so the alias only needs
-    # consuming, not binding
-    fm = re.match(
-        r"FROM\s+(\w+)"
-        r"(?:\s+(?:AS\s+)?(?!WHERE\b|GROUP\b|HAVING\b|ORDER\b|LIMIT\b"
-        r"|UNION\b|JOIN\b)\w+)?"
-        r"\s*(.*)$",
-        rest, re.IGNORECASE | re.DOTALL,
-    )
+    # items/spec refs strip qualifiers already; the WHERE may qualify
+    # with the table's alias (composed and bound statements read
+    # `FROM <view> AS x`)
+    fm = _FROM_ONE_TABLE.match(rest)
     if fm is None:
         raise ValueError(
             "streaming OVER: FROM must reference a single named table "
             "or one FROM-subquery level (no joins) — use "
             "streaming.stateful over_agg for composed inputs"
         )
-    tbl, tail = fm.group(1), fm.group(2).strip()
+    tbl, alias, tail = fm.group(1), fm.group(2), fm.group(3).strip()
     where = None
     if tail:
         wm = re.match(r"^WHERE\s+(.*)$", tail, re.IGNORECASE | re.DOTALL)
@@ -1785,7 +1920,7 @@ def lower_streaming_over(
         for fn, a, al, off in over_items
     ]
     value_cols = [c for _fn, c, _al, _off in aggs if c is not None]
-    sdf = resolver(tbl)
+    sdf = resolver(tbl).alias(alias or tbl)
     if where:
         sdf = sdf.where(F.expr(where))
     needed = list(
@@ -1861,19 +1996,13 @@ def lower_streaming_topn(
     fk = _statement_from_kw(inner)
     if not mi or fk is None:
         raise ValueError("streaming Top-N: could not parse the subquery")
-    fm = re.match(
-        r"FROM\s+(\w+)"
-        r"(?:\s+(?:AS\s+)?(?!WHERE\b|GROUP\b|HAVING\b|ORDER\b|LIMIT\b"
-        r"|UNION\b|JOIN\b)\w+)?"
-        r"\s*(.*)$",
-        inner[fk:], re.IGNORECASE | re.DOTALL,
-    )
+    fm = _FROM_ONE_TABLE.match(inner[fk:])
     if fm is None:
         raise ValueError(
             "streaming Top-N: the subquery must read one named table "
             "(no joins — rank a pre-joined streaming view instead)"
         )
-    tbl, tail = fm.group(1), fm.group(2).strip()
+    tbl, alias, tail = fm.group(1), fm.group(2), fm.group(3).strip()
     where = None
     if tail:
         wm = re.match(r"^WHERE\s+(.*)$", tail, re.IGNORECASE | re.DOTALL)
@@ -1917,7 +2046,7 @@ def lower_streaming_topn(
     k = n if op in ("<=", "=") else n - 1
     if k < 1:
         raise ValueError("streaming Top-N: empty bound")
-    sdf = resolver(tbl)
+    sdf = resolver(tbl).alias(alias or tbl)
     if where:
         sdf = sdf.where(F.expr(where))
     needed = list(

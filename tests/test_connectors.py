@@ -2311,20 +2311,28 @@ def test_stream_statement_set_over_admission(tenv, spark, tmp_path):
 
 
 def test_relation_positions_backticked_identifiers():
-    """The CREATE VIEW router's relation scan handles backtick-quoted
-    relation names and comma FROM-lists, and ignores output aliases
-    (r12 self-review — backticked FROM used to escape the scan)."""
-    from flink_1_16_0_src_spark.session import relation_positions
+    """The statement reader's relation scan, which routes CREATE VIEW and
+    binds streaming sources, handles backtick-quoted relation names and
+    comma FROM-lists, and ignores output aliases (backticked FROM used
+    to escape the scan)."""
+    from flink_1_16_0_src_spark.sql_clauses import read_relations
 
-    rels = relation_positions("SELECT * FROM `events` JOIN `dim` d ON a = b")
-    assert {"events", "dim"} <= rels
-    rels = relation_positions("SELECT a.x AS events FROM batch_a a, `batch_b`")
-    assert {"batch_a", "batch_b"} <= rels and "events" not in rels
-    rels = relation_positions(
+    def rels(sql):
+        return {r.name.lower() for r in read_relations(sql)}
+
+    assert {"events", "dim"} <= rels("SELECT * FROM `events` JOIN `dim` d ON a = b")
+    got = rels("SELECT a.x AS events FROM batch_a a, `batch_b`")
+    assert {"batch_a", "batch_b"} <= got and "events" not in got
+    assert "src" in rels(
         "SELECT window_end FROM TABLE(TUMBLE(TABLE `src`, "
         "DESCRIPTOR(ts), INTERVAL '1' HOUR))"
     )
-    assert "src" in rels
+    # a call's FROM argument and IS DISTINCT FROM name columns
+    assert rels(
+        "SELECT EXTRACT(YEAR FROM ev), TRIM(BOTH FROM ev), a IS DISTINCT FROM "
+        "ev FROM (SELECT * FROM src WHERE a IN (SELECT a FROM dim))"
+    ) == {"src", "dim"}
+    assert rels("SELECT * FROM (src JOIN dim ON src.k = dim.k)") == {"src", "dim"}
 
 
 def test_stream_statement_set_state_holds_only_open_windows(tenv, spark, tmp_path):

@@ -88,9 +88,9 @@ def _sink(tenv, tmp_path, name):
 
 
 def _rows(df):
-    return sorted(
-        (r.k, r.window_start, r.window_end, r.n, r.s) for r in df.collect()
-    )
+    """The rows of ``df`` as sorted tuples, read by position (an output
+    column may carry the source's name)."""
+    return sorted(tuple(r) for r in df.collect())
 
 
 # three event-time-ordered batches, no late row: the final watermark
@@ -329,6 +329,10 @@ _SHAPES = {
     "legacy_hop": _LEGACY.format(fn="HOP", iv=_HOP_IV, where=""),
     "legacy_session": _LEGACY.format(fn="SESSION", iv="INTERVAL '30' MINUTE",
                                      where=""),
+    # an output alias equal to the source's name is not a read of it
+    "count_as_source": "SELECT k, window_start, window_end, COUNT(*) AS {t}, "
+                       "SUM(v) AS s FROM " + _SPELLINGS["positional"]
+                       + " GROUP BY k, window_start, window_end",
 }
 _STATEMENTS = {
     **{n: _SELECTS["acc"].format(tvf=tvf) for n, tvf in _BATCH_SPELLINGS.items()},
@@ -371,8 +375,11 @@ def test_batch_equals_stream_query(tenv, spark, tmp_path, name):
         [(e, k, ts - move, v) for e, k, ts, v in rows] for rows in _BATCHES
     ], era if era in _LAYOUTS else "parquet")
     sql = _STATEMENTS[spelling].format(t=t)
-    want = [r for r in _rows(tenv.execute_sql(sql)) if r[2] <= H(12, 49) - move]
-    got = _rows(ssrc.run_to_memory(tenv.stream_query(sql), f"{t}_q", "append"))
+    batch = tenv.execute_sql(sql)
+    stream = ssrc.run_to_memory(tenv.stream_query(sql), f"{t}_q", "append")
+    assert stream.columns == batch.columns
+    want = [r for r in _rows(batch) if r[2] <= H(12, 49) - move]
+    got = _rows(stream)
     assert got == want
     assert got
     if era == "1969":
@@ -456,6 +463,55 @@ def test_window_topn_offset_batch_equals_stream(tenv, spark, tmp_path):
     assert stream == batch == [
         (H(9, 30), H(10, 30), 2, 1), (H(10, 30), H(11, 30), 3, 1),
     ]
+
+
+# statements over a plain watermarked source that name it outside a
+# relation position, or read it as batch SQL binds it
+_BINDINGS = {
+    "qualified": "SELECT {t}.k, {t}.v FROM {t}",
+    "alias_is_source": "SELECT k, v AS {t} FROM {t}",
+    "literal": "SELECT k, v, '{t}' AS src FROM {t} WHERE k <> 'FROM {t}'",
+    "backticked": "SELECT k, v FROM `{t}` WHERE v > 2",
+    "self_join": "SELECT a.k, b.v FROM {t} a JOIN {t} b ON a.eid = b.eid + 1",
+    "over_qualified": "SELECT k, SUM(v) OVER (PARTITION BY k ORDER BY ts) AS s "
+                      "FROM {t} WHERE {t}.v > 2",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BINDINGS))
+def test_stream_query_binds_sources_as_batch(tenv, spark, tmp_path, name):
+    """``stream_query`` binds a DDL source only at relation positions and
+    keeps its name there as the relation's alias: a qualified column, an
+    output alias or a string literal equal to the source's name, a
+    backticked source and a self-join drain the rows batch SQL returns,
+    under the same column names."""
+    from flink_1_16_0_src_spark.streaming import sources as ssrc
+
+    t = f"bind_{name}"
+    _source(tenv, spark, tmp_path, t, _BATCHES)
+    sql = _BINDINGS[name].format(t=t)
+    batch = tenv.execute_sql(sql)
+    stream = ssrc.run_to_memory(tenv.stream_query(sql), f"{t}_q", "append")
+    assert stream.columns == batch.columns
+    assert _rows(stream) == _rows(batch)
+    assert _rows(stream)
+
+
+def test_statement_set_binds_qualified_columns(tenv, spark, tmp_path):
+    """A statement-set INSERT that qualifies its source's columns with
+    the source's name writes the rows batch SQL returns; a cast to
+    VARCHAR is not an aggregate."""
+    t = "sset_qualified"
+    _source(tenv, spark, tmp_path, t, _BATCHES)
+    sink = _sink(tenv, tmp_path, f"{t}_snk")
+    sql = (f"SELECT {t}.eid, CAST({t}.k AS VARCHAR(4)) AS k, {t}.v "
+           f"FROM {t} WHERE {t}.v > 2")
+    tenv.create_stream_statement_set().add_insert_sql(
+        f"INSERT INTO {t}_snk {sql}"
+    ).execute(checkpoint=str(tmp_path / "ck"), max_files_per_trigger=1)
+    got = _rows(spark.read.parquet(sink))
+    assert got == _rows(tenv.execute_sql(sql))
+    assert len(got) == 7
 
 
 def test_only_sql_clauses_reads_descriptor():
